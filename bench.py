@@ -20,7 +20,7 @@ import time
 
 from clinical_bi_spark import caching
 from clinical_bi_spark.queries import load_all
-from clinical_bi_spark.session import get_spark, warm
+from clinical_bi_spark.session import default_parallelism, get_spark, warm
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -326,7 +326,7 @@ def main() -> None:
         "metric": "headline query wall-clock (min of {} runs{}), local[{}]".format(
             repeats,
             ", post-warmup" if warmup else "",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            default_parallelism(),
         ),
         "value": round(sum(timings.values()), 3),
         "unit": "sec",

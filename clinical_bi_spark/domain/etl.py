@@ -18,10 +18,7 @@ cancer') at real scale.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clinical_bi_spark.functions.exprs import (
@@ -29,6 +26,7 @@ from clinical_bi_spark.functions.exprs import (
     ONCOLOGY_PATTERNS_TITLES,
     contains_any,
 )
+from clinical_bi_spark.sources import ParquetTables
 
 BASE_TABLES = (
     "studies",
@@ -43,23 +41,11 @@ BASE_TABLES = (
 )
 
 
-@dataclass
-class AACTTables:
+class AACTTables(ParquetTables):
     """Handle bundle for an AACT parquet snapshot (the S3 bulk-restore
     source re-expressed as columnar files)."""
 
-    spark: SparkSession
-    base_path: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_") or name not in BASE_TABLES:
-            raise AttributeError(name)
-        if name not in self._cache:
-            self._cache[name] = self.spark.read.parquet(
-                os.path.join(self.base_path, f"{name}.parquet")
-            )
-        return self._cache[name]
+    names = BASE_TABLES
 
     def set(self, name: str, df: DataFrame) -> None:
         self._cache[name] = df

@@ -72,10 +72,13 @@ def cleanse_text(col: Column) -> Column:
 
     Reference: ``sed "s/\\"/'/g"`` and ``'s/ | / - /g'`` over the exported
     dump (db2wh-etl.sh:158-159). Here it is a Catalyst expression applied
-    before the sink, so the delimited export needs no second pass.
+    before the sink, so the delimited export needs no second pass. Both
+    patterns are literals, so literal string functions do the work:
+    ``RegExpReplace`` would round-trip every value through
+    ``java.lang.String``.
     """
-    no_quotes = F.regexp_replace(col, '"', "'")
-    return F.regexp_replace(no_quotes, r" \| ", " - ")
+    no_quotes = F.translate(col, '"', "'")
+    return F.replace(no_quotes, F.lit(" | "), F.lit(" - "))
 
 
 def encode_last_writer_wins(

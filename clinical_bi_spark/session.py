@@ -56,8 +56,20 @@ RUNTIME_CONF: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    """Local core budget; the driver exports SPARK_GRAFT_CPUS."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local core budget: SPARK_GRAFT_CPUS when set (the driver exports
+    it), else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: SPARK_DRIVER_MEMORY when set, else a quarter of the
+    host's physical memory, clamped to 1-8 GB."""
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(8, max(1, physical // 4 // 2**30))}g"
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -145,7 +157,7 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "20g"))
+        .config("spark.driver.memory", default_driver_memory())
         # UI off by default (bench hygiene); CBS_SPARK_UI=true turns it on
         # for harnesses that read per-stage metrics over the REST API
         # (scripts/ppjoin_ab.py's shuffle-volume capture)
@@ -156,10 +168,20 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         # recompiles stages it already warmed (measured ~1.33x median
         # inflation under interleaved repeats, PERF.md round-16). 4096
         # keeps every benched query's stages resident; memory cost is
-        # generated bytecode only, negligible against the 20g driver.
+        # generated bytecode only, negligible against the driver heap.
         .config(
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("CBS_CODEGEN_CACHE", "4096"),
         )
+        # STATIC conf, so it lives here and not in RUNTIME_CONF (tune()
+        # would swallow the CANNOT_MODIFY_STATIC_CONFIG error): PySpark
+        # wraps every pyspark.sql.functions call to capture its Python
+        # call site, which costs a conf read, two Py4J calls to set and
+        # clear the JVM origin, and a stack walk per call — about 60% of
+        # the Py4J round trips of building the AACT pipeline's plans.
+        # What is lost: analysis errors no longer name the Python line
+        # that built the failing expression; messages and stack traces
+        # are unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return tune(builder.getOrCreate())

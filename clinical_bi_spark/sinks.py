@@ -17,27 +17,30 @@ from clinical_bi_spark.functions.exprs import cleanse_text
 
 def cleanse_string_columns(df: DataFrame) -> DataFrame:
     """Apply the S5 sed-cleanse to every string column before delimited
-    export (quotes→apostrophes, ' | '→' - '; db2wh-etl.sh:158-159)."""
-    out = df
-    for field in df.schema.fields:
-        if isinstance(field.dataType, StringType):
-            out = out.withColumn(field.name, cleanse_text(F.col(field.name)))
-    return out
+    export (quotes→apostrophes, ' | '→' - '; db2wh-etl.sh:158-159), as one
+    projection: a withColumn per column re-analyzes the whole plan."""
+    return df.withColumns(
+        {
+            f.name: cleanse_text(F.col(f.name))
+            for f in df.schema.fields
+            if isinstance(f.dataType, StringType)
+        }
+    )
 
 
 def format_booleans_tf(df: DataFrame) -> DataFrame:
     """psql prints booleans as 't'/'f' in -A dumps — the format the DB2
-    CHAR(1) columns consumed (db2wh-etl.sh:138-141). NULL stays empty."""
-    out = df
-    for field in df.schema.fields:
-        if isinstance(field.dataType, BooleanType):
-            out = out.withColumn(
-                field.name,
-                F.when(F.col(field.name), "t")
-                .when(~F.col(field.name), "f")
-                .otherwise(F.lit(None).cast("string")),
-            )
-    return out
+    CHAR(1) columns consumed (db2wh-etl.sh:138-141). NULL stays empty.
+    One projection, like :func:`cleanse_string_columns`."""
+    return df.withColumns(
+        {
+            f.name: F.when(F.col(f.name), "t")
+            .when(~F.col(f.name), "f")
+            .otherwise(F.lit(None).cast("string"))
+            for f in df.schema.fields
+            if isinstance(f.dataType, BooleanType)
+        }
+    )
 
 
 def write_delimited(df: DataFrame, path: str, sep: str = "|") -> None:

@@ -14,7 +14,12 @@ from __future__ import annotations
 
 import configparser
 import os
+import re
+import stat
+import weakref
 from dataclasses import dataclass, field
+from typing import ClassVar
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,29 +40,111 @@ TABLE_NAMES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-@dataclass
-class Tables:
-    """Lazy handle bundle for one scale-factor directory.
+#: Parquet schemas Spark inferred, per session:
+#: ``{(path, schema confs): (file signature, schema)}``.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-    Each attribute is a lazily-built DataFrame (plan only — nothing is read
-    until an action runs, so Catalyst prunes columns/filters into the scan).
+#: Session confs that change the schema Spark infers from parquet footers.
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _local_path(path: str) -> str | None:
+    """The filesystem path behind ``path``, or None for a non-local URI or
+    a Hadoop glob."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = parsed.path if parsed.scheme else path
+    return None if re.search(r"[*?\[{]", local) else local
+
+
+def _file_signature(local: str) -> tuple | None:
+    """(relative name, size, mtime) of every file at ``local``; None when
+    nothing is there."""
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (("", st.st_size, st.st_mtime_ns),)
+    entries = []
+    for root, _, files in os.walk(local):
+        for name in files:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:
+                return None
+            entries.append((os.path.relpath(full, local), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(entries))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    repeat reads.
+
+    Spark infers a parquet schema by reading footers in a one-task job on
+    every read, even of a single file. The inferred schema is kept per
+    session, path and schema-affecting conf, together with the name, size
+    and mtime of every file under ``path``; while those are unchanged,
+    later reads pass it to ``spark.read.schema`` and launch no job. A
+    rewritten path has a new signature and is inferred again. Non-local
+    URIs and globs always infer.
+    """
+    local = _local_path(path)
+    signature = _file_signature(local) if local is not None else None
+    if not signature:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == signature:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = (signature, df.schema)
+    return df
+
+
+@dataclass
+class ParquetTables:
+    """Lazy handle bundle over ``<base_path>/<name>.parquet`` tables.
+
+    Each attribute in ``names`` is a lazily-built DataFrame (plan only —
+    nothing is read until an action runs, so Catalyst prunes
+    columns/filters into the scan), read once per bundle through
+    :func:`read_parquet`.
     """
 
     spark: SparkSession
-    sf_dir: str
+    base_path: str
     _cache: dict[str, DataFrame] = field(default_factory=dict)
+    names: ClassVar[tuple[str, ...]] = ()
+
+    def _prepare(self, name: str, df: DataFrame) -> DataFrame:
+        return df
 
     def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_") or name not in TABLE_NAMES:
+        if name.startswith("_") or name not in self.names:
             raise AttributeError(name)
         if name not in self._cache:
-            df = self.spark.read.parquet(
-                os.path.join(self.sf_dir, f"{name}.parquet")
-            )
-            if name == "events":
-                df = normalize_events(df)
-            self._cache[name] = df
+            path = os.path.join(self.base_path, f"{name}.parquet")
+            self._cache[name] = self._prepare(name, read_parquet(self.spark, path))
         return self._cache[name]
+
+
+class Tables(ParquetTables):
+    """The driver's tables for one scale-factor directory."""
+
+    names = TABLE_NAMES
+
+    def _prepare(self, name: str, df: DataFrame) -> DataFrame:
+        return normalize_events(df) if name == "events" else df
 
     def register_views(self) -> None:
         """Register every table as a temp view for the spark.sql() path."""
@@ -67,7 +154,7 @@ class Tables:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Tables:
     """Entry point used by every query: bundle of lazy DataFrames."""
-    return Tables(spark=spark, sf_dir=sf_dir)
+    return Tables(spark=spark, base_path=sf_dir)
 
 
 def normalize_events(df: DataFrame) -> DataFrame:

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clinical_bi_spark.sources import normalize_events, read_parquet
+
 _sink_counter = itertools.count()
 
 
@@ -37,10 +39,8 @@ def _events_stream(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    from clinical_bi_spark.sources import normalize_events
-
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # FileStreamSource wants a directory/glob, not a bare file: glob the
     # file (also matches a directory of chronological part files).
     return normalize_events(
@@ -397,7 +397,7 @@ def _documents_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     return (
         _reader(spark, sf_dir, max_files_per_trigger)
         .schema(schema)
