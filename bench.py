@@ -14,9 +14,12 @@ for non-aggregate queries and flatter the numbers).
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
+import traceback
+from typing import Callable
 
 from clinical_bi_spark import caching
 from clinical_bi_spark.queries import load_all
@@ -177,6 +180,47 @@ def repeat_blocks(names: list[str], size: int) -> list[list[str]]:
     return [names[i : i + size] for i in range(0, len(names), size)]
 
 
+def time_blocks(
+    blocks: list[list[str]],
+    run: Callable[[str], float],
+    repeats: int,
+    warmup: bool,
+) -> tuple[dict[str, float], dict[str, str]]:
+    """Min of ``repeats`` timed runs per query, taken as passes over each
+    block (after one untimed pass when ``warmup``); ``run(name)`` executes
+    one query and returns its duration. A query that raises is not run
+    again: its ``"Type: message"`` goes in the second dict instead of a
+    timing, and the remaining queries go on."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+
+    def sample(name: str) -> float:
+        if name in errors:
+            return math.inf
+        try:
+            return run(name)
+        except Exception as exc:
+            first_line = (str(exc).strip().splitlines() or [""])[0]
+            # bounded, so a run full of failures keeps its line < 16 KiB
+            errors[name] = f"{type(exc).__name__}: {first_line}"[:200]
+            print(f"{name} failed:", file=sys.stderr)
+            traceback.print_exc()
+            return math.inf
+
+    for block in blocks:
+        if warmup:
+            for name in block:
+                sample(name)
+        best = dict.fromkeys(block, math.inf)
+        for _ in range(repeats):
+            for name in block:
+                best[name] = min(best[name], sample(name))
+        timings.update(
+            (name, round(t, 3)) for name, t in best.items() if name not in errors
+        )
+    return timings, errors
+
+
 def main() -> None:
     # Bench the numpy production path of oracle-graduated ANN queries:
     # the sequential exact-arithmetic form exists for DuckDB adjudication
@@ -261,65 +305,32 @@ def main() -> None:
     names = sorted(bench_specs)
     blocks = repeat_blocks(names, interleave)
 
-    def _run_released(spec) -> float:
+    def _run_released(name: str) -> float:
         """One full execution; returns the timed duration. The
-        release/clear runs OUTSIDE the timed window: queries persist()
-        intermediates (signatures, postings, curated slices) — drop them
-        so repeats, and the next entry, never read a prior run's cache.
-        release_all also reclaims localCheckpoint blocks
-        (connected_components) that clearCache leaves behind; the extra
-        clearCache is belt and suspenders on a session the bench owns
-        outright."""
+        release/clear runs OUTSIDE the timed window, also after a failed
+        run: queries persist() intermediates (signatures, postings,
+        curated slices) — drop them so repeats, and the next entry, never
+        read a prior run's cache. release_all also reclaims
+        localCheckpoint blocks (connected_components) that clearCache
+        leaves behind; the extra clearCache is belt and suspenders on a
+        session the bench owns outright."""
         start = time.perf_counter()
-        run_fully(spec.fn(spark, SF_DIR))
-        dur = time.perf_counter() - start
-        caching.release_all(spark)
-        spark.catalog.clearCache()
-        return dur
+        try:
+            run_fully(bench_specs[name].fn(spark, SF_DIR))
+            return time.perf_counter() - start
+        finally:
+            caching.release_all(spark)
+            spark.catalog.clearCache()
 
-    timings: dict[str, float] = {}
-    for block in blocks:
-        if warmup:
-            for name in block:
-                _run_released(bench_specs[name])
-        best = {name: float("inf") for name in block}
-        for _ in range(repeats):
-            for name in block:
-                best[name] = min(best[name], _run_released(bench_specs[name]))
-        for name in block:
-            timings[name] = round(best[name], 3)
+    timings, errors = time_blocks(blocks, _run_released, repeats, warmup)
 
-    # the round-over-round subtotal is only comparable if every r4-set
-    # query was actually timed — a dropped bench flag or an errored query
-    # would silently shrink it and read as a perf improvement
-    missing_r4 = _R4_SET - set(timings)
-    assert not missing_r4, f"r4-set queries missing from bench: {missing_r4}"
-    missing_r5 = _R5_SET - set(timings)
-    assert not missing_r5, f"r5-set queries missing from bench: {missing_r5}"
-    missing_r6 = _R6_SET - set(timings)
-    assert not missing_r6, f"r6-set queries missing from bench: {missing_r6}"
-    missing_r7 = _R7_SET - set(timings)
-    assert not missing_r7, f"r7-set queries missing from bench: {missing_r7}"
-    missing_r8 = _R8_SET - set(timings)
-    assert not missing_r8, f"r8-set queries missing from bench: {missing_r8}"
-    missing_r9 = _R9_SET - set(timings)
-    assert not missing_r9, f"r9-set queries missing from bench: {missing_r9}"
-    missing_r10 = _R10_SET - set(timings)
-    assert not missing_r10, f"r10-set queries missing from bench: {missing_r10}"
-    missing_r11 = _R11_SET - set(timings)
-    assert not missing_r11, f"r11-set queries missing from bench: {missing_r11}"
-    missing_r12 = _R12_SET - set(timings)
-    assert not missing_r12, f"r12-set queries missing from bench: {missing_r12}"
-    missing_r13 = _R13_SET - set(timings)
-    assert not missing_r13, f"r13-set queries missing from bench: {missing_r13}"
-    missing_r14 = _R14_SET - set(timings)
-    assert not missing_r14, f"r14-set queries missing from bench: {missing_r14}"
-    missing_r15 = _R15_SET - set(timings)
-    assert not missing_r15, f"r15-set queries missing from bench: {missing_r15}"
-    missing_r16 = _R16_SET - set(timings)
-    assert not missing_r16, f"r16-set queries missing from bench: {missing_r16}"
-    missing_r17 = _R17_SET - set(timings)
-    assert not missing_r17, f"r17-set queries missing from bench: {missing_r17}"
+    # the round-over-round subtotals are only comparable if every
+    # round-set query was timed or recorded as failed — a dropped bench
+    # flag would silently shrink them and read as a perf improvement.
+    # Every earlier round set is a subset of the r17 one (pinned in
+    # tests/test_rotation_invariant.py).
+    missing = _R17_SET - set(timings) - set(errors)
+    assert not missing, f"round-set queries missing from bench: {sorted(missing)}"
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     result = {
@@ -331,6 +342,9 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        # {name: "Type: message"} for every query that raised; a failed
+        # query has no timing and is left out of the totals
+        "errors": errors,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # The headline set grew in r5 (pipelineops + streaming entries);
         # this subtotal over the r1-r4 18-query set is the round-over-round
@@ -428,7 +442,10 @@ def main() -> None:
     # fails loudly at run time if registry growth ever pushes the line
     # past a conservative 16 KiB (the r17 line is ~2.6 KiB at 57
     # queries), instead of silently producing an unparseable round.
-    assert len(line) < 16384, f"bench JSON line too large: {len(line)} bytes"
+    # past the guard the line still goes to stderr, so the run is not lost
+    if len(line) >= 16384:
+        print(line, file=sys.stderr, flush=True)
+        raise AssertionError(f"bench JSON line too large: {len(line)} bytes")
     print(line, flush=True)
 
 

@@ -21,6 +21,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Directory holding the ``clinical_bi_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Runtime-mutable confs applied to any session we run queries on.
 RUNTIME_CONF: dict[str, str] = {
     # Adaptive Query Execution: runtime join-strategy switch, post-shuffle
@@ -98,9 +101,13 @@ def warm(spark: SparkSession) -> SparkSession:
       round trip, which also forks a worker); with ``use_arrow=False`` it
       was the engine's most expensive janino compile (~7-9 s cold). Kept
       because the probe also warms the fps-consuming aggregate exprs.
-    * a trivial pandas_udf — forks the Python/Arrow worker pool (~3-4 s
-      one-time), which otherwise lands in the first UDF query's slot
-      (sim_ann_* / multimodal).
+    * a trivial pandas_udf — starts the Python daemon and forks the
+      Python/Arrow worker pool (~3-4 s one-time), which otherwise lands in
+      the first UDF query's slot (sim_ann_* / multimodal). Workers are
+      reused across tasks; on a get_spark session they fork from
+      :mod:`clinical_bi_spark.worker_daemon`, so a later task no longer
+      re-reads Spark's zip archives (150-260 ms each) and pays only for
+      its own rows.
 
     Production analogue: long-lived Spark apps warm code caches on the
     first query; a benchmark that charges one query for session-global
@@ -183,5 +190,18 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         # that built the failing expression; messages and stack traces
         # are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # STATIC conf (a SparkContext conf, fixed at launch): Python
+        # workers fork from worker_daemon, PySpark's daemon minus the
+        # per-task re-read of Spark's own zip archives (pyspark.zip,
+        # py4j, the spark-core jar; 150-260 ms of every Python task).
+        # Skipped: only the zipimporter refresh of the archives on the
+        # daemon's path at start. Safe because those are Spark's install
+        # and do not change while a worker lives; SparkFiles .py files,
+        # addPyFile archives and every other finder are still
+        # invalidated. The package root on the workers' PYTHONPATH lets
+        # the daemon import from any cwd (UDFs need the package there
+        # anyway).
+        .config("spark.python.daemon.module", "clinical_bi_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return tune(builder.getOrCreate())

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import itertools
 import os
 import re
 
@@ -543,12 +544,37 @@ def _assert_windows_are_pid_local(plan: str) -> None:
     cumsum: partitioned by the range-partition id ``__pid`` (population
     = one range shard — can never funnel). A window spec WITHOUT __pid
     in its partition clause (above all an empty/global one) is exactly
-    the SinglePartition funnel this family's pin forbids."""
+    the SinglePartition funnel this family's pin forbids; __pid as a
+    sort key does not count. The partition clause is every spec item
+    before the first ASC/DESC sort item."""
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     if "Window" in plan:
         assert specs, plan  # a Window operator must expose its spec
     for spec in specs:
-        assert "__pid#" in spec, plan
+        items = [item.strip() for item in spec.split(",")]
+        partition = itertools.takewhile(
+            lambda item: not re.search(r" (ASC|DESC)\b", item), items
+        )
+        assert any(item.startswith("__pid#") for item in partition), plan
+
+
+@pytest.mark.parametrize(
+    "spec, pid_local",
+    [
+        ("__pid#7, k#2, v#3L ASC NULLS FIRST", True),
+        ("k#2, __pid#7, v#3L DESC NULLS LAST", True),
+        ("k#2, __pid#7 ASC NULLS FIRST, v#3L ASC NULLS FIRST", False),
+        ("__pid#7 ASC NULLS FIRST", False),
+        ("v#3L ASC NULLS FIRST, specifiedwindowframe(RowFrame", False),
+    ],
+)
+def test_pid_local_check_reads_the_partition_spec(spec, pid_local):
+    plan = f"Window [row_number() windowspecdefinition({spec}) AS rn#9]"
+    if pid_local:
+        _assert_windows_are_pid_local(plan)
+    else:
+        with pytest.raises(AssertionError):
+            _assert_windows_are_pid_local(plan)
 
 
 @pytest.mark.parametrize(

@@ -160,6 +160,26 @@ def test_bench_repeat_blocks_partition_exactly():
         raise AssertionError("size=0 must raise")
 
 
+def test_bench_failing_query_is_recorded_and_the_run_goes_on():
+    """One query that raises gets an error entry instead of a timing, is
+    not run again, and the other queries keep their min-of-N timings."""
+    import bench
+
+    calls = {"a": 0, "b": 0, "c": 0}
+    durations = {"a": iter([3.0, 2.0, 1.0, 4.0]), "c": iter([5.0, 6.0, 7.0, 8.0])}
+
+    def run(name: str) -> float:
+        calls[name] += 1
+        if name == "b":
+            raise RuntimeError("boom\nJVM stack trace")
+        return next(durations[name])
+
+    timings, errors = bench.time_blocks([["a", "b"], ["c"]], run, 3, True)
+    assert timings == {"a": 1.0, "c": 6.0}
+    assert errors == {"b": "RuntimeError: boom"}
+    assert calls == {"a": 4, "b": 1, "c": 4}
+
+
 def test_bench_session_codegen_cache_sized(spark):
     """The r16 interleave methodology is only honest while the
     generated-class cache holds a whole bench session's stages: at
