@@ -262,48 +262,18 @@ def main() -> None:
     # repeat count, so min-of-3 only tightens toward the true plan cost
     # and stays comparable with the r1-r9 min-of-2 series.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    # r15 methodology: one UNTIMED warmup execution per query before its
-    # timed repeats. Mechanism (profiled r13 commit b8f9251, re-measured
-    # r15): a query's FIRST execution in a session pays 1.3-2.1x for
+    # One UNTIMED warmup execution per query before its timed repeats: a
+    # query's FIRST execution in a session pays 1.3-2.1x for
     # whole-stage-codegen compilation + JVM JIT of its generated classes
-    # (per-repeat profile at sf0.1: bottomk [1.72, 1.09, 1.10, 1.09,
-    # 0.97], kmv [2.65, 1.84, 1.69, 1.79, 1.62], stream-curation [5.11,
-    # 2.50, 2.47, 2.36, 2.24], bruteforce [0.92, 0.74, 0.69, 0.70,
-    # 0.63]). Under min-of-3 that first repeat is a wasted sample, so a
-    # noisy host window leaves only TWO effective reads — the recurring
-    # ">1.5x official mover, acquitted as noise on A/B" class (PERF.md
-    # rounds 12-15). The warmup run restores all N timed repeats to the
-    # steady JIT-warm state a long-lived production session sits in.
-    # Comparability: min-of-N is monotone, and the warmup only removes
-    # the first-repeat compile term, so recorded floors move toward (never
-    # away from) the true plan cost; the flag is recorded in the JSON.
-    warmup = os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-    # r16 methodology: schedule the timed repeats as PASSES over BLOCKS
-    # of adjacent queries instead of back-to-back per query. Mechanism
-    # (PERF.md round-16): with per-query back-to-back repeats, one
-    # host-slow window of ~25 s inflates EVERY sample of every query
-    # inside it — the official BENCH_r15 inflation was exactly such a
-    # window over the alphabetically contiguous data_->evt_ segment
-    # (1.05-1.96x across unrelated families), and it cost a seven-query
-    # A/B adjudication. Interleaving a block's repeats spreads a query's
-    # N samples ~block-wall apart, so a window that long taints at most
-    # one sample and min-of-N still lands on a clean read. Block size
-    # bounds the OTHER failure mode: Spark's generated-class cache holds
-    # ~100 codegen units, so a full-list interleave over 55 queries
-    # would evict a query's compiled stages between passes and
-    # reintroduce the first-run compile term the r15 warmup removed;
-    # blocks of ~8 stay inside the cache (warmup runs per block, right
-    # before its passes, preserving the warm-JIT contract). Block size 1
-    # is EXACTLY the r15 sequential shape (env SPARK_GRAFT_BENCH_
-    # INTERLEAVE=1 reverts for historical A/B); the effective size is
-    # recorded in the JSON (`bench_interleave`). Comparability: the
-    # statistic is unchanged (min over the same N warmed executions);
-    # only the schedule of the samples moves, and the same-tree control
-    # (PERF.md round-16) shows per-query mins in-band with the
-    # sequential reads.
-    interleave = int(os.environ.get("SPARK_GRAFT_BENCH_INTERLEAVE", "8"))
+    # (PERF.md round-15), which under min-of-3 would waste a sample.
+    # The timed repeats run as PASSES over BLOCKS of 8 adjacent queries
+    # instead of back-to-back per query, so one host-slow window taints
+    # at most one of a query's samples (PERF.md round-16). Blocks of 8
+    # stay inside Spark's generated-class cache, so a query's compiled
+    # stages survive between passes; warmup runs per block, right before
+    # its passes.
     names = sorted(bench_specs)
-    blocks = repeat_blocks(names, interleave)
+    blocks = repeat_blocks(names, 8)
 
     def _run_released(name: str) -> float:
         """One full execution; returns the timed duration. The
@@ -322,7 +292,7 @@ def main() -> None:
             caching.release_all(spark)
             spark.catalog.clearCache()
 
-    timings, errors = time_blocks(blocks, _run_released, repeats, warmup)
+    timings, errors = time_blocks(blocks, _run_released, repeats, warmup=True)
 
     # the round-over-round subtotals are only comparable if every
     # round-set query was timed or recorded as failed — a dropped bench
@@ -334,10 +304,9 @@ def main() -> None:
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     result = {
-        "metric": "headline query wall-clock (min of {} runs{}), local[{}]".format(
-            repeats,
-            ", post-warmup" if warmup else "",
-            default_parallelism(),
+        "metric": (
+            f"headline query wall-clock (min of {repeats} runs, "
+            f"post-warmup), local[{default_parallelism()}]"
         ),
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
@@ -391,48 +360,12 @@ def main() -> None:
         "subtotal_r17_set": round(
             sum(t for n, t in timings.items() if n in _R17_SET), 3
         ),
-        # Global-rank dual path (operators/ranking.py): benched timings
-        # measure the sharded prefix-sum production form (the default);
-        # the single-partition window parity form
-        # (CLINICAL_BI_SINGLE_PARTITION_RANK=1) is differential-pinned
-        # equal in tests.
-        "single_partition_rank": os.environ.get(
-            "CLINICAL_BI_SINGLE_PARTITION_RANK", "0"
-        )
-        != "0",
-        # Jaccard token mode (queries/textops.py): u64 hash-exact with
-        # per-corpus injectivity audit is the default; str is the r8
-        # baseline form.
-        "jaccard_tokens": os.environ.get(
-            "CLINICAL_BI_JACCARD_TOKENS", "u64"
-        ),
-        # Jaccard/containment verify mode (queries/textops.py): since the
-        # r14/r15 default flips the prefix-join timings depend on this —
-        # record the env override when set, else "per-query-default"
-        # (bitmask for dedup_jaccard_prefix since r14 and for
-        # dedup_containment_prefix since r15, vocab-gated with automatic
-        # array fallback past the cap).
-        "jaccard_verify": os.environ.get(
-            "CLINICAL_BI_JACCARD_VERIFY", "per-query-default"
-        ),
-        # r15 methodology flag (see the warmup comment above): true =
-        # every timed repeat ran JIT-warm; SPARK_GRAFT_BENCH_WARMUP=0
-        # reverts to the r1-r14 cold-first-repeat recipe for A/B.
-        "bench_warmup": warmup,
-        "bench_interleave": interleave,
         # Self-describing variant flag: with CLINICAL_BI_EXACT_ARITH=0
         # (the bench default set above) the sim_ann_* timings measure the
         # numpy batch production path; the adjudicated variants run the
         # exact sequential-arithmetic forms, which are differential-pinned
         # equal in tests but slower (lsh ~2.2x).
         "ann_exact_arithmetic": os.environ["CLINICAL_BI_EXACT_ARITH"] != "0",
-        # Stateful-streaming dual path (streaming/stateful.py): default is
-        # the exact NoTimeout adjudication path; the evicting production
-        # path (CLINICAL_BI_STATE_EVICTION=1) bounds state by active keys.
-        # No benched query runs the stateful ops, so this is recorded for
-        # self-description only.
-        "state_eviction": os.environ.get("CLINICAL_BI_STATE_EVICTION", "0")
-        != "0",
     }
     line = json.dumps(result)
     # r17 hardening (VERDICT r16 item: the r15 driver run lost its bench

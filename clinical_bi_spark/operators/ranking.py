@@ -10,9 +10,8 @@ packing:
 
 1. range-partition by the full sort key (group cols + order cols) so
    partitions hold disjoint, ordered key ranges;
-2. local row numbers per partition (JVM bit ops in the ungrouped case,
-   narrow ``mapInPandas`` cumcount in the grouped one — rows arrive
-   pre-sorted by ``sortWithinPartitions``);
+2. local row numbers (or running sums) per partition, in the JVM — rows
+   arrive pre-sorted by ``sortWithinPartitions``;
 3. per-(partition, group) row COUNTS — one long per cell, bounded by
    n_partitions x n_groups (callers with a high-cardinality group key
    should use the ordinary partitioned window instead: Spark already
@@ -33,35 +32,14 @@ every caller must include a tie-break column.
 :func:`ntile_from_rank` then maps ranks to SQL ``NTILE(k)`` buckets with
 exact integer arithmetic (first ``N mod k`` buckets take ``N div k + 1``
 rows, the rest ``N div k``), so the composition is value-identical to the
-single-partition ``F.ntile(k).over(...)`` form — pinned differentially in
-tests/test_analytics.py.
+single-partition ``F.ntile(k).over(...)`` form — pinned against SQL
+``NTILE`` in tests/test_analytics.py.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-SINGLE_PARTITION_RANK_ENV = "CLINICAL_BI_SINGLE_PARTITION_RANK"
-
-
-def use_single_partition_rank() -> bool:
-    """Dual-path switch for the global-rank analytics queries
-    (evt_rfm_segmentation / m13_auc_rank / agg_equidepth_histogram).
-
-    Default (unset/0) = the SHARDED production path in this module — the
-    form a 1000-executor cluster needs. ``CLINICAL_BI_SINGLE_PARTITION_RANK=1``
-    selects the classic single-window parity form (one ``Window.orderBy``
-    ntile/row_number). Both paths are value-identical by construction
-    (ntile_from_rank's exact bucket arithmetic), which is why — unlike
-    the eviction flag — the PRODUCTION path can be the driver-adjudicated
-    default: it is graded directly against the NTILE/ROW_NUMBER SQL
-    oracle, and tests pin the two paths row-for-row besides."""
-    return os.environ.get(SINGLE_PARTITION_RANK_ENV, "0") == "1"
 
 
 def _excl_prefix_offsets(
@@ -99,138 +77,49 @@ def global_row_number(
     df: DataFrame,
     order_by: list[Column],
     *,
-    partition_by: list[str] | None = None,
     out_col: str = "rnk",
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """Append 1-based ``out_col`` = ROW_NUMBER() OVER (PARTITION BY
-    partition_by ORDER BY order_by) without a SinglePartition exchange.
+    """Append 1-based ``out_col`` = ROW_NUMBER() OVER (ORDER BY order_by)
+    without a SinglePartition exchange.
 
     ``order_by`` are Column sort expressions (``F.col(...).desc()``
-    allowed) that must form a total order within each group;
-    ``partition_by`` are column NAMES (needed as pandas group keys) and
-    must be low-cardinality — the per-(partition, group) counts relation
-    (one long each) is the offsets self-join's broadcast side.
-
-    NULL group keys are handled explicitly (r9 ADVICE): SQL's
-    ROW_NUMBER() OVER (PARTITION BY g ...) puts NULLs in their own
-    partition, so the local cumcount groups with ``dropna=False``, the
-    pandas bookkeeping normalizes NaN/NaT keys to ``None`` (NaN is
-    unusable as a dict key — NaN != NaN breaks lookups), and the offset
-    join is null-safe (``<=>``); a plain equi-join would drop null-key
-    rows' offsets and silently restart their ranks per partition.
+    allowed) that must form a total order.
     """
-    import pandas as pd
-
     from clinical_bi_spark.caching import persist_tracked
 
-    part_cols = list(partition_by or [])
     spark = df.sparkSession
     np_ = n_partitions or spark.sparkContext.defaultParallelism
-    sort_exprs = [F.col(c) for c in part_cols] + list(order_by)
     ranged = (
-        df.repartitionByRange(np_, *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
+        df.repartitionByRange(np_, *order_by)
+        .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
     )
-
-    if not part_cols:
-        # JVM fast path for the (only query-used) ungrouped case (r16
-        # optimization, guide §4 "eliminate the Python boundary"): the
-        # local per-partition row index is exactly what
-        # monotonically_increasing_id encodes — partition id in the upper
-        # 31 bits, the 0-based row index within the partition in the
-        # lower 33 (deterministic here: rows are sorted within the
-        # partition, and <2^33 rows/partition is the function's own
-        # documented bound, far above any real task size) — so the local
-        # cumcount needs no mapInPandas round-trip of the whole relation
-        # through Arrow/Python. The grouped path below keeps the pandas
-        # cumcount (per-group counters across batches have no JVM
-        # equivalent short of a window, which is what this operator
-        # exists to avoid).
-        local = persist_tracked(
-            ranged.withColumn(
-                "__local_rn",
-                F.monotonically_increasing_id().bitwiseAND(
-                    F.lit((1 << 33) - 1).cast("long")
-                )
-                + F.lit(1).cast("long"),
-            )
-        )
-        off_df = _excl_prefix_offsets(
-            local.groupBy("__pid").agg(F.count("*").alias("__n")),
-            [],
-            ["__n"],
-            ["__offset"],
-        )
-        joined = local.join(F.broadcast(off_df), ["__pid"], "left")
-        return joined.withColumn(
-            out_col,
-            (
-                F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local_rn")
-            ).cast("bigint"),
-        ).drop("__pid", "__local_rn", "__offset")
-
-    def local_rn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive sorted; carry per-group counters across Arrow batches
-        seen: dict[tuple, int] = {}
-        for pdf in it:
-            if not len(pdf):
-                yield pdf.assign(__local_rn=pd.Series([], dtype="int64"))
-                continue
-            if part_cols:
-                base = (
-                    pdf.groupby(part_cols, sort=False, dropna=False).cumcount()
-                    + 1
-                )
-                # NaN/NaT -> None so tuples are stable dict keys
-                kdf = pdf[part_cols].astype(object)
-                kdf = kdf.where(kdf.notna(), None)
-                keys = pd.Series(
-                    list(kdf.itertuples(index=False, name=None)),
-                    index=pdf.index,
-                )
-                offs = keys.map(lambda k: seen.get(k, 0)).astype("int64")
-                for k, c in keys.value_counts().items():
-                    seen[k] = seen.get(k, 0) + int(c)
-                pdf = pdf.assign(__local_rn=(base + offs).astype("int64"))
-            else:
-                start = seen.get((), 0)
-                pdf = pdf.assign(
-                    __local_rn=pd.RangeIndex(start + 1, start + 1 + len(pdf))
-                )
-                seen[()] = start + len(pdf)
-            yield pdf
-
-    schema = StructType(
-        list(ranged.schema.fields) + [StructField("__local_rn", LongType())]
-    )
+    # The local per-partition row index is exactly what
+    # monotonically_increasing_id encodes: partition id in the upper 31
+    # bits, the 0-based row index within the partition in the lower 33
+    # (deterministic here: rows are sorted within the partition, and
+    # <2^33 rows/partition is the function's own documented bound). So
+    # the local count needs no Python round trip of the relation.
     # persist: the offsets subtree and the main subtree must see ONE
     # materialized partition layout (range-boundary sampling is
     # nondeterministic across re-executions), and the cache pins it
-    local = persist_tracked(ranged.mapInPandas(local_rn, schema=schema))
-
+    local = persist_tracked(
+        ranged.withColumn(
+            "__local_rn",
+            F.monotonically_increasing_id().bitwiseAND(
+                F.lit((1 << 33) - 1).cast("long")
+            )
+            + F.lit(1).cast("long"),
+        )
+    )
     off_df = _excl_prefix_offsets(
-        local.groupBy("__pid", *part_cols).agg(F.count("*").alias("__n")),
-        part_cols,
+        local.groupBy("__pid").agg(F.count("*").alias("__n")),
+        [],
         ["__n"],
         ["__offset"],
     )
-    if part_cols:
-        # null-safe offset join: NULL group keys are a real rank partition
-        off_df = off_df.select(
-            F.col("__pid").alias("__o_pid"),
-            *[F.col(c).alias(f"__o_{c}") for c in part_cols],
-            "__offset",
-        )
-        cond = F.col("__pid") == F.col("__o_pid")
-        for c in part_cols:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__o_{c}"))
-        joined = local.join(F.broadcast(off_df), cond, "left").drop(
-            "__o_pid", *[f"__o_{c}" for c in part_cols]
-        )
-    else:
-        joined = local.join(F.broadcast(off_df), ["__pid"], "left")
+    joined = local.join(F.broadcast(off_df), ["__pid"], "left")
     return joined.withColumn(
         out_col,
         (F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local_rn")).cast(
@@ -263,8 +152,8 @@ def global_prefix_sums(
        shard (r17; the r16 form was a ``mapInPandas`` cumcount that
        shipped the whole relation through Arrow/Python);
     3. per-(partition, group) TOTALS of each value col — one long per
-       cell, a tiny relation (``partition_by`` must be low-cardinality,
-       like global_row_number's) — folded into exclusive prefix offsets
+       cell, a tiny relation (``partition_by`` must be
+       low-cardinality) — folded into exclusive prefix offsets
        by the shared broadcast self-join (:func:`_excl_prefix_offsets`;
        no driver collect, the whole operator is one lazy plan);
     4. broadcast exclusive prefix offsets back (null-safe join — NULL

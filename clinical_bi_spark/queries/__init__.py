@@ -295,10 +295,10 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
 #: this round.
 #: Post-commit note (same round, after the window commit): later r13
 #: work added an ENV-GATED DORMANT verify path to dedup_jaccard_prefix
-#: AND dedup_containment_prefix (CLINICAL_BI_JACCARD_VERIFY=bitmask —
+#: AND dedup_containment_prefix (an env-selected bitmask verify —
 #: vocab-gated dense-bitmask verify over the shared
 #: _bitmask_pair_overlap core, ~6x verify CPU, differential-pinned
-#: identical output per query; see textops.py JACCARD_VERIFY_MODE_ENV).
+#: identical output per query; see textops.py _JACCARD_BITMASK_VOCAB_CAP).
 #: Both registered default paths are byte-identical this round, so no
 #: r13 slot is owed (the r12 semdedup precedent); the DEFAULT FLIPS are
 #: explicitly scheduled ONE PER ROUND to keep the rotation arithmetic

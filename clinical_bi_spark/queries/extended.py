@@ -1133,24 +1133,17 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id) total orders so bucket assignment is deterministic on both
     engines.
 
-    Dual path (r9 graduation of the r8 `weak`): the DEFAULT is the
-    SHARDED production form — three passes of
+    Quintiles come from three passes of the SHARDED
     :func:`clinical_bi_spark.operators.ranking.global_row_number`
-    (range-exchange + narrow local cumcount + broadcast prefix offsets,
+    (range-exchange + narrow local row number + broadcast prefix offsets,
     never a SinglePartition sort; the per-user ENTITY relation is itself
     billions of rows at 100 TB) composed with ``ntile_from_rank``'s exact
-    NTILE(5) bucket arithmetic, value-identical to the window form and
-    adjudicated directly against the NTILE SQL oracle.
-    ``CLINICAL_BI_SINGLE_PARTITION_RANK=1`` selects the classic
-    three-ntile-window parity form; tests/test_analytics.py pins the two
-    paths row-for-row and tests/test_plans.py asserts the production plan
-    has no SinglePartition exchange."""
-    from pyspark.sql.window import Window
-
+    NTILE(5) bucket arithmetic, adjudicated directly against the NTILE
+    SQL oracle; tests/test_plans.py asserts the plan has no
+    SinglePartition exchange."""
     from clinical_bi_spark.operators.ranking import (
         global_row_number,
         ntile_from_rank,
-        use_single_partition_rank,
     )
 
     t = load_tables(tune(spark), sf_dir)
@@ -1162,58 +1155,39 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("monetary_micro"),
     )
-    if not use_single_partition_rank():
-        # r16: the corpus max event time is the max of the per-user maxes,
-        # so read it off the (persisted) entity relation instead of a
-        # second full scan of the fact table — identical double, one
-        # fewer events pass. The persist moves ABOVE the scalar action so
-        # the cache is populated by it (the count below then reads cache).
-        per_user = persist_tracked(per_user)
-        emax = per_user.agg(F.max("last_e")).first()[0]
-    else:
-        # parity path unchanged (its plan pin expects the bare aggregate)
-        emax = t.events.agg(F.max(e)).first()[0]
+    # The corpus max event time is the max of the per-user maxes, so it
+    # is read off the persisted entity relation instead of a second full
+    # scan of the fact table. The persist sits ABOVE the scalar action so
+    # the action populates the cache (the count below then reads it).
+    per_user = persist_tracked(per_user)
+    emax = per_user.agg(F.max("last_e")).first()[0]
     recency = (
         F.floor((F.lit(float(emax)) - F.col("last_e")) / 86400.0)
         .cast("bigint")
         .alias("recency_days")
     )
-    if use_single_partition_rank():
-        w_r = Window.orderBy(F.col("last_e").desc(), "user_id")
-        w_f = Window.orderBy(F.col("frequency").desc(), "user_id")
-        w_m = Window.orderBy(F.col("monetary_micro").desc(), "user_id")
-        scored = per_user.select(
-            "user_id",
-            recency,
-            "frequency",
-            "monetary_micro",
-            F.ntile(5).over(w_r).cast("int").alias("r_score"),
-            F.ntile(5).over(w_f).cast("int").alias("f_score"),
-            F.ntile(5).over(w_m).cast("int").alias("m_score"),
-        )
-    else:
-        n_users = per_user.count()  # one scalar (cache-served), inlined
-        ranked = global_row_number(
-            per_user, [F.col("last_e").desc(), F.col("user_id")], out_col="__r_rnk"
-        )
-        ranked = global_row_number(
-            ranked, [F.col("frequency").desc(), F.col("user_id")], out_col="__f_rnk"
-        )
-        ranked = global_row_number(
-            ranked,
-            [F.col("monetary_micro").desc(), F.col("user_id")],
-            out_col="__m_rnk",
-        )
-        n_lit = F.lit(int(n_users))
-        scored = ranked.select(
-            "user_id",
-            recency,
-            "frequency",
-            "monetary_micro",
-            ntile_from_rank(F.col("__r_rnk"), n_lit, 5).alias("r_score"),
-            ntile_from_rank(F.col("__f_rnk"), n_lit, 5).alias("f_score"),
-            ntile_from_rank(F.col("__m_rnk"), n_lit, 5).alias("m_score"),
-        )
+    n_users = per_user.count()  # one scalar (cache-served), inlined
+    ranked = global_row_number(
+        per_user, [F.col("last_e").desc(), F.col("user_id")], out_col="__r_rnk"
+    )
+    ranked = global_row_number(
+        ranked, [F.col("frequency").desc(), F.col("user_id")], out_col="__f_rnk"
+    )
+    ranked = global_row_number(
+        ranked,
+        [F.col("monetary_micro").desc(), F.col("user_id")],
+        out_col="__m_rnk",
+    )
+    n_lit = F.lit(int(n_users))
+    scored = ranked.select(
+        "user_id",
+        recency,
+        "frequency",
+        "monetary_micro",
+        ntile_from_rank(F.col("__r_rnk"), n_lit, 5).alias("r_score"),
+        ntile_from_rank(F.col("__f_rnk"), n_lit, 5).alias("f_score"),
+        ntile_from_rank(F.col("__m_rnk"), n_lit, 5).alias("m_score"),
+    )
     return scored.withColumn(
         "segment",
         F.concat(

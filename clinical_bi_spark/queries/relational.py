@@ -1254,18 +1254,11 @@ def m13_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     status 'F', over a deterministic total order (score, then key — ties
     resolved identically in both engines rather than midrank-averaged).
 
-    Dual path (r9, the RFM graduation template): the DEFAULT global rank
-    is the SHARDED prefix-sum form
+    The global rank is the SHARDED prefix-sum form
     (:func:`clinical_bi_spark.operators.ranking.global_row_number` —
-    range exchange + narrow local cumcount + broadcast offsets, no
-    SinglePartition sort over the fact table);
-    ``CLINICAL_BI_SINGLE_PARTITION_RANK=1`` selects the one-window parity
-    form. Identical ranks by construction (total order), differential-
-    pinned in tests/test_analytics.py."""
-    from clinical_bi_spark.operators.ranking import (
-        global_row_number,
-        use_single_partition_rank,
-    )
+    range exchange + narrow local row number + broadcast offsets, no
+    SinglePartition sort over the fact table)."""
+    from clinical_bi_spark.operators.ranking import global_row_number
 
     t = load_tables(tune(spark), sf_dir)
     scored = t.orders.select(
@@ -1273,13 +1266,9 @@ def m13_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("score"),
         "o_orderkey",
     )
-    if use_single_partition_rank():
-        w = Window.orderBy("score", "o_orderkey")
-        ranked = scored.withColumn("rnk", F.row_number().over(w))
-    else:
-        ranked = global_row_number(
-            scored, [F.col("score"), F.col("o_orderkey")], out_col="rnk"
-        )
+    ranked = global_row_number(
+        scored, [F.col("score"), F.col("o_orderkey")], out_col="rnk"
+    )
     pos = F.sum("label")
     n = F.count("*")
     pos_rank_sum = F.sum(F.when(F.col("label") == 1, F.col("rnk")).otherwise(0))
@@ -1434,16 +1423,12 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_histogram_quantiles: bucket populations equal by construction,
     boundaries adapt to the distribution.
 
-    Dual path (r9, the RFM graduation template; REBUILT r10 after the
-    profile the r9 verdict asked for). The r10 phase attribution of the
-    generic sharded-rank form (scripts/profile_equidepth.py) read, at
-    x50: ~4.5 s fact range-exchange + ~9 s fact-sized Arrow round-trip /
-    offsets join / final fact-sized agg — all to produce 24 rows. The
-    fix is not a faster rank but NO per-row rank: a bucket's n/lo/hi are
-    TIE-BREAK INDEPENDENT (the tie-break only permutes equal values
-    within ranks, so the value multiset at ranks [start_b, end_b] is
-    determined by value-level counts alone). The DEFAULT path therefore
-    collapses to the VALUE level:
+    A per-row sharded rank costs a fact-sized range exchange, offsets
+    join and final agg — all to produce 24 rows. This needs NO per-row
+    rank: a bucket's n/lo/hi are TIE-BREAK INDEPENDENT (the tie-break
+    only permutes equal values within ranks, so the value multiset at
+    ranks [start_b, end_b] is determined by value-level counts alone).
+    The query therefore collapses to the VALUE level:
 
     1. groupBy(flag, price) -> counts (map-side combine; the only
        fact-scale op, and its shuffle is bounded by the PRICE DOMAIN,
@@ -1456,33 +1441,16 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
        <= k-long span, min/max prices per bucket, bucket sizes in
        closed form.
 
-    ``CLINICAL_BI_SINGLE_PARTITION_RANK=1`` selects the window parity
-    form. Differential-pinned in tests/test_analytics.py; the NTILE SQL
-    oracle adjudicates the value-level path directly."""
-    from pyspark.sql.window import Window
-
+    The NTILE SQL oracle adjudicates the value-level path directly."""
     from clinical_bi_spark.operators.ranking import (
         global_prefix_sums,
         ntile_from_rank,
-        use_single_partition_rank,
     )
 
     t = load_tables(tune(spark), sf_dir)
     li = t.lineitem.select(
         "l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber"
     )
-    if use_single_partition_rank():
-        w = Window.partitionBy("l_returnflag").orderBy(
-            "l_extendedprice", "l_orderkey", "l_linenumber"
-        )
-        bucketed = li.select(
-            "l_returnflag", "l_extendedprice", F.ntile(8).over(w).alias("bucket")
-        )
-        return bucketed.groupBy("l_returnflag", "bucket").agg(
-            F.count("*").alias("n"),
-            F.round(F.min("l_extendedprice"), 4).alias("lo"),
-            F.round(F.max("l_extendedprice"), 4).alias("hi"),
-        )
     vals = persist_tracked(
         li.groupBy("l_returnflag", "l_extendedprice").agg(
             F.count("*").alias("c")

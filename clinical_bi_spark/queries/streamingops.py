@@ -407,8 +407,8 @@ def stream_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     once with its filled value — equals the batch query over the
     bounded chronological replay however it splits into micro-batches
     (multi-batch equality pinned in tests/test_streaming.py). Shares
-    the batch oracle; supports the CLINICAL_BI_STATE_EVICTION
-    production path like the other stateful operators."""
+    the batch oracle; supports the ``evict=True`` production path like
+    the other stateful operators."""
     from clinical_bi_spark.streaming.stateful import stream_forward_fill_rows
 
     return stream_forward_fill_rows(tune(spark), sf_dir)

@@ -1645,75 +1645,25 @@ WHERE CAST(n_inter AS DOUBLE)
 """
 
 
-#: r9 verify-volume lever (the r8 brief's named trade, executed as
-#: hash-exact-with-audit): tokens enter the join machinery as xxhash64
-#: LONGS instead of strings, shrinking both the candidate join keys and
-#: — the term that set the x50 spill ceiling — the verify join's shipped
-#: token arrays. Exactness is NOT traded away: a collision AUDIT
-#: (count(DISTINCT token) == count(DISTINCT xxhash64(token)) over the
-#: corpus vocabulary, one cheap aggregate over the already-built token
-#: relation) proves the hash injective on the actual corpus, and an
-#: injective token mapping leaves every |A∩B| / |A∪B| unchanged — so the
-#: u64 output IS the string output, certificate included. Collision
-#: odds: a vocabulary of V distinct tokens collides somewhere with
-#: P <= V^2 / 2^65 (birthday bound) — ~3e-9 even at V = 1e5 (the bench
-#: corpus) and ~0.05 at V = 1e9 (a 100 TB corpus), which is why the
-#: audit is a per-run certificate rather than an assumption. As of r10
-#: the certificate is issued INSIDE every u64-mode query
-#: (audited_token_relation below — ADVICE medium): on audit failure the
-#: query automatically falls back to string tokens (identical machinery
-#: on raw strings; also the A/B baseline) with a RuntimeWarning;
-#: CLINICAL_BI_JACCARD_TOKENS=str forces the string form outright.
-JACCARD_TOKEN_MODE_ENV = "CLINICAL_BI_JACCARD_TOKENS"
-
-#: r13 verify-CPU lever, staged as the family's standard env-gated dual
-#: path (EXACT_ARITH / SINGLE_PARTITION_RANK / STATE_EVICTION /
-#: JACCARD_TOKENS precedent): CLINICAL_BI_JACCARD_VERIFY=bitmask swaps
-#: the verify join's per-pair ``array_intersect`` for a dense-bitmask
-#: overlap — map the corpus vocabulary to dense ids, fold each document's
-#: token set into ceil(V/64) longs ONCE, and verify each candidate pair
-#: with AND + bit_count (codegen is a handful of ALU ops vs a per-row
-#: hash-set build). Measured at sf0.1 (5.65M candidates): verify stage
-#: 0.28-0.91 s vs 1.70-8.58 s for array_intersect, byte-identical output
-#: (0 differing rows; differential-pinned in tests/test_dedup.py). The
-#: small codegen also collapses the JIT-warmup variance that made this
-#: query the bench's recurring phantom mover (PERF.md round-13). The
-#: path is VOCAB-GATED for scale honesty: it engages only when the
-#: corpus vocabulary fits _JACCARD_BITMASK_VOCAB_CAP (<= 64 longs =
-#: 512 B per doc mask, <= cap+1-row bounded TopK collect for the id
-#: map, broadcast id join); an unbounded web-scale vocabulary falls
-#: back to the adjudicated array_intersect form automatically. Defaults
-#: are PER QUERY (the r13 one-flip-per-round schedule, executed in
-#: full): dedup_jaccard_prefix defaults to "bitmask" SINCE r14 and
-#: dedup_containment_prefix SINCE r15, each flipped with its own
-#: changed-code window slot. Both share _bitmask_pair_overlap
-#: (each projects its own measure over the (n_inter, ca, cb) core); the
-#: env var overrides both ways for A/B and fallback forcing.
-JACCARD_VERIFY_MODE_ENV = "CLINICAL_BI_JACCARD_VERIFY"
-
-#: dense-bitmask vocabulary ceiling: 4096 ids keeps every bounded term
-#: small (64-long masks, 4097-row driver list, ~100 KB broadcast) while
-#: covering the closed-vocabulary corpora the fast path targets
-#: (categorical logs, k-mer alphabets, template-generated text).
+#: Tokens enter the join machinery as xxhash64 LONGS instead of
+#: strings, shrinking the candidate join keys and the verify join's
+#: shipped token arrays. Exactness rests on a per-run collision AUDIT
+#: (audited_token_relation: count(DISTINCT token) == count(DISTINCT
+#: xxhash64(token)) over the corpus vocabulary): an injective token
+#: mapping leaves every |A∩B| / |A∪B| unchanged. A vocabulary of V
+#: distinct tokens collides somewhere with P <= V^2 / 2^65 (birthday
+#: bound), ~0.05 at V = 1e9, so on a failed audit the query falls back
+#: to the string tokens (identical machinery) with a RuntimeWarning.
+#:
+#: The verify step is a dense-bitmask overlap (map the vocabulary to
+#: dense ids, fold each document's token set into ceil(V/64) longs once,
+#: verify each candidate pair with AND + bit_count) instead of a per-pair
+#: ``array_intersect`` hash-set build. It needs a driver-side id map and
+#: per-document masks sized by the vocabulary, so it engages only while
+#: the corpus vocabulary fits this cap (64-long masks, a 4097-row driver
+#: list, ~100 KB broadcast); past it the query falls back to
+#: ``array_intersect``, which works for any vocabulary.
 _JACCARD_BITMASK_VOCAB_CAP = 4096
-
-
-def _jaccard_u64_tokens() -> bool:
-    import os
-
-    return os.environ.get(JACCARD_TOKEN_MODE_ENV, "u64") != "str"
-
-
-def _jaccard_verify_bitmask_mode(default: str = "bitmask") -> bool:
-    """Resolve the verify-mode flag. The r13 one-flip-per-round schedule
-    is complete — dedup_jaccard_prefix flipped to ``bitmask`` in r14,
-    dedup_containment_prefix in r15 — so ``bitmask`` is now the uniform
-    default (the per-query ``default`` parameter remains for an A/B
-    caller). The env var still overrides both ways (``array`` forces the
-    adjudicated array_intersect baseline)."""
-    import os
-
-    return os.environ.get(JACCARD_VERIFY_MODE_ENV, default) == "bitmask"
 
 
 #: Test seam: when set, replaces xxhash64 as BOTH the audited and the
@@ -1730,19 +1680,12 @@ def _token_hash_fn():
 def audited_token_relation(
     toks: DataFrame, *, return_dfreq: bool = False
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Resolve the token-mode contract PER RUN (r10; ADVICE medium): the
-    u64 mode's exactness rests on the per-corpus injectivity certificate,
-    so the certificate must be issued inside the query, not only in tests.
-
-    * str mode: persist and return the string tokens unchanged.
-    * u64 mode: persist the string tokens, audit injectivity on THIS
-      corpus, and only on a clean certificate hash the arrays
-      (persisted — candidates and verify both consume them). On a
-      collision (count(DISTINCT token) != count(DISTINCT hash)) fall
-      back to the string tokens with a loud RuntimeWarning — exactly the
-      ``CLINICAL_BI_JACCARD_TOKENS=str`` behavior the docstrings
-      promise, made automatic. The fallback is pinned end-to-end by
-      tests/test_dedup.py's forged-collision test.
+    """Persist the string tokens, audit hash injectivity on THIS corpus,
+    and only on a clean certificate return the hashed arrays (persisted
+    — candidates and verify both consume them). On a collision
+    (count(DISTINCT token) != count(DISTINCT hash)) return the string
+    tokens with a RuntimeWarning; tests/test_dedup.py's forged-collision
+    test pins that fallback end-to-end.
 
     ``return_dfreq=True`` additionally returns the persisted
     ``(w, df)`` document-frequency relation in the SAME token mode as
@@ -1753,10 +1696,10 @@ def audited_token_relation(
     ``dfreq`` now serves all three: the audit is a tiny aggregate OVER
     it (count rows vs countDistinct(hash) — identical counts to the old
     exploded-distinct form), the candidates join against it, and the
-    verify TopK sorts it. In u64 mode the hashed relation's df equals
-    the string relation's df because the audited hash is injective on
-    this corpus — the certificate that gates the mode is exactly the
-    statement that makes the derivation sound.
+    verify TopK sorts it. The hashed relation's df equals the string
+    relation's df because the audited hash is injective on this corpus
+    — the certificate that gates hashing is exactly the statement that
+    makes the derivation sound.
     """
     toks = persist_tracked(toks)
     dfreq = persist_tracked(
@@ -1764,8 +1707,6 @@ def audited_token_relation(
         .groupBy("w")
         .agg(F.count("*").alias("df"))
     )
-    if not _jaccard_u64_tokens():
-        return (toks, dfreq) if return_dfreq else toks
     hash_fn = _token_hash_fn()
     row = dfreq.agg(
         F.count("*").alias("n_tok"),
@@ -1779,7 +1720,7 @@ def audited_token_relation(
             "u64 token-mode injectivity audit FAILED on this corpus "
             f"({n_tok} distinct tokens -> {n_hash} distinct hashes): "
             "falling back to string tokens (identical machinery, exact "
-            f"output); set {JACCARD_TOKEN_MODE_ENV}=str to silence",
+            "output)",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -2043,25 +1984,15 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     randomizes; unlike both, it is lossless at any corpus size — proved
     by the superset oracle.
 
-    r9 verify-volume lever: by default tokens flow through the join
-    machinery as xxhash64 LONGS (see JACCARD_TOKEN_MODE_ENV above) — the
-    candidate keys and, decisively, the verify join's shipped arrays
-    shrink from variable-width strings to 8-byte longs, attacking the
-    candidate-proportional volume that set the x50 spill ceiling. Output
-    is EXACTLY the string form's whenever the per-corpus injectivity
-    audit holds (jaccard_token_audit; asserted in tests and the A/B
-    harness); CLINICAL_BI_JACCARD_TOKENS=str selects the raw-string
-    form. The df-order tie-break differs between modes (hash vs string),
-    so the candidate SET may differ; the verified OUTPUT may not —
-    pinned by tests/test_dedup.py.
+    Tokens flow through the join machinery as xxhash64 LONGS behind the
+    per-run injectivity audit (see _JACCARD_BITMASK_VOCAB_CAP above) —
+    the candidate keys and the verify join's shipped arrays shrink from
+    variable-width strings to 8-byte longs. The df-order tie-break
+    differs between hashed and string tokens, so the candidate SET may
+    differ; the verified OUTPUT may not.
 
-    r13 verify-CPU lever (opt-in; default flip scheduled r14 with a
-    window slot): CLINICAL_BI_JACCARD_VERIFY=bitmask swaps the
-    array_intersect verify for the vocab-gated dense-bitmask form —
-    identical output (differential-pinned), ~6x verify-stage CPU, and a
-    codegen small enough to end the query's JIT-warmup bench jitter;
-    automatically falls back to this array form when the corpus
-    vocabulary exceeds the cap (see JACCARD_VERIFY_MODE_ENV above)."""
+    The verify step is the vocab-gated dense-bitmask overlap; past the
+    vocabulary cap it falls back to ``array_intersect``."""
     t = load_tables(tune(spark), sf_dir)
     tau = _JACCARD_TAU
     toks = (
@@ -2073,8 +2004,8 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.size("words") >= 1)
     )
-    # u64 mode hashes ONLY behind a clean per-run injectivity certificate
-    # (audit inside the query; auto-fallback to strings on a collision).
+    # tokens are hashed ONLY behind a clean per-run injectivity
+    # certificate (audit inside the query; strings on a collision).
     # A fused audit+dfreq single-vocabulary-pass variant was measured
     # r14 and REJECTED (1.077x): with only TWO vocabulary consumers the
     # saved fact-scale pass was offset by the extra vocabulary persist.
@@ -2089,16 +2020,11 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache-backed dfreq planned as SortMergeJoin (+1 fact exchange,
     # measured) because an unmaterialized InMemoryRelation has no stats
     cand = _jaccard_prefix_candidates(toks, tau, positional=True)
-    # r14 DEFAULT (flipped with this round's changed-code window slot;
-    # see JACCARD_VERIFY_MODE_ENV): vocab-gated dense-bitmask verify —
-    # identical output (differential-pinned), ~6x verify-stage CPU, and
-    # it removes the JIT-warmup bench jitter the r13 round root-caused;
-    # auto-falls back to the array form past the vocab cap, and
-    # CLINICAL_BI_JACCARD_VERIFY=array forces the old path outright
-    if _jaccard_verify_bitmask_mode(default="bitmask"):
-        ver = _jaccard_verify_bitmask(spark, toks, cand, tau, dfreq=dfreq)
-        if ver is not None:
-            return ver
+    ver = _jaccard_verify_bitmask(
+        spark, toks, cand, tau, _JACCARD_BITMASK_VOCAB_CAP, dfreq=dfreq
+    )
+    if ver is not None:
+        return ver
     wa = toks.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wsa"))
     wb = toks.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("wsb"))
     inter = F.size(F.array_intersect(F.col("wsa"), F.col("wsb")))
@@ -2704,9 +2630,9 @@ WHERE 10 * n_inter >= 9 * sa.sz
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIRECTED containment >= 0.9 self-join via prefix filtering: A's
     rarest-token prefix joins against the full inverted token list; the
-    verify step defaults to the vocab-gated dense-bitmask overlap since
-    r15 (array_intersect is the any-vocabulary fallback and the forced
-    A/B baseline — see JACCARD_VERIFY_MODE_ENV). The oracle enumerates every
+    verify step is the vocab-gated dense-bitmask overlap
+    (array_intersect is the any-vocabulary fallback — see
+    _JACCARD_BITMASK_VOCAB_CAP). The oracle enumerates every
     token-sharing DIRECTED pair — a strict superset of the prefix
     candidates — so a green row proves the containment prefix filter
     lossless (the dedup-family contract). 100 TB shape: candidates via
@@ -2715,8 +2641,8 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping hot tokens out of join keys.
 
     r9 (after its first bench floor came in at 153 s): three levers —
-    (1) tokens flow as xxhash64 longs (u64 mode, injectivity-audited;
-    CLINICAL_BI_JACCARD_TOKENS=str reverts); (2) a LENGTH filter the r8
+    (1) tokens flow as xxhash64 longs (injectivity-audited, string
+    fallback); (2) a LENGTH filter the r8
     form lacked: |A∩B| <= |B|, so C(A,B) >= 9/10 needs 10*sb >= 9*sa,
     integer-exact; (3) the two-sided POSITIONAL bound: the B posting
     list now carries positions in B's own df-ordered list, and since
@@ -2735,8 +2661,8 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_distinct(word_tokens(F.lower(F.col("text")))).alias("words"),
     ).filter(F.size("words") >= 1)
-    # u64 mode hashes ONLY behind a clean per-run injectivity certificate
-    # (audit inside the query; auto-fallback to strings on a collision).
+    # tokens are hashed ONLY behind a clean per-run injectivity
+    # certificate (audit inside the query; strings on a collision).
     # r16: one persisted dfreq serves the audit AND the bitmask verify's
     # vocab TopK (see audited_token_relation). The df-ordering below
     # keeps its INLINE aggregate: the join must stay a runtime broadcast,
@@ -2793,28 +2719,22 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.lit(10) * F.col("ub") >= F.lit(9) * F.col("sa"))
         .select("doc_a", "doc_b")
     )
-    # Default since r15 (shared with the Jaccard join — see
-    # JACCARD_VERIFY_MODE_ENV): the directed verify projects containment
-    # over the same bitmask overlap core; falls back past the vocab cap.
-    # The flip landed in its scheduled r15 changed-code window slot
-    # (r14's slot was Jaccard's — one flip per round keeps the rotation
-    # arithmetic sound), pre-flighted in r14 like a parked candidate:
-    # bitmask-forced oracle PASS at sf0.001/sf0.01, degenerate 3/3,
-    # unicode sweep 189/0. CLINICAL_BI_JACCARD_VERIFY=array still forces
-    # the adjudicated array_intersect baseline for A/B.
-    if _jaccard_verify_bitmask_mode(default="bitmask"):
-        ov = _bitmask_pair_overlap(spark, toks, cand, dfreq=dfreq)
-        if ov is not None:
-            inter_bm = F.col("n_inter")
-            return ov.select(
-                "doc_a",
-                "doc_b",
-                inter_bm.cast("bigint").alias("n_inter"),
-                F.col("ca").cast("bigint").alias("sz_a"),
-                F.round(
-                    inter_bm.cast("double") / F.col("ca").cast("double"), 6
-                ).alias("containment"),
-            ).filter(F.lit(10) * F.col("n_inter") >= F.lit(9) * F.col("sz_a"))
+    # the directed verify projects containment over the Jaccard join's
+    # bitmask overlap core; array_intersect past the vocab cap
+    ov = _bitmask_pair_overlap(
+        spark, toks, cand, _JACCARD_BITMASK_VOCAB_CAP, dfreq=dfreq
+    )
+    if ov is not None:
+        inter_bm = F.col("n_inter")
+        return ov.select(
+            "doc_a",
+            "doc_b",
+            inter_bm.cast("bigint").alias("n_inter"),
+            F.col("ca").cast("bigint").alias("sz_a"),
+            F.round(
+                inter_bm.cast("double") / F.col("ca").cast("double"), 6
+            ).alias("containment"),
+        ).filter(F.lit(10) * F.col("n_inter") >= F.lit(9) * F.col("sz_a"))
     wa = toks.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wsa"))
     wb = toks.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("wsb"))
     inter = F.size(F.array_intersect(F.col("wsa"), F.col("wsb")))
@@ -2880,8 +2800,8 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_distinct(word_tokens(F.lower(F.col("text")))).alias("words"),
     ).filter(F.size("words") >= 1)
-    # u64 mode hashes ONLY behind a clean per-run injectivity certificate
-    # (audit inside the query; auto-fallback to strings on a collision).
+    # tokens are hashed ONLY behind a clean per-run injectivity
+    # certificate (audit inside the query; strings on a collision).
     # The df-ordering keeps its inline aggregate (runtime-broadcast; see
     # dedup_containment_prefix) — this query has no bitmask TopK, so the
     # audit's persisted dfreq has no second consumer here.

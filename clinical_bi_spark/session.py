@@ -167,7 +167,6 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         .config("spark.driver.memory", default_driver_memory())
         # UI off by default (bench hygiene); CBS_SPARK_UI=true turns it on
         # for harnesses that read per-stage metrics over the REST API
-        # (scripts/ppjoin_ab.py's shuffle-volume capture)
         .config("spark.ui.enabled", os.environ.get("CBS_SPARK_UI", "false"))
         # STATIC conf (only effective on the session-creating process):
         # the generated-class cache defaults to 100 entries, which one

@@ -12,16 +12,15 @@ Operators:
   queries/events.cep_pattern_match); O(1) state per user: the last k-1
   closed same-type islands plus the open one.
 
-State-boundedness contract (dual path, the ``CLINICAL_BI_EXACT_ARITH``
-pattern):
+State-boundedness contract (the ``evict`` argument of each operator):
 
-* **Adjudication path (default, ``CLINICAL_BI_STATE_EVICTION=0``)**:
+* **Adjudication path (default, ``evict=False``)**:
   ``GroupStateTimeout.NoTimeout`` — state is never dropped, so the final
   snapshot per key equals the batch fold over ALL input regardless of
   batch slicing. This is the path the driver's exact oracle adjudicates;
   per-key state is O(1) but total state grows with distinct keys, which
   is only acceptable on bounded replays.
-* **Production path (``CLINICAL_BI_STATE_EVICTION=1``)**: watermarked
+* **Production path (``evict=True``)**: watermarked
   input + ``GroupStateTimeout.EventTimeTimeout``; every update arms an
   event-time timeout at (last event ts + TTL) and a ``hasTimedOut``
   branch drops the key's state once the watermark passes it. Total state
@@ -37,7 +36,6 @@ pattern):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -52,19 +50,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-STATE_EVICTION_ENV = "CLINICAL_BI_STATE_EVICTION"
 #: production-path knobs: watermark delay on the event-time column and
 #: per-key idle TTL before state is dropped (event-time, not wall-clock)
 EVICTION_WATERMARK = "1 hour"
 EVICTION_TTL_MS = 24 * 3600 * 1000  # 1 day of event-time idleness
-
-
-def _eviction_enabled(evict: bool | None) -> bool:
-    """Resolve the dual-path switch: explicit argument wins, else the
-    process-global env flag (default OFF = exact adjudication path)."""
-    if evict is not None:
-        return evict
-    return os.environ.get(STATE_EVICTION_ENV, "0") == "1"
 
 
 STATE_SCHEMA = StructType(
@@ -164,7 +153,7 @@ def user_running_stats(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
-    evict: bool | None = None,
+    evict: bool = False,
 ) -> DataFrame:
     """Run the stateful operator over the bounded events stream and return
     the final per-user snapshots (one per micro-batch a user appears in;
@@ -172,29 +161,27 @@ def user_running_stats(
     tests pin that equivalence both single- and multi-batch).
 
     ``evict`` selects the state-boundedness path (see module docstring);
-    default = the ``CLINICAL_BI_STATE_EVICTION`` env flag, OFF for exact
-    adjudication. Eviction trade: a user idle past the 1-day event-time
+    default OFF for exact adjudication. Eviction trade: a user idle past the 1-day event-time
     TTL is dropped from the store and, if they re-appear, their running
     counters RESTART FROM ZERO — snapshots are exact only within the
     eviction horizon (pinned by tests/test_streaming.py::
     test_stateful_eviction_drops_idle_user_state and
-    test_eviction_env_flag_selects_path)."""
+    test_eviction_argument_selects_path)."""
     from clinical_bi_spark.streaming.windows import _events_stream, _run_to_completion
 
-    evicting = _eviction_enabled(evict)
     events = _events_stream(spark, sf_dir, max_files_per_trigger).select(
         "user_id", "ts", "value"
     )
-    if evicting:
+    if evict:
         events = events.withWatermark("ts", EVICTION_WATERMARK)
     updated = events.groupBy("user_id").applyInPandasWithState(
-        _make_user_update(evicting),
+        _make_user_update(evict),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=(
             GroupStateTimeout.EventTimeTimeout
-            if evicting
+            if evict
             else GroupStateTimeout.NoTimeout
         ),
     )
@@ -365,7 +352,7 @@ def stream_cep_matches(
     progress_sink: list | None = None,
     pattern: tuple[tuple[str, int], ...] | None = None,
     out_names: tuple[str, ...] | None = None,
-    evict: bool | None = None,
+    evict: bool = False,
 ) -> DataFrame:
     """Run the streaming CEP operator over the bounded events stream and
     return the deduplicated final match table: one row per (user,
@@ -375,7 +362,7 @@ def stream_cep_matches(
     cast-double expression the batch query uses, so the float path is
     identical. Defaults to the flagship view+ click+ purchase spec.
 
-    Eviction trade (``evict``/``CLINICAL_BI_STATE_EVICTION``): a user
+    Eviction trade (``evict``): a user
     idle past the 1-day event-time TTL loses their island context — a
     pattern straddling the idle gap will NOT match after they re-appear,
     so matches are exact only within the eviction horizon (pinned by
@@ -393,20 +380,19 @@ def stream_cep_matches(
 
     pattern = pattern if pattern is not None else CEP_DEFAULT_PATTERN
     out_names = out_names if out_names is not None else CEP_DEFAULT_NAMES
-    evicting = _eviction_enabled(evict)
     events = _events_stream(spark, sf_dir, max_files_per_trigger).select(
         "user_id", "event_id", "ts", "event_type"
     )
-    if evicting:
+    if evict:
         events = events.withWatermark("ts", EVICTION_WATERMARK)
     emitted = events.groupBy("user_id").applyInPandasWithState(
-        make_cep_update(pattern, out_names, evicting),
+        make_cep_update(pattern, out_names, evict),
         outputStructType=_cep_output_schema(out_names),
         stateStructType=_cep_state_schema(len(pattern)),
         outputMode="update",
         timeoutConf=(
             GroupStateTimeout.EventTimeTimeout
-            if evicting
+            if evict
             else GroupStateTimeout.NoTimeout
         ),
     )
@@ -509,7 +495,7 @@ def stream_forward_fill_rows(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
-    evict: bool | None = None,
+    evict: bool = False,
 ) -> DataFrame:
     """Streaming LOCF over the bounded events replay: every event emits
     once with its filled value; the final table equals the batch
@@ -519,7 +505,7 @@ def stream_forward_fill_rows(
     with the same Spark ROUND the batch query uses (the float path is
     identical end to end).
 
-    Eviction trade (``evict``/``CLINICAL_BI_STATE_EVICTION``): a user
+    Eviction trade (``evict``): a user
     idle past the 1-day event-time TTL loses the carried last-value — a
     gap right after they re-appear fills with null instead of the
     pre-idle observation, so fills are exact only within the eviction
@@ -532,7 +518,6 @@ def stream_forward_fill_rows(
         _run_to_completion,
     )
 
-    evicting = _eviction_enabled(evict)
     gap = (
         F.conv(
             F.substring(
@@ -552,16 +537,16 @@ def stream_forward_fill_rows(
         "ts",
         F.when(~gap, F.col("value")).alias("value_obs"),
     )
-    if evicting:
+    if evict:
         events = events.withWatermark("ts", EVICTION_WATERMARK)
     filled = events.groupBy("user_id").applyInPandasWithState(
-        _make_ffill_update(evicting),
+        _make_ffill_update(evict),
         outputStructType=FFILL_OUTPUT_SCHEMA,
         stateStructType=FFILL_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=(
             GroupStateTimeout.EventTimeTimeout
-            if evicting
+            if evict
             else GroupStateTimeout.NoTimeout
         ),
     )
@@ -712,7 +697,7 @@ def stateful_sessions(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
-    evict: bool | None = None,
+    evict: bool = False,
 ) -> DataFrame:
     """Run the custom sessionization over the bounded events stream and
     return the final per-session table (keep-latest dedup by
@@ -727,20 +712,19 @@ def stateful_sessions(
         _run_to_completion,
     )
 
-    evicting = _eviction_enabled(evict)
     events = _events_stream(spark, sf_dir, max_files_per_trigger).select(
         "user_id", "ts", "value"
     )
-    if evicting:
+    if evict:
         events = events.withWatermark("ts", EVICTION_WATERMARK)
     sessions = events.groupBy("user_id").applyInPandasWithState(
-        _make_session_update(evicting),
+        _make_session_update(evict),
         outputStructType=SESSION_OUTPUT_SCHEMA,
         stateStructType=SESSION_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=(
             GroupStateTimeout.EventTimeTimeout
-            if evicting
+            if evict
             else GroupStateTimeout.NoTimeout
         ),
     )
@@ -860,14 +844,14 @@ def stream_time_weighted_avg_rows(
     sf_dir: str,
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
-    evict: bool | None = None,
+    evict: bool = False,
 ) -> DataFrame:
     """Streaming LOCF-integral time-weighted mean over the bounded events
     replay: per user, the final emission's integer state equals the batch
     evt_time_weighted_avg aggregate exactly, at any chronological input
     slicing; the display division (remainder-split micro-units) is
     applied AFTER the drain with the same expression the batch query
-    uses. Eviction trade (``evict``/``CLINICAL_BI_STATE_EVICTION``): a
+    uses. Eviction trade (``evict``): a
     user idle past the TTL restarts their observation span on
     re-appearance (the drain's last_us ordering keeps the restarted
     span) — exactness holds within the eviction horizon."""
@@ -878,20 +862,19 @@ def stream_time_weighted_avg_rows(
         _run_to_completion,
     )
 
-    evicting = _eviction_enabled(evict)
     events = _events_stream(spark, sf_dir, max_files_per_trigger).select(
         "event_id", "user_id", "ts", "value"
     )
-    if evicting:
+    if evict:
         events = events.withWatermark("ts", EVICTION_WATERMARK)
     emitted = events.groupBy("user_id").applyInPandasWithState(
-        _make_twa_update(evicting),
+        _make_twa_update(evict),
         outputStructType=TWA_OUTPUT_SCHEMA,
         stateStructType=TWA_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=(
             GroupStateTimeout.EventTimeTimeout
-            if evicting
+            if evict
             else GroupStateTimeout.NoTimeout
         ),
     )

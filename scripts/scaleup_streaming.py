@@ -77,7 +77,7 @@ QUERIES = {
     "stream_stateful": lambda sp, d, ps: user_running_stats(
         sp, d, max_files_per_trigger=MAX_FILES_PER_TRIGGER, progress_sink=ps
     ),
-    # r8: the EVICTING production forms (CLINICAL_BI_STATE_EVICTION path).
+    # r8: the EVICTING production forms (evict=True).
     # The claim: state_rows_final tracks ACTIVE keys (seen within the
     # 1-day TTL of stream end), not total keys — vs the NoTimeout twins
     # above whose state holds every key ever seen. state_removed > 0 and

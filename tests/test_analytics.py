@@ -250,7 +250,6 @@ def test_fuzzy_join_lossless_random_strings(spark):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_bfs_and_triangles_match_python_graph(spark):
     from clinical_bi_spark.queries.graph import _BFS_SOURCE, _trade_edges
     from clinical_bi_spark.sources import load_tables
@@ -495,32 +494,6 @@ def test_anomaly_mad_matches_numpy(spark, oracle_con):
         assert r.n_events == len(v)
 
 
-@pytest.mark.parametrize(
-    "name,key_cols",
-    [
-        ("evt_rfm_segmentation", ["user_id"]),
-        ("m13_auc_rank", []),
-        ("agg_equidepth_histogram", ["l_returnflag", "bucket"]),
-    ],
-)
-def test_sharded_rank_path_matches_window_path(spark, monkeypatch, name, key_cols):
-    """r9 dual-path contract: the sharded prefix-sum production form and
-    the single-partition window parity form must be VALUE-identical, row
-    for row — the property that lets the driver adjudicate the production
-    path directly against the NTILE/ROW_NUMBER SQL oracle."""
-
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-    monkeypatch.delenv("CLINICAL_BI_SINGLE_PARTITION_RANK", raising=False)
-    sharded = rows(REGISTRY[name].fn(spark, SF_ORACLE))
-    monkeypatch.setenv("CLINICAL_BI_SINGLE_PARTITION_RANK", "1")
-    windowed = rows(REGISTRY[name].fn(spark, SF_ORACLE))
-    assert sharded == windowed
-
-
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_ntile_from_rank_matches_sql_ntile_on_grid(spark):
     """Exhaustive pin of the exact NTILE bucket arithmetic: for every
     (N, k) on a grid spanning N < k, N = k, N % k == 0 and ragged
@@ -710,37 +683,6 @@ def test_global_row_number_empty_and_single_row(spark):
 
     one = spark.range(1).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
     assert [r.rnk for r in global_row_number(one, [F.col("v"), F.col("k")]).collect()] == [1]
-
-
-def test_global_row_number_null_group_keys(spark):
-    """r9 ADVICE: NULL partition_by keys must rank as their own group —
-    dropna grouping NaN'd the cumcount and the plain offset equi-join
-    restarted null-key ranks per partition. Differential vs the window
-    form on a relation where a third of the keys are NULL."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from clinical_bi_spark.operators.ranking import global_row_number
-
-    df = spark.range(300).select(
-        F.when(F.col("id") % 3 == 0, None)
-        .otherwise((F.col("id") % 3).cast("string"))
-        .alias("g"),
-        (F.col("id") * 37 % 101).alias("v"),
-        F.col("id").alias("k"),
-    )
-    got = {
-        (r.g, r.k): r.rnk
-        for r in global_row_number(
-            df, [F.col("v"), F.col("k")], partition_by=["g"], n_partitions=7
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "k")
-    want = {
-        (r.g, r.k): r.rnk
-        for r in df.select("g", "k", F.row_number().over(w).alias("rnk")).collect()
-    }
-    assert got == want
 
 
 def test_global_prefix_sums_matches_window_and_boundaries(spark):

@@ -86,7 +86,6 @@ def test_connected_components_bounds_checkpoint_leaves(spark):
     assert len(caching._CHECKPOINT_RDD_IDS) == 0
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_sequential_replay_storage_flat(spark):
     """The driver-contract invariant (__spark_entry__._released): under a
     STRICTLY SEQUENTIAL driver (build → collect → next query), executor

@@ -315,44 +315,19 @@ def test_winnow_arrow_path_equals_expression_path(spark):
 
 
 # ---------------------------------------------------------------------------
-# r9: u64 token mode for the exact Jaccard prefix join — hash-exact with
-# a per-corpus injectivity certificate (see JACCARD_TOKEN_MODE_ENV in
-# queries/textops.py).
+# Hashed tokens for the exact Jaccard prefix join — hash-exact with a
+# per-corpus injectivity certificate — and the vocab-gated bitmask
+# verify (see _JACCARD_BITMASK_VOCAB_CAP in queries/textops.py).
 # ---------------------------------------------------------------------------
 
 
-def test_jaccard_u64_mode_output_equals_string_mode(spark, monkeypatch):
-    """The u64 (default) and string paths must produce identical verified
-    output — the candidate SETS may differ (different df-order
-    tie-breaks) but the exact verification makes the outputs equal
-    whenever the hash is injective on the corpus vocabulary."""
-    from clinical_bi_spark.queries import load_all
-    from tests.conftest import SF_ORACLE
-
-    reg = load_all()
-
-    def rows(df):
-        return sorted(
-            (r.doc_a, r.doc_b, r.n_inter, r.n_union, round(r.jaccard, 9))
-            for r in df.collect()
-        )
-
-    monkeypatch.delenv("CLINICAL_BI_JACCARD_TOKENS", raising=False)
-    u64 = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_TOKENS", "str")
-    s = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
-    assert u64 == s
-    assert len(u64) > 0
-
-
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_jaccard_bitmask_verify_equals_array_verify(spark, monkeypatch):
-    """The r13 vocab-gated dense-bitmask verify (see
-    JACCARD_VERIFY_MODE_ENV) must reproduce the adjudicated
-    array_intersect verify's output exactly — same pairs, same
-    n_inter/n_union/jaccard — on the oracle corpus, in BOTH token
-    modes."""
+    """The vocab-gated dense-bitmask verify must reproduce the
+    array_intersect fallback's output exactly — same pairs, same
+    n_inter/n_union/jaccard — on the oracle corpus, over hashed and
+    (after a failed audit) string tokens."""
     from clinical_bi_spark.queries import load_all
+    from clinical_bi_spark.queries import textops
     from tests.conftest import SF_ORACLE
 
     reg = load_all()
@@ -363,24 +338,20 @@ def test_jaccard_bitmask_verify_equals_array_verify(spark, monkeypatch):
             for r in df.collect()
         )
 
-    # r14: bitmask IS the query's default now, so the adjudicated array
-    # side must be FORCED via the env override (delenv would silently
-    # compare bitmask against itself)
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "array")
-    array_out = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
-    monkeypatch.delenv("CLINICAL_BI_JACCARD_VERIFY", raising=False)
-    default_out = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
-    assert default_out == array_out  # the flipped default reproduces array
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "bitmask")
     bitmask_out = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
+    # a zero cap sends the query down the array fallback through its gate
+    with monkeypatch.context() as m:
+        m.setattr(textops, "_JACCARD_BITMASK_VOCAB_CAP", 0)
+        array_out = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
     assert bitmask_out == array_out
     assert len(bitmask_out) > 0
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_TOKENS", "str")
-    bitmask_str = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
+    # a colliding hash fails the audit, so the bitmask runs on strings
+    monkeypatch.setattr(textops, "_TOKEN_HASH_OVERRIDE", F.length)
+    with pytest.warns(RuntimeWarning, match="injectivity audit FAILED"):
+        bitmask_str = rows(reg["dedup_jaccard_prefix"].fn(spark, SF_ORACLE))
     assert bitmask_str == array_out
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_jaccard_bitmask_multiword_masks_and_vocab_gate(spark):
     """A corpus with > 64 distinct tokens exercises the multi-long mask
     branch (masks of ceil(V/64) longs, zip_with+bit_count intersect);
@@ -452,7 +423,6 @@ def test_jaccard_bitmask_multiword_masks_and_vocab_gate(spark):
 
 
 @pytest.mark.parametrize("vocab_size", [64, 65, 130])
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_jaccard_bitmask_word_boundaries(spark, vocab_size):
     """Mask-width boundaries: V=64 is the single-long branch's edge
     (id 63 -> shiftleft(1L, 63) sets the SIGN bit — two's-complement
@@ -513,12 +483,12 @@ def test_jaccard_bitmask_word_boundaries(spark, vocab_size):
     assert len(got) > 0
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_containment_bitmask_verify_equals_array_verify(spark, monkeypatch):
     """The directed containment join shares _bitmask_pair_overlap: the
     bitmask projection must reproduce the array_intersect form's output
     exactly — same pairs, same n_inter/sz_a/containment."""
     from clinical_bi_spark.queries import load_all
+    from clinical_bi_spark.queries import textops
     from tests.conftest import SF_ORACLE
 
     reg = load_all()
@@ -529,18 +499,14 @@ def test_containment_bitmask_verify_equals_array_verify(spark, monkeypatch):
             for r in df.collect()
         )
 
-    # force the array side explicitly (r14 lesson: a delenv "array side"
-    # silently compares bitmask against itself once the default flips —
-    # this stays correct through containment's scheduled r15 flip)
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "array")
-    array_out = rows(reg["dedup_containment_prefix"].fn(spark, SF_ORACLE))
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "bitmask")
     bitmask_out = rows(reg["dedup_containment_prefix"].fn(spark, SF_ORACLE))
+    # a zero cap sends the query down the array fallback through its gate
+    monkeypatch.setattr(textops, "_JACCARD_BITMASK_VOCAB_CAP", 0)
+    array_out = rows(reg["dedup_containment_prefix"].fn(spark, SF_ORACLE))
     assert bitmask_out == array_out
     assert len(bitmask_out) > 0
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_jaccard_bitmask_empty_corpus(spark):
     """Zero documents: the bitmask verify must return an empty frame
     (vocab=[], one-word masks degenerate cleanly), not None and not an
@@ -595,7 +561,6 @@ def test_jaccard_token_audit_detects_planted_collision(spark):
     assert n_hash_w == 2  # len-5 bucket {alpha, gamma, delta} collides
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_forged_audit_failure_engages_string_fallback(spark, tmp_path, monkeypatch):
     """r9 verdict Next #7: prove the AUTO-FALLBACK path actually engages.
     Override the token hash (test seam _TOKEN_HASH_OVERRIDE) with a
@@ -628,11 +593,7 @@ def test_forged_audit_failure_engages_string_fallback(spark, tmp_path, monkeypat
             for r in df.collect()
         )
 
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_TOKENS", "str")
-    want = rows(reg["dedup_jaccard_prefix"].fn(spark, d))
-    assert want == [(1, 2, 5, 6, round(5 / 6, 9))]
-    monkeypatch.delenv("CLINICAL_BI_JACCARD_TOKENS", raising=False)
-
+    want = [(1, 2, 5, 6, round(5 / 6, 9))]
     colliding = lambda c: F.length(c).cast("long")  # noqa: E731
     monkeypatch.setattr(to, "_TOKEN_HASH_OVERRIDE", colliding)
     with warnings.catch_warnings(record=True) as caught:

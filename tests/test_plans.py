@@ -8,7 +8,6 @@ from __future__ import annotations
 import contextlib
 import io
 import itertools
-import os
 import re
 
 import pytest
@@ -201,13 +200,12 @@ def test_pair_miners_never_nested_loop(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_jaccard_bitmask_verify_plan(spark, monkeypatch):
-    # the r13 opt-in bitmask verify (r14 default-flip candidate): the
-    # dense-id map must join as a broadcast hash equi-join, the verify
-    # must stay equi-join-shaped (no cartesian/nested-loop), and the
-    # AND + bit_count overlap must actually be in the plan (proof the
-    # fast path engaged rather than silently falling back)
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "bitmask")
+def test_jaccard_bitmask_verify_plan(spark):
+    # the bitmask verify: the dense-id map must join as a broadcast hash
+    # equi-join, the verify must stay equi-join-shaped (no
+    # cartesian/nested-loop), and the AND + bit_count overlap must
+    # actually be in the plan (proof the fast path engaged rather than
+    # silently falling back)
     plan = explain(spark, "dedup_jaccard_prefix")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -217,27 +215,20 @@ def test_jaccard_bitmask_verify_plan(spark, monkeypatch):
 
 
 def test_verify_mode_per_query_defaults(spark, monkeypatch):
-    # per-query defaults pinned at PLAN level with the env UNSET. The
-    # one-flip-per-round schedule is complete as of r15: BOTH prefix
-    # joins default to the bitmask verify (bit_count in the plan — the
-    # flips actually engaged end to end; jaccard since r14, containment
-    # since r15); the env override must force both ways for both queries
-    monkeypatch.delenv("CLINICAL_BI_JACCARD_VERIFY", raising=False)
+    # both prefix joins verify with the bitmask overlap while the corpus
+    # vocabulary fits the cap (bit_count in the plan), and both fall back
+    # to array_intersect through the real gate once it does not
+    from clinical_bi_spark.queries import textops
+
     jac = explain(spark, "dedup_jaccard_prefix")
     assert "bit_count" in jac and "array_intersect" not in jac
     cont = explain(spark, "dedup_containment_prefix")
     assert "bit_count" in cont and "array_intersect" not in cont
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "array")
-    jac_forced = explain(spark, "dedup_jaccard_prefix")
-    assert "array_intersect" in jac_forced and "bit_count" not in jac_forced
-    cont_forced_arr = explain(spark, "dedup_containment_prefix")
-    assert (
-        "array_intersect" in cont_forced_arr
-        and "bit_count" not in cont_forced_arr
-    )
-    monkeypatch.setenv("CLINICAL_BI_JACCARD_VERIFY", "bitmask")
-    cont_forced = explain(spark, "dedup_containment_prefix")
-    assert "bit_count" in cont_forced and "array_intersect" not in cont_forced
+    monkeypatch.setattr(textops, "_JACCARD_BITMASK_VOCAB_CAP", 0)
+    jac_arr = explain(spark, "dedup_jaccard_prefix")
+    assert "array_intersect" in jac_arr and "bit_count" not in jac_arr
+    cont_arr = explain(spark, "dedup_containment_prefix")
+    assert "array_intersect" in cont_arr and "bit_count" not in cont_arr
 
 
 def test_bm25_broadcasts_query_terms_and_never_nested_loop(spark):
@@ -605,7 +596,6 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
     it is exactly the shape this pin exists to allow. Every other
     window spec (anything not partitioned by __pid, in particular a
     global/empty partition spec) stays forbidden."""
-    assert "CLINICAL_BI_SINGLE_PARTITION_RANK" not in os.environ
     plan = explain(spark, name)
     assert "ntile" not in plan, plan
     assert "row_number" not in plan, plan
@@ -621,35 +611,6 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
                 assert "HashAggregate" in below, plan
     else:
         assert "SinglePartition" not in plan, plan
-
-
-def test_rfm_parity_path_windows_run_over_entity_relation(spark, monkeypatch):
-    """The flagged single-partition parity form keeps its r8 contract:
-    the ntile windows run over the AGGREGATED per-user relation, i.e. the
-    user_id HashAggregate executes before (is listed after) the first
-    SinglePartition exchange."""
-    monkeypatch.setenv("CLINICAL_BI_SINGLE_PARTITION_RANK", "1")
-    plan = explain(spark, "evt_rfm_segmentation")
-    assert "ntile" in plan, plan  # parity form must use the window
-    lines = plan.splitlines()
-    # formatted-explain detail sections are "(N) Operator" with N
-    # increasing towards the root: a smaller id executes earlier
-    single_ids = [
-        int(m.group(1))
-        for i, l in enumerate(lines)
-        if (m := re.match(r"\((\d+)\) Exchange", l.strip()))
-        and any("SinglePartition" in x for x in lines[i : i + 3])
-    ]
-    agg_ids = [
-        int(m.group(1))
-        for l in lines
-        if (m := re.match(r"\((\d+)\) HashAggregate", l.strip()))
-    ]
-    assert single_ids, plan
-    assert agg_ids, plan
-    # the per-user aggregation must execute BEFORE any single-partition
-    # exchange: the windows see only the entity relation
-    assert min(agg_ids) < min(single_ids), plan
 
 
 def test_cusum_reuses_one_user_exchange(spark):

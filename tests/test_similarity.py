@@ -58,7 +58,6 @@ def test_ivf_recall(embeddings, truth):
     assert r >= 0.4, f"IVF recall {r}"
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_ivf_det_kmeans_recall_and_cell_balance(spark, embeddings, truth):
     """The deterministic sequential-arithmetic Lloyd's quantizer (the r7
     graduation behind sim_ann_ivf's exact oracle) must keep useful
@@ -402,7 +401,6 @@ def test_ann_lsh_exact_arithmetic_matches_fast_path(spark, embeddings):
     assert sorted(map(tuple, fast)) == sorted(map(tuple, exact))
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_det_kmeans_partitioning_invariant(spark, embeddings):
     """The claim under the sim_ann_ivf oracle: the deterministic Lloyd's
     fit is bit-identical HOWEVER Spark partitions the corpus (sorted
@@ -444,7 +442,6 @@ def test_ann_lsh_exact_arith_parity_at_bench_sf(spark, monkeypatch):
     assert sorted(map(tuple, exact)) == sorted(map(tuple, fast))
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_ann_ivf_exact_arithmetic_matches_fast_path(spark, embeddings):
     """sim_ann_ivf joined the bench set in r8 and follows the
     CLINICAL_BI_EXACT_ARITH dual path: the driver adjudicates the

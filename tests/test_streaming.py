@@ -321,7 +321,6 @@ def test_multibatch_stateful_fold_equals_batch(spark, split_sf):
     assert got == batch
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_multibatch_stream_stream_join_equals_batch(spark, split_sf):
     from clinical_bi_spark.streaming.windows import stream_stream_interval_join
 
@@ -562,7 +561,6 @@ def test_rocksdb_multibatch_dedup_equals_default(spark, split_sf, rocksdb_state)
     _assert_rocksdb_engaged(prog)
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_rocksdb_multibatch_stateful_fold_equals_batch(
     spark, split_sf, rocksdb_state
 ):
@@ -600,7 +598,6 @@ def test_rocksdb_multibatch_stateful_fold_equals_batch(
     _assert_rocksdb_engaged(prog)
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_rocksdb_multibatch_hll_registers_equal_batch(
     spark, split_sf, rocksdb_state
 ):
@@ -633,7 +630,6 @@ def test_rocksdb_multibatch_hll_registers_equal_batch(
     _assert_rocksdb_engaged(prog)
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_multibatch_cep_equals_batch(spark, split_sf):
     """Streaming MATCH_RECOGNIZE over 3 chronological micro-batches must
     produce the IDENTICAL match table as the batch gaps-and-islands
@@ -654,7 +650,6 @@ def test_multibatch_cep_equals_batch(spark, split_sf):
     assert s == b and len(s) > 0
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_rocksdb_multibatch_cep_equals_batch(spark, split_sf, rocksdb_state):
     """The streaming CEP island state must survive the RocksDB provider
     swap bit-for-bit: same final match table as the batch query over 3
@@ -674,8 +669,8 @@ def test_rocksdb_multibatch_cep_equals_batch(spark, split_sf, rocksdb_state):
 
 
 # ---------------------------------------------------------------------------
-# State-eviction battery (r8): the production path
-# (CLINICAL_BI_STATE_EVICTION=1 / evict=True) must actually DROP idle-key
+# State-eviction battery (r8): the production path (evict=True) must
+# actually DROP idle-key
 # state — watermarked input + EventTimeTimeout + hasTimedOut branch —
 # while the default adjudication path (NoTimeout) keeps the exact batch
 # fold the oracle checks. Asserted via stateOperators progress metrics on
@@ -772,29 +767,22 @@ def test_rocksdb_stateful_eviction_drops_state(spark, split_sf, rocksdb_state):
     _assert_rocksdb_engaged(prog)
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
-def test_eviction_env_flag_selects_path(spark, split_sf, monkeypatch):
-    """Registry hygiene for the CLINICAL_BI_STATE_EVICTION dual path: the
-    env flag alone must flip the operator from the exact NoTimeout path
-    (nothing ever removed) to the evicting production path (rows
-    removed) — and the default (unset) is the exact path the driver
-    adjudicates."""
-    from clinical_bi_spark.streaming import stateful
+def test_eviction_argument_selects_path(spark, split_sf):
+    """The default call is the exact NoTimeout path the driver
+    adjudicates (nothing ever removed); ``evict=True`` flips the operator
+    to the evicting production path (rows removed)."""
     from clinical_bi_spark.streaming.stateful import user_running_stats
 
-    monkeypatch.delenv(stateful.STATE_EVICTION_ENV, raising=False)
-    assert stateful._eviction_enabled(None) is False  # driver default
     prog_exact: list = []
     user_running_stats(
         spark, split_sf, max_files_per_trigger=1, progress_sink=prog_exact
     ).collect()
     assert _rows_removed(prog_exact) == 0
 
-    monkeypatch.setenv(stateful.STATE_EVICTION_ENV, "1")
-    assert stateful._eviction_enabled(None) is True
     prog_evict: list = []
     user_running_stats(
-        spark, split_sf, max_files_per_trigger=1, progress_sink=prog_evict
+        spark, split_sf, max_files_per_trigger=1, progress_sink=prog_evict,
+        evict=True,
     ).collect()
     assert _rows_removed(prog_evict) > 0
 
@@ -1139,7 +1127,6 @@ def test_multibatch_session_stateful_equals_batch(spark, split_sf):
     assert s == b
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_session_stateful_eviction_is_lossless(spark, split_sf, monkeypatch):
     """The operator's distinguishing state contract: a session idle past
     the TTL (>= gap) can never extend, so the evicting production path
@@ -1260,7 +1247,6 @@ def _twa_snapshot(df):
     return {r.user_id: (r.n_events, r.twa_micro) for r in df.collect()}
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_stream_twa_exact_batch_parity_any_slicing(spark, split_sf):
     """The candidate's whole exactness claim: integer per-user state makes
     the streaming fold equal the batch aggregate BIT-FOR-BIT at every
@@ -1301,7 +1287,6 @@ def test_stream_twa_state_rows_bounded_by_users(spark, split_sf):
     assert peaks and max(peaks) == n_users
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_stream_twa_eviction_trades_span_restart(spark, split_sf, monkeypatch):
     """The eviction variant must actually drop idle keys
     (numRowsRemoved > 0) and the documented trade is a spans-restart:
@@ -1337,7 +1322,6 @@ def test_stream_twa_eviction_trades_span_restart(spark, split_sf, monkeypatch):
     assert 0 < n_same
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_stream_twa_eviction_restart_and_null_values(spark, tmp_path):
     """Two review-found hazards, pinned end to end. (1) Drain ordering:
     after eviction a re-appearing user's span RESTARTS and n_events

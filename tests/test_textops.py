@@ -273,7 +273,6 @@ def test_bpe_unicode_corpus_cross_engine(spark, tmp_path):
     assert duck == got
 
 
-@pytest.mark.slow  # depth tier (r17): dual-path/property sweep
 def test_bpe_random_small_alphabet_property(spark, tmp_path_factory):
     """Hypothesis form of the hand corpora: random texts over a 3-letter
     alphabet maximize merge collisions, tie-breaks, pair-exhausted

@@ -18,13 +18,6 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-# Depth tier (r17): python-twin / property sweeps — the fast tier's
-# oracle parity adjudicates the default paths end to end; run this
-# module with `-m slow` (or `-m ""`), done in full before each round
-# closes.
-pytestmark = pytest.mark.slow
-
-
 from clinical_bi_spark.queries import load_all
 from tests.conftest import SF_SMALL, assert_matches_oracle
 
