@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from clinical_bi_spark.operators.multimodal import (
     attach_media_metadata,
     extract_media_features,
+    resize_media,
 )
 from clinical_bi_spark.queries import query
 from clinical_bi_spark.session import tune
@@ -105,8 +106,58 @@ FROM documents,
 # the decode→resample→encode chain is byte-exact checked, not just shaped.
 # ---------------------------------------------------------------------------
 
-_SRC_HEADER_HEX = "P6\n16 16\n255\n".encode().hex()
+_PPM_HEADER = b"P6\n16 16\n255\n"
 _DST_HEADER_HEX = "P6\n8 8\n255\n".encode().hex()
+
+
+def _rgb_base():
+    """(16, 16, 3) int64 base y·31 + x·5 + c·11 of the formula images:
+    pixel (x, y, c) of document d is (d·7 + base) mod 256."""
+    import numpy as np
+
+    y, x, c = np.meshgrid(
+        np.arange(16), np.arange(16), np.arange(3), indexing="ij"
+    )
+    return y * 31 + x * 5 + c * 11
+
+
+def _rgb_pixels(doc_ids):
+    """(n, 16, 16, 3) uint8 formula pixels, one image per doc_id. uint8
+    addition wraps, which is the formula's mod 256, and keeps a batch's
+    temporaries at one byte per pixel."""
+    offset = (doc_ids * 7).astype("uint8")[:, None, None, None]
+    return offset + _rgb_base().astype("uint8")
+
+
+def _ppm_media(doc_ids) -> list[bytes]:
+    return [_PPM_HEADER + img.tobytes() for img in _rgb_pixels(doc_ids)]
+
+
+def _formula_media(spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    """``asset_id, media`` for every document, built in one numpy
+    mapInPandas step: ``build`` maps an int64 array of doc_ids to one
+    media bytes per id. Building before the round-robin spread keeps the
+    scan's single task cheap (no per-byte Catalyst lambda, which Spark
+    interprets element by element) and lets every consumer of the result
+    share one exchange. Defined for 0 <= doc_id < 2**58: the builders
+    reduce mod 256 or 65536 by floored (two's-complement) wrap-around
+    where Spark's and DuckDB's ``%`` truncate, so a negative id would get
+    other bytes than the oracles expect, and past 2**58 the int64
+    products of the formulas overflow."""
+    t = load_tables(tune(spark), sf_dir)
+
+    def synth(it):
+        import pandas as pd
+
+        for pdf in it:
+            ids = pdf["doc_id"].to_numpy(dtype="int64")
+            yield pd.DataFrame({"asset_id": ids, "media": build(ids)})
+
+    media = t.documents.select("doc_id").mapInPandas(
+        synth, schema="asset_id long, media binary"
+    )
+    return media.repartition(spark.sparkContext.defaultParallelism)
+
 
 _RESIZE_ORACLE = f"""
 SELECT doc_id AS asset_id,
@@ -123,6 +174,20 @@ FROM documents
 """
 
 
+def _resize_with_metadata(media: DataFrame) -> DataFrame:
+    """Metadata of ``media`` joined to its 16×16 → 8×8 resize, as hex."""
+    meta = attach_media_metadata(media)
+    resized = resize_media(media, target_width=8, target_height=8)
+    return meta.join(resized, "asset_id").select(
+        "asset_id",
+        "media_type",
+        F.col("width").alias("orig_width"),
+        F.col("height").alias("orig_height"),
+        "resized_bytes",
+        F.lower(F.hex("resized")).alias("resized_hex"),
+    )
+
+
 @query("multimodal_resize", oracle=_RESIZE_ORACLE, bench=True)
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media resize through the REAL codec branch: synthesized binary PPMs
@@ -131,55 +196,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas. Width/height come from the container
     sniffer/header parser, and the output bytes are compared hex-exact —
     the one end-to-end non-stub codec path this container permits."""
-    from clinical_bi_spark.operators.multimodal import resize_media
-
-    t = load_tables(tune(spark), sf_dir)
-    # build the source PPM: header + 768 pixel bytes via one hex-string HOF
-    # (a 768-way concat would blow up the codegen tree)
-    i = F.sequence(F.lit(0), F.lit(767))
-
-    def _idiv(a: F.Column, b: int) -> F.Column:  # non-negative floor div
-        return F.floor(a / F.lit(b)).cast("long")
-
-    pixel_hex = F.array_join(
-        F.transform(
-            i,
-            lambda ix: F.format_string(
-                "%02x",
-                (
-                    (
-                        F.col("doc_id") * 7
-                        + _idiv(ix, 48) * 31
-                        + _idiv(ix % 48, 3) * 5
-                        + (ix % 3) * 11
-                    )
-                    % 256
-                ).cast("int"),
-            ),
-        ),
-        "",
-    )
-    # single-split fixture trap: the per-doc synthesis + codec work is
-    # CPU-bound interpreted-HOF work; spread it across cores (a no-op
-    # policy on a many-split production scan)
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
-    media = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(F.concat(F.lit(_SRC_HEADER_HEX), pixel_hex)).alias("media"),
-    )
-    meta = attach_media_metadata(media)
-    resized = resize_media(media, target_width=8, target_height=8)
-    return (
-        meta.join(resized, "asset_id")
-        .select(
-            "asset_id",
-            "media_type",
-            F.col("width").alias("orig_width"),
-            F.col("height").alias("orig_height"),
-            "resized_bytes",
-            F.lower(F.hex("resized")).alias("resized_hex"),
-        )
-    )
+    return _resize_with_metadata(_formula_media(spark, sf_dir, _ppm_media))
 
 
 @query("multimodal_frame_sample", oracle=_FRAME_ORACLE)
@@ -220,17 +237,26 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 import struct as _struct
 
 
-def _bmp_header_hex(w: int, h: int) -> str:
+def _bmp_header(w: int, h: int) -> bytes:
     row = (w * 3 + 3) & ~3
     return (
         b"BM"
         + _struct.pack("<IHHI", 54 + row * h, 0, 0, 54)
         + _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, row * h, 0, 0, 0, 0)
-    ).hex()
+    )
 
 
-_BMP_SRC_HEADER_HEX = _bmp_header_hex(16, 16)
-_BMP_DST_HEADER_HEX = _bmp_header_hex(8, 8)
+_BMP_SRC_HEADER = _bmp_header(16, 16)
+_BMP_DST_HEADER_HEX = _bmp_header(8, 8).hex()
+
+
+def _bmp_media(doc_ids) -> list[bytes]:
+    # bottom-up rows in BGR order; a 48-byte row needs no padding
+    return [
+        _BMP_SRC_HEADER + img[::-1, :, ::-1].tobytes()
+        for img in _rgb_pixels(doc_ids)
+    ]
+
 
 # dst pixel byte j of 192: row r = j//24 (bottom-up ⇒ image y = 7-r),
 # x = (j%24)//3, channel b = j%3 (BGR ⇒ rgb c = 2-b); source pixel is
@@ -259,51 +285,7 @@ def multimodal_resize_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     and re-encoded inside Arrow-batched mapInPandas. Output compared
     hex-exact against a DuckDB reconstruction of the full file bytes —
     headers, row order, and channel order included."""
-    from clinical_bi_spark.operators.multimodal import (
-        attach_media_metadata,
-        resize_media,
-    )
-
-    t = load_tables(tune(spark), sf_dir)
-    # build the source BMP: header + 768 pixel bytes, bottom-up BGR —
-    # byte i: row r = i//48 (image y = 15-r), x = (i%48)//3, c = 2 - i%3
-    i = F.sequence(F.lit(0), F.lit(767))
-
-    def _idiv(a: F.Column, b: int) -> F.Column:  # non-negative floor div
-        return F.floor(a / F.lit(b)).cast("long")
-
-    pixel_hex = F.array_join(
-        F.transform(
-            i,
-            lambda ix: F.format_string(
-                "%02x",
-                (
-                    (
-                        F.col("doc_id") * 7
-                        + (15 - _idiv(ix, 48)) * 31
-                        + _idiv(ix % 48, 3) * 5
-                        + (2 - ix % 3) * 11
-                    )
-                    % 256
-                ).cast("int"),
-            ),
-        ),
-        "",
-    )
-    media = t.documents.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(F.concat(F.lit(_BMP_SRC_HEADER_HEX), pixel_hex)).alias("media"),
-    )
-    meta = attach_media_metadata(media)
-    resized = resize_media(media, target_width=8, target_height=8)
-    return meta.join(resized, "asset_id").select(
-        "asset_id",
-        "media_type",
-        F.col("width").alias("orig_width"),
-        F.col("height").alias("orig_height"),
-        "resized_bytes",
-        F.lower(F.hex("resized")).alias("resized_hex"),
-    )
+    return _resize_with_metadata(_formula_media(spark, sf_dir, _bmp_media))
 
 
 # ---------------------------------------------------------------------------
@@ -319,14 +301,27 @@ def multimodal_resize_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WAV_N = 480
 _WAV_RATE = 48000
 
-_WAV_HEADER_HEX = (
+_WAV_HEADER = (
     b"RIFF"
     + _struct.pack("<I", 36 + _WAV_N * 2)
     + b"WAVEfmt "
     + _struct.pack("<IHHIIHH", 16, 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
     + b"data"
     + _struct.pack("<I", _WAV_N * 2)
-).hex()
+)
+
+
+def _wav_media(doc_ids) -> list[bytes]:
+    import numpy as np
+
+    # sample s = v - 32768 where v = (doc_id·31 + i·7) mod 65536; its
+    # two's-complement uint16 image is (v + 32768) mod 65536, stored
+    # little-endian
+    start = (doc_ids * 31 + 32768).astype("uint16")
+    step = (np.arange(_WAV_N) * 7).astype("uint16")
+    u = start[:, None] + step  # uint16 addition wraps: the mod 65536
+    return [_WAV_HEADER + row.tobytes() for row in u.astype("<u2")]
+
 
 _WAV_SAMPLE_SQL = f"(((doc_id * 31 + i * 7) % 65536) - 32768)"
 
@@ -359,30 +354,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction from the sample formula."""
     from clinical_bi_spark.operators.multimodal import extract_audio_features
 
-    t = load_tables(tune(spark), sf_dir)
-    i = F.sequence(F.lit(0), F.lit(_WAV_N - 1))
-    # sample s = v - 32768 where v = (doc_id·31 + i·7) mod 65536; its
-    # two's-complement uint16 image is u = (v + 32768) mod 65536 —
-    # emit u little-endian (lo byte, hi byte)
-    u = lambda ix: (F.col("doc_id") * 31 + ix * 7 + 32768) % 65536
-    sample_hex = F.array_join(
-        F.transform(
-            i,
-            lambda ix: F.format_string(
-                "%02x%02x",
-                (u(ix) % 256).cast("int"),
-                F.floor(u(ix) / 256).cast("int"),
-            ),
-        ),
-        "",
-    )
-    # same single-split spread as multimodal_resize
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
-    media = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(F.concat(F.lit(_WAV_HEADER_HEX), sample_hex)).alias("media"),
-    )
-    feats = extract_audio_features(media)
+    feats = extract_audio_features(_formula_media(spark, sf_dir, _wav_media))
     return feats.select(
         "asset_id", "sample_rate", "n_channels", "n_samples",
         "duration_ms", "peak_abs", F.round("rms", 6).alias("rms"),
@@ -423,12 +395,7 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: identical Arrow mapInPandas plumbing as the PPM/BMP paths
     (byte-budget partitioning, batched codec work); PNG adds the
     real-world property that media bytes are compressed at rest."""
-    from clinical_bi_spark.operators.multimodal import (
-        attach_media_metadata,
-        decode_png,
-        encode_png,
-        resize_media,
-    )
+    from clinical_bi_spark.operators.multimodal import decode_png, encode_png
 
     t = load_tables(tune(spark), sf_dir)
     docs = t.documents.select("doc_id").repartition(
@@ -439,10 +406,7 @@ def multimodal_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        y, x, c = np.meshgrid(
-            np.arange(16), np.arange(16), np.arange(3), indexing="ij"
-        )
-        base = (y * 31 + x * 5 + c * 11).astype(np.int64)
+        base = _rgb_base()
         for pdf in it:
             media = [
                 encode_png(((int(d) * 7 + base) % 256).astype(np.uint8))
@@ -504,10 +468,6 @@ def multimodal_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hypothesis roundtrip bounds, and the flat-block-exactness invariant
     on the codec itself."""
     from clinical_bi_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from clinical_bi_spark.operators.multimodal import (
-        attach_media_metadata,
-        resize_media,
-    )
 
     t = load_tables(tune(spark), sf_dir)
     docs = t.documents.select("doc_id").repartition(
@@ -518,10 +478,7 @@ def multimodal_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        y, x, c = np.meshgrid(
-            np.arange(16), np.arange(16), np.arange(3), indexing="ij"
-        )
-        base = (y * 31 + x * 5 + c * 11).astype(np.int64)
+        base = _rgb_base()
         for pdf in it:
             media = [
                 encode_jpeg(((int(d) * 7 + base) % 256).astype(np.uint8))
@@ -537,10 +494,7 @@ def multimodal_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        y, x, c = np.meshgrid(
-            np.arange(8), np.arange(8), np.arange(3), indexing="ij"
-        )
-        base = ((y * 2) * 31 + (x * 2) * 5 + c * 11).astype(np.int64)
+        base = _rgb_base()[::2, ::2]  # the formula at stride 2
         for pdf in it:
             rows = []
             for aid, b in zip(pdf["asset_id"], pdf["resized"]):
@@ -617,10 +571,7 @@ def multimodal_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame
         import numpy as np
         import pandas as pd
 
-        y, x, c = np.meshgrid(
-            np.arange(16), np.arange(16), np.arange(3), indexing="ij"
-        )
-        base = (y * 31 + x * 5 + c * 11).astype(np.int64)
+        base = _rgb_base()
         for pdf in it:
             media = []
             for d in pdf["doc_id"]:
@@ -638,10 +589,7 @@ def multimodal_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame
         import numpy as np
         import pandas as pd
 
-        y, x, c = np.meshgrid(
-            np.arange(16), np.arange(16), np.arange(3), indexing="ij"
-        )
-        base = (y * 31 + x * 5 + c * 11).astype(np.int64)
+        base = _rgb_base()
         for pdf in it:
             rows = []
             for aid, idx, fr in zip(
@@ -707,10 +655,6 @@ def multimodal_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     The LZW decoder's dictionary/width paths are differentially tested
     against an independent real compressor (tests/test_multimodal.py)."""
     from clinical_bi_spark.operators.gif import decode_gif, encode_gif_gray
-    from clinical_bi_spark.operators.multimodal import (
-        attach_media_metadata,
-        resize_media,
-    )
 
     t = load_tables(tune(spark), sf_dir)
     docs = t.documents.select("doc_id").repartition(
@@ -721,8 +665,7 @@ def multimodal_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        y, x = np.meshgrid(np.arange(16), np.arange(16), indexing="ij")
-        base = (y * 31 + x * 5).astype(np.int64)
+        base = _rgb_base()[:, :, 0]  # y·31 + x·5
         for pdf in it:
             media = [
                 encode_gif_gray(((int(d) * 7 + base) % 256).astype(np.uint8))
@@ -961,25 +904,7 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction — see the block comment above for the design."""
     from clinical_bi_spark.operators.multimodal import resample_audio
 
-    t = load_tables(tune(spark), sf_dir)
-    i = F.sequence(F.lit(0), F.lit(_WAV_N - 1))
-    u = lambda ix: (F.col("doc_id") * 31 + ix * 7 + 32768) % 65536
-    sample_hex = F.array_join(
-        F.transform(
-            i,
-            lambda ix: F.format_string(
-                "%02x%02x",
-                (u(ix) % 256).cast("int"),
-                F.floor(u(ix) / 256).cast("int"),
-            ),
-        ),
-        "",
-    )
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
-    media = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(F.concat(F.lit(_WAV_HEADER_HEX), sample_hex)).alias("media"),
-    )
+    media = _formula_media(spark, sf_dir, _wav_media)
     out = resample_audio(media, target_rate=_RESAMPLE_RATE)
     return out.select(
         "asset_id",
@@ -1035,35 +960,7 @@ def multimodal_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment above for the design."""
     from clinical_bi_spark.operators.multimodal import extract_image_patches
 
-    t = load_tables(tune(spark), sf_dir)
-
-    def _idiv(a: F.Column, b: int) -> F.Column:  # non-negative floor div
-        return F.floor(a / F.lit(b)).cast("long")
-
-    ix = F.sequence(F.lit(0), F.lit(767))
-    pixel_hex = F.array_join(
-        F.transform(
-            ix,
-            lambda i: F.format_string(
-                "%02x",
-                (
-                    (
-                        F.col("doc_id") * 7
-                        + _idiv(i, 48) * 31
-                        + _idiv(i % 48, 3) * 5
-                        + (i % 3) * 11
-                    )
-                    % 256
-                ).cast("int"),
-            ),
-        ),
-        "",
-    )
-    docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
-    media = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(F.concat(F.lit(_SRC_HEADER_HEX), pixel_hex)).alias("media"),
-    )
+    media = _formula_media(spark, sf_dir, _ppm_media)
     patches = extract_image_patches(media, patch=8)
     return patches.select(
         "asset_id",

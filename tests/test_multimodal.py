@@ -813,3 +813,58 @@ def test_image_patches_query_matches_oracle(spark, oracle_con):
     assert_matches_oracle(
         df, oracle_con, _PATCHES_ORACLE, name="multimodal_image_patches"
     )
+
+
+def test_formula_media_builders_are_closed_form():
+    """The PPM, BMP and WAV builders behind the formula-media queries emit
+    exactly their header plus the closed-form bytes, for every row of one
+    vectorized call (doc_id >= 0, including one past 32 bits), and the
+    real codecs decode them back to the formula pixels and samples."""
+    import numpy as np
+
+    from clinical_bi_spark.operators.multimodal import (
+        decode_bmp,
+        decode_ppm,
+        decode_wav_pcm16,
+    )
+    from clinical_bi_spark.queries.multimodalops import (
+        _bmp_media,
+        _ppm_media,
+        _wav_media,
+    )
+
+    doc_ids = [0, 1, 255, 256, 499, 2**40]
+    ids = np.array(doc_ids, dtype=np.int64)
+    ppm, bmp, wav = _ppm_media(ids), _bmp_media(ids), _wav_media(ids)
+    bmp_header = (
+        b"BM"
+        + struct.pack("<IHHI", 54 + 768, 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, 16, 16, 1, 24, 0, 768, 0, 0, 0, 0)
+    )
+    wav_header = (
+        b"RIFF" + struct.pack("<I", 36 + 960) + b"WAVEfmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, 48000, 96000, 2, 16)
+        + b"data" + struct.pack("<I", 960)
+    )
+    for k, d in enumerate(doc_ids):
+
+        def px(x, y, c):
+            return (d * 7 + y * 31 + x * 5 + c * 11) % 256
+
+        rgb = [[[px(x, y, c) for c in range(3)] for x in range(16)]
+               for y in range(16)]
+        samples = [(d * 31 + i * 7) % 65536 - 32768 for i in range(480)]
+
+        assert ppm[k] == b"P6\n16 16\n255\n" + bytes(
+            px(x, y, c) for y in range(16) for x in range(16) for c in range(3)
+        )
+        assert bmp[k] == bmp_header + bytes(
+            px(x, 15 - r, 2 - b)
+            for r in range(16) for x in range(16) for b in range(3)
+        )
+        assert wav[k] == wav_header + struct.pack("<480h", *samples)
+
+        assert decode_ppm(ppm[k]).tolist() == rgb
+        assert decode_bmp(bmp[k]).tolist() == rgb
+        got, rate = decode_wav_pcm16(wav[k])
+        assert rate == 48000 and got[:, 0].tolist() == samples

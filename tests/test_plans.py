@@ -774,6 +774,51 @@ def test_mp4_samples_plan_is_two_arrow_stages(spark):
     assert ") Window" not in plan and "Join" not in plan
 
 
+_FORMULA_MEDIA_QUERIES = (
+    "multimodal_resize",
+    "multimodal_resize_bmp",
+    "multimodal_image_patches",
+    "multimodal_audio_resample",
+    "multimodal_audio_features",
+)
+_FORMULA_MEDIA_JOINS = ("multimodal_resize", "multimodal_resize_bmp")
+
+
+@pytest.mark.parametrize("name", _FORMULA_MEDIA_QUERIES)
+def test_formula_media_is_built_once_below_one_spread(spark, name):
+    """The synthetic media comes from one numpy mapInPandas step on the
+    doc_ids, below the plan's one round-robin exchange, never from a
+    per-byte Catalyst lambda (Spark interprets higher-order functions one
+    element at a time). The two resize joins read that exchange on both
+    sides: after execution the final adaptive plan reuses it, so the
+    media is built once."""
+    plan = explain(spark, name)
+    assert "lambdafunction" not in plan.lower() and "transform(" not in plan
+
+    df = REGISTRY[name].fn(spark, SF_ORACLE)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    section = final.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = section.splitlines()
+    node = r"^[\s:+-]*"
+    spreads = [
+        k for k, line in enumerate(lines)
+        if re.match(node + r"Exchange RoundRobinPartitioning", line)
+    ]
+    assert len(spreads) == 1, final
+    builders = [
+        line for line in lines
+        if re.match(node + r"MapInPandas \w+\(doc_id#\d+L\)#\d+, "
+                    r"\[asset_id#\d+L, media#\d+\]", line)
+    ]
+    assert builders == [lines[spreads[0] + 1]], final
+    reused = [line for line in lines if "ReusedExchange" in line]
+    if name in _FORMULA_MEDIA_JOINS:
+        assert len(reused) == 1 and "media#" in reused[0], final
+    else:
+        assert not reused, final
+
+
 def test_twa_single_shuffle_window_and_agg_colocated(spark):
     """Registered r14: the per-user LEAD window and the per-user
     aggregate must share hash(user_id) partitioning — ONE exchange total,
