@@ -3,7 +3,10 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "errors": {name: "Type: message", ...},
+   "sf": <sf>, "ann_exact_arithmetic": <bool>}
+
+The benched queries are the registrations flagged ``bench=True``.
 
 Each query is executed to completion with a ``noop``-format write: every
 output column is computed and serialized, so projection expressions are
@@ -26,146 +29,6 @@ from clinical_bi_spark.queries import load_all
 from clinical_bi_spark.session import default_parallelism, get_spark, warm
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# The bench set as of round 4 — kept stable for round-over-round totals.
-_R4_SET = frozenset(
-    {
-        "evt_tumbling_window", "evt_sessionization", "evt_group_zscore_window",
-        "asof_join_events", "agg_rollup", "agg_percentiles",
-        "flagship_feature_query", "dashboard_extract",
-        "etl_cohort_conditional_agg", "agg_pricing_summary",
-        "w2_running_total", "text_stats", "dedup_exact", "dedup_minhash_lsh",
-        "text_winnow_fingerprint", "pipeline_corpus_curation",
-        "sim_bruteforce_topk", "sim_ann_lsh",
-    }
-)
-
-# The bench set as of round 5 (r4 set + pipelineops/streaming entries) —
-# the r6 additions (multimodal + mlops) sit outside it so BOTH
-# round-over-round subtotals stay comparable.
-_R5_SET = _R4_SET | frozenset(
-    {
-        "data_quality_select", "data_snapshot_diff", "dedup_incremental",
-        "dashboard_extract", "stream_corpus_curation", "text_chunk_dedup",
-    }
-)
-
-# The bench set as of round 6 (r5 set + the Arrow-codec/mlops entries and
-# the span-dedup heavyweight added this round) — pinned now so round 7
-# has a comparable subtotal that includes them.
-_R6_SET = _R5_SET | frozenset(
-    {
-        "multimodal_resize", "multimodal_audio_features",
-        "m9_mlp_train_eval", "dedup_span_ngram",
-    }
-)
-
-# The bench set as of round 7 (r6 set + the boilerplate rewrite, KMV
-# sketch, CEP pattern and LPA communities added this round) — pinned now
-# so round 8 has a comparable subtotal that includes them.
-_R7_SET = _R6_SET | frozenset(
-    {
-        "text_boilerplate_strip", "sketch_kmv_distinct",
-        "evt_cep_pattern", "graph_label_propagation",
-    }
-)
-
-# The bench set as of round 8 (r7 set + the r7-verdict-suggested scan-speed
-# claims and the two operators whose plans changed this round: the
-# PPJoin-filtered jaccard join and the deterministic-quantizer IVF).
-_R8_SET = _R7_SET | frozenset(
-    {
-        "text_gopher_filters", "m18_linreg_exact",
-        "sim_ann_ivf", "dedup_jaccard_prefix",
-    }
-)
-
-# The bench set as of round 9 (r8 set + the r8-verdict-suggested scale-claim
-# carriers: the directed containment join, RFM on its new sharded-rank
-# production path, and the winsorized mean's exact decomposition).
-_R9_SET = _R8_SET | frozenset(
-    {
-        "dedup_containment_prefix", "evt_rfm_segmentation",
-        "agg_winsorized_mean",
-    }
-)
-
-
-# The bench set as of round 10 (r9 set + the verdict-mandated floor-at-
-# birth entries: the bottom-k quantile sketch and the two new r10
-# queries on the sharded rank/prefix-sum machinery).
-_R10_SET = _R9_SET | frozenset(
-    {
-        "sketch_bottomk_quantiles", "agg_gini_coefficient",
-        "agg_ks_two_sample",
-    }
-)
-
-# The bench set as of round 11 (r10 set + the two queries registered this
-# round with floors at birth: DSIR selection and SemDeDup).
-_R11_SET = _R10_SET | frozenset(
-    {
-        "data_dsir_select", "dedup_semantic_cluster",
-    }
-)
-
-# The bench set as of round 12 (r11 set + the two batch queries whose
-# parked r11 registrations landed this round with floors at birth:
-# Mann-Whitney U and PSI drift; stream_left_outer_join also registered
-# this round but streaming queries are not benched).
-_R12_SET = _R11_SET | frozenset(
-    {
-        "agg_mannwhitney_u", "data_psi_drift",
-    }
-)
-
-# The bench set as of round 13 (r12 set + the one batch query whose parked
-# r12 registration landed this round with a floor at birth: the ISO-BMFF
-# sample-table walk; stream_static_enrich_join and stream_session_stateful
-# also registered this round but streaming queries are not benched).
-_R13_SET = _R12_SET | frozenset(
-    {
-        "multimodal_video_mp4_samples",
-    }
-)
-
-# The bench set as of round 14 (r13 set + the two batch queries whose
-# parked r13 registrations landed this round with floors at birth:
-# the gapfill/interpolate densifier and the LOCF time-weighted average;
-# stream_time_weighted_avg also registered this round but streaming
-# queries are not benched).
-_R14_SET = _R13_SET | frozenset(
-    {
-        "evt_gapfill_interpolate", "evt_time_weighted_avg",
-    }
-)
-
-# The bench set as of round 15 (r14 set + the two batch queries whose
-# parked r14 registrations landed this round with floors at birth: the
-# corpus-trained BPE tokenizer and the Z-order layout map).
-_R15_SET = _R14_SET | frozenset(
-    {
-        "text_bpe_train_encode", "data_zorder_layout",
-    }
-)
-
-# The bench set as of round 16 (r15 set + the two batch queries whose
-# parked r15 registrations landed this round with floors at birth: the
-# WAV zero-order-hold resampler and the ViT image patchifier).
-_R16_SET = _R15_SET | frozenset(
-    {
-        "multimodal_audio_resample", "multimodal_image_patches",
-    }
-)
-
-# The bench set as of round 17 (r16 set + the two batch queries whose
-# parked r16 registrations landed this round with floors at birth: the
-# ordered small-file compaction plan and the Adamic-Adar link scorer).
-_R17_SET = _R16_SET | frozenset(
-    {
-        "data_compaction_plan", "graph_adamic_adar",
-    }
-)
 
 
 def repeat_blocks(names: list[str], size: int) -> list[list[str]]:
@@ -228,9 +91,9 @@ def main() -> None:
     # round-7); the two paths are differential-pinned equal in
     # tests/test_similarity.py, which is what licenses timing one while
     # adjudicating the other. Set INSIDE main (r15 review): at import
-    # time it would leak into any process that merely imports bench —
-    # e.g. the pytest invariant over the round sets — silently flipping
-    # the ANN dual-path default for every later test in that process.
+    # time it would leak into any process that merely imports bench,
+    # silently flipping the ANN dual-path default for every later test
+    # in that process.
     os.environ.setdefault("CLINICAL_BI_EXACT_ARITH", "0")
     registry = load_all()
     bench_specs = {n: s for n, s in registry.items() if s.bench}
@@ -294,14 +157,6 @@ def main() -> None:
 
     timings, errors = time_blocks(blocks, _run_released, repeats, warmup=True)
 
-    # the round-over-round subtotals are only comparable if every
-    # round-set query was timed or recorded as failed — a dropped bench
-    # flag would silently shrink them and read as a perf improvement.
-    # Every earlier round set is a subset of the r17 one (pinned in
-    # tests/test_rotation_invariant.py).
-    missing = _R17_SET - set(timings) - set(errors)
-    assert not missing, f"round-set queries missing from bench: {sorted(missing)}"
-
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": (
@@ -315,51 +170,6 @@ def main() -> None:
         # query has no timing and is left out of the totals
         "errors": errors,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # The headline set grew in r5 (pipelineops + streaming entries);
-        # this subtotal over the r1-r4 18-query set is the round-over-round
-        # comparable number.
-        "subtotal_r4_set": round(
-            sum(t for n, t in timings.items() if n in _R4_SET), 3
-        ),
-        "subtotal_r5_set": round(
-            sum(t for n, t in timings.items() if n in _R5_SET), 3
-        ),
-        "subtotal_r6_set": round(
-            sum(t for n, t in timings.items() if n in _R6_SET), 3
-        ),
-        "subtotal_r7_set": round(
-            sum(t for n, t in timings.items() if n in _R7_SET), 3
-        ),
-        "subtotal_r8_set": round(
-            sum(t for n, t in timings.items() if n in _R8_SET), 3
-        ),
-        "subtotal_r9_set": round(
-            sum(t for n, t in timings.items() if n in _R9_SET), 3
-        ),
-        "subtotal_r10_set": round(
-            sum(t for n, t in timings.items() if n in _R10_SET), 3
-        ),
-        "subtotal_r11_set": round(
-            sum(t for n, t in timings.items() if n in _R11_SET), 3
-        ),
-        "subtotal_r12_set": round(
-            sum(t for n, t in timings.items() if n in _R12_SET), 3
-        ),
-        "subtotal_r13_set": round(
-            sum(t for n, t in timings.items() if n in _R13_SET), 3
-        ),
-        "subtotal_r14_set": round(
-            sum(t for n, t in timings.items() if n in _R14_SET), 3
-        ),
-        "subtotal_r15_set": round(
-            sum(t for n, t in timings.items() if n in _R15_SET), 3
-        ),
-        "subtotal_r16_set": round(
-            sum(t for n, t in timings.items() if n in _R16_SET), 3
-        ),
-        "subtotal_r17_set": round(
-            sum(t for n, t in timings.items() if n in _R17_SET), 3
-        ),
         # Self-describing variant flag: with CLINICAL_BI_EXACT_ARITH=0
         # (the bench default set above) the sim_ann_* timings measure the
         # numpy batch production path; the adjudicated variants run the

@@ -47,697 +47,9 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
     return deco
 
 
-#: The driver records correctness rows for registry[:50] only, so ordering
-#: decides which queries get a driver verdict each round.
-#:
-#: STALENESS INVARIANT (stated r9, enforced by
-#: tests/test_rotation_invariant.py). The registry holds 174+ queries and
-#: the driver window holds 50 slots, so the pure-rotation cycle is
-#: ceil(174/50) = 4 rounds (3.48 average); after reserving ~10-15 slots
-#: per round for changed/new code, headliners, and the rows-only rotation,
-#: the effective cycle is ~4-4.5 rounds. The old soft "no verdict older
-#: than 3 rounds" ceiling is therefore arithmetically unsatisfiable; the
-#: enforced invariant is:
-#:   * max staleness <= 4 rounds — every query outside the current window
-#:     must have a driver verdict within the last 4 rounds (the pytest
-#:     checks current_round - last_verdict_round <= 4 for non-window
-#:     entries, current_round = latest CORRECTNESS_r* + 1);
-#:   * oldest-first — rotation slots go to the oldest-verdict block before
-#:     anything younger re-rotates;
-#:   * never-adjudicated queries lead the window; a new query must land
-#:     BEFORE the round's window is committed or sit out the round in
-#:     _DEFERRED_NEW and lead the next round's window.
-#: Consequence the arithmetic forces: a round that burns >15 slots on new
-#: code pushes the rotation cycle past 4 and breaks the invariant one or
-#: two rounds later — registry growth must stay small (<=2-3 new queries
-#: per round) now that the surface is complete.
-#:
-#: ROUND-17 WINDOW (committed with the round's new code already landed:
-#: the two r16 parked candidates — data_compaction_plan,
-#: graph_adamic_adar — registered exactly as the r16 parking comments
-#: and the ROTATION CAPACITY pre-plan specified (one decorator each,
-#: _R17_SET bench floors at birth; oracles, closed-form fixtures,
-#: degenerate rows and scaleup_r17cand.py scale rows were staged at
-#: parking time and re-ran green this round). No default flip. Slot
-#: budget, executed exactly as the r15 ROTATION CAPACITY arithmetic and
-#: the r16 window comment pre-computed (2 + 42 + 1 + 5 = 50):
-#:   (a) the two new registrations LEAD (never adjudicated; the
-#:       compaction plan first, then Adamic-Adar);
-#:   (b) no changed-code slot: this is an optimization round — every
-#:       touched query is value-identical by oracle re-adjudication,
-#:       and the r16-touched entries are r16-green (staleness 1);
-#:   (c) the 42 non-streaming r13-green entries at the staleness-4
-#:       ceiling (FORCED; their 5 streaming siblings sit at the tail) —
-#:       the 47 r13-green remainder after r16's dedup_semantic_cluster
-#:       pull, minus the 5 streaming members; includes
-#:       evt_changepoint_cusum (its r16 null-skip change gets its
-#:       changed-code row here, as the r16 plan recorded) and
-#:       a3_hll_merge (the r16 slot-(d) displacement riding this block);
-#:   (e) flagship every round; dashboard_extract RESTS its second and
-#:       final round (windowed r18 at staleness 3 <= 4; exercised by
-#:       bench + the full oracle suite every session);
-#:   (f) streaming TAIL: the 5 forced r13-green streaming entries.
-#: r18 arithmetic check at this commit: the 48 r14-green entries reach
-#: the ceiling (incl. text_bm25_topk's two-round-deferred changed-code
-#: row) + dashboard_extract + flagship = 50 exactly — steady state,
-#: zero free slots, as ROTATION CAPACITY computed; the r17 pair was the
-#: LAST planned registration.
-#:
-#: ROUND-16 WINDOW (history; committed with the round's new code already landed:
-#: the two r15 parked candidates — multimodal_audio_resample,
-#: multimodal_image_patches — registered exactly as the r15 parking
-#: comments planned (_R16_SET bench floors at birth; both pre-flighted
-#: on the r15 final tree value-equal to their oracles at driver shape,
-#: 500/500 and 2000/2000). No default flip this round — the
-#: one-flip-per-round verify schedule completed at r15. Slot budget,
-#: executed exactly as the r15 pre-plan computed (2 + 43 + 1 + 2 + 2 =
-#: 50):
-#:   (a) the two new registrations LEAD (never adjudicated; the audio
-#:       resampler first, then the image patchifier);
-#:   (b) changed-code slots, AMENDED late-round: the r16 nulls probe
-#:       (its own registration round) found four None-crash sites and
-#:       the null-skipping fixes touched four REGISTERED queries after
-#:       the first window commit — text_bm25_topk (r14-green),
-#:       sim_ann_ivf (r15-green), dedup_semantic_cluster (r13-green,
-#:       shared _semdedup_pipeline), evt_changepoint_cusum (r13-green).
-#:       Placement, cheapest-first: dedup_semantic_cluster TAKES the
-#:       slot-(d) r13 pull (same arithmetic as the alphabetical
-#:       default); sim_ann_ivf takes dashboard's rested headliner slot
-#:       (see (e)); evt_changepoint_cusum rides r17's forced r13 block
-#:       (one-round delay, the r13 semdedup precedent);
-#:       text_bm25_topk rides its r14 block at r18 (two-round delay —
-#:       the one concession, a one-line coalesce whose
-#:       differential/oracle pins re-ran green this round);
-#:   (c) the 43 non-streaming r12-green entries at the staleness-4
-#:       ceiling (FORCED; their 2 streaming siblings sit at the tail) —
-#:       the 45 r12-green remainder the r15 flip slot and slot-(d) pull
-#:       left, minus the 2 streaming members; includes the r12
-#:       rows-only rotation (agg_percentiles_approx,
-#:       m3_feature_importance, m8_vocab_embedding_trained), riding the
-#:       forced block as the r14 plan recorded;
-#:   (d) 1 r13-green pull, a round EARLY: dedup_semantic_cluster
-#:       (changed-code; any single r13 pull satisfies the r15 ROTATION
-#:       CAPACITY requirement that r17 land at 47 r13-green forced + 2
-#:       registrations + flagship = 50); a3_hll_merge — the
-#:       alphabetical default this pull replaced — stays r13-green and
-#:       rides r17's forced block;
-#:   (e) flagship every round; dashboard_extract RESTS r16+r17 (the
-#:       pre-planned r17 rest moved up one round to fund sim_ann_ivf's
-#:       changed-code slot — green r15, windowed r18 at staleness 3,
-#:       exercised by bench + the full oracle suite every session);
-#:   (f) streaming TAIL: the 2 forced r12-green streaming entries
-#:       (stream_left_outer_join, then stream_stateful_user_stats).
-#: r17 arithmetic check at this commit: 48 r13-green minus the
-#: dedup_semantic_cluster pull here = 47 forced (incl.
-#: evt_changepoint_cusum's changed-code row and a3_hll_merge) + the 2
-#: scheduled r17 registrations + flagship = 50 exactly — the invariant
-#: holds with dashboard_extract resting its second round (windowed r18
-#: at staleness 3 <= 4; r18 then holds the r14-green block incl.
-#: text_bm25_topk + dashboard + flagship).
-#:
-#: ROUND-15 WINDOW (history; committed with the round's new code already landed:
-#: the two r14 parked candidates — text_bpe_train_encode,
-#: data_zorder_layout — registered exactly as the r14 parking comments
-#: planned (_R15_SET bench floors at birth), and the
-#: dedup_containment_prefix verify default FLIPPED to the proven bitmask
-#: path (the one-flip-per-round schedule's final flip; pre-flighted in
-#: r14 bitmask-forced: oracle PASS, degenerate 3/3, unicode 189/0).
-#: Slot budget, executed exactly as the r14 pre-plan computed
-#: (2 + 1 + 42 + 1 + 2 + 2 = 50):
-#:   (a) the two new registrations LEAD (never adjudicated; BPE first,
-#:       then the z-order layout map);
-#:   (b) dedup_containment_prefix — the scheduled changed-code slot for
-#:       the bitmask verify default flip (differential-pinned
-#:       byte-identical in tests/test_dedup.py; this row is the driver
-#:       adjudicating the NEW default path end to end);
-#:   (c) the 42 non-streaming r11-green entries at the staleness-4
-#:       ceiling (FORCED; their 2 streaming siblings sit at the tail) —
-#:       the 44 r11-green remainder the r14 slot-(d) pulls left, minus
-#:       the 2 streaming members;
-#:   (d) 1 r12-green pull, a round EARLY: dedup_containment_superset —
-#:       chosen over the oldest-alphabetical default because it shares
-#:       the candidate-generation machinery with this round's flipped
-#:       query (adjacent-code re-adjudication) while still draining the
-#:       r12 block: 47 r12-green exist, and dedup_containment_prefix's
-#:       flip slot here already drains one, so an unpulled r16 would be
-#:       FORCED to 46 + 2 registrations + 2 headliners = 50 with NO
-#:       slack; this pull makes r16's forced load 45 + 2 + 2 = 49 of
-#:       50, preserving the one-free-slot margin for a changed-code
-#:       slot there;
-#:   (e) headliners (flagship / dashboard), every round;
-#:   (f) streaming TAIL: the 2 forced r11-green streaming entries
-#:       (stream_corpus_curation, stream_sliding_window).
-#: r16 arithmetic check at this commit: 45 r12-green forced (47 minus
-#: the flip slot and the slot-(d) pull here) + 2 scheduled r16
-#: registrations (multimodal_audio_resample, multimodal_image_patches)
-#: + 2 headliners = 49 of 50 — the invariant holds with 1 free slot,
-#: which MUST pull 1 r13-green (the r17 arithmetic below needs it).
-#: The r12 rows-only rotation (agg_percentiles_approx,
-#: m3_feature_importance, m8_vocab_embedding_trained) rides inside the
-#: forced r12 block at r16, as the r14 plan recorded.
-#:
-#: ROTATION CAPACITY (computed at the r15 commit — the full-cycle
-#: arithmetic the one-round-ahead checks above no longer capture).
-#: Post-r15 blocks: r12:45, r13:48, r14:48, r15:50. The 50-slot /
-#: 4-round contract supplies 200 slots per cycle; demand is every
-#: non-headliner query once (currently 189, 191 after the r17 pair)
-#: plus 2 headliner slots per round (8/cycle) plus new registrations.
-#: At 191 non-headliner entries demand is 191 + 8 = 199 of 200 — the
-#: registry is AT capacity. Consequences, pre-planned here:
-#:   * r16: 45 + 2 regs + 2 headliners + 1 r13 pull = 50 (as above);
-#:   * r17: 47 r13-green + 2 regs (data_compaction_plan,
-#:     graph_adamic_adar) + flagship = 50 — dashboard_extract SITS OUT
-#:     exactly one round (it will be 2 rounds fresh, far under the
-#:     ceiling, and is exercised every session by bench + the oracle
-#:     suite; flagship keeps its every-round slot). Without this
-#:     one-round headliner rest, r17 is oversubscribed at 51 of 50.
-#:   * r18 onward: steady state at 48 forced + 2 headliners = 50
-#:     exactly, ZERO free slots — future changed-code slots must land
-#:     on entries already due (schedule flips to the block's round), and
-#:     REGISTRY GROWTH STOPS at 193 total queries unless an entry is
-#:     retired or the headliner policy is relaxed further. The r17 pair
-#:     is therefore the LAST planned registration; anything new must
-#:     name the entry it displaces.
-#:
-#: ROUND-14 WINDOW (history; committed with the round's new code already landed:
-#: the three r13 parked candidates — evt_gapfill_interpolate,
-#: evt_time_weighted_avg, stream_time_weighted_avg — registered exactly
-#: as the r13 parking comments planned (_R14_SET bench floors for the
-#: two batch ones; the streaming twin unbenched per policy), and the
-#: dedup_jaccard_prefix verify default FLIPPED to the proven bitmask
-#: path (one flip per round; containment stays r15). Slot budget,
-#: executed exactly as the r13 pre-plan computed (3 + 35 + 3 + 2 + 1 +
-#: 6 = 50):
-#:   (a) the two new batch registrations LEAD (never adjudicated;
-#:       gapfill first, then the batch TWA — their streaming twin leads
-#:       the TAIL per standing policy);
-#:   (b) dedup_jaccard_prefix — the scheduled changed-code slot for the
-#:       bitmask verify default flip (differential-pinned byte-identical
-#:       in-session; this row is the driver adjudicating the NEW default
-#:       path end to end);
-#:   (c) the 35 non-streaming r10-green entries at the staleness-4
-#:       ceiling (FORCED; their 6 streaming siblings sit at the tail) —
-#:       the 41 r10-green remainder the r13 slot-(d) pulls left, minus
-#:       the 6 streaming members;
-#:   (d) 3 r11-green pulls: the rows-only rotation pair
-#:       (m9_mlp_train_eval, a3_approx_count_distinct — r11 rows-only
-#:       verdicts, due per the rows-only rotation) + agg_bitwise_battery
-#:       (oldest alphabetical r11 entry after the pair) pulled a round
-#:       EARLY — 47 r11-green exist, so an unpulled r15 would be FORCED
-#:       to 47 + 2 registrations + 2 headliners + the containment flip =
-#:       52 > 50; three pulls make it 44 + 2 + 2 + 1 = 49 of 50;
-#:   (e) headliners (flagship / dashboard), every round;
-#:   (f) streaming TAIL: stream_time_weighted_avg (never adjudicated,
-#:       leads the tail), then the 6 forced r10-green streaming entries.
-#: r15 arithmetic check at this commit: 44 r11-green forced (47 minus
-#: the 3 pulls here) + 2 scheduled r15 registrations
-#: (text_bpe_train_encode, data_zorder_layout) + 2 headliners +
-#: dedup_containment_prefix's flip slot = 49 of 50 — the invariant holds
-#: with 1 free slot. Nothing rows-only is stale after the pair's rows
-#: here (next due: the r12 rows-only rotation at r16).
-#:
-#: ROUND-13 WINDOW (history; new code landed before this commit: the three r12
-#: parked candidates — multimodal_video_mp4_samples,
-#: stream_static_enrich_join, stream_session_stateful — registered
-#: exactly as the r12 parking comments planned, with a _R13_SET bench
-#: floor for the batch one; the r13 ADVICE hardening of operators/mp4.py
-#: also precedes this commit, so the mp4 query adjudicates through the
-#: hardened parser). Slot budget, in priority order (1+1+36+5+2+5 = 50):
-#:   (a) multimodal_video_mp4_samples LEADS (never adjudicated, batch;
-#:       its two streaming siblings lead the TAIL per standing policy);
-#:   (b) dedup_semantic_cluster — the one explicitly scheduled
-#:       changed-r12 entry (the large-K sharded-assignment branch landed
-#:       in _semdedup_pipeline after the r12 window commit; the
-#:       registered K=16 path is plan-identical and r11-green, but the
-#:       changed-code-gets-a-current-row policy owes it this slot);
-#:   (c) the 36 non-streaming r9-green entries at the staleness-4
-#:       ceiling (FORCED; the 3 streaming members of that block sit at
-#:       the tail); includes the m1_keyed_split/m2_encoder_chain/
-#:       f3_pattern_classifier/etl_cohort_conditional_agg block and the
-#:       whole r9 text family;
-#:   (d) the 5 oldest r10-green entries pulled a round EARLY,
-#:       alphabetical (a3_hll_merge, a3_hll_portable,
-#:       agg_gini_coefficient, agg_grouping_sets,
-#:       agg_histogram_quantiles): 46 r10-green entries exist, so an
-#:       unpulled r14 would be FORCED to 46 + 3 registrations + 2
-#:       headliners = 51 > 50 — this pull is what keeps the r14
-#:       arithmetic sound (41 forced + 3 + 2 = 46, 4 free);
-#:   (e) headliners (flagship / dashboard), every round;
-#:   (f) streaming TAIL (wedged-stream blast-radius policy): the two
-#:       never-adjudicated registrations lead the tail
-#:       (stream_static_enrich_join — stateless, so first — then
-#:       stream_session_stateful), then the 3 forced r9-green streaming
-#:       entries (stream_cep_pattern, stream_cep_pattern_quantified,
-#:       stream_forward_fill).
-#: Rows-only rotation note: the oldest rows-only verdicts
-#: (m9_mlp_train_eval, a3_approx_count_distinct — r11) have two rounds
-#: of headroom and ride r14's 4 free slots; nothing rows-only is stale
-#: this round.
-#: Post-commit note (same round, after the window commit): later r13
-#: work added an ENV-GATED DORMANT verify path to dedup_jaccard_prefix
-#: AND dedup_containment_prefix (an env-selected bitmask verify —
-#: vocab-gated dense-bitmask verify over the shared
-#: _bitmask_pair_overlap core, ~6x verify CPU, differential-pinned
-#: identical output per query; see textops.py _JACCARD_BITMASK_VOCAB_CAP).
-#: Both registered default paths are byte-identical this round, so no
-#: r13 slot is owed (the r12 semdedup precedent); the DEFAULT FLIPS are
-#: explicitly scheduled ONE PER ROUND to keep the rotation arithmetic
-#: sound — jaccard r14 (takes one of r14's 4 free slots, leaving 3 for
-#: the rows-only pair + one r11 pull), containment-prefix r15 (44
-#: r11-green forced after r14's pulls + 2 registrations + 2 headliners
-#: + that flip = 49 of 50). r14 arithmetic check at this commit: 41 r10-green
-#: remain forced at r14 (46 minus the 5 pulled here) + the 3 scheduled
-#: r14 registrations (evt_gapfill_interpolate, evt_time_weighted_avg,
-#: stream_time_weighted_avg at the tail) + 2 headliners = 46 of 50 —
-#: the invariant holds with 4 free slots for the r11 rows-only pair
-#: and early r11 pulls (48 r11-green minus dedup_semantic_cluster's
-#: row here = 47 forced at r15; 47 + 2 r15 registrations + 2
-#: headliners = 51 > 50, so r14 MUST pull at least one r11 entry —
-#: prefer the rows-only pair + two oldest alphabetical).
-#:
-#: ROUND-12 WINDOW (history; new code landed before this commit: the three r11
-#: parked candidates — agg_mannwhitney_u, data_psi_drift,
-#: stream_left_outer_join — registered exactly as the r11 parking
-#: comments planned, with _R12_SET bench floors for the two batch ones).
-#: The arithmetic is the one the ROUND-11 comment pre-computed: 36
-#: r8-green entries hit the staleness-4 ceiling at r12 (FORCED), + 2
-#: headliners + the scheduled text_language_id = 39, leaving 11 free
-#: slots. Those 11 go, exactly as the r11 (c) schedule and the r11
-#: verdict's Next #1/#2/#6 direct:
-#:   (a) the 3 never-adjudicated registrations LEAD (streaming one at
-#:       the TAIL per standing policy);
-#:   (b) the changed-r10 dedup/rank block pulled a round EARLY rather
-#:       than riding the r13 ceiling (dedup_jaccard_prefix,
-#:       dedup_containment_prefix, dedup_containment_superset,
-#:       evt_rfm_segmentation, m13_auc_rank, agg_equidepth_histogram —
-#:       all r9-green);
-#:   (c) the last 2 slots to the oldest r9 rotation debt:
-#:       m8_vocab_embedding_trained (rows-only rotation, r9) and
-#:       stream_stateful_user_stats (r9 streaming refresh, TAIL).
-#: The forced block includes sim_ann_pq — its FIRST driver row through
-#: the fully exact oracle graduated late in r11 (AS MATERIALIZED CTE
-#: chain; ~15 s driver-shape PASS recorded in PERF.md) — plus the
-#: rows-only rotations agg_percentiles_approx / m3_feature_importance
-#: and changed-r9 vec_pca_power_top1. Streaming members sit at the
-#: window TAIL per standing policy: stream_left_outer_join (new, a
-#: calibrated strict-watermark oracle's first adjudication) then
-#: stream_stateful_user_stats. r13 arithmetic check at this commit:
-#: 48 r9-green entries exist; 8 get r12 rows here (the 6 dedup/rank +
-#: the 2 slot-(c) pulls), leaving 40 forced at r13 + 2 headliners = 42
-#: of 50 — the invariant holds with 8 slots to spare.
-#: Post-commit note (same round, after the window commit): later r12
-#: work landed THREE UNREGISTERED r13 candidates (stream_static_enrich_join
-#: — stream-side broadcast-dim LEFT join, stateless — and
-#: stream_session_stateful — applyInPandasWithState sessionization with
-#: the max-intra-session-gap aggregate and LOSSLESS eviction; both in
-#: queries/streamingops.py with exact oracles, multi-batch equality,
-#: degenerate/boundary pins, and x1/x10/x50 scale rows — plus
-#: multimodal_video_mp4_samples in queries/multimodalops.py: the real
-#: ISO-BMFF sample-table writer/parser (operators/mp4.py) that narrows
-#: the declared h264 stub to entropy-decode-only, closed-form exact
-#: oracle, hypothesis roundtrip property, x1/x4/x16 scale rows flat).
-#: No @query, so no window claim; the two streaming ones lead the r13
-#: window AT THE TAIL (streaming, per standing policy), the mp4 one
-#: with the never-adjudicated block at the head. r13 registration
-#: budget is exactly these three — the arithmetic note in the mp4
-#: parking comment shows 3 new + the scheduled semdedup re-adjudication
-#: + 40 forced r9-green + 2 headliners fit within 50. TWO more
-#: candidates (evt_gapfill_interpolate — hypertable gapfill + exact
-#: linear interpolation — and evt_time_weighted_avg — the LOCF-integral
-#: time-weighted mean; both queries/events.py) are parked one round
-#: further, for r14, since they would blow the r13 budget; oracles,
-#: near-bound exactness pins, plan pins, and x1/x10/x50 scale rows are
-#: already staged. A SEVENTH — stream_time_weighted_avg
-#: (queries/streamingops.py, the batch TWA's streaming twin: five-
-#: integer state, EXACT batch parity at any chronological slicing,
-#: eviction trade pinned) — joins them at the r14 TAIL (streaming
-#: policy), making r14's budget gapfill + TWA + its twin (3, at the
-#: cap; the pair adjudicates both sides of the shared oracle in one
-#: round). TWO more (text_bpe_train_encode, queries/textops.py —
-#: corpus-trained BPE with an unrolled-MATERIALIZED-CTE training oracle
-#: and a canonical-reference differential — and data_zorder_layout,
-#: queries/pipelineops.py — Morton-curve layout map with a row-level-
-#: NTILE oracle and the pruning claim adjudicated 11/64-vs-64/64) park
-#: for r15 on the same terms and are its whole registration budget; a
-#: NINTH and TENTH (multimodal_audio_resample — real PCM16 rate
-#: conversion, hex-exact file oracle — and multimodal_image_patches —
-#: ViT patchify through the real PPM/BMP codecs, per-patch hex-exact)
-#: wait for the earliest free budget (r16: the audio and vision prep
-#: pair). r12 also changed _semdedup_pipeline
-#: (large-K sharded-assignment branch) — the registered
-#: dedup_semantic_cluster's K=16 path is structurally untouched and the
-#: query holds an r11-green verdict on identical plan output
-#: (full-probe-equals-flat pinned; driver-shape re-PASS this round). Per
-#: the changed-without-a-slot convention (r11: text_language_id) it is
-#: EXPLICITLY SCHEDULED for r13, not silently dropped — an r11-green
-#: verdict plus session oracle re-passes cover the interim.
-#:
-#: ROUND-11 WINDOW (history; new code landed before this commit:
-#: data_dsir_select
-#: and dedup_semantic_cluster registered exactly as the r10 parking
-#: comments planned; the stream-curation regression fix also precedes
-#: this commit so its changed queries are known at window time).
-#: The round arrived oversubscribed again (~55 candidates / 50 slots).
-#: TIEBREAK, written down here at commit time:
-#:
-#:   (a) NON-NEGOTIABLE 45: the 41 r7-green entries at the staleness-4
-#:       ceiling (at r12 they violate the pytest invariant; includes the
-#:       two r7 rows-only rotations m9_mlp_train_eval /
-#:       a3_approx_count_distinct), the 2 never-adjudicated r11
-#:       registrations (they lead), and the 2 headliners.
-#:   (b) the remaining 5 slots go to changed-code entries, oldest
-#:       verdict first: text_quality_score / data_quality_select /
-#:       text_stats (r8-green, now changed TWICE without a row — cd86f16
-#:       micro-exact rework, then this round's let-binding rewrite of
-#:       the same expressions), and pipeline_corpus_curation /
-#:       stream_corpus_curation (r10-green but their gate plans are this
-#:       round's headline fix — the regression the r10 verdict flagged
-#:       must close with a driver row through the NEW expressions, not
-#:       only session oracles).
-#:   (c) explicitly scheduled for r12, not silently dropped:
-#:       text_language_id (r9-green; language_guess let-binding changed
-#:       it this round — value-identical, session oracle + unicode sweep
-#:       re-pass), the r8 rows-only rotation (agg_percentiles_approx,
-#:       m3_feature_importance), the changed-r9 remainder
-#:       (vec_pca_power_top1, sim_ann_pq), and the changed-r10
-#:       dedup/rank block (dedup_jaccard_prefix, dedup_containment_*,
-#:       evt_rfm_segmentation, m13_auc_rank, agg_equidepth_histogram —
-#:       all r9-green, ceiling r13). All but text_language_id and the
-#:       dedup/rank block are r8-green and FORCED into r12 by the
-#:       ceiling anyway, so (c) costs nothing it wasn't already owed.
-#: r12 arithmetic check at this commit: 36 r8-green entries hit the
-#: ceiling at r12 (39 minus the three quality entries adjudicated here);
-#: 36 + 2 headliners + text_language_id = 39, leaving 11 slots for r12
-#: new/changed code and early r9 rotation — the loosest window since r8,
-#: because this round paid the whole r7 block down.
-#: Streaming members sit at the window TAIL per standing policy (a
-#: wedged stream must only cost streaming rows): stream_sliding_window
-#: (r7 block) and stream_corpus_curation (changed this round) are last.
-#: Post-commit note (same round, before the driver run): later r11 work
-#: also changed sim_ann_ivf (driver-side Lloyd fit — IN the window via
-#: the r7 block) and landed three UNREGISTERED r12 candidates
-#: (agg_mannwhitney_u, data_psi_drift, stream_left_outer_join — no
-#: @query, so no window claim; they lead r12, the streaming one at the
-#: tail per policy). Every registered query whose code changed in r11 has
-#: a slot in this window except text_language_id (scheduled r12, (c))
-#: and sim_ann_pq — GRADUATED rows-only -> fully exact oracle late in
-#: r11 (trainer float-op census; see PERF.md), already named in (c) as
-#: due r12, where its first EXACT driver row lands.
-#:
-#: ROUND-10 WINDOW (history; committed FIRST that round, new code landed
-#: before the commit — the r9 verdict's What's-wrong #1 closed to the letter).
-#: The round arrived oversubscribed (~53 candidates / 50 slots), so the
-#: TIEBREAK the r9 verdict demanded is written down here at commit time:
-#:
-#:   STALENESS-4-CEILING ENTRIES BEAT CHANGED-CODE-DUE-FIRST. The 44
-#:   r6-green entries are non-negotiable (at r11 they violate the pytest
-#:   invariant); changed-but-recently-green entries have headroom and
-#:   wait, explicitly scheduled, exactly as r9's own "changed without a
-#:   slot" block established.
-#:
-#: Slot budget, in priority order (1 + 2 + 1 + 44 + 2 = 50):
-#: (1) sketch_bottomk_quantiles LEADS — the one never-adjudicated query
-#:     (r9 _DEFERRED_NEW; tests/test_rotation_invariant.py forces it);
-#: (2) the 2 NEW r10 queries, landed BEFORE this window commit (the <=2
-#:     budget the staleness arithmetic allows): agg_gini_coefficient
-#:     (sharded-rank rank-sum identity), agg_ks_two_sample (sharded
-#:     prefix-sum ECDF distance) — never adjudicated, so they lead too;
-#: (3) m18_linreg_exact — the OLDEST (r7-green) of the five r9
-#:     changed-without-slot entries, takes the one discretionary slot;
-#: (4) the 44 r6-green entries at the staleness-4 ceiling (streaming
-#:     members at the window TAIL per standing policy: a wedged stream
-#:     must only cost streaming rows);
-#: (5) headliners (flagship / dashboard), every round.
-#: OVERFLOW — explicitly scheduled for r11, not silently dropped:
-#:   * changed-r9-without-slot remainder: vec_pca_power_top1,
-#:     sim_ann_pq (both r8-green, headroom to r12);
-#:   * rows-only rotation: m9_mlp_train_eval, a3_approx_count_distinct
-#:     (r7, ceiling at r11 — they MUST take r11 slots),
-#:     agg_percentiles_approx, m3_feature_importance (r8);
-#:   * changed THIS round without a slot (all r9-green, headroom to
-#:     r13, due r11 oldest-first): dedup_jaccard_prefix,
-#:     dedup_containment_prefix, dedup_containment_superset (planned
-#:     in-query u64 injectivity audit — ADVICE medium; output-neutral
-#:     by construction, session oracles re-pass),
-#:     evt_rfm_segmentation / m13_auc_rank (ranking.py null-key handling
-#:     — latent-path fix, oracle-neutral on non-null keys, differential
-#:     + oracle tests re-pass); agg_equidepth_histogram (same, plus the
-#:     r10 value-level rebuild after the profile the r9 verdict asked
-#:     for — NTILE oracle + sharded≡windowed differential re-pass);
-#:     agg_gini_coefficient (value-level rebuild pre-adjudication — it
-#:     is IN this window, so it gets a current row anyway); and the r10
-#:     degenerate-probe guard fixes (empty-corpus scalar/fit guards,
-#:     oracle-neutral on non-degenerate data, probe + session oracles
-#:     re-pass): text_bigram_pmi_topk (r9-green),
-#:     agg_benford_firstdigit (r8-green), m9_mlp_train_eval /
-#:     m3_feature_importance (rows-only, already in the r11 rotation);
-#:     and the r10 UNICODE-sweep fixes, landed after this window was
-#:     committed (scripts/unicode_probe.py found three real cross-engine
-#:     divergences; quality/ratio family now exact bigint micro-units,
-#:     frame oracle now byte-faithful — Spark and oracle moved in
-#:     LOCKSTEP, so session oracles + the full unicode sweep re-pass
-#:     178/0): text_quality_score (r8-green), data_quality_select
-#:     (r7-green), text_stats (r8-green) changed WITHOUT r10 slots and
-#:     are due in r11 oldest-first; multimodal_frame_sample and
-#:     pipeline_corpus_curation are IN this window and get current rows.
-#: r11 arithmetic check at this commit: 42 r7-green entries hit the
-#: ceiling at r11; 42 + 2 headliners + 4 overflow rows-only/changed-r9 =
-#: 48, leaving 2 slots for r11 new/changed code — tight but sound, and
-#: it forces r11's new-code budget to <=2 as well.
-#:
-#: Round-9 rationale (history). Slot budget, in priority order:
-#: (1) the 2 late-r8 landings that have NEVER been driver-adjudicated
-#:     (the r8 verdict's What's-wrong #2): evt_changepoint_cusum,
-#:     text_char_entropy — they lead;
-#: (2) queries whose implementation CHANGES this round (planned at window
-#:     commit, per the changed-code-gets-a-current-row policy):
-#:     text_bigram_pmi_topk (ADVICE: zero-token-doc slice crash fix),
-#:     evt_rfm_segmentation (graduating off the SinglePartition ntile to
-#:     the sharded prefix-sum rank production path — the r8 `weak`),
-#:     agg_equidepth_histogram (same sharded-rank retrofit; r7-green),
-#:     dedup_jaccard_prefix (PPJoin+ suffix-filter lever);
-#:     m13_auc_rank gets the same retrofit and already sits in block (3);
-#: (3) the 31 r5-green exact entries at the staleness ceiling (the full
-#:     deferred-from-r8 block — nothing held back this time);
-#: (4) m8_vocab_embedding_trained (r5 rows-only rotation; the optional
-#:     exact-oracle graduation was evaluated and declined — see the
-#:     slot comment in the tuple);
-#: (5) headliners (flagship / dashboard), every round;
-#: (6) stale rows-only rotation (2-3 per round): m9_mlp_train_eval (r7),
-#:     a3_approx_count_distinct (r7);
-#: (7) remaining slots to the oldest r6-green entries, alphabetical
-#:     (oldest-first fill): a3_hll_merge, a3_hll_portable,
-#:     agg_grouping_sets, agg_histogram_quantiles. PRE-DECLARED SWAP: if
-#:     the planned dedup_containment_superset (directed C(B,A) superset
-#:     detection, r8 verdict Next-round #8) lands this round it takes the
-#:     agg_histogram_quantiles slot and that entry returns to the r10
-#:     block — declared here at window commit, so the swap is not a late
-#:     landing.
-#: Streaming stays at the TAIL (a wedged stream must only cost streaming
-#: rows): all four r8-green streaming entries re-enter because
-#: streaming/stateful.py changes this round (ADVICE: eviction timeout must
-#: re-arm from max-seen event ts, not batch-max).
-#: After this window, the only non-window entries are r6/r7/r8-green —
-#: staleness <= 3 at commit time, <= 4 when the r10 window is due, which
-#: the invariant test pins.
-#:
-#: Round-8 rationale (history). Slot budget, in priority order:
-#: (1) queries whose implementation CHANGED this round —
-#:     dedup_jaccard_prefix (PPJoin positional filter),
-#:     evt_cep_pattern (re-expressed through the parameterized
-#:     cep_pattern_match machinery), evt_cep_pattern_quantified (NEW:
-#:     signup+ error{2,} view+ quantified spec) — plus the thirteen NEW r8
-#:     exact-oracle queries (A-Res weighted sampling, keep-best
-#:     survivorship, forward-fill, temporal split, PMI collocations,
-#:     Benford audit, Welch t-test, RFM segmentation, deterministic PCA,
-#:     winsorized mean, Poisson-bootstrap CI, time-bounded funnel,
-#:     directed containment join):
-#:     never-adjudicated new code outranks re-greening unchanged r5
-#:     code (established policy), displacing w4_rank_battery / set_ops
-#:     / sort_limit_topn / text_language_id / m12_stratified_sample /
-#:     f6_f7_date_functions / j_semi_anti_exists / m13_auc_rank / w1_topk_per_group / m1_keyed_split /
-#:     m2_encoder_chain / f3_pattern_classifier /
-#:     j7_frequency_enrichment / f10_sed_cleanse to r9
-#:     with the rest of the r5 block;
-#: (2) the 23 r4-green entries at (past) the 3-round staleness ceiling —
-#:     the r7 verdict's top rotation ask; every one leads the window;
-#: (3) headliners (flagship / dashboard), every round;
-#: (4) stale rows-only rotation (2-3 per round): agg_percentiles_approx
-#:     (r3 row), sim_ann_pq (r4), m3_feature_importance (r5);
-#: (5) the 2 oldest r5-green exact entries that still fit (the
-#:     remainder — 31 more r5-green entries plus rows-only
-#:     m8_vocab_embedding_trained — hit the 3-round ceiling at r9 and
-#:     are due FIRST there, before any r6/r7-green entry rotates again:
-#:     agg_rollup, agg_salted_count, data_global_shuffle,
-#:     data_mixture_sample, dedup_incremental, dedup_ngram_jaccard,
-#:     etl_cohort_conditional_agg, f6_f7_date_functions,
-#:     j_semi_anti_exists, m12_stratified_sample, m13_auc_rank,
-#:     merge_upsert_emulation, set_ops, sim_bruteforce_topk,
-#:     sort_limit_topn, text_chunk_dedup, text_corpus_rollup,
-#:     text_language_id, text_lm_score, text_redact_pii,
-#:     text_repetition, text_tfidf_topk, text_winnow_fingerprint,
-#:     vec_norm_rollup, w1_topk_per_group, w4_rank_battery).
-#: Streaming stays at the TAIL (a wedged stream must only cost
-#: streaming rows): the three whose code changed this round —
-#: stream_stateful_user_stats and stream_cep_pattern (eviction
-#: dual-path + chunk-order hardening in streaming/stateful.py), the
-#: NEW stream_cep_pattern_quantified, and the NEW stream_forward_fill
-#: (streaming LOCF; newest last).
-#:
-#: Round-7 rationale (history). Slot budget, in priority order:
-#: (1) queries whose implementation or oracle CHANGED this round —
-#:     agg_chi_square (empty-cell fix), j_fuzzy_editdist_pairs +
-#:     entity_resolution_parts (short-string residue in the PassJoin
-#:     operator), sim_ann_lsh (exact-arith env gate; the driver runs the
-#:     exact default), sim_ann_ivf (GRADUATED: deterministic Lloyd's fit
-#:     + fully exact oracle, new code);
-#: (2) the 25 never-adjudicated late-r6 queries — every one gets its
-#:     first driver row so the r1–r7 union covers all 146 registry
-#:     entries (the r6 verdict's top ask). The two rows-only media
-#:     entries (multimodal_resize_jpeg / multimodal_video_mjpeg_frames)
-#:     ride along as promised: lossy codecs, rows-only by construction,
-#:     error bounds pinned in pytest;
-#: (3) headliners (flagship / dashboard), every round;
-#: (4) the r4-green blocks at the 3-round staleness ceiling: the four
-#:     etl_* domain entries and the w3/cube/pivot/unpivot window block;
-#: (5) stale rows-only entries per the r6 verdict's "cycle 2–3 per
-#:     round": m9 / a3_approx / agg_percentiles_approx (r3 rows) and
-#:     sim_ann_pq (r4 row);
-#: (6) the oldest remaining r4-green entries that fit: asof_join_events,
-#:     dedup_exact, dedup_embedding_cosine, a3_multi_count_distinct,
-#:     agg_pricing_summary, p_filter_conjunction, f_scalar_battery,
-#:     evt_tumbling_window.
-#: Streaming stays at the TAIL (a wedged stream must only cost
-#: streaming rows): stream_sliding_window is the one streaming entry
-#: this round and sits last. Still r4-green and deferred to r8 (window
-#: full): the evt_* remainder (sliding/sessionization/json_extract/
-#: dedup_window/group_zscore/group_zscore_window/funnel/retention),
-#: text_stats, text_quality_score, m8_vocab_embedding,
-#: multimodal_features, multimodal_resize_bmp, data_quality_select,
-#: data_snapshot_diff — they are due FIRST in r8, before anything
-#: r5/r6-green rotates again.
-#:
-#: Round-6 rationale (history):
-#: (1) every query whose implementation or oracle changed this round —
-#: sim_ann_lsh's new exact oracle, the repartitioned multimodal entries,
-#: the tracked-persist refactor (touches every dedup/similarity/textops/
-#: packing persist site), the connected-components checkpoint rewrite,
-#: and the Word2Vec degenerate-corpus guard; (2) headliners; (3) the
-#: whole r3-green block, now at the 3-round staleness ceiling; (4) the
-#: r4-green remainder the r5 brief named as due (windows/cube/pivot/
-#: unpivot, multi-count-distinct, the etl domain entries, the evt core,
-#: the embedding-cosine pair miner, and the two bench watch items
-#: dedup_exact / asof_join_events). Mid-round re-rotation: the six NEW
-#: exact-oracle queries (scd2 / stats battery / pagerank / markov /
-#: array battery / chunk split) enter the window — new code with an
-#: exact oracle outranks everything else — displacing the six ROWS-ONLY
-#: entries (sim_ann_ivf/pq, m8_trained, m9, a3_approx,
-#: agg_percentiles_approx): a rows-only driver row only proves "runs",
-#: which pytest already proves each session, while those queries' real
-#: contracts (recall floors on two fixture families, error bounds,
-#: parity pins) live in tests/ — the same reasoning that kept
-#: multimodal_resize_jpeg outside the window. A second batch of four NEW
-#: exact-oracle queries (range window / dq report / fuzzy join / CDC
-#: upsert) displaced the r4-green-on-unchanged-code remainder
-#: (a3_multi_count_distinct, dedup_exact, evt_tumbling_window,
-#: evt_sessionization): those four carry r4 driver greens, per-session
-#: pytest oracle re-runs, and — for the latter three — bench floors
-#: re-confirmed twice this round; a never-adjudicated exact query
-#: outranks re-confirming them a third way.
-#: Streaming sits at the window's TAIL:
-#: a wedged stateful stream must only ever cost later *streaming* rows,
-#: never a batch family (round-1 lesson; all six streaming queries
-#: changed this round — multi-batch plumbing — so they are inside the
-#: window but still last). Entries not named here keep module import
-#: order after the priority block — all have green r4/r5 verdicts on
-#: code unchanged since (see the deferred-to-r7 list below).
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # -- (a) the two new r17 registrations LEAD (never adjudicated) --
-    "data_compaction_plan",
-    "graph_adamic_adar",
-    # -- (c) the 42 non-streaming r13-green staleness-ceiling entries
-    #        (FORCED; their 5 streaming siblings sit at the tail);
-    #        includes evt_changepoint_cusum (r16 null-skip change --
-    #        its changed-code row, one-round delayed as planned) and
-    #        a3_hll_merge (the r16 slot-(d) displacement) --
-    "a3_hll_merge",
-    "a3_hll_portable",
-    "agg_gini_coefficient",
-    "agg_grouping_sets",
-    "agg_histogram_quantiles",
-    "agg_rollup",
-    "agg_salted_count",
-    "agg_spearman_corr",
-    "agg_stats_battery",
-    "data_global_shuffle",
-    "data_mixture_sample",
-    "data_weighted_sample",
-    "dedup_incremental",
-    "dedup_ngram_jaccard",
-    "etl_cohort_conditional_agg",
-    "evt_changepoint_cusum",
-    "f10_sed_cleanse",
-    "f3_pattern_classifier",
-    "f6_f7_date_functions",
-    "j7_frequency_enrichment",
-    "j_semi_anti_exists",
-    "m12_stratified_sample",
-    "m15_confusion_metrics",
-    "m1_keyed_split",
-    "m2_encoder_chain",
-    "merge_upsert_emulation",
-    "multimodal_video_mp4_samples",
-    "set_ops",
-    "sim_bruteforce_topk",
-    "sort_limit_topn",
-    "text_bigram_pmi_topk",
-    "text_char_entropy",
-    "text_chunk_dedup",
-    "text_corpus_rollup",
-    "text_lm_score",
-    "text_redact_pii",
-    "text_repetition",
-    "text_tfidf_topk",
-    "text_winnow_fingerprint",
-    "vec_norm_rollup",
-    "w1_topk_per_group",
-    "w4_rank_battery",
-    # -- (e) flagship every round; dashboard_extract rests its second
-    #        and final round (windowed r18 at staleness 3) --
-    "flagship_feature_query",
-    # -- (f) streaming members sit LAST: the 5 forced r13-green
-    #    streaming entries --
-    "stream_cep_pattern",
-    "stream_cep_pattern_quantified",
-    "stream_forward_fill",
-    "stream_session_stateful",
-    "stream_static_enrich_join",
-)
-#: New queries that landed AFTER the current round's window was committed:
-#: they sit out this round (documented, not silently unadjudicated) and
-#: MUST lead the next round's window. tests/test_rotation_invariant.py
-#: fails if a never-adjudicated registry query is neither in the window
-#: nor listed here.
-_DEFERRED_NEW: tuple[str, ...] = ()
-# r17: EMPTY — the round's new registrations (data_compaction_plan,
-# graph_adamic_adar) landed BEFORE the window commit and lead it; they
-# were the LAST planned registrations under the 50-slot contract.
-# Due FIRST in r18 (oldest-first): the 48 r14-green entries (staleness
-# 4 at the r18 window commit), including text_bm25_topk's two-round-
-# deferred changed-code row; that block + dashboard_extract (back from
-# its two-round rest) + flagship fills 50 of 50 EXACTLY — steady state
-# with zero free slots, as ROTATION CAPACITY computed. Registry growth
-# is STOPPED at 195 total queries unless an entry is retired or the
-# headliner policy is relaxed (see ROTATION CAPACITY).
-# (r10-r16 history: empty for the same reason — each round's new code
-# registered pre-window and led it.)
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (registration side effect) and return the
-    registry, reordered so the driver's 50-row correctness window lands on
-    the entries that most need adjudication this round (see
-    ``_DRIVER_WINDOW_PRIORITY``)."""
+    registry, in registration order."""
     from clinical_bi_spark.queries import (  # noqa: F401
         relational,
         textops,
@@ -753,19 +65,4 @@ def load_all() -> dict[str, QuerySpec]:
         streamingops,
     )
 
-    # fail LOUDLY on a priority name that doesn't resolve: a silent skip
-    # would compact the 50-slot adjudication window and slide an unintended
-    # entry in while a changed query falls out — defeating the "changed
-    # code gets a current-round row" policy with no failing signal
-    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in REGISTRY]
-    if missing:
-        raise ValueError(
-            f"_DRIVER_WINDOW_PRIORITY names not in registry: {missing}"
-        )
-    ordered: dict[str, QuerySpec] = {}
-    for name in _DRIVER_WINDOW_PRIORITY:
-        ordered[name] = REGISTRY[name]
-    for name, spec in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered
+    return REGISTRY

@@ -1184,12 +1184,7 @@ def evt_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Time-bucket gapfill + exact linear interpolation — REGISTERED r14
-# exactly as parked (r13 parking note: the r13 registration budget was
-# spent on stream_static_enrich_join / stream_session_stateful /
-# multimodal_video_mp4_samples; this parked with its oracle, tests, and
-# scale rows staged and now leads the r14 window as never-adjudicated,
-# with a _R14_SET bench floor at birth).
+# Time-bucket gapfill + exact linear interpolation.
 #
 # The one hypertable-family semantic the events surface still lacked:
 # TimescaleDB's time_bucket_gapfill(interpolate(...)) DENSIFIES the time
@@ -1299,12 +1294,8 @@ def evt_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Time-weighted average (LOCF integral) — REGISTERED r14 exactly as
-# parked (same budget note as evt_gapfill_interpolate above; the r14
-# window takes this, gapfill, AND the streaming twin
-# stream_time_weighted_avg (queries/streamingops.py, window TAIL) — 3
-# new registrations, at the <=2-3 growth cap; _R14_SET bench floor at
-# birth).
+# Time-weighted average (LOCF integral); its streaming twin is
+# stream_time_weighted_avg (queries/streamingops.py).
 #
 # The canonical irregular-sampling aggregate (TimescaleDB
 # time_weight('LOCF', ts, value)): a plain AVG over-weights bursts —

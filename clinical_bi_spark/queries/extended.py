@@ -1626,13 +1626,9 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mann-Whitney U (Wilcoxon rank-sum) two-sample test — parked through
-# r11 (the r11 window was committed with that round's 2-query budget
-# spent on DSIR / SemDeDup), REGISTERED r12 exactly as the parking plan
-# specified: decorator + bench floor (_R12_SET) added before the r12
-# window commit; it leads the window as never-adjudicated. Oracle
-# parity, scipy-free numpy twin, and degenerate contracts were pinned
-# in tests/test_analytics.py at parking time.
+# Mann-Whitney U (Wilcoxon rank-sum) two-sample test. Oracle parity,
+# scipy-free numpy twin, and degenerate contracts are pinned in
+# tests/test_analytics.py.
 #
 # Completes the two-sample family (Welch t = means, KS = distributions,
 # MWU = stochastic dominance) on the same value-level machinery: with

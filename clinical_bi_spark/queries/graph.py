@@ -472,13 +472,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Adamic–Adar link prediction over the part co-purchase graph — parked
-# at the r16 close on the standard terms (oracle, tests, and scale rows
-# staged at parking time), REGISTERED r17 exactly as the parking comment
-# and the rotation pre-plan specified: one decorator + the _R17_SET
-# bench floor, landed before the r17 window commit so it leads the
-# window as never-adjudicated (paired with data_compaction_plan as
-# r17's whole registration budget — the LAST planned registrations).
+# Adamic–Adar link prediction over the part co-purchase graph.
 #
 # The canonical link-prediction score (Adamic & Adar 2003; the standard
 # baseline in the recommender / graph-ML literature): two parts that

@@ -710,13 +710,7 @@ def multimodal_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MP4 sample-table walk + keyframe extraction — REGISTERED r13 exactly as
-# the r12 parking comment planned (the round's registration budget is the
-# three parked candidates: this plus the two streaming ones; 3
-# never-adjudicated lead the window + the scheduled dedup_semantic_cluster
-# re-adjudication still leaves the 39 forced r9-green entries + 2
-# headliners within 50 — see the ROUND-13 WINDOW comment in __init__.py).
-# Bench floor recorded at birth via _R13_SET (batch query ⇒ benched).
+# MP4 sample-table walk + keyframe extraction.
 #
 # Why this is the right multimodal step (r11 verdict "What's missing" #3
 # named general mp4 as the one format a video-corpus user asks for first):
@@ -849,9 +843,7 @@ def multimodal_video_mp4_samples(
 
 
 # ---------------------------------------------------------------------------
-# Audio resampling — REGISTERED r16 (the scheduled slot its r15 parking
-# comment planned; pre-flighted on the r15 final tree value-equal to the
-# oracle at driver shape, 500/500).
+# Audio resampling.
 #
 # The speech-pipeline prep step ("everything to 16 kHz") done for REAL
 # and exactly: each document synthesizes the same deterministic 48 kHz
@@ -916,11 +908,8 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ViT-style image patchify — REGISTERED r16 (pairs with
-# multimodal_audio_resample above: the audio and vision PREP steps of a
-# multimodal training pipeline, the natural r16 budget its r15 parking
-# comment planned; pre-flighted on the r15 final tree value-equal to the
-# oracle at driver shape, 2000/2000).
+# ViT-style image patchify (with multimodal_audio_resample above, the
+# audio and vision PREP steps of a multimodal training pipeline).
 #
 # The vision-training analog of frame sampling: decode the REAL 16×16
 # PPM (the multimodal_resize synthesis — pixel (x,y,c) =

@@ -572,13 +572,8 @@ def data_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gumbel-top-k resampling. The published recipe for "give me the 100 TB
 # slice that looks like Wikipedia".
 #
-# Landed r10 undecorated (the r10 window was committed before it, and the
-# staleness arithmetic capped r10 registry growth at the two pre-window
-# queries); REGISTERED r11 before that round's window commit, leading the
-# window as never-adjudicated, per the plan written here in r10. Oracle
-# parity and behavior tests in tests/test_pipelineops_dsir.py; bench
-# floor + x1/x10/x50 scale rows recorded at birth
-# (scripts/scaleup_r11cand.py, PERF.md).
+# Oracle parity and behavior tests in tests/test_pipelineops_dsir.py;
+# x1/x10/x50 scale rows in PERF.md (scripts/scaleup.py).
 #
 # Exactness design (the text_lm_score playbook + one strengthening): the
 # hashed generative model is TINY (m = 1024 buckets), so the per-bucket
@@ -808,13 +803,9 @@ def data_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PSI — Population Stability Index between two corpus snapshots. Parked
-# through r11 (the r11 window was committed with that round's 2-query
-# budget spent on DSIR / SemDeDup), REGISTERED r12 exactly as the
-# parking plan specified: decorator + bench floor (_R12_SET) added
-# before the r12 window commit; it leads the window as
-# never-adjudicated. Oracle parity, numpy twin, and degenerate
-# contracts were pinned in tests/test_analytics.py at parking time.
+# PSI — Population Stability Index between two corpus snapshots. Oracle
+# parity, numpy twin, and degenerate contracts are pinned in
+# tests/test_analytics.py.
 #
 # The standard production data-drift gate: bucket a numeric feature,
 # compare the reference-era vs current-era bucket frequencies,
@@ -947,10 +938,7 @@ def data_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-order (Morton curve) layout map — REGISTERED r15 (parked r14 on the
-# same terms as text_bpe_train_encode; the two are r15's whole
-# registration budget and lead the r15 window together; oracle, tests,
-# and scale rows were staged at parking time).
+# Z-order (Morton curve) layout map.
 #
 # The canonical 100 TB data-LAYOUT technique the engine had not yet made
 # adjudicable: multi-dimensional clustering. A linear sort on (x, y)
@@ -1024,8 +1012,7 @@ def data_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-depth-bucket the z order into 64 ranges, and emit each bucket's
     row count and z/x/y extents — the pruning map a file-skipping scan
     consults. See the block comment above for the layout rationale and
-    the tie-break-independence argument. Registered r15 (parked r14 with
-    oracle/tests/scale rows staged, per the one-round parking policy)."""
+    the tie-break-independence argument."""
     from clinical_bi_spark.operators.ranking import (
         global_prefix_sums,
         ntile_from_rank,
@@ -1080,12 +1067,7 @@ def data_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Ordered compaction plan (small-files bin packing) — parked at the r16
-# close on the standard terms (oracle, tests, and scale rows staged at
-# parking time), REGISTERED r17 exactly as the parking comment and the
-# rotation pre-plan specified: one decorator + the _R17_SET bench floor,
-# landed before the r17 window commit so it leads the window as
-# never-adjudicated.
+# Ordered compaction plan (small-files bin packing).
 #
 # The OTHER canonical 100 TB layout operator next to Z-ordering: small-
 # file compaction. A day-partitioned table accumulates one small file

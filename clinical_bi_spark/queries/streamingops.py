@@ -415,12 +415,7 @@ def stream_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Watermarked LEFT OUTER stream-stream join. Parked through r11 (the
-# r11 window was committed with that round's 2-query budget spent on
-# DSIR / SemDeDup), REGISTERED r12 exactly as the parking plan
-# specified: decorator added before the r12 window commit; it enters
-# the window as never-adjudicated but sits at the TAIL per the standing
-# streaming policy (a wedged stream must only cost streaming rows).
+# Watermarked LEFT OUTER stream-stream join.
 # Determinism calibration, the slicing-invariance probe, and the STRICT
 # boundary pin live in tests/test_streaming.py.
 #
@@ -475,10 +470,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stream-static broadcast dimension join — REGISTERED r13 exactly as the
-# r12 parking comment planned (oracle, multi-batch equality test, and
-# stateless-plan pin were already in place when parked; never-adjudicated
-# streaming entry ⇒ leads the window TAIL per standing policy).
+# Stream-static broadcast dimension join (oracle, multi-batch equality
+# test and stateless-plan pin in tests/test_streaming.py).
 #
 # Why this is the right next streaming surface (r11 verdict Next #8
 # named the stream-side broadcast-dim join explicitly): enrichment of a
@@ -518,8 +511,7 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful sessionization — REGISTERED r13 exactly as the r12
-# parking comment planned (streaming ⇒ window TAIL per standing policy).
+# Custom stateful sessionization.
 #
 # The flatMapGroupsWithState-shaped session rewrite the r11 verdict's
 # Next #8 named: the built-in session_window aggregation can only apply
@@ -576,11 +568,7 @@ def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming time-weighted average — REGISTERED r14 exactly as parked
-# (streaming => window TAIL per standing policy; r14's budget is
-# gapfill + batch TWA + this twin — 3, at the <=2-3 growth cap, and the
-# batch/streaming pair registering the SAME round means the driver
-# adjudicates both sides of the shared oracle together).
+# Streaming time-weighted average.
 #
 # The streaming form of queries/events.evt_time_weighted_avg, and the
 # strongest exactness story in the stateful family: state per user is

@@ -2957,12 +2957,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-trained BPE tokenizer — REGISTERED r15 (parked through r13/r14
-# while those rounds' registration budgets held earlier candidates, per
-# the <=2-3-new-queries-per-round rotation arithmetic; oracle, tests,
-# and scale rows were staged at parking time and the registration is
-# the planned one-decorator change). Leads the r15 window with
-# data_zorder_layout.
+# Corpus-trained BPE tokenizer.
 #
 # THE canonical training-data prep step the text family still lacked:
 # byte-pair encoding TRAINED ON THE CORPUS (Sennrich et al. 2016), not a
@@ -3104,8 +3099,7 @@ def text_bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train ``_BPE_MERGES`` byte-pair merges on the corpus and encode it:
     per-doc word and subword-token counts under the learned vocabulary —
     see the block comment above for the wrapper-string merge semantics
-    and the unrolled-CTE oracle design. Registered r15 (parked r14 with
-    oracle/tests/scale rows staged, per the one-round parking policy)."""
+    and the unrolled-CTE oracle design."""
     words = _bpe_words(spark, sf_dir)
     # (r16 note: reducing to per-(doc, word) counts first — one
     # tokenization pass + a cached distinct relation — was tried and

@@ -886,13 +886,8 @@ def vec_pca_power_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SemDeDup — cluster-then-prune semantic dedup.
 #
-# Landed r10 undecorated (the r10 adjudication window was committed before
-# it, and the staleness arithmetic capped r10 registry growth at the two
-# queries that landed pre-window); REGISTERED r11 before that round's
-# window commit, leading the window as never-adjudicated, exactly per the
-# plan written here in r10. Oracle parity and behavior tests in
-# tests/test_similarity.py; bench floor + scale rows recorded at birth
-# (scripts/scaleup_r11cand.py, PERF.md).
+# Oracle parity and behavior tests in tests/test_similarity.py; scale
+# rows in PERF.md (scripts/scaleup.py).
 # ---------------------------------------------------------------------------
 
 _SEMDEDUP_EPS = 0.4  # where the fixture has pairs at all (max cos ~ 0.513)
@@ -1024,10 +1019,10 @@ def _semdedup_pipeline(
 ) -> DataFrame:
     """The SemDeDup pipeline over an explicit embedding relation with a
     parameterized K — the registered query pins K=16 (what the oracle
-    unrolls); scripts/scaleup_r11cand.py sweeps K upward on a replicated
-    corpus to measure the paper's own scaling lever (K grows with the
-    corpus, so sum(|cell|^2) — the pair-join cost — falls as ~1/K for a
-    fixed corpus).
+    unrolls); scripts/scaleup_semdedup_sharded.py sets K (CBS_SEM_K) on
+    a replicated corpus to measure the paper's own scaling lever (K
+    grows with the corpus, so sum(|cell|^2) — the pair-join cost — falls
+    as ~1/K for a fixed corpus).
 
     ``assign_shards`` selects the LARGE-K production assignment (r11
     verdict Next #7): the broadcast argmax is O(N*K) and overtook the

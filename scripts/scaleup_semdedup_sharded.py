@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from clinical_bi_spark import caching
 from clinical_bi_spark.queries.vectorops import _semdedup_pipeline
 from clinical_bi_spark.session import get_spark, warm
-from scripts.scaleup_r7ops import _replicated
+from scripts.scaleup import replicate
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -53,11 +53,7 @@ def main() -> None:
 
     emb_base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     n_base = emb_base.count()
-    emb = (
-        _replicated(emb_base, mult, {"vec_id": n_base})
-        .repartition(par)
-        .persist()
-    )
+    emb = replicate(emb_base, mult).repartition(par).persist()
     emb.count()
     floor = n_base * (mult - 1)
 

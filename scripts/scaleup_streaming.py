@@ -2,7 +2,7 @@
 same plans, replicated data, warmed session) — the one family the r5
 audit flagged as having no ×10/×50 table.
 
-Replication follows scaleup_events.py (user_id/event_id shifted per copy,
+Replication follows scaleup.py (user_id/event_id shifted per copy,
 ts identical → more users, denser traffic, same 30-day span), but the
 input must exist ON DISK: FileStreamSource reads files, so each multiple
 is materialized once to /tmp as SIX chronological parquet files (sliced

@@ -1,14 +1,8 @@
-"""DSIR importance-resampling selection (r11 registration candidate:
-oracle + behavior pinned now, @query registration happens before the r11
-window commit). Also pre-runs the degenerate-corpus probe over BOTH r11
-candidates (DSIR + SemDeDup) — once registered they face
-scripts/degenerate_probe.py every round, so their crash-free contract is
-pinned at birth."""
+"""DSIR importance-resampling selection: oracle parity and behavior.
+Also runs the degenerate-corpus probe over DSIR and SemDeDup, so their
+crash-free contract holds between scripts/degenerate_probe.py runs."""
 
 from __future__ import annotations
-
-import sys
-import tempfile
 
 import pytest
 
@@ -77,14 +71,12 @@ def test_dsir_scored_covers_corpus(spark):
 
 
 @pytest.fixture(scope="module")
-def degenerate_dirs(spark):
-    sys.path.insert(0, "/root/repo/scripts")
-    from degenerate_probe import build_corpus
+def degenerate_dirs(spark, tmp_path_factory):
+    from scripts.degenerate_probe import build_corpus
 
-    base = tempfile.mkdtemp(prefix="cbs_deg_r11cand_")
     dirs = {}
     for probe, mono in (("zeros", False), ("monokey", True)):
-        d = f"{base}/{probe}"
+        d = str(tmp_path_factory.mktemp(probe))
         build_corpus(spark, d, mono)
         dirs[probe] = d
     return dirs
