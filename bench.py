@@ -4,7 +4,7 @@
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "errors": {name: "Type: message", ...},
-   "sf": <sf>, "ann_exact_arithmetic": <bool>}
+   "sf": <sf>}
 
 The benched queries are the registrations flagged ``bench=True``.
 
@@ -85,16 +85,6 @@ def time_blocks(
 
 
 def main() -> None:
-    # Bench the numpy production path of oracle-graduated ANN queries:
-    # the sequential exact-arithmetic form exists for DuckDB adjudication
-    # and costs a measured 2.2x on sim_ann_lsh (r6 regression, PERF.md
-    # round-7); the two paths are differential-pinned equal in
-    # tests/test_similarity.py, which is what licenses timing one while
-    # adjudicating the other. Set INSIDE main (r15 review): at import
-    # time it would leak into any process that merely imports bench,
-    # silently flipping the ANN dual-path default for every later test
-    # in that process.
-    os.environ.setdefault("CLINICAL_BI_EXACT_ARITH", "0")
     registry = load_all()
     bench_specs = {n: s for n, s in registry.items() if s.bench}
     spark = get_spark("clinical-bi-spark-bench")
@@ -170,12 +160,6 @@ def main() -> None:
         # query has no timing and is left out of the totals
         "errors": errors,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # Self-describing variant flag: with CLINICAL_BI_EXACT_ARITH=0
-        # (the bench default set above) the sim_ann_* timings measure the
-        # numpy batch production path; the adjudicated variants run the
-        # exact sequential-arithmetic forms, which are differential-pinned
-        # equal in tests but slower (lsh ~2.2x).
-        "ann_exact_arithmetic": os.environ["CLINICAL_BI_EXACT_ARITH"] != "0",
     }
     line = json.dumps(result)
     # r17 hardening (VERDICT r16 item: the r15 driver run lost its bench

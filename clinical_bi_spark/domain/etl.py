@@ -52,7 +52,7 @@ class AACTTables(ParquetTables):
 
 
 def conditions_calculated_values(
-    conditions: DataFrame, studies: DataFrame, *, literal_joins: bool = False
+    conditions: DataFrame, studies: DataFrame
 ) -> DataFrame:
     """Per-condition cohort statistics (init-user-db.sh:38-117).
 
@@ -64,17 +64,10 @@ def conditions_calculated_values(
     Because ``studies`` is unique on nct_id, each alias matches at most one
     row per condition row — there is no fan-out, and the five left joins
     are *exactly* equivalent to one join + conditional aggregation
-    (including enrollment_avg). The conditional-agg form is the default
-    (one shuffle instead of six); ``literal_joins=True`` keeps the
-    reference's literal plan for the equivalence test.
+    (including enrollment_avg). This is the conditional-agg form: one
+    shuffle instead of six. The literal five-join plan survives on TPC-H
+    data as a registered cohort query (queries/relational.py).
     """
-    is_onco = contains_any(
-        F.col("downcase_name"), ONCOLOGY_PATTERNS_CONDITIONS
-    ).alias("is_oncology")
-
-    if literal_joins:
-        return _conditions_ccv_literal(conditions, studies, is_onco)
-
     interventional = F.col("study_type") == "Interventional"
     branch = {
         "total": interventional,
@@ -129,73 +122,6 @@ def _completion_ratio() -> F.Column:
         )
         .otherwise(F.lit(0.0))
         .cast("float")
-    )
-
-
-def _conditions_ccv_literal(
-    conditions: DataFrame, studies: DataFrame, is_onco: F.Column
-) -> DataFrame:
-    """Literal translation of the reference's five conditional left joins
-    (init-user-db.sh:92-115) — kept for the oracle-proved equivalence test."""
-
-    def branch(alias: str, cond: F.Column) -> DataFrame:
-        return studies.filter(cond).select(
-            F.col("nct_id").alias(f"{alias}_nct_id"),
-            *( [F.col("enrollment").alias(f"{alias}_enrollment")] if alias == "done" else [] ),
-        )
-
-    interventional = F.col("study_type") == "Interventional"
-    joined = (
-        conditions.join(studies.select("nct_id", "study_first_submitted_date"), "nct_id")
-        .join(
-            branch("total", interventional),
-            F.col("nct_id") == F.col("total_nct_id"),
-            "left",
-        )
-        .join(
-            branch("completed", interventional & (F.col("overall_status") == "Completed")),
-            F.col("nct_id") == F.col("completed_nct_id"),
-            "left",
-        )
-        .join(
-            branch("terminated", interventional & (F.col("overall_status") == "Terminated")),
-            F.col("nct_id") == F.col("terminated_nct_id"),
-            "left",
-        )
-        .join(
-            branch("withdrawn", interventional & (F.col("overall_status") == "Withdrawn")),
-            F.col("nct_id") == F.col("withdrawn_nct_id"),
-            "left",
-        )
-        .join(
-            branch(
-                "done",
-                interventional
-                & F.col("overall_status").isin("Completed", "Terminated", "Withdrawn")
-                & (F.col("enrollment_type") != "Anticipated"),
-            ),
-            F.col("nct_id") == F.col("done_nct_id"),
-            "left",
-        )
-    )
-    agg = joined.groupBy("downcase_name").agg(
-        F.countDistinct("total_nct_id").cast("int").alias("total_interventional_studies"),
-        F.countDistinct("completed_nct_id").cast("int").alias("completed_interventional_studies"),
-        F.countDistinct("terminated_nct_id").cast("int").alias("terminated_interventional_studies"),
-        F.countDistinct("withdrawn_nct_id").cast("int").alias("withdrawn_interventional_studies"),
-        F.avg("done_enrollment").cast("float").alias("enrollment_avg"),
-        F.min("study_first_submitted_date").alias("first_seen_date"),
-    )
-    return agg.select(
-        "downcase_name",
-        contains_any(F.col("downcase_name"), ONCOLOGY_PATTERNS_CONDITIONS).alias("is_oncology"),
-        "total_interventional_studies",
-        "completed_interventional_studies",
-        "terminated_interventional_studies",
-        "withdrawn_interventional_studies",
-        _completion_ratio().alias("intervention_completion_ratio"),
-        "enrollment_avg",
-        "first_seen_date",
     )
 
 

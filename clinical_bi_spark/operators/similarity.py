@@ -15,7 +15,8 @@ paths:
 Hyperplanes are generated deterministically (hash-based, no RNG state),
 so results are reproducible run-to-run — required for the driver's re-run
 semantics. Accuracy is pytest-verified as recall against brute force
-(tests/test_similarity.py); an approximate op has no SQL oracle.
+(tests/test_similarity.py); each registered ANN query also carries a
+DuckDB oracle of its deterministic pipeline.
 """
 
 from __future__ import annotations
@@ -51,32 +52,10 @@ def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def signature_col(emb: F.Column, planes: list[list[float]]) -> F.Column:
-    """Sign-LSH signature as a bigint bucket id (nbits ≤ 63) — pure
-    Catalyst form (HOF-interpreted; kept as the dependency-free reference
-    implementation; the operators below use the Arrow-vectorized
-    :func:`signature_pandas`)."""
-    arr = emb.cast("array<double>")
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_lit = F.array(*[F.lit(v) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(arr, plane_lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig.bitwiseOR(
-            F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
 def signature_pandas(emb: F.Column, planes: list[list[float]]) -> F.Column:
     """Arrow-vectorized sign-LSH signature: one numpy matmul per batch
-    (batch × dim) @ (dim × nbits) → sign bits packed into a long.
-    Identical output to signature_col (same planes, same >= 0 rule)."""
+    (batch × dim) @ (dim × nbits) → sign bits packed into a long (bit i
+    set iff the dot with plane i is >= 0)."""
     plane_matrix = [list(p) for p in planes]
 
     @pandas_udf("long")
@@ -115,7 +94,6 @@ def lsh_bucket_topk(
     max_hamming: int = 2,
     dim: int = 64,
     seed: int = 42,
-    exact_arithmetic: bool = False,
 ) -> DataFrame:
     """ANN top-k via a true bucket EQUI-join: each query signature is
     expanded (multi-probe) into every signature in its Hamming ball
@@ -131,51 +109,36 @@ def lsh_bucket_topk(
     |queries| × ball-size, broadcastable until millions of queries, after
     which the same plan shuffles on the signature key).
 
-    ``exact_arithmetic=True`` computes signatures and the cosine ranking
-    with the sequential-order Catalyst forms (signature_col /
-    cosine_similarity) instead of the numpy batch forms — bit-reproducible
-    against DuckDB list arithmetic, which is what lets the registry query
-    carry an exact SQL oracle (same technique as
-    ``embedding_neardup_pairs``). Both the multi-probe expansion AND the
-    deterministic (cos DESC, neighbor_id) tie-break are then exactly
-    recomputable in SQL: given the signatures, probing the Hamming ball
-    equals the naive ``bit_count(xor) <= h`` pair predicate, so the
-    all-pairs oracle also proves the expansion loses no candidate.
-    A differential test pins the fast path ≡ exact path on the fixture.
+    Signatures and cosines are numpy batch arithmetic. Given the
+    signatures, probing the Hamming ball equals the naive
+    ``bit_count(xor) <= h`` pair predicate, so the registry query's
+    all-pairs SQL oracle also proves the expansion loses no candidate.
     """
     planes = _hyperplanes(dim, nbits, seed)
-
-    def _sig(col: F.Column) -> F.Column:
-        if exact_arithmetic:
-            return signature_col(col, planes)
-        return signature_pandas(col, planes)
-
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(emb_col).alias("c_emb"),
-        _sig(F.col(emb_col)).alias("c_sig"),
+        signature_pandas(F.col(emb_col), planes).alias("c_sig"),
     )
     masks = _hamming_ball_masks(nbits, max_hamming)
     # expand after computing the signature once (avoid re-running the UDF
-    # per mask): explode a literal mask array XORed against the signature
+    # per mask): explode the literal mask array, then XOR each mask into
+    # the signature as a plain projection (no interpreted lambda)
     q_sig = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(emb_col).alias("q_emb"),
-        _sig(F.col(emb_col)).alias("sig"),
+        signature_pandas(F.col(emb_col), planes).alias("sig"),
     )
     mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
     probes = q_sig.select(
-        "q_id",
-        "q_emb",
-        F.explode(F.transform(mask_arr, lambda m: F.col("sig").bitwiseXOR(m))).alias(
-            "c_sig"
-        ),
+        "q_id", "q_emb", "sig", F.explode(mask_arr).alias("mask")
+    ).select(
+        "q_id", "q_emb", F.col("sig").bitwiseXOR(F.col("mask")).alias("c_sig")
     )
     cand = c.join(F.broadcast(probes), "c_sig").filter(
         F.col("neighbor_id") != F.col("q_id")
     )
-    cos_fn = cosine_similarity if exact_arithmetic else cosine_pandas
-    cos = F.round(cos_fn(F.col("c_emb"), F.col("q_emb")), 6)
+    cos = F.round(cosine_pandas(F.col("c_emb"), F.col("q_emb")), 6)
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
         cand.select("q_id", "neighbor_id", cos.alias("cos_sim"))
@@ -476,7 +439,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     kmeans_centroids: bool = True,
-    exact_arithmetic: bool = False,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN: k-means coarse quantizer (default; seeded Spark ML
@@ -484,20 +446,15 @@ def ivf_topk(
     ``kmeans_centroids=False``, the dependency-free fallback of taking
     the ``n_cells`` lowest-id corpus vectors. Every corpus row joins its
     nearest cell; a query probes its ``nprobe`` nearest cells only.
+    Assignment, probe and verify cosines are numpy batch arithmetic.
 
-    ``exact_arithmetic=True`` scores cell assignment, probes, and the
-    candidate verify with the sequential-order Catalyst cosine
-    (functions.vectors.cosine_similarity) instead of the numpy batch
-    form — bit-reproducible against DuckDB. Combined with the
-    deterministic fallback centroids this makes the ENTIRE IVF pipeline
-    (assignment, multi-probe, candidate equi-join, ranked top-k) exactly
-    SQL-oracle-checkable; only the learned k-means quantizer itself
-    stays outside the oracle's reach (the same boundary the sign-LSH
-    graduation drew in r6). Passing ``centroids`` explicitly (e.g. the
-    deterministic :func:`det_kmeans_centroids` fit) overrides both
-    built-in quantizers — with that fit the oracle covers the quantizer
-    TRAINING too, which is how the registered ``sim_ann_ivf`` carries a
-    fully exact oracle.
+    With the deterministic fallback centroids the whole pipeline
+    (assignment, multi-probe, candidate equi-join, ranked top-k) has a
+    SQL oracle; only the learned k-means quantizer stays outside it.
+    Passing ``centroids`` explicitly (e.g. the deterministic
+    :func:`det_kmeans_centroids` fit) overrides both built-in quantizers —
+    with that fit the oracle covers the quantizer TRAINING too, which is
+    how the registered ``sim_ann_ivf`` carries a full oracle.
     """
     if centroids is not None:
         pass
@@ -510,8 +467,7 @@ def ivf_topk(
                 F.col(id_col).alias("cell_id"), F.col(emb_col).alias("cell_emb")
             )
         )
-    cos_fn = cosine_similarity if exact_arithmetic else cosine_pandas
-    cos_cell = cos_fn(F.col(emb_col), F.col("cell_emb"))
+    cos_cell = cosine_pandas(F.col(emb_col), F.col("cell_emb"))
 
     # assign each corpus row to its best cell (broadcast centroids, rank 1)
     assigned = (
@@ -556,7 +512,7 @@ def ivf_topk(
     cand = assigned.join(F.broadcast(probes), "cell_id").filter(
         F.col("neighbor_id") != F.col("q_id")
     )
-    cos = F.round(cos_fn(F.col("c_emb"), F.col("q_emb")), 6)
+    cos = F.round(cosine_pandas(F.col("c_emb"), F.col("q_emb")), 6)
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
         cand.select("q_id", "neighbor_id", cos.alias("cos_sim"))
@@ -574,19 +530,11 @@ def embedding_neardup_pairs(
     min_cosine: float = 0.8,
     dim: int = 64,
     seed: int = 42,
-    exact_arithmetic: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs at corpus scale — the unblocked LSH
     path for the oracle-checked ``dedup_embedding_cosine`` (which bounds
-    its pair space with an attribute block instead).
-
-    ``exact_arithmetic=True`` computes signatures and the cosine verify
-    with the sequential-order Catalyst forms (signature_col /
-    cosine_similarity) instead of the numpy batch forms — bit-reproducible
-    against DuckDB, which is what lets the registry query carry an exact
-    SQL oracle. The two arithmetics can only disagree where a dot product
-    sits within float rounding of zero (sign flip) — tests assert the
-    paths produce identical output on the fixtures.
+    its pair space with an attribute block instead). Signatures and the
+    cosine verify are numpy batch arithmetic.
 
     Pigeonhole bucketing (same scheme as SimHash's
     ``simhash_blocked_pairs``): the ``nbits`` sign-LSH signature splits
@@ -603,17 +551,12 @@ def embedding_neardup_pairs(
     sizes (and the candidate join) bounded on real, clustered corpora.
     """
     planes = _hyperplanes(dim, nbits, seed)
-    sig_expr = (
-        signature_col(F.col(emb_col), planes)
-        if exact_arithmetic
-        else signature_pandas(F.col(emb_col), planes)
-    )
     # one UDF pass; segments, both join sides, and verify reuse it
     sig = persist_tracked(
         df.select(
             F.col(id_col).alias("id"),
             F.col(emb_col).alias("emb"),
-            sig_expr.alias("sig"),
+            signature_pandas(F.col(emb_col), planes).alias("sig"),
         )
     )
     b = max_hamming + 1
@@ -645,8 +588,7 @@ def embedding_neardup_pairs(
     )
     ea = sig.select(F.col("id").alias("id_a"), F.col("emb").alias("emb_a"))
     eb = sig.select(F.col("id").alias("id_b"), F.col("emb").alias("emb_b"))
-    cos_fn = cosine_similarity if exact_arithmetic else cosine_pandas
-    cos = F.round(cos_fn(F.col("emb_a"), F.col("emb_b")), 6)
+    cos = F.round(cosine_pandas(F.col("emb_a"), F.col("emb_b")), 6)
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
@@ -735,7 +677,6 @@ def pq_topk(
     ksub: int = 16,
     dim: int = 64,
     rerank: int = 50,
-    exact_arithmetic: bool = False,
 ) -> DataFrame:
     """ANN top-k via product quantization + exact re-rank — the third leg
     of the standard ANN trio (sign-LSH buckets, IVF cells, PQ codes).
@@ -780,45 +721,6 @@ def pq_topk(
             recon[:, j * dsub : (j + 1) * dsub] = cents[C[:, j]]
         return pd.Series(((Q - recon) ** 2).sum(1))
 
-    if exact_arithmetic:
-        # Catalyst SEQUENTIAL reconstruction-L2 — the adjudication form
-        # (r11 graduation, the sim_ann_lsh/ivf dual-path contract): the
-        # codebook is a literal m x ksub x dsub nested array, recon is a
-        # concat of element_at lookups by code, and the fold over the 64
-        # diffs is the left-to-right aggregate a DuckDB list_reduce
-        # replays exactly. The numpy form computes the same squares but
-        # reduces pairwise (8-lane tree) — ulp-level different, rank-
-        # identical (differential-pinned in tests/test_similarity.py).
-        dsub_ = dim // m
-        books_lit = F.array(
-            *[
-                F.array(
-                    *[
-                        F.array(*[F.lit(float(v)) for v in cent])
-                        for cent in book
-                    ]
-                )
-                for book in flat_books
-            ]
-        )
-        recon = F.concat(
-            *[
-                F.element_at(
-                    F.element_at(books_lit, j + 1),
-                    F.col("codes")[j] + F.lit(1),
-                )
-                for j in range(m)
-            ]
-        )
-        diffs = F.zip_with(
-            F.col("q_emb").cast("array<double>"),
-            recon,
-            lambda x, y: (x - y) * (x - y),
-        )
-        adc_expr = F.aggregate(diffs, F.lit(0.0), lambda a, v: a + v)
-    else:
-        adc_expr = _adc(F.col("codes"), F.col("q_emb"))
-
     w_adc = Window.partitionBy("q_id").orderBy(F.col("adc"), F.col("neighbor_id"))
     survivors = (
         codes.crossJoin(F.broadcast(q))
@@ -827,7 +729,7 @@ def pq_topk(
             "q_id",
             "q_emb",
             F.col("id").alias("neighbor_id"),
-            adc_expr.alias("adc"),
+            _adc(F.col("codes"), F.col("q_emb")).alias("adc"),
         )
         .withColumn("adc_rnk", F.row_number().over(w_adc))
         .filter(F.col("adc_rnk") <= rerank)
@@ -839,8 +741,7 @@ def pq_topk(
         F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb")
     )
     cand = emb_tbl.join(F.broadcast(survivors), "neighbor_id")
-    cos_fn = cosine_similarity if exact_arithmetic else cosine_pandas
-    cos = F.round(cos_fn(F.col("c_emb"), F.col("q_emb")), 6)
+    cos = F.round(cosine_pandas(F.col("c_emb"), F.col("q_emb")), 6)
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
         cand.select("q_id", "neighbor_id", cos.alias("cos_sim"))

@@ -1761,14 +1761,11 @@ def jaccard_token_audit(toks: DataFrame, hash_fn=None) -> tuple[int, int]:
 def _jaccard_prefix_candidates(
     toks: DataFrame,
     tau: float,
-    positional: bool = True,
     dfreq: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate (doc_a, doc_b) pairs for the prefix-filtered Jaccard
-    join: df-ordered prefix equi-join + length-ratio filter, plus (when
-    ``positional``) the PPJoin positional filter. Split out so the scale
-    harness can A/B the positional filter's candidate cut; the query
-    always runs with it on. ``dfreq``: optional precomputed ``(w, df)``
+    join: df-ordered prefix equi-join + length-ratio filter + the PPJoin
+    positional filter. ``dfreq``: optional precomputed ``(w, df)``
     document-frequency relation (cache-backed — see
     :func:`audited_token_relation`) so the df-ordering needn't
     re-aggregate the full token relation."""
@@ -1815,8 +1812,6 @@ def _jaccard_prefix_candidates(
         & (F.col("sb").cast("double") >= tau * F.col("sa"))
         & (F.col("sa").cast("double") >= tau * F.col("sb"))
     )
-    if not positional:
-        return matched.select("doc_a", "doc_b").distinct()
     # PPJoin positional filter (Xiao et al. 2008, public literature),
     # tight set-oriented form. Both token lists share ONE global ordering
     # (df asc, token asc), so matched prefix tokens have monotonically
@@ -2019,7 +2014,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the build side sits above a shuffle whose size it can observe — a
     # cache-backed dfreq planned as SortMergeJoin (+1 fact exchange,
     # measured) because an unmaterialized InMemoryRelation has no stats
-    cand = _jaccard_prefix_candidates(toks, tau, positional=True)
+    cand = _jaccard_prefix_candidates(toks, tau)
     ver = _jaccard_verify_bitmask(
         spark, toks, cand, tau, _JACCARD_BITMASK_VOCAB_CAP, dfreq=dfreq
     )

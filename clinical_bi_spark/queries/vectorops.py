@@ -1,20 +1,22 @@
 """Similarity-search queries over the embeddings table (array<float>, 64-d).
 
 Brute-force cosine top-k is the exact baseline (oracle-checked against
-DuckDB's list_cosine_similarity on DOUBLE[]); the LSH-bucketed ANN variant
-in operators/similarity.py is the 100 TB path and is pytest-verified
-against this baseline (recall ≥ threshold), since an approximate result has
-no SQL oracle by construction.
+DuckDB's list_cosine_similarity on DOUBLE[]); the ANN variants in
+operators/similarity.py are the 100 TB path. Each carries a DuckDB oracle
+of its deterministic pipeline, and its recall against this baseline is
+pinned in tests/test_similarity.py.
 
 Scale notes: the query side is broadcast (k query vectors), the corpus side
 streams — no shuffle; cost is a single pass over the corpus per batch of
-queries. All arithmetic is double-precision sequential (functions/vectors.py)
-so Spark and DuckDB agree bit-for-bit after rounding.
+queries. The brute-force and blocked-pair queries use the sequential
+Catalyst cosine (functions/vectors.py), so Spark and DuckDB agree
+bit-for-bit after rounding. The ANN queries use numpy batch arithmetic
+instead, which reduces dot products in a different order than DuckDB's
+sequential fold: their oracle parity is measured at every scale factor
+the tests have, not exact by construction.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,36 +135,19 @@ def vec_norm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _exact_arith_enabled() -> bool:
-    """Whether oracle-graduated ANN queries run their SEQUENTIAL
-    exact-arithmetic signature/cosine path (bit-identical to the DuckDB
-    oracle — the adjudication form) or the vectorized numpy fast path
-    (the production form, differential-pinned equal to the exact path in
-    tests/test_similarity.py). The exact path costs a measured 2.2x on
-    sim_ann_lsh (BENCH_r06 2.241s vs r5's 1.008s — PERF.md round-7
-    entry), so bench.py sets CLINICAL_BI_EXACT_ARITH=0 to measure the
-    path production callers get; adjudication/correctness runs default
-    on. Consumers: sim_ann_lsh (r7), sim_ann_ivf's probe/rank cosine
-    (r8 — its deterministic FIT stays exact unconditionally), and
-    sim_ann_pq's ADC/rerank (r11 graduation). The old
-    CLINICAL_BI_ANN_RECALL recall-annotation twin died with the r11 PQ
-    graduation — every ANN leg is exactly oracled now, so the
-    annotation helpers were removed outright. Parity is additionally pinned AT THE BENCH SF
-    (tests/test_similarity.py::test_ann_lsh_exact_arith_parity_at_bench_sf,
-    r7 ADVICE item)."""
-    return os.environ.get("CLINICAL_BI_EXACT_ARITH", "1") != "0"
-
-
 def _ann_lsh_oracle(
     nbits: int = 8, max_hamming: int = 3, k: int = 5,
     dim: int = 64, seed: int = 42,
 ) -> str:
-    """Exact DuckDB twin of the multi-probe sign-LSH top-k pipeline.
+    """DuckDB twin of the multi-probe sign-LSH top-k pipeline.
 
-    Same technique that graduated ``dedup_embedding_lsh`` in r5:
-    hyperplanes are deterministic dyadic rationals embedded as
-    repr-roundtrip literals; signatures are sequential-order list
-    arithmetic (bit-identical to Catalyst's signature_col). Given the
+    Same technique as ``dedup_embedding_lsh``: hyperplanes are
+    deterministic dyadic rationals embedded as repr-roundtrip literals;
+    signatures are sequential-order list arithmetic. The Spark side
+    computes them with a numpy matmul, which sums the 64 products in a
+    different order, so a dot within rounding of zero could flip a sign
+    bit on some corpus; parity is pinned at every test scale factor
+    (tests/test_queries_oracle.py, tests/test_similarity.py). Given the
     signatures, the operator's Hamming-BALL probe expansion + bucket
     equi-join admits candidate c for query q IFF
     ``bit_count(xor(sig_q, sig_c)) <= max_hamming`` — so the oracle is
@@ -223,14 +208,9 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the multi-probe expansion loses no candidate (the r5
     dedup_embedding_lsh technique). The former rows-only self-evidence
     (recall@k annotation) is superseded by the oracle; recall floors vs
-    brute force stay pinned in tests/test_similarity.py, and the
-    numpy fast path is differential-pinned to this exact path.
-
-    Adjudication runs the exact-arithmetic path (default); bench.py
-    flips CLINICAL_BI_EXACT_ARITH=0 to measure the numpy production
-    path instead — exactness costs a measured 2.2x (PERF.md round-7),
-    and the differential pin is what licenses timing one while
-    adjudicating the other."""
+    brute force stay pinned in tests/test_similarity.py. Signatures and
+    cosines are numpy batch arithmetic — the one path the oracle checks
+    and bench.py times."""
     from clinical_bi_spark.operators.similarity import lsh_bucket_topk
 
     t = load_tables(tune(spark), sf_dir)
@@ -240,7 +220,6 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pruning most of the corpus per query.
     return lsh_bucket_topk(
         emb, emb.filter(F.col("vec_id") < 8), k=5, nbits=8, max_hamming=3,
-        exact_arithmetic=_exact_arith_enabled(),
     )
 
 
@@ -248,7 +227,7 @@ def _ivf_det_oracle(
     n_cells: int = 16, nprobe: int = 4, k: int = 5,
     dim: int = 64, n_train: int = 512, iters: int = 3,
 ) -> str:
-    """Exact DuckDB twin of the FULL deterministic-k-means IVF pipeline —
+    """DuckDB twin of the FULL deterministic-k-means IVF pipeline —
     quantizer training included (the r7 graduation the r6
     ``sim_ann_ivf_exact`` variant prepared: that query proved the
     assignment→probe→rank plumbing exact with a fixed quantizer; this
@@ -260,7 +239,11 @@ def _ivf_det_oracle(
     zeros-prepended sorted list — the same float-addition order as
     Catalyst's ``aggregate``). No normalization: cosine is
     scale-invariant in the centroid, so the raw sum IS the spherical
-    centroid and the update has no division to diverge."""
+    centroid and the update has no division to diverge. The fit is
+    bit-exact; the Spark side's assignment, probe and verify cosines are
+    numpy batch arithmetic, whose parity with list_cosine_similarity is
+    measured at every test scale factor rather than exact by
+    construction."""
     zeros = f"list_transform(range(1, {dim + 1}), x -> 0.0::DOUBLE)"
     parts = [f"""
 WITH e AS (
@@ -338,13 +321,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     is learned-opaque anymore. The Spark-ML seeded k-means codebook
     remains available (``ivf_topk(kmeans_centroids=True)``) as the
     learned alternative — recall floors for both quantizers are pinned
-    in tests/test_similarity.py. The probe/rank cosine path follows the
-    CLINICAL_BI_EXACT_ARITH dual-path contract (r8, same as
-    sim_ann_lsh): driver adjudication runs the sequential
-    exact-arithmetic form (default ON), bench.py times the numpy
-    production form — differential-pinned row-for-row in
-    tests/test_similarity.py. The deterministic FIT is unconditional:
-    its determinism is the oracle's foundation either way."""
+    in tests/test_similarity.py. The assignment, probe and rank cosines
+    are numpy batch arithmetic; the deterministic FIT stays sequential,
+    because its determinism is the oracle's foundation."""
     from clinical_bi_spark.operators.similarity import (
         det_kmeans_rows,
         ivf_topk,
@@ -371,7 +350,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=16,
         nprobe=4,
         centroids=cent,
-        exact_arithmetic=_exact_arith_enabled(),
     )
 
 
@@ -379,15 +357,18 @@ def _embedding_lsh_oracle(
     nbits: int = 32, max_hamming: int = 10, min_cosine: float = 0.4,
     dim: int = 64, seed: int = 42,
 ) -> str:
-    """Exact DuckDB twin of the sign-LSH near-dup pipeline. The hyperplanes
+    """DuckDB twin of the sign-LSH near-dup pipeline. The hyperplanes
     are deterministic dyadic rationals (LCG sums of k/2^31 terms — exactly
-    representable in float64), embedded below as repr-roundtrip literals;
-    the Spark query computes signatures and the cosine verify with the
-    SEQUENTIAL-order Catalyst forms, which match DuckDB's list arithmetic
-    bit-for-bit (the property sim_bruteforce_topk's oracle already pins).
-    The oracle is the naive all-pairs form over exact signatures — the
-    pigeonhole segment join provably loses no pair within the Hamming
-    radius, so the driver check also proves the bucketing exact."""
+    representable in float64), embedded below as repr-roundtrip literals.
+    The Spark query computes signatures and the cosine verify with numpy
+    batch arithmetic, which reduces each dot in a different order than
+    DuckDB's sequential list arithmetic: a dot within rounding of zero or
+    a cosine on a rounding boundary could differ on some corpus, so
+    parity is measured at every test scale factor, not exact by
+    construction. The oracle is the naive all-pairs form over the
+    signatures — the pigeonhole segment join provably loses no pair
+    within the Hamming radius, so the driver check also proves the
+    bucketing exact."""
     from clinical_bi_spark.operators.similarity import _hyperplanes
 
     planes = _hyperplanes(dim, nbits, seed)
@@ -427,18 +408,16 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     for dedup_embedding_cosine (which blocks by label instead). The
     candidate generation is RECALL-approximate in general, but within the
     Hamming radius the pigeonhole segment join is exact, so the output
-    equals the all-pairs form — and with sequential-arithmetic signatures
-    (exact_arithmetic=True) the DuckDB oracle reproduces it value-exactly.
+    equals the all-pairs form the DuckDB oracle computes.
     tests/test_similarity.py additionally verifies planted-duplicate
-    recall and that the numpy production path emits identical output.
-    The 0.4 threshold sits where the fixture has pairs at all (max
+    recall. The 0.4 threshold sits where the fixture has pairs at all (max
     pairwise cosine ≈ 0.51 on near-random vectors)."""
     from clinical_bi_spark.operators.similarity import embedding_neardup_pairs
 
     t = load_tables(tune(spark), sf_dir)
     return embedding_neardup_pairs(
         t.embeddings, id_col="vec_id", emb_col="embedding",
-        nbits=32, max_hamming=10, min_cosine=0.4, exact_arithmetic=True,
+        nbits=32, max_hamming=10, min_cosine=0.4,
     )
 
 
@@ -451,7 +430,7 @@ def _pq_det_oracle(
     dsub: int = 8,
     iters: int = 8,
 ) -> str:
-    """Exact DuckDB twin of the FULL PQ pipeline — numpy training
+    """DuckDB twin of the FULL PQ pipeline — numpy training
     included (r11 graduation; the third ANN leg joins lsh/ivf as fully
     adjudicable). Every float operation the Spark side performs has a
     pinned order, replicated here term by term:
@@ -465,10 +444,13 @@ def _pq_det_oracle(
       written ``x*x`` (POWER(x,2) routes through libm pow and diverges);
     * the strided codebook init is integer arithmetic
       ``(c * max(n//ksub, 1)) % n`` over the id-ordered sample;
-    * the ADC distance and rerank cosine in the ADJUDICATED Spark path
-      (exact_arithmetic=True) are sequential Catalyst folds, replayed by
-      ``list_reduce`` / ``list_cosine_similarity`` (the device the
-      sim_bruteforce_topk oracle already pins bit-for-bit).
+    * the ADC distance and rerank cosine are NOT replayed term by term:
+      the Spark side computes them with numpy batch arithmetic (the
+      64-term ADC sum reduces pairwise), while the oracle folds them
+      sequentially with ``list_reduce`` / ``list_cosine_similarity``.
+      The raw doubles may differ in ulps; the output rows (neighbors,
+      ranks, rounded cosines) are pinned equal at every test scale
+      factor.
 
     All-pairs ADC here is the ORACLE's deliberate naivety (8 queries x
     corpus at sf0.01); the Spark side scans the m-int code table.
@@ -601,10 +583,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank end to end. The recall@k annotation is superseded by the
     oracle (the lsh/ivf move); the floor now lives in
     tests/test_similarity.py against the brute-force registry query.
-    ADC + rerank follow the CLINICAL_BI_EXACT_ARITH dual-path contract:
-    driver adjudication runs sequential Catalyst folds (default ON),
-    bench.py times the numpy batch form — differential-pinned
-    rank-identical in tests/test_similarity.py. At scale only the m-int
+    ADC + rerank are numpy batch arithmetic. At scale only the m-int
     code table is scanned per query batch; raw vectors are read for
     rerank candidates only."""
     from clinical_bi_spark.operators.similarity import pq_topk
@@ -615,7 +594,6 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 8),
         k=5,
-        exact_arithmetic=_exact_arith_enabled(),
     )
 
 
@@ -691,16 +669,14 @@ def f_array_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF ANN with a deterministic quantizer — full exact oracle.
+# IVF ANN with a deterministic quantizer — full oracle.
 # ---------------------------------------------------------------------------
 
-# The k-means IVF (sim_ann_ivf) is rows-only because the quantizer is
-# learned; THIS variant swaps in the deterministic lowest-id centroid
-# fallback + sequential-arithmetic cosine, making the entire IVF
-# pipeline — cell assignment, multi-probe selection, candidate
-# equi-join, ranked top-k — exactly SQL-checkable. Same boundary the
-# sign-LSH graduation drew: the mechanics get an exact oracle, only the
-# learned codebook stays outside it.
+# The lowest-id centroid fallback makes the whole IVF pipeline — cell
+# assignment, multi-probe selection, candidate equi-join, ranked top-k —
+# SQL-checkable without a fit. The Spark side scores cosines with numpy
+# batch arithmetic, the oracle with DuckDB's sequential fold: parity is
+# measured at every test scale factor, not exact by construction.
 _IVF_EXACT_ORACLE = """
 WITH cent AS (
   SELECT vec_id AS cell_id, embedding AS cell_emb
@@ -742,12 +718,11 @@ SELECT q_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank FROM (
 
 @query("sim_ann_ivf_exact", oracle=_IVF_EXACT_ORACLE)
 def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with the deterministic lowest-id quantizer and
-    sequential-arithmetic cosine — the exactly-adjudicable form of the
-    IVF mechanics (see _IVF_EXACT_ORACLE). The production path swaps the
-    quantizer for the seeded k-means codebook (sim_ann_ivf) with
-    identical assignment/probe/join/rank plumbing — THIS query is what
-    proves that plumbing correct."""
+    """IVF ANN with the deterministic lowest-id quantizer — the
+    oracle-adjudicable form of the IVF mechanics (see _IVF_EXACT_ORACLE).
+    The production path swaps the quantizer for the seeded k-means
+    codebook (sim_ann_ivf) with identical assignment/probe/join/rank
+    plumbing — THIS query is what proves that plumbing correct."""
     from clinical_bi_spark.operators.similarity import ivf_topk
 
     t = load_tables(tune(spark), sf_dir)
@@ -759,7 +734,6 @@ def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=16,
         nprobe=4,
         kmeans_centroids=False,
-        exact_arithmetic=True,
     )
 
 

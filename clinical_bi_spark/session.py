@@ -175,10 +175,7 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         # inflation under interleaved repeats, PERF.md round-16). 4096
         # keeps every benched query's stages resident; memory cost is
         # generated bytecode only, negligible against the driver heap.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("CBS_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # STATIC conf, so it lives here and not in RUNTIME_CONF (tune()
         # would swallow the CANNOT_MODIFY_STATIC_CONFIG error): PySpark
         # wraps every pyspark.sql.functions call to capture its Python

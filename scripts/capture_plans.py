@@ -30,7 +30,6 @@ def main() -> int:
     ap.add_argument("--suffix", default="before")
     ns = ap.parse_args()
 
-    os.environ.setdefault("CLINICAL_BI_EXACT_ARITH", "0")  # bench recipe
     from clinical_bi_spark import caching
     from clinical_bi_spark.queries import load_all
     from clinical_bi_spark.session import get_spark

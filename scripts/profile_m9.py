@@ -29,7 +29,6 @@ def main() -> int:
     ap.add_argument("--repeats", type=int, default=2)
     ns = ap.parse_args()
 
-    os.environ.setdefault("CLINICAL_BI_EXACT_ARITH", "0")
     from pyspark.ml.classification import MultilayerPerceptronClassifier
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.feature import OneHotEncoder, VectorAssembler

@@ -44,7 +44,6 @@ repeats = int(sys.argv[2])
 from clinical_bi_spark import caching
 from clinical_bi_spark.queries import load_all
 from clinical_bi_spark.session import get_spark, warm
-os.environ.setdefault("CLINICAL_BI_EXACT_ARITH", "0")
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 reg = load_all()
 spark = get_spark("regression-ab")

@@ -26,14 +26,20 @@ def spark():
     yield session
 
 
-@pytest.fixture(scope="session")
-def oracle_con():
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_ORACLE}/{name}.parquet')"
+            f"read_parquet('{sf_dir}/{name}.parquet')"
         )
+    return con
+
+
+@pytest.fixture(scope="session")
+def oracle_con():
+    con = duckdb_views(SF_ORACLE)
     yield con
     con.close()
 

@@ -378,7 +378,7 @@ def test_jaccard_bitmask_multiword_masks_and_vocab_gate(spark):
     assert (
         toks.select(F.explode("words")).distinct().count() > 64
     ), "fixture must exceed one mask word"
-    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU, positional=True)
+    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU)
     ver = _jaccard_verify_bitmask(spark, toks, cand, _JACCARD_TAU)
     assert ver is not None
 
@@ -454,7 +454,7 @@ def test_jaccard_bitmask_word_boundaries(spark, vocab_size):
     docs.append((len(docs), list(vocab)))
     toks = spark.createDataFrame(docs, "doc_id long, words array<string>")
     assert toks.select(F.explode("words")).distinct().count() == vocab_size
-    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU, positional=True)
+    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU)
     ver = _jaccard_verify_bitmask(spark, toks, cand, _JACCARD_TAU)
     assert ver is not None
     wa = toks.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wsa"))
@@ -518,7 +518,7 @@ def test_jaccard_bitmask_empty_corpus(spark):
     )
 
     toks = spark.createDataFrame([], "doc_id long, words array<string>")
-    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU, positional=True)
+    cand = _jaccard_prefix_candidates(toks, _JACCARD_TAU)
     ver = _jaccard_verify_bitmask(spark, toks, cand, _JACCARD_TAU)
     assert ver is not None
     assert ver.count() == 0

@@ -250,14 +250,6 @@ def test_conditions_calculated_values(aact, aact_oracle):
     assert_matches_oracle(df, aact_oracle, "SELECT * FROM ccv", name="ccv")
 
 
-def test_ccv_literal_equivalence(aact, aact_oracle):
-    """The J3 rewrite proof: the literal five-left-joins form and the
-    conditional-agg form both hash-match the reference SQL (studies is
-    unique on nct_id ⇒ no fan-out ⇒ exact equivalence, incl. the avg)."""
-    df = conditions_calculated_values(aact.conditions, aact.studies, literal_joins=True)
-    assert_matches_oracle(df, aact_oracle, "SELECT * FROM ccv", name="ccv_literal")
-
-
 def test_enrich_calculated_values(aact, aact_oracle):
     derived = run_etl(AACTTables(spark=aact.spark, base_path=aact.base_path))
     assert_matches_oracle(

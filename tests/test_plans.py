@@ -147,15 +147,11 @@ def test_observe_metrics(spark):
     assert obs.get["rows"] == n and obs.get["null_price"] == 0
 
 
-@pytest.mark.parametrize("exact", [False, True], ids=["numpy", "exact_arith"])
-def test_lsh_ann_is_bucket_equijoin(spark, exact):
+def test_lsh_ann_is_bucket_equijoin(spark):
     """The sign-LSH ANN path must candidate via a hash EQUI-join on the
     bucket key (multi-probe expansion), never a nested-loop predicate over
     all (corpus × query) pairs — the difference between a hash lookup and
-    a full-corpus scan per query at 100 TB. Asserted on BOTH arithmetic
-    modes: the numpy fast path and the exact_arithmetic form the registry
-    query runs since its r6 oracle graduation (same join shape — only the
-    signature/cosine expressions differ)."""
+    a full-corpus scan per query at 100 TB."""
     import contextlib as _ctx
     import io as _io
 
@@ -166,7 +162,6 @@ def test_lsh_ann_is_bucket_equijoin(spark, exact):
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     ann = lsh_bucket_topk(
         emb, emb.filter(F.col("vec_id") < 8), k=5, nbits=8, max_hamming=3,
-        exact_arithmetic=exact,
     )
     buf = _io.StringIO()
     with _ctx.redirect_stdout(buf):

@@ -3,12 +3,14 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from clinical_bi_spark.operators.similarity import ivf_topk, lsh_bucket_topk
 from clinical_bi_spark.queries import load_all
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, assert_matches_oracle, duckdb_views
 
 
 @pytest.fixture(scope="module")
@@ -214,30 +216,6 @@ def test_sim_ann_pq_recall_floor(spark):
     assert mean_recall >= 0.5, f"sim_ann_pq mean recall {mean_recall}"
 
 
-def test_sim_ann_pq_exact_arith_matches_fast_path(spark):
-    """The PQ dual-path differential (the lsh/ivf contract): the numpy
-    batch ADC/rerank (bench form) and the sequential Catalyst folds (the
-    adjudication form the oracle replays) must produce identical rows —
-    same neighbors, same ranks, same rounded cosines. The raw adc
-    doubles differ in ulps (numpy reduces with the 8-lane pairwise tree,
-    Catalyst folds left-to-right); ranks may not."""
-    from pyspark.sql import functions as F
-
-    from clinical_bi_spark.operators.similarity import pq_topk
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 8)
-    fast = {
-        (r.q_id, r.neighbor_id, r.rank, r.cos_sim)
-        for r in pq_topk(emb, qs, k=5, exact_arithmetic=False).collect()
-    }
-    exact = {
-        (r.q_id, r.neighbor_id, r.rank, r.cos_sim)
-        for r in pq_topk(emb, qs, k=5, exact_arithmetic=True).collect()
-    }
-    assert fast == exact
-
-
 def test_sim_ann_ivf_recall_floor(spark):
     """sim_ann_ivf graduated from the recall@k annotation to a fully
     exact SQL oracle (r7 — deterministic Lloyd's fit), so its recall
@@ -258,14 +236,10 @@ def test_sim_ann_ivf_recall_floor(spark):
     assert mean_recall >= 0.4, f"sim_ann_ivf mean recall {mean_recall}"
 
 
-def test_sim_ann_lsh_recall_floor_and_fast_path_parity(spark):
+def test_sim_ann_lsh_recall_floor(spark):
     """sim_ann_lsh graduated from the recall@k annotation to an exact SQL
     oracle (r6), so its recall floor is asserted HERE against the
-    brute-force registry query, and the numpy fast path is pinned
-    identical to the exact-arithmetic path the oracle checks (the same
-    differential the embedding-LSH pair miner carries)."""
-    from clinical_bi_spark.operators.similarity import lsh_bucket_topk
-
+    brute-force registry query."""
     registry = load_all()
     ann = registry["sim_ann_lsh"].fn(spark, SF_ORACLE)
     assert "recall_at_k" not in ann.columns  # superseded by the oracle
@@ -280,16 +254,6 @@ def test_sim_ann_lsh_recall_floor_and_fast_path_parity(spark):
     ]
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall >= 0.55, f"sim_ann_lsh mean recall {mean_recall}"
-
-    # fast path ≡ exact path on the fixture (bit-for-bit after ROUND(6))
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    fast = lsh_bucket_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, nbits=8, max_hamming=3,
-        exact_arithmetic=False,
-    )
-    a = sorted(map(tuple, ann.collect()))
-    b = sorted(map(tuple, fast.collect()))
-    assert a == b
 
 
 # ---------------------------------------------------------------------------
@@ -370,37 +334,6 @@ def test_clustered_pq_recall(clustered):
     assert r >= 0.55, f"clustered PQ recall {r}"  # measured 0.70
 
 
-def test_embedding_lsh_exact_arithmetic_matches_fast_path(spark, embeddings):
-    """The registry query runs exact_arithmetic=True (sequential Catalyst
-    signatures + cosine — bit-reproducible vs the DuckDB oracle); the
-    production path uses numpy batch arithmetic. They can only diverge
-    where a plane dot product sits within float rounding of zero; this
-    pins that the fixture result is identical, so the adjudicated output
-    speaks for the production path too."""
-    from clinical_bi_spark.operators.similarity import embedding_neardup_pairs
-
-    kw = dict(id_col="vec_id", emb_col="embedding",
-              nbits=32, max_hamming=10, min_cosine=0.4)
-    fast = embedding_neardup_pairs(embeddings, **kw).collect()
-    exact = embedding_neardup_pairs(
-        embeddings, exact_arithmetic=True, **kw).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, exact))
-
-
-def test_ann_lsh_exact_arithmetic_matches_fast_path(spark, embeddings):
-    """Same pin for the top-k form: bench.py times the numpy path
-    (CLINICAL_BI_EXACT_ARITH=0) while the driver adjudicates the
-    sequential exact path — legal only because the two are identical on
-    the corpus. Row-for-row including rank, since top-k tie-breaks are
-    part of the contract."""
-    kw = dict(k=5, nbits=8, max_hamming=3)
-    queries_df = embeddings.filter(F.col("vec_id") < 8)
-    fast = lsh_bucket_topk(embeddings, queries_df, **kw).collect()
-    exact = lsh_bucket_topk(
-        embeddings, queries_df, exact_arithmetic=True, **kw).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, exact))
-
-
 def test_det_kmeans_partitioning_invariant(spark, embeddings):
     """The claim under the sim_ann_ivf oracle: the deterministic Lloyd's
     fit is bit-identical HOWEVER Spark partitions the corpus (sorted
@@ -422,45 +355,51 @@ def test_det_kmeans_partitioning_invariant(spark, embeddings):
     assert fit(embeddings.orderBy(F.col("vec_id").desc())) == base
 
 
-def test_ann_lsh_exact_arith_parity_at_bench_sf(spark, monkeypatch):
-    """The bench times the numpy production path while the driver
-    adjudicates the sequential exact path; the small-fixture parity pins
-    above don't by themselves license that claim AT THE BENCHED SCALE
-    (r7 ADVICE). Run the actual registry query at the bench SF dir under
-    both env-flag settings and require row-for-row equality including
-    rank."""
-    import os
-
-    bench_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if not os.path.isdir(bench_sf):
-        pytest.skip(f"bench SF dir {bench_sf} not present")
-    q = load_all()["sim_ann_lsh"].fn
-    monkeypatch.setenv("CLINICAL_BI_EXACT_ARITH", "1")
-    exact = q(spark, bench_sf).collect()
-    monkeypatch.setenv("CLINICAL_BI_EXACT_ARITH", "0")
-    fast = q(spark, bench_sf).collect()
-    assert sorted(map(tuple, exact)) == sorted(map(tuple, fast))
+# The five registry queries that run an ANN operator. Each runs one
+# arithmetic (numpy batch signatures, ADC and cosines), and that path is
+# both what bench.py times and what the DuckDB oracle checks.
+ANN_QUERIES = [
+    "sim_ann_lsh",
+    "sim_ann_ivf",
+    "sim_ann_pq",
+    "dedup_embedding_lsh",
+    "sim_ann_ivf_exact",
+]
+# the scale bench.py times by default, next to the oracle fixture dir
+SF_BENCH = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
 
 
-def test_ann_ivf_exact_arithmetic_matches_fast_path(spark, embeddings):
-    """sim_ann_ivf joined the bench set in r8 and follows the
-    CLINICAL_BI_EXACT_ARITH dual path: the driver adjudicates the
-    sequential exact-arithmetic probe/rank while the bench times the
-    numpy path — licensed by this row-for-row pin (rank included) over
-    the deterministic fit's centroids."""
-    from clinical_bi_spark.operators.similarity import (
-        det_kmeans_centroids,
-        ivf_topk,
-    )
+@pytest.fixture(scope="module")
+def bench_oracle_con():
+    if not os.path.isdir(SF_BENCH):
+        pytest.skip(f"bench SF dir {SF_BENCH} not present")
+    con = duckdb_views(SF_BENCH)
+    yield con
+    con.close()
 
-    cent = det_kmeans_centroids(embeddings, n_cells=16, n_train=512, iters=3)
-    kw = dict(k=5, n_cells=16, nprobe=4, centroids=cent)
-    queries_df = embeddings.filter(F.col("vec_id") < 8)
-    fast = ivf_topk(embeddings, queries_df, **kw).collect()
-    exact = ivf_topk(
-        embeddings, queries_df, exact_arithmetic=True, **kw
-    ).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, exact))
+
+@pytest.mark.parametrize("name", ANN_QUERIES)
+def test_ann_queries_match_oracle_at_bench_sf(spark, bench_oracle_con, name):
+    """numpy reduces each dot product in a different order from DuckDB's
+    sequential fold, so oracle parity is measured, not exact by
+    construction: a sign bit or a rounded cosine could flip on a corpus
+    the fixtures do not cover. test_queries_oracle.py pins sf0.01; this
+    pins the scale bench.py times."""
+    spec = load_all()[name]
+    df = spec.fn(spark, SF_BENCH)
+    assert_matches_oracle(df, bench_oracle_con, spec.oracle, name=name)
+
+
+@pytest.mark.parametrize("name", ANN_QUERIES)
+def test_ann_query_plans_have_no_interpreted_lambdas(spark, name):
+    """No ANN query falls back to a sequential Catalyst fold: Spark's
+    higher-order functions are interpreted one element at a time, so a
+    zip_with/aggregate dot product or a transform lambda in the plan is
+    a second, slower arithmetic next to the numpy one."""
+    df = load_all()[name].fn(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for marker in ("lambdafunction", "zip_with", "aggregate("):
+        assert marker not in plan, f"{name}: optimized plan contains {marker}"
 
 
 # --- SemDeDup (r11 registration candidate: oracle + behavior pinned now,
