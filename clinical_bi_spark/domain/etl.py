@@ -10,10 +10,21 @@ stats replace them).
 
 Scale notes: `studies` is the hub and is unique on nct_id, so every
 studies-side join is at most 1:1 per satellite row; the satellite tables
-(conditions/interventions) carry the fan-out. Aggregations group on
-`downcase_name`/(intervention, condition) — shuffle keys are short strings;
-AQE handles the skew of popular condition names ('healthy', 'breast
-cancer') at real scale.
+(conditions/interventions) carry the fan-out. Each aggregate costs one
+shuffle on short keys (`downcase_name`, `nct_id`, the lowered
+intervention name, the (intervention, condition) pair). Where an
+aggregate has two levels — a count(distinct …) or an explicit
+pre-aggregation — a ``repartition`` on the outer key clusters both, so
+Catalyst plans no second exchange and no Expand. AQE handles the skew of popular condition names ('healthy',
+'breast cancer') at real scale.
+
+Where multiplicity is load-bearing: `conditions` holds duplicate
+(study, condition) pairs, and the reference's plain aggregates see every
+duplicate — enrollment_avg in :func:`conditions_calculated_values`
+(carried as the pair count ``m``), average_condition_completion_ratio in
+:func:`enrich_calculated_values` and the (intervention, condition) study
+counts of :func:`interventions_conditions` (summed over the raw rows).
+Only the count(distinct …) outputs are free of it.
 """
 
 from __future__ import annotations
@@ -59,14 +70,22 @@ def conditions_calculated_values(
     Reference form: conditions ⨝ studies plus five conditional LEFT OUTER
     self-joins of studies (s_total/s_completed/s_terminated/s_withdrawn/
     s_done), each branch filtered in the join predicate, aggregated with
-    count(distinct alias.nct_id) per branch.
+    count(distinct alias.nct_id) per branch. Because ``studies`` is unique
+    on nct_id, each alias matches at most one row per condition row, so
+    the five left joins are one join plus conditional aggregation.
 
-    Because ``studies`` is unique on nct_id, each alias matches at most one
-    row per condition row — there is no fan-out, and the five left joins
-    are *exactly* equivalent to one join + conditional aggregation
-    (including enrollment_avg). This is the conditional-agg form: one
-    shuffle instead of six. The literal five-join plan survives on TPC-H
-    data as a registered cohort query (queries/relational.py).
+    Plan: two aggregation levels over one exchange. ``conditions`` holds
+    duplicate (study, condition) pairs, so the first level groups it to
+    one row per (downcase_name, nct_id) and keeps the pair's multiplicity
+    ``m``; the broadcast studies join follows; the second level groups to
+    downcase_name, where each branch's count(distinct nct_id) is a plain
+    conditional count and enrollment_avg = sum(m·enrollment) / sum(m)
+    over the s_done rows (the reference's avg sees every duplicate). Both
+    levels are clustered by the one ``repartition("downcase_name")``, so
+    Catalyst adds no second shuffle and no Expand, and the studies
+    broadcast runs beside the shuffle instead of before it. The literal
+    five-join plan survives on TPC-H data as a registered cohort query
+    (queries/relational.py).
     """
     interventional = F.col("study_type") == "Interventional"
     branch = {
@@ -74,25 +93,32 @@ def conditions_calculated_values(
         "completed": interventional & (F.col("overall_status") == "Completed"),
         "terminated": interventional & (F.col("overall_status") == "Terminated"),
         "withdrawn": interventional & (F.col("overall_status") == "Withdrawn"),
-        # NB: != is null-rejecting, exactly like the reference's
-        # s_done.enrollment_type != 'Anticipated' (init-user-db.sh:113)
-        "done": interventional
-        & F.col("overall_status").isin("Completed", "Terminated", "Withdrawn")
-        & (F.col("enrollment_type") != "Anticipated"),
     }
-    cd = lambda cond: F.countDistinct(F.when(cond, F.col("nct_id")))  # noqa: E731
-
-    agg = (
-        conditions.join(studies, "nct_id")  # inner, like c ⨝ s (:92-93)
-        .groupBy("downcase_name")
-        .agg(
-            cd(branch["total"]).cast("int").alias("total_interventional_studies"),
-            cd(branch["completed"]).cast("int").alias("completed_interventional_studies"),
-            cd(branch["terminated"]).cast("int").alias("terminated_interventional_studies"),
-            cd(branch["withdrawn"]).cast("int").alias("withdrawn_interventional_studies"),
-            F.avg(F.when(branch["done"], F.col("enrollment"))).cast("float").alias("enrollment_avg"),
-            F.min("study_first_submitted_date").alias("first_seen_date"),
-        )
+    # NB: != is null-rejecting, exactly like the reference's
+    # s_done.enrollment_type != 'Anticipated' (init-user-db.sh:113)
+    done = (
+        interventional
+        & F.col("overall_status").isin("Completed", "Terminated", "Withdrawn")
+        & (F.col("enrollment_type") != "Anticipated")
+        & F.col("enrollment").isNotNull()
+    )
+    pairs = (
+        conditions.repartition("downcase_name")
+        .groupBy("downcase_name", "nct_id")
+        .agg(F.count(F.lit(1)).alias("m"))
+        .join(F.broadcast(studies), "nct_id")  # inner, like c ⨝ s (:92-93)
+    )
+    count_if = lambda cond: F.count(F.when(cond, F.lit(1))).cast("int")  # noqa: E731
+    agg = pairs.groupBy("downcase_name").agg(
+        count_if(branch["total"]).alias("total_interventional_studies"),
+        count_if(branch["completed"]).alias("completed_interventional_studies"),
+        count_if(branch["terminated"]).alias("terminated_interventional_studies"),
+        count_if(branch["withdrawn"]).alias("withdrawn_interventional_studies"),
+        (
+            F.sum(F.when(done, F.col("m") * F.col("enrollment")))
+            / F.sum(F.when(done, F.col("m")))
+        ).cast("float").alias("enrollment_avg"),
+        F.min("study_first_submitted_date").alias("first_seen_date"),
     )
     return agg.select(
         "downcase_name",
@@ -140,7 +166,10 @@ def enrich_calculated_values(
     per-study aggregate: studies ⟕ designs ⟕ conditions ⟕ ccv (name-keyed),
     is_oncology = bool_or(condition-level flag) OR title classifier; NULL
     propagates exactly like Postgres three-valued OR (a study with no
-    conditions and a non-matching title gets NULL, not false).
+    conditions and a non-matching title gets NULL, not false). studies is
+    repartitioned on nct_id before the joins (ccv, one row per condition
+    name, is broadcast), so that one exchange clusters both levels of
+    count(distinct downcase_name) and brief_title stays out of the key.
     """
     title_onco = (
         F.when(
@@ -149,13 +178,17 @@ def enrich_calculated_values(
         ).otherwise(F.lit(False))
     )
     per_study = (
-        studies.join(designs.select("nct_id", "primary_purpose"), "nct_id", "left")
+        studies.select("nct_id", "brief_title")
+        .repartition("nct_id")
+        .join(designs.select("nct_id", "primary_purpose"), "nct_id", "left")
         .join(conditions.select("nct_id", "downcase_name"), "nct_id", "left")
         .join(
-            ccv.select(
-                F.col("downcase_name").alias("ccv_name"),
-                F.col("is_oncology").alias("cond_is_oncology"),
-                F.col("intervention_completion_ratio"),
+            F.broadcast(
+                ccv.select(
+                    F.col("downcase_name").alias("ccv_name"),
+                    F.col("is_oncology").alias("cond_is_oncology"),
+                    F.col("intervention_completion_ratio"),
+                )
             ),
             F.col("downcase_name") == F.col("ccv_name"),
             "left",
@@ -189,11 +222,18 @@ def interventions_calculated_values(
     interventions: DataFrame, studies: DataFrame
 ) -> DataFrame:
     """Per-intervention rollup (init-user-db.sh:206-232): GROUP BY
-    lower(name), distinct study count, first/last submission dates."""
+    lower(name), distinct study count, first/last submission dates. The
+    one exchange, on the lowered name, clusters both levels of
+    count(distinct nct_id); the broadcast studies join follows it."""
     return (
         interventions.filter(F.col("name").isNotNull())
-        .join(studies.select("nct_id", "study_first_submitted_date"), "nct_id")
-        .groupBy(F.lower(F.col("name")).alias("intervention_name"))
+        .select(F.lower(F.col("name")).alias("intervention_name"), "nct_id")
+        .repartition("intervention_name")
+        .join(
+            F.broadcast(studies.select("nct_id", "study_first_submitted_date")),
+            "nct_id",
+        )
+        .groupBy("intervention_name")
         .agg(
             F.countDistinct("nct_id").cast("int").alias("studies"),
             F.min("study_first_submitted_date").alias("first_seen_date"),

@@ -1,7 +1,8 @@
 """Flagship feature pipeline and dashboard extract.
 
 * :func:`flagship_features` — the SQL the reference assembles at
-  ct_data.py:72-91 (9-table join, wide GROUP BY, two count-distincts).
+  ct_data.py:72-91 (9-table join, wide GROUP BY, two count-distincts),
+  with its aggregates computed per study before the join.
 * :func:`feature_table` — the eager pandas feature engineering
   (ct_data.py:106-151) as lazy DataFrame expressions.
 * :func:`load_data` — the end-to-end parity entry point including the
@@ -33,119 +34,115 @@ SQL_COLUMN_NAMES = (
 STATUS = ("Completed", "Terminated")
 
 
-def flagship_features(t, hash_long_text_keys: bool = False) -> DataFrame:
-    """The flagship feature query (ct_data.py:72-91), literally.
+def flagship_features(t) -> DataFrame:
+    """The flagship feature query (ct_data.py:72-91), eagerly aggregated.
 
-    ``hash_long_text_keys=True`` is the 100 TB switch (SURVEY.md §7.4.7):
-    the wide GROUP BY includes multi-KB text columns (brief_title,
-    criteria, description) — at scale those keys dominate shuffle volume.
-    The flag groups on md5(text) instead and recovers the value with
-    first() (identical result for identical groups; md5 collisions are
-    negligible at any realistic cardinality). Default stays raw for exact
-    reference parity.
+    Reference SQL (FLAGSHIP_SQL in tests/test_domain.py): an implicit
+    9-way inner join on nct_id — including the sponsors self-join (sp
+    filtered to 'lead' supplies agency_class; sp2 unfiltered feeds
+    count(distinct name)) — grouped by nct_id and 17 study-level columns,
+    with count(dgi.id), count(distinct i.intervention_type) and
+    count(distinct sp2.name).
 
-    Implicit 9-way inner join on nct_id — including the intentional
-    sponsors self-join (sp filtered to 'lead' supplies agency_class; sp2
-    unfiltered feeds count(distinct name)) and the dgi/interventions
-    fan-out that count(dgi.id) measures (load-bearing, SURVEY.md §7.4.1).
-    The studies/eligibilities/designs/brief_summaries sides are 1:1 on
-    nct_id; at scale the shuffle is the interventions × sponsors × dgi
-    blow-up, grouped back on nct_id immediately — AQE keeps the post-join
-    partitioning; long-text group keys (criteria, description) ride along
-    exactly as the reference groups them.
+    nct_id is a group key, so the fan-out sides interventions, sp2 and
+    design_group_interventions can be aggregated per study before the
+    join (eager aggregation, Yan & Larson, VLDB 1995). A group joins
+    ``mult`` rows of the other six sides (studies, cv, e, sp, d, bs —
+    duplicated eligibilities or two lead sponsors of one agency_class
+    make mult > 1) to each of the n_i × n_sp2 × n_dgi fan-out rows, so
+
+    * count(dgi.id) = mult · n_i · n_sp2 · n_ids, with n_ids the study's
+      non-null dgi ids;
+    * count(distinct i.intervention_type) and count(distinct sp2.name)
+      are the study's distinct non-null values — every group of a study
+      sees all of its fan-out rows;
+    * a study with no row on any fan-out side drops out (inner join).
+
+    The per-study sides come from one union of the three tables,
+    aggregated in two levels (per value, then per study) over one
+    exchange on nct_id. The filtered one-row-per-key sides are broadcast
+    onto it, and the final GROUP BY inherits the nct_id partitioning, so
+    no long-text key (brief_title, criteria, description) is ever hashed
+    into a shuffle. The broadcast hints keep the per-study side streamed;
+    they assume each of the six sides, long texts included, fits in
+    executor memory.
     """
-    s = t.studies.alias("s")
-    cv = t.calculated_values.alias("cv")
-    e = t.eligibilities.alias("e")
-    i = t.interventions.alias("i")
-    sp = t.sponsors.alias("sp")
-    sp2 = t.sponsors.alias("sp2")
-    dgi = t.design_group_interventions.alias("dgi")
-    d = t.designs.alias("d")
-    bs = t.brief_summaries.alias("bs")
 
-    key = F.col("s.nct_id")
-    joined = (
-        s.join(cv, key == F.col("cv.nct_id"))
-        .join(e, key == F.col("e.nct_id"))
-        .join(i, key == F.col("i.nct_id"))
-        .join(sp, key == F.col("sp.nct_id"))
-        .join(sp2, key == F.col("sp2.nct_id"))
-        .join(dgi, key == F.col("dgi.nct_id"))
-        .join(d, key == F.col("d.nct_id"))
-        .join(bs, key == F.col("bs.nct_id"))
-        .filter(
-            (F.col("s.start_date") > F.lit("2019-01-01").cast("date"))
-            & (F.col("cv.is_oncology") == True)  # noqa: E712
-            & F.col("s.overall_status").isin(*STATUS)
-            & F.col("s.enrollment").isNotNull()
-            & (F.col("cv.number_of_facilities") > 0)
-            & (F.col("sp.lead_or_collaborator") == "lead")
+    def tagged(df: DataFrame, side: str, value: F.Column, id_: F.Column) -> DataFrame:
+        return df.select(
+            "nct_id",
+            F.lit(side).alias("side"),
+            value.cast("string").alias("value"),
+            id_.cast("long").alias("id"),
         )
+
+    none = F.lit(None)
+    fanout = (
+        tagged(t.interventions, "i", F.col("intervention_type"), none)
+        .unionByName(tagged(t.sponsors, "sp2", F.col("name"), none))
+        .unionByName(tagged(t.design_group_interventions, "dgi", none, F.col("id")))
+        .repartition("nct_id")
+        .groupBy("nct_id", "side", "value")
+        .agg(F.count(F.lit(1)).alias("rows"), F.count("id").alias("ids"))
     )
-    if hash_long_text_keys:
-        group_cols = [
-            *[F.col(f"s.{c}") for c in SQL_COLUMN_NAMES],
-            F.col("sp.agency_class").alias("sponsor_type"),
-            F.col("cv.number_of_facilities"),
-            F.col("cv.average_condition_completion_ratio"),
-            F.col("e.gender"),
-            F.col("cv.has_us_facility"),
-            F.md5(F.col("s.brief_title")).alias("__h_title"),
-            F.col("s.number_of_arms"),
-            F.md5(F.col("e.criteria")).alias("__h_criteria"),
-            F.col("d.allocation"),
-            F.col("d.intervention_model"),
-            F.col("d.primary_purpose"),
-            F.md5(F.col("bs.description")).alias("__h_description"),
-        ]
-        grouped = joined.groupBy(*group_cols).agg(
-            F.count("dgi.id").alias("design_group_intervention_count"),
-            F.countDistinct("i.intervention_type").alias("intervention_type_count"),
-            F.countDistinct("sp2.name").alias("sponsor_count"),
-            # md5-keyed groups are constant in the hashed column: recover it
-            F.first("s.brief_title").alias("brief_title"),
-            F.first("bs.description").alias("description_v"),
+    on = lambda side: F.col("side") == side  # noqa: E731
+    per_study = (
+        fanout.groupBy("nct_id")
+        .agg(
+            F.sum(F.when(on("i"), F.col("rows"))).alias("n_i"),
+            F.sum(F.when(on("sp2"), F.col("rows"))).alias("n_sp2"),
+            F.sum(F.when(on("dgi"), F.col("rows"))).alias("n_dgi"),
+            F.sum("ids").alias("n_ids"),
+            F.count(F.when(on("i"), F.col("value"))).alias("intervention_type_count"),
+            F.count(F.when(on("sp2"), F.col("value"))).alias("sponsor_count"),
         )
-        return grouped.select(
+        .filter((F.col("n_i") > 0) & (F.col("n_sp2") > 0) & (F.col("n_dgi") > 0))
+    )
+    studies = t.studies.filter(
+        (F.col("start_date") > F.lit("2019-01-01").cast("date"))
+        & F.col("overall_status").isin(*STATUS)
+        & F.col("enrollment").isNotNull()
+    ).select(*SQL_COLUMN_NAMES, "brief_title", "number_of_arms")
+    cv = t.calculated_values.filter(
+        (F.col("is_oncology") == True)  # noqa: E712
+        & (F.col("number_of_facilities") > 0)
+    ).select(
+        "nct_id", "number_of_facilities", "average_condition_completion_ratio",
+        "has_us_facility",
+    )
+    sponsors = t.sponsors.filter(F.col("lead_or_collaborator") == "lead").select(
+        "nct_id", F.col("agency_class").alias("sponsor_type")
+    )
+    sides = (
+        studies,
+        cv,
+        t.eligibilities.select("nct_id", "gender", "criteria"),
+        sponsors,
+        t.designs.select("nct_id", "allocation", "intervention_model", "primary_purpose"),
+        t.brief_summaries.select("nct_id", "description"),
+    )
+    joined = per_study
+    for side in sides:
+        joined = joined.join(F.broadcast(side), "nct_id")
+    return (
+        joined.groupBy(
             *SQL_COLUMN_NAMES,
             "sponsor_type",
             "number_of_facilities",
+            "average_condition_completion_ratio",
             "gender",
             "has_us_facility",
-            "average_condition_completion_ratio",
-            stage_from_title(F.col("brief_title")).alias("condition_stage"),
-            null_to_zero(F.col("number_of_arms")).cast("int").alias("number_of_arms_clean"),
+            "brief_title",
+            "number_of_arms",
+            "criteria",
             "allocation",
             "intervention_model",
             "primary_purpose",
-            F.lit(0).alias("drug_recency"),
-            F.col("description_v").alias("description"),
-            "design_group_intervention_count",
-            "intervention_type_count",
-            "sponsor_count",
+            "description",
+            # functions of nct_id: grouping on them keeps one value per group
+            "n_i", "n_sp2", "n_ids", "intervention_type_count", "sponsor_count",
         )
-    return (
-        joined.groupBy(
-            *[F.col(f"s.{c}") for c in SQL_COLUMN_NAMES],
-            F.col("sp.agency_class").alias("sponsor_type"),
-            F.col("cv.number_of_facilities"),
-            F.col("cv.average_condition_completion_ratio"),
-            F.col("e.gender"),
-            F.col("cv.has_us_facility"),
-            F.col("s.brief_title"),
-            F.col("s.number_of_arms"),
-            F.col("e.criteria"),
-            F.col("d.allocation"),
-            F.col("d.intervention_model"),
-            F.col("d.primary_purpose"),
-            F.col("bs.description"),
-        )
-        .agg(
-            F.count("dgi.id").alias("design_group_intervention_count"),
-            F.countDistinct("i.intervention_type").alias("intervention_type_count"),
-            F.countDistinct("sp2.name").alias("sponsor_count"),
-        )
+        .agg(F.count(F.lit(1)).alias("mult"))
         .select(
             *SQL_COLUMN_NAMES,
             "sponsor_type",
@@ -161,7 +158,8 @@ def flagship_features(t, hash_long_text_keys: bool = False) -> DataFrame:
             "primary_purpose",
             F.lit(0).alias("drug_recency"),
             "description",
-            "design_group_intervention_count",
+            (F.col("mult") * F.col("n_i") * F.col("n_sp2") * F.col("n_ids"))
+            .alias("design_group_intervention_count"),
             "intervention_type_count",
             "sponsor_count",
         )

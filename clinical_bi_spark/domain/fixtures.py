@@ -82,10 +82,49 @@ CRITERIA = [
     "Inclusion: healthy volunteers. Exclusion: smokers.",
 ]
 
+_S = pa.string()
+#: Arrow schema of each base table, as the reference's columns type them.
+SCHEMAS = {
+    "studies": pa.schema([
+        ("nct_id", _S), ("overall_status", _S), ("phase", _S),
+        ("start_date", pa.date32()), ("study_first_submitted_date", pa.date32()),
+        ("study_type", _S), ("number_of_arms", pa.int32()),
+        ("number_of_groups", pa.int32()), ("source", _S),
+        ("enrollment", pa.int32()), ("enrollment_type", _S), ("brief_title", _S),
+    ]),
+    "calculated_values": pa.schema([
+        ("nct_id", _S), ("number_of_facilities", pa.int32()),
+        ("has_us_facility", pa.bool_()), ("has_single_facility", pa.bool_()),
+    ]),
+    "conditions": pa.schema([("nct_id", _S), ("downcase_name", _S)]),
+    "interventions": pa.schema([
+        ("id", pa.int64()), ("nct_id", _S), ("intervention_type", _S), ("name", _S),
+    ]),
+    "sponsors": pa.schema([
+        ("nct_id", _S), ("agency_class", _S), ("lead_or_collaborator", _S), ("name", _S),
+    ]),
+    "eligibilities": pa.schema([("nct_id", _S), ("gender", _S), ("criteria", _S)]),
+    "designs": pa.schema([
+        ("nct_id", _S), ("allocation", _S), ("intervention_model", _S),
+        ("primary_purpose", _S),
+    ]),
+    "brief_summaries": pa.schema([("nct_id", _S), ("description", _S)]),
+    "design_group_interventions": pa.schema([("id", pa.int64()), ("nct_id", _S)]),
+}
+
+
+def write_tables(out_dir: str, rows: dict[str, list[dict]]) -> str:
+    """Write each base table's rows (dicts keyed by column; a missing key
+    is NULL) to ``out_dir/<table>.parquet`` with its :data:`SCHEMAS` type."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name, schema in SCHEMAS.items():
+        table = pa.Table.from_pylist(rows.get(name, []), schema=schema)
+        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
+    return out_dir
+
 
 def generate(out_dir: str, n_studies: int = N_STUDIES, seed: int = 42) -> str:
     rng = random.Random(seed)
-    os.makedirs(out_dir, exist_ok=True)
 
     studies, cv = [], []
     conditions, interventions, sponsors = [], [], []
@@ -179,37 +218,9 @@ def generate(out_dir: str, n_studies: int = N_STUDIES, seed: int = 42) -> str:
             dgi.append(dict(id=dgi_id, nct_id=nct_id))
             dgi_id += 1
 
-    s = pa.string()
-    schemas = {
-        "studies": (studies, pa.schema([
-            ("nct_id", s), ("overall_status", s), ("phase", s),
-            ("start_date", pa.date32()), ("study_first_submitted_date", pa.date32()),
-            ("study_type", s), ("number_of_arms", pa.int32()),
-            ("number_of_groups", pa.int32()), ("source", s),
-            ("enrollment", pa.int32()), ("enrollment_type", s), ("brief_title", s),
-        ])),
-        "calculated_values": (cv, pa.schema([
-            ("nct_id", s), ("number_of_facilities", pa.int32()),
-            ("has_us_facility", pa.bool_()), ("has_single_facility", pa.bool_()),
-        ])),
-        "conditions": (conditions, pa.schema([("nct_id", s), ("downcase_name", s)])),
-        "interventions": (interventions, pa.schema([
-            ("id", pa.int64()), ("nct_id", s), ("intervention_type", s), ("name", s),
-        ])),
-        "sponsors": (sponsors, pa.schema([
-            ("nct_id", s), ("agency_class", s), ("lead_or_collaborator", s), ("name", s),
-        ])),
-        "eligibilities": (eligibilities, pa.schema([
-            ("nct_id", s), ("gender", s), ("criteria", s),
-        ])),
-        "designs": (designs, pa.schema([
-            ("nct_id", s), ("allocation", s), ("intervention_model", s),
-            ("primary_purpose", s),
-        ])),
-        "brief_summaries": (summaries, pa.schema([("nct_id", s), ("description", s)])),
-        "design_group_interventions": (dgi, pa.schema([("id", pa.int64()), ("nct_id", s)])),
-    }
-    for name, (rows, schema) in schemas.items():
-        table = pa.Table.from_pylist(rows, schema=schema)
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return out_dir
+    return write_tables(out_dir, {
+        "studies": studies, "calculated_values": cv, "conditions": conditions,
+        "interventions": interventions, "sponsors": sponsors,
+        "eligibilities": eligibilities, "designs": designs,
+        "brief_summaries": summaries, "design_group_interventions": dgi,
+    })

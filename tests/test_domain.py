@@ -22,7 +22,7 @@ from clinical_bi_spark.domain import (
     interventions_with_downcase_name,
     run_etl,
 )
-from clinical_bi_spark.domain.fixtures import generate
+from clinical_bi_spark.domain.fixtures import SCHEMAS, generate, write_tables
 from tests.conftest import assert_matches_oracle
 
 _ONCO_15 = (
@@ -228,19 +228,22 @@ def aact(spark, aact_dir):
     return AACTTables(spark=spark, base_path=aact_dir)
 
 
-@pytest.fixture(scope="session")
-def aact_oracle(aact_dir):
+def _oracle(base_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB over the snapshot's base tables plus the reference's two
+    derived tables the later SQL reads."""
     con = duckdb.connect()
-    for name in (
-        "studies", "calculated_values", "conditions", "interventions",
-        "sponsors", "eligibilities", "designs", "brief_summaries",
-        "design_group_interventions",
-    ):
+    for name in SCHEMAS:
         con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{aact_dir}/{name}.parquet')"
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{base_dir}/{name}.parquet')"
         )
     con.execute(f"CREATE TABLE ccv AS {CCV_SQL}")
     con.execute(f"CREATE TABLE cv_enriched AS {CV_ENRICHED_SQL}")
+    return con
+
+
+@pytest.fixture(scope="session")
+def aact_oracle(aact_dir):
+    con = _oracle(aact_dir)
     yield con
     con.close()
 
@@ -329,20 +332,6 @@ def test_dashboard_delimited_sink(aact, tmp_path):
     assert not any('"' in line for line in lines), "cleanse must strip quotes"
 
 
-def test_flagship_hash_text_keys_equivalent(aact):
-    """The 100 TB hash-grouped-text-keys switch must be result-identical
-    to the raw-key form (md5 groups ≡ value groups)."""
-    t = AACTTables(spark=aact.spark, base_path=aact.base_path)
-    run_etl(t)
-    raw = flagship_features(t)
-    hashed = flagship_features(t, hash_long_text_keys=True)
-    cols = sorted(raw.columns)
-    assert cols == sorted(hashed.columns)
-    a = sorted(map(str, raw.select(*cols).collect()))
-    b = sorted(map(str, hashed.select(*cols).collect()))
-    assert a == b
-
-
 def test_derived_table_primary_keys_unique(aact):
     """SURVEY.md §4: the reference's PRIMARY KEY declarations
     (init-user-db.sh:39,211,243) become data-quality assertions here —
@@ -362,3 +351,163 @@ def test_derived_table_primary_keys_unique(aact):
             derived[table].groupBy(*keys).count().filter(F.col("count") > 1).count()
         )
         assert dupes == 0, f"{table}: duplicate keys on {keys}"
+
+
+def _edge_snapshot(out_dir: str) -> str:
+    """Hand-built snapshot that plants each multiplicity case by name;
+    the seeded fixture has no study with two leads, a duplicated
+    eligibility row, NULL dgi ids or a missing fan-out side. Every study
+    passes the flagship filter conjunction unless its row says
+    otherwise."""
+    import datetime as dt
+
+    rows: dict[str, list[dict]] = {name: [] for name in SCHEMAS}
+
+    def study(nct_id, conditions=("lung carcinoma",), interventions=("Drug",),
+              sponsors=(("lead", "Industry", "Mega Pharma 1"),), eligibilities=1,
+              dgi_ids=(1,), **overrides):
+        rows["studies"].append(dict(
+            nct_id=nct_id, overall_status="Completed", phase="Phase 2",
+            start_date=dt.date(2020, 3, 1),
+            study_first_submitted_date=dt.date(2019, 11, 1),
+            study_type="Interventional", number_of_arms=2, number_of_groups=2,
+            source="Mega Pharma", enrollment=100, enrollment_type="Actual",
+            brief_title="A Study of Aspirin in Cancer Stage III Patients",
+        ) | overrides)
+        rows["calculated_values"].append(dict(
+            nct_id=nct_id, number_of_facilities=5, has_us_facility=True,
+            has_single_facility=False,
+        ))
+        rows["conditions"] += [dict(nct_id=nct_id, downcase_name=c) for c in conditions]
+        rows["interventions"] += [
+            dict(id=len(rows["interventions"]) + 1, nct_id=nct_id,
+                 intervention_type=kind, name="Aspirin")
+            for kind in interventions
+        ]
+        rows["sponsors"] += [
+            dict(nct_id=nct_id, lead_or_collaborator=role, agency_class=agency, name=name)
+            for role, agency, name in sponsors
+        ]
+        rows["eligibilities"] += [
+            dict(nct_id=nct_id, gender="All", criteria="Inclusion: adults 18+.")
+        ] * eligibilities
+        rows["designs"].append(dict(
+            nct_id=nct_id, allocation="Randomized",
+            intervention_model="Parallel Assignment", primary_purpose="Treatment",
+        ))
+        rows["brief_summaries"].append(dict(nct_id=nct_id, description="A randomized trial."))
+        rows["design_group_interventions"] += [
+            dict(id=i, nct_id=nct_id) for i in dgi_ids
+        ]
+
+    # two leads of different agency_class: two groups; sp2 counts every
+    # sponsor name once, and the collaborator shares a lead's name
+    study("NCT00000001", interventions=("Drug", "Drug", None, "Device"), sponsors=(
+        ("lead", "Industry", "Mega Pharma 1"), ("lead", "NIH", "NIH 2"),
+        ("collaborator", "Other", "Mega Pharma 1"),
+    ), dgi_ids=(1, 2, None))
+    # a duplicated eligibility row: one group of multiplicity 2
+    study("NCT00000002", eligibilities=2, dgi_ids=(3, 4))
+    # dgi rows whose ids are all NULL: the row stays, count(dgi.id) = 0
+    study("NCT00000003", interventions=(None,), dgi_ids=(None, None))
+    # no dgi rows / no interventions: the inner join drops both
+    study("NCT00000004", dgi_ids=())
+    study("NCT00000005", interventions=())
+    # duplicate (study, condition) pairs on studies of different
+    # enrollments: the reference's enrollment_avg weighs each duplicate
+    study("NCT00000006", conditions=("breast cancer", "breast cancer", "asthma"),
+          enrollment=100, eligibilities=2)
+    study("NCT00000007", conditions=("breast cancer",), enrollment=300,
+          overall_status="Terminated")
+    study("NCT00000008", conditions=("breast cancer", "breast cancer"), enrollment=40,
+          overall_status="Withdrawn", start_date=None)
+    # not done: anticipated enrollment, and a recruiting study
+    study("NCT00000009", conditions=("breast cancer", "breast cancer"),
+          enrollment_type="Anticipated")
+    study("NCT00000010", conditions=("asthma", "asthma"), overall_status="Recruiting",
+          brief_title="Sleep Study")
+    return write_tables(out_dir, rows)
+
+
+@pytest.fixture(scope="module")
+def edge(spark, tmp_path_factory):
+    base = _edge_snapshot(str(tmp_path_factory.mktemp("aact_edge")))
+    con = _oracle(base)
+    t = AACTTables(spark=spark, base_path=base)
+    yield run_etl(t), t, con
+    con.close()
+
+
+def test_edge_conditions_calculated_values(edge):
+    derived, _, con = edge
+    assert_matches_oracle(
+        derived["conditions_calculated_values"], con, "SELECT * FROM ccv", name="ccv"
+    )
+    avg = con.execute(
+        "SELECT enrollment_avg FROM ccv WHERE downcase_name = 'breast cancer'"
+    ).fetchone()[0]
+    assert avg == pytest.approx((100 * 2 + 300 + 40 * 2) / 5), "duplicates must weigh"
+
+
+def test_edge_enrich_calculated_values(edge):
+    derived, _, con = edge
+    assert_matches_oracle(
+        derived["calculated_values"], con, "SELECT * FROM cv_enriched", name="cv_enriched"
+    )
+
+
+def test_edge_flagship_features(edge):
+    _, t, con = edge
+    df = flagship_features(t)
+    assert_matches_oracle(df, con, FLAGSHIP_SQL, name="flagship")
+    kept = sorted(r.nct_id for r in df.select("nct_id").collect())
+    assert kept == [
+        "NCT00000001", "NCT00000001", "NCT00000002", "NCT00000003",
+        "NCT00000006", "NCT00000007", "NCT00000009",
+    ]
+
+
+def test_edge_feature_table(edge):
+    _, t, con = edge
+    assert_matches_oracle(
+        feature_table(flagship_features(t)), con, FEATURES_SQL, name="features"
+    )
+
+
+#: Columns whose multi-KB values must never be hashed into a shuffle key.
+_LONG_TEXT = ("brief_title", "criteria", "description")
+#: Most shuffle exchanges an output's executed plan may hold.
+_MAX_SHUFFLES = {
+    "conditions_calculated_values": 1,
+    "interventions_calculated_values": 1,
+    "calculated_values": 3,
+    "feature_table": 3,
+}
+
+
+def test_aact_outputs_plan_shape(aact):
+    """The seven outputs of one pipeline pass, built as the benchmark's
+    ``aact_etl`` workload builds them: no Expand, one shuffle per
+    distinct aggregate, and no long-text column in any exchange key."""
+    import re
+
+    etl_tables = AACTTables(spark=aact.spark, base_path=aact.base_path)
+    outputs = run_etl(etl_tables)
+    outputs["feature_table"] = feature_table(flagship_features(etl_tables))
+    outputs["dashboard_extract"] = dashboard_extract(
+        AACTTables(spark=aact.spark, base_path=aact.base_path)
+    )
+    assert len(outputs) == 7
+    node = r"^[\s:+-]*(?:\*\(\d+\) )?"
+    for name, df in outputs.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "== Final Plan ==" in plan:
+            plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        assert not re.search(node + r"Expand \[", plan, re.M), f"{name}: Expand\n{plan}"
+        shuffles = re.findall(node + r"Exchange (.*)$", plan, re.M)
+        assert len(shuffles) <= _MAX_SHUFFLES.get(name, len(shuffles)), (
+            f"{name}: {len(shuffles)} shuffles\n{plan}"
+        )
+        for keys in shuffles:
+            assert not any(f"{col}#" in keys for col in _LONG_TEXT), f"{name}: {keys}"
