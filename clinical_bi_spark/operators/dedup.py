@@ -64,21 +64,6 @@ def _hash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     return params
 
 
-def word_shingles(text_col: F.Column, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of the lowercased text (string form —
-    readable, used by the exact-Jaccard paths; the MinHash hot path uses
-    :func:`shingle_hashes` instead, which skips the string building)."""
-    tokens = F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit(""))
-    if n == 1:
-        return F.array_distinct(tokens)
-    # slide an n-window over the token array with transform on indices
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n))
-    )
-    return F.array_distinct(grams)
-
-
 def shingle_hashes(text_col: F.Column, n: int = 3) -> F.Column:
     """Distinct numeric n-gram shingle hashes in [0, p) — the MinHash fast
     path. Tokens are hashed once; an n-gram's hash is the polynomial
@@ -121,47 +106,6 @@ def _poly_gram_fold(
     return F.array_distinct(grams) if distinct else grams
 
 
-def minhash_signature(
-    shingles: F.Column, num_perm: int = 32, seed: int = 42, *, numeric: bool = False
-) -> F.Column:
-    """num_perm-wide MinHash signature as array<bigint>.
-
-    Each shingle is hashed once (engine-portable md5-prefix u32, see
-    ``_md5_word``), then pushed through num_perm universal-hash
-    permutations; min per permutation. All Catalyst
-    higher-order functions — the JVM evaluates the whole signature inside
-    codegen, no Python. With ``numeric=True`` the input is already an
-    array of hashes in [0, p) (from :func:`shingle_hashes`).
-    """
-    # Map each shingle hash into [0, p) first so a·h + b < 2^62 (ANSI-safe).
-    if numeric:
-        base = shingles
-    else:
-        base = F.transform(
-            shingles, lambda s: F.pmod(_md5_word(s, 1), F.lit(_MERSENNE_P))
-        )
-    params = _hash_params(num_perm, seed)
-
-    # Single-pass fold: one traversal of the shingle array computes all
-    # num_perm minima. (The naive form — num_perm separate transforms over
-    # `base` — gets inlined by Catalyst's CollapseProject, re-evaluating
-    # the whole shingle pipeline per permutation: ~30× slower measured.)
-    def _permute_all(h: F.Column) -> F.Column:
-        return F.array(
-            *[
-                F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE_P))
-                for a, b in params
-            ]
-        )
-
-    init = F.array_repeat(F.lit(_MERSENNE_P).cast("long"), num_perm)
-    return F.aggregate(
-        F.transform(base, _permute_all),
-        init,
-        lambda acc, xs: F.zip_with(acc, xs, lambda m, v: F.least(m, v)),
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -174,7 +118,8 @@ def minhash_signatures_df(
     shingle hashes and compute the num_perm minima as ordinary aggregate
     expressions.
 
-    Why not the array-fold form (minhash_signature)? Catalyst evaluates
+    Why not an array fold (``aggregate`` over per-shingle permutation
+    arrays)? Catalyst evaluates
     higher-order-function lambdas interpreted, per element — ~16M boxed
     lambda evaluations on the bench corpus (≈6 s). Exploding into rows
     hands the same arithmetic to whole-stage codegen with map-side partial
@@ -580,7 +525,6 @@ def winnow_fingerprints_df(
     text_col: str = "text",
     k: int = 8,
     window: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(id, fps: array<long>) winnowed fingerprints per document —
     vectorized Arrow path (numpy sliding windows inside mapInPandas).
@@ -592,8 +536,6 @@ def winnow_fingerprints_df(
     faster per-core than the interpreted HOF chain at sf0.1 and scales
     the same way (narrow, partition-preserving: each batch fingerprints
     in place, text never moves)."""
-    if not use_arrow:
-        return winnow_fingerprints_expr(df, id_col, text_col, k, window)
 
     def batches(it):
         fps_of = _winnow_fps_kernel(k, window)

@@ -16,8 +16,8 @@ The container has no image/audio libraries; five formats are REAL codecs
 anyway — PPM and 24-bit BMP (uncompressed), PNG (stdlib zlib: inflate +
 all five row filters both directions), baseline JPEG (operators/jpeg.py:
 pure-Python DCT + Huffman, error-bound-checked since lossy-by-design),
-and WAV/PCM16. Only video decode keeps the declared NotImplementedError
-stub behind an import-try, with a deterministic fake for tests; the
+and WAV/PCM16. Only general video decode has no codec: non-AVI frame
+sampling slices the byte stream as a deterministic stand-in; the
 surrounding machinery — magic-byte sniffing, header dimension parsing,
 schemas, batching, UDF signatures — is real and tested for every format.
 """
@@ -598,23 +598,6 @@ def attach_media_metadata(
     return df.mapInPandas(batches, schema=MEDIA_META_SCHEMA)
 
 
-def _decode_image(data: bytes):
-    """Pixel decode — STUB. The runtime has no imaging library; plug PIL or
-    cv2 here in a real deployment."""
-    try:
-        from PIL import Image  # noqa: F401  (not installed in this container)
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decode requires an imaging library (PIL/cv2); "
-            "not available in this environment — use fake_decode=True"
-        ) from exc
-    import io
-
-    from PIL import Image
-
-    return Image.open(io.BytesIO(data))
-
-
 def _fake_feature(data: bytes, dim: int) -> list[float]:
     """Deterministic stand-in for a decode→embed step: md5-seeded values.
     Shape/semantics match a real extractor (unit-scaled float vector).
@@ -637,13 +620,12 @@ def extract_media_features(
     id_col: str = "asset_id",
     media_col: str = "media",
     dim: int = 16,
-    fake_decode: bool = True,
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """Decode → feature-extract as mapInPandas. ``fake_decode=True``
-    (default, and the only option in this container) swaps the pixel
-    decode for a deterministic md5-seeded feature — the Spark plumbing
-    (schema, Arrow batching, partitioning) is identical to the real path.
+    """Decode → feature-extract as mapInPandas. The pixel decode is a
+    deterministic md5-seeded feature (this container has no imaging
+    library) — the Spark plumbing (schema, Arrow batching, partitioning)
+    is identical to a real extractor's.
 
     ``n_partitions``: optional explicit repartition for byte-budget
     sizing (media rows are megabytes; row counts lie). Deliberately a
@@ -658,10 +640,7 @@ def extract_media_features(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if fake_decode:
-                feats = pdf[media_col].map(lambda b: _fake_feature(b, dim))
-            else:
-                feats = pdf[media_col].map(lambda b: _decode_image(b))  # raises: stub
+            feats = pdf[media_col].map(lambda b: _fake_feature(b, dim))
             yield pd.DataFrame({id_col: pdf[id_col], "feature": feats})
 
     if n_partitions is not None:
@@ -750,22 +729,20 @@ def sample_video_frames(
     media_col: str = "media",
     every_n: int = 30,
     frame_bytes: int = 256,
-    fake_codec: bool = True,
 ) -> DataFrame:
     """Frame sampling: one output row per sampled frame (fan-out generator
     shape).
 
     * **AVI/MJPEG** assets (sniffed ``video/x-msvideo``) take the REAL
-      path regardless of ``fake_codec``: the RIFF 'movi' chunk walk
-      yields per-frame JPEGs and every ``every_n``-th one is emitted
-      (decodable with operators/jpeg.decode_jpeg downstream).
-    * other containers with ``fake_codec=True`` — the byte stream is
-      modeled as fixed-size ``frame_bytes`` frames and sliced: the Spark
-      plumbing (mapInPandas row fan-out, Arrow binary batches, typed
-      output schema) is exactly the real path's, and the byte slicing
-      keeps the registry query oracle-checkable end to end.
-    * other containers with ``fake_codec=False`` — NotImplementedError:
-      general video (mp4/h264 etc.) genuinely needs pyav/ffmpeg."""
+      path: the RIFF 'movi' chunk walk yields per-frame JPEGs and every
+      ``every_n``-th one is emitted (decodable with
+      operators/jpeg.decode_jpeg downstream).
+    * other containers — general video (mp4/h264 etc.) needs pyav/ffmpeg,
+      so the byte stream is modeled as fixed-size ``frame_bytes`` frames
+      and sliced: the Spark plumbing (mapInPandas row fan-out, Arrow
+      binary batches, typed output schema) is exactly the real path's,
+      and the byte slicing keeps the registry query oracle-checkable end
+      to end."""
 
     schema = f"{id_col} long, frame_index int, frame binary"
 
@@ -783,12 +760,6 @@ def sample_video_frames(
                             idxs.append(i)
                             frames.append(fr)
                     continue
-                if not fake_codec:
-                    raise NotImplementedError(
-                        "non-AVI video frame decoding requires a codec "
-                        "library (pyav/ffmpeg); not available in this "
-                        "environment — use fake_codec=True or AVI/MJPEG"
-                    )
                 n_frames = len(data) // frame_bytes
                 for i in range(0, n_frames, every_n):
                     ids.append(aid)
@@ -810,7 +781,6 @@ def resize_media(
     id_col: str = "asset_id",
     media_col: str = "media",
     target_bytes: int = 64,
-    fake_codec: bool = True,
     target_width: int = 8,
     target_height: int = 8,
 ) -> DataFrame:
@@ -823,12 +793,11 @@ def resize_media(
       :func:`resize_png`); pure Python + numpy + stdlib zlib, no external
       codec. PPM/BMP are byte-exact oracle-checkable; PNG is pixel-exact
       (compressed bytes aren't SQL-reconstructable).
-    * other formats with ``fake_codec=True`` — byte-stream downsampling to
-      ``target_bytes`` (every ceil(n/target)-th byte): the declared stand-
-      in for codecs this container cannot install (PIL/cv2), preserving
-      the real path's shape (deterministic, size-bounded, Arrow-batched).
-    * other formats with ``fake_codec=False`` — NotImplementedError, the
-      declared stub contract."""
+    * other formats, and malformed assets of the formats above —
+      byte-stream downsampling to ``target_bytes`` (every
+      ceil(n/target)-th byte): the declared stand-in for codecs this
+      container cannot install (PIL/cv2), preserving the real path's
+      shape (deterministic, size-bounded, Arrow-batched)."""
 
     schema = f"{id_col} long, resized binary, resized_bytes int"
 
@@ -850,12 +819,11 @@ def resize_media(
         for pdf in it:
             def shrink(data: bytes | None) -> bytes:
                 data = data or b""
-                kind = sniff_media_type(data)
-                real = codecs.get(kind)
+                real = codecs.get(sniff_media_type(data))
                 if real is not None:
                     try:
                         return real(data, target_width, target_height)
-                    except Exception as exc:
+                    except Exception:
                         # Bytes sniffed as a decodable container but the
                         # payload is malformed/truncated/out-of-contract.
                         # Codecs are data-dependent parsers, and their
@@ -863,19 +831,8 @@ def resize_media(
                         # zlib.error/IndexError/EOFError — one corrupt
                         # asset must not kill a 100 TB job, so ANY codec
                         # failure falls through to the byte-downsample
-                        # path; under the strict contract it surfaces as
-                        # a typed error instead.
-                        if not fake_codec:
-                            raise ValueError(
-                                f"undecodable {kind} asset"
-                            ) from exc
-                if real is None and not fake_codec:
-                    raise NotImplementedError(
-                        "media resize for this format requires an imaging "
-                        "library (PIL/cv2); not available in this "
-                        "environment — use fake_codec=True or a "
-                        "PPM/BMP/PNG/JPEG/GIF asset"
-                    )
+                        # path.
+                        pass
                 if len(data) <= target_bytes:
                     return data
                 step = -(-len(data) // target_bytes)  # ceil

@@ -2,29 +2,19 @@
 windows (the standard pretraining batching step).
 
 Pack assignment is arithmetic over a prefix sum of token counts in a
-deterministic document order, so it has two equivalent forms:
-
-* :func:`pack_assignments_window` — one global ordered window. Exact and
-  oracle-checkable, but the global sort funnels through a single
-  partition: the small-corpus / driver-contract form.
-* :func:`pack_assignments_distributed` — the 100 TB form. The prefix sum
-  decomposes because addition is associative: range-partition by id, local
-  cumulative sums per partition (narrow ``mapInPandas``), per-partition
-  totals to the driver (one long per partition), broadcast the exclusive
-  prefix offsets back. The data crosses the wire once (the range
-  exchange); no executor ever sees more than its partition.
-
-Both emit identical columns and identical values (asserted in
-tests/test_ml.py); the driver-contract query uses the window form so the
-DuckDB oracle applies verbatim.
+deterministic document order. :func:`pack_assignments_window` computes it
+with one global ordered window: exact and oracle-checkable (the DuckDB
+oracle applies verbatim), but the global sort funnels through a single
+partition. A corpus too large for that takes the same prefix sum from
+:func:`~clinical_bi_spark.operators.ranking.global_prefix_sums`, which
+decomposes it by range partition because addition is associative; at the
+benched corpus sizes its fixed cost loses to the one window.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from clinical_bi_spark.caching import persist_tracked
 from pyspark.sql.window import Window
 
 
@@ -48,69 +38,10 @@ def pack_assignments_window(
     tokens_col: str = "n_tokens",
     context: int = 2048,
 ) -> DataFrame:
-    """Pack assignment via a global ordered window (single-partition sort —
-    parity/oracle form; see module docstring for the scale form)."""
+    """Pack assignment via a global ordered window (single-partition sort;
+    see the module docstring for the scale form)."""
     w = Window.orderBy(id_col).rowsBetween(Window.unboundedPreceding, 0)
     pos = df.select(id_col, tokens_col).withColumn(
         "start_offset", F.sum(tokens_col).over(w) - F.col(tokens_col)
-    )
-    return _pack_columns(pos, tokens_col, context)
-
-
-def pack_assignments_distributed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    context: int = 2048,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Pack assignment without a global sort: range-partition + local
-    cumsum + driver-side prefix offsets (one integer per partition)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    np_ = n_partitions or spark.sparkContext.defaultParallelism
-    ranged = (
-        df.select(id_col, tokens_col)
-        .repartitionByRange(np_, F.col(id_col))
-        .sortWithinPartitions(id_col)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-
-    def local_cumsum(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in it:
-            ends = pdf[tokens_col].cumsum() + seen
-            pdf = pdf.assign(__local_end=ends)
-            if len(pdf):
-                seen = int(ends.iloc[-1])
-            yield pdf
-
-    schema = StructType(
-        list(ranged.schema.fields) + [StructField("__local_end", LongType())]
-    )
-    # persist: the totals job and the final job must see one partition layout
-    local = persist_tracked(ranged.mapInPandas(local_cumsum, schema=schema))
-
-    totals = {
-        r["__pid"]: r["t"]
-        for r in local.groupBy("__pid").agg(F.sum(tokens_col).alias("t")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(totals):
-        offsets.append((pid, acc))
-        acc += int(totals[pid])
-    offset_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __offset long")
-    pos = (
-        local.join(F.broadcast(offset_df), "__pid")
-        .withColumn(
-            "start_offset",
-            F.col("__offset") + F.col("__local_end") - F.col(tokens_col),
-        )
-        .drop("__pid", "__local_end", "__offset")
     )
     return _pack_columns(pos, tokens_col, context)

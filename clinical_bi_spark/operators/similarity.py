@@ -147,38 +147,6 @@ def lsh_bucket_topk(
     )
 
 
-def _kmeans_centroids(
-    corpus: DataFrame,
-    emb_col: str,
-    n_cells: int,
-    max_iter: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """Distributed Lloyd's iterations via Spark ML KMeans (k-means||
-    init): the real IVF coarse quantizer. Centroid learning is one
-    distributed fit over the corpus; the resulting (tiny) centroid table
-    broadcasts everywhere downstream."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.select(
-        array_to_vector(F.col(emb_col).cast("array<double>")).alias("features")
-    )
-    # cosine distance ⇒ spherical k-means: cells partition directions, not
-    # magnitudes — the right quantizer when the probe metric is cosine
-    # (Euclidean centroids of high-dim data collapse toward the origin and
-    # give unbalanced cosine cells)
-    model = KMeans(
-        k=n_cells, maxIter=max_iter, seed=seed, distanceMeasure="cosine"
-    ).fit(vecs)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return corpus.sparkSession.createDataFrame(
-        rows, "cell_id int, cell_emb array<double>"
-    )
-
-
 def det_kmeans_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -339,6 +307,35 @@ def det_kmeans_rows(
     return [(cid, cent[cid]) for cid in range(k)]
 
 
+def _np_nearest(unit: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Argmax-cosine cell of each unit row; first max (lowest cell) wins
+    ties, and an all-zero centroid keeps norm 1."""
+    cnorm = np.linalg.norm(cent, axis=1)
+    cnorm[cnorm == 0.0] = 1.0
+    return np.argmax(unit @ (cent / cnorm[:, None]).T, axis=1)
+
+
+def _np_lloyd(
+    points: np.ndarray, n_cells: int, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Spherical Lloyd's iterations seeded by the first ``n_cells`` rows:
+    argmax-cosine assignment, unnormalized member sums, empty cells keep
+    their previous centroid. Returns the centroids and the unit-norm
+    points (all-zero rows stay zero)."""
+    cent = points[: min(n_cells, len(points))].copy()
+    norms = np.linalg.norm(points, axis=1)
+    norms[norms == 0.0] = 1.0
+    unit = points / norms[:, None]
+    for _ in range(iters):
+        best = _np_nearest(unit, cent)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, best, points)
+        hit = np.zeros(len(cent), dtype=bool)
+        hit[np.unique(best)] = True
+        cent = np.where(hit[:, None], sums, cent)
+    return cent, unit
+
+
 def np_kmeans_rows(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -377,19 +374,7 @@ def np_kmeans_rows(
         [list(r.emb) for r in sorted(rows, key=lambda r: r.vec_id)],
         dtype=np.float64,
     )
-    cent = train[: min(n_cells, len(train))].copy()
-    tnorm = np.linalg.norm(train, axis=1)
-    tnorm[tnorm == 0.0] = 1.0
-    tn = train / tnorm[:, None]
-    for _ in range(iters):
-        cnorm = np.linalg.norm(cent, axis=1)
-        cnorm[cnorm == 0.0] = 1.0
-        best = np.argmax(tn @ (cent / cnorm[:, None]).T, axis=1)
-        sums = np.zeros_like(cent)
-        np.add.at(sums, best, train)
-        hit = np.zeros(len(cent), dtype=bool)
-        hit[np.unique(best)] = True
-        cent = np.where(hit[:, None], sums, cent)
+    cent, _ = _np_lloyd(train, n_cells, iters)
     return [(cid, [float(v) for v in cent[cid]]) for cid in range(len(cent))]
 
 
@@ -407,23 +392,8 @@ def coarse_shards(
     if not len(cent_embs):
         return [], []
     cent = np.asarray(cent_embs, dtype=np.float64)
-    k = len(cent)
-    coarse = cent[: min(n_coarse, k)].copy()
-    norms = np.linalg.norm(cent, axis=1)
-    norms[norms == 0.0] = 1.0
-    cn = cent / norms[:, None]
-    for _ in range(iters):
-        gnorm = np.linalg.norm(coarse, axis=1)
-        gnorm[gnorm == 0.0] = 1.0
-        best = np.argmax(cn @ (coarse / gnorm[:, None]).T, axis=1)
-        sums = np.zeros_like(coarse)
-        np.add.at(sums, best, cent)
-        hit = np.zeros(len(coarse), dtype=bool)
-        hit[np.unique(best)] = True
-        coarse = np.where(hit[:, None], sums, coarse)
-    gnorm = np.linalg.norm(coarse, axis=1)
-    gnorm[gnorm == 0.0] = 1.0
-    shard_of = np.argmax(cn @ (coarse / gnorm[:, None]).T, axis=1)
+    coarse, cn = _np_lloyd(cent, n_coarse, iters)
+    shard_of = _np_nearest(cn, coarse)
     rows = [
         (sid, [float(v) for v in coarse[sid]]) for sid in range(len(coarse))
     ]
@@ -438,29 +408,21 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    kmeans_centroids: bool = True,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-style ANN: k-means coarse quantizer (default; seeded Spark ML
-    KMeans fit — deterministic run-to-run) or, with
-    ``kmeans_centroids=False``, the dependency-free fallback of taking
-    the ``n_cells`` lowest-id corpus vectors. Every corpus row joins its
-    nearest cell; a query probes its ``nprobe`` nearest cells only.
-    Assignment, probe and verify cosines are numpy batch arithmetic.
+    """IVF-style ANN over ``centroids`` (``cell_id``, ``cell_emb``) or, by
+    default, the dependency-free quantizer of the ``n_cells`` lowest-id
+    corpus vectors. Every corpus row joins its nearest cell; a query
+    probes its ``nprobe`` nearest cells only. Assignment, probe and
+    verify cosines are numpy batch arithmetic.
 
-    With the deterministic fallback centroids the whole pipeline
-    (assignment, multi-probe, candidate equi-join, ranked top-k) has a
-    SQL oracle; only the learned k-means quantizer stays outside it.
-    Passing ``centroids`` explicitly (e.g. the deterministic
-    :func:`det_kmeans_centroids` fit) overrides both built-in quantizers —
-    with that fit the oracle covers the quantizer TRAINING too, which is
+    With the lowest-id centroids the whole pipeline (assignment,
+    multi-probe, candidate equi-join, ranked top-k) has a SQL oracle.
+    With the deterministic :func:`det_kmeans_centroids` fit passed as
+    ``centroids`` the oracle covers the quantizer TRAINING too, which is
     how the registered ``sim_ann_ivf`` carries a full oracle.
     """
-    if centroids is not None:
-        pass
-    elif kmeans_centroids:
-        centroids = _kmeans_centroids(corpus, emb_col, n_cells)
-    else:
+    if centroids is None:
         centroids = (
             corpus.orderBy(F.col(id_col)).limit(n_cells)
             .select(

@@ -11,6 +11,8 @@ Bernoulli — right scale behavior, different semantics. Both are provided:
 * :func:`keyed_hash_split` — scale path: deterministic per-key hash,
   no shuffle, reproducible across engines and runs (used by the
   m1_keyed_split oracle query).
+* :func:`exact_size_seeded_split_distributed` — the parity contract at
+  scale, ranked by :func:`~clinical_bi_spark.operators.ranking.global_row_number`.
 * randomSplit — Spark built-in, recommended when exact sizes don't matter.
 """
 
@@ -18,9 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from clinical_bi_spark.caching import persist_tracked
 from pyspark.sql.window import Window
+
+from clinical_bi_spark.operators.ranking import global_row_number
 
 
 def exact_size_seeded_split(
@@ -98,72 +100,24 @@ def exact_size_seeded_split_distributed(
     validate_frac: float,
     seed: int = 42,
     order_key: str | None = None,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Exact-size 3-way split WITHOUT the single-partition global sort —
     the 100 TB form of :func:`exact_size_seeded_split` (same contract:
     exact floor(frac·n) sizes, seeded, deterministic).
 
-    Global rank is decomposed into per-partition work:
-
-    1. ``repartitionByRange`` on the seeded random key — the only
-       full-data shuffle, uniform across partitions;
-    2. ``sortWithinPartitions`` + a running-counter ``mapInPandas`` —
-       narrow local rank, no window exchange;
-    3. per-partition counts → driver-side prefix sum (``n_partitions``
-       integers) → broadcast offset join: global_rank = offset + local.
-
-    The data crosses the wire once and no executor ever holds more than
-    its partition; the driver holds one integer per partition.
+    The rank over (rand(seed), order_key) is
+    :func:`~clinical_bi_spark.operators.ranking.global_row_number`: one
+    range shuffle, a narrow local rank and a broadcast of per-partition
+    offsets, so no executor ever holds more than its partition.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     n = df.count()
     n_train = int(train_frac * n)
     n_validate = int(validate_frac * n)
-    np_ = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    range_cols = [F.col("__r")] + ([F.col(order_key)] if order_key else [])
-
-    ranged = (
-        df.withColumn("__r", F.rand(seed))
-        .repartitionByRange(np_, *range_cols)
-        .sortWithinPartitions(*range_cols)
-        .withColumn("__pid", F.spark_partition_id())
+    order_cols = [F.col("__r")] + ([F.col(order_key)] if order_key else [])
+    ranked = global_row_number(
+        df.withColumn("__r", F.rand(seed)), order_cols, out_col="__rank"
     )
-
-    def add_local_rank(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in it:
-            pdf = pdf.assign(__local=range(seen, seen + len(pdf)))
-            seen += len(pdf)
-            yield pdf
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        list(ranged.schema.fields) + [StructField("__local", LongType())]
-    )
-    # persist: the count-per-partition job and the final job must see the
-    # same rand() draw / partition layout
-    ranked = persist_tracked(ranged.mapInPandas(add_local_rank, schema=schema))
-
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in ranked.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    offset_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid int, __offset long"
-    )
-    ranked = ranked.join(F.broadcast(offset_df), "__pid").withColumn(
-        "__rank", F.col("__offset") + F.col("__local") + 1
-    )
-    drop = ["__r", "__pid", "__local", "__offset", "__rank"]
+    drop = ["__r", "__rank"]
     train = ranked.filter(F.col("__rank") <= n_train).drop(*drop)
     validate = ranked.filter(
         (F.col("__rank") > n_train) & (F.col("__rank") <= n_train + n_validate)
@@ -190,7 +144,7 @@ def stratified_sample_exact(
     this form trades one window shuffle for exact sizes + reproducibility.
     Skew note: a hot stratum serializes its window; at 100 TB pre-split a
     giant stratum by a salt on the hash order (rank is still exact per
-    salt-range prefix sum, same trick as exact_size_seeded_split_distributed).
+    salt-range prefix sum, same trick as ranking.global_row_number).
     """
     b = split_bucket(F.col(key), modulus)
     w = Window.partitionBy(stratum_col).orderBy("__b", key)

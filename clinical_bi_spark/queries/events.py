@@ -1319,11 +1319,11 @@ def evt_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exchange-free on top of the window sort (plan-pinned). Monster-key
 # skew (the per-user window's honest hazard) is measured, not assumed:
 # at x50 with 20% of 5M events on ONE key the box still absorbs the
-# single-task sort (3.14 s vs 1.22 even; PERF.md), and the exact
-# day-decomposed mitigation is IMPLEMENTED below
-# (evt_time_weighted_avg_sharded — wins 1.8x on the skew arm,
-# value-identical by distributed exceptAll and by the boundary-crossing
-# synthetic pin), not merely named.
+# single-task sort (3.14 s vs 1.22 even; PERF.md). At the ~10^8-events-
+# per-key regime where that sort owns the wall, the LOCF segment sum
+# splits exactly at day boundaries (intra-day sums under hash(user, day)
+# plus a LEAD over the per-user day relation for the crossing segments);
+# no workload reaches that regime, so only the per-user form ships.
 # ---------------------------------------------------------------------------
 
 _TWA_ORACLE = """
@@ -1378,88 +1378,6 @@ def evt_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("num"),
         (F.max("us") - F.min("us")).alias("span"),
         F.count(F.lit(1)).alias("n_events"),
-    )
-    return a.select(
-        "user_id",
-        "n_events",
-        F.when(
-            F.col("span") > 0,
-            F.expr(
-                "10000 * (num div span) + (10000 * (num % span)) div span"
-            ),
-        ).alias("twa_micro"),
-    )
-
-
-def evt_time_weighted_avg_sharded(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The skew-proof twin of :func:`evt_time_weighted_avg` — exact same
-    output (differential-pinned in tests/test_analytics.py), different
-    partition granularity for the heavy pass.
-
-    The plain form's window partitions by user: a monster key (one
-    device/service emitting most of the stream) serializes its whole
-    history into ONE task's sort. Measured at x50-with-skew (one user
-    holding 20% of 5M events) the box absorbs it (PERF.md) — the cliff
-    regime is ~10^8+ events on one key, where a single sort task owns
-    the wall. This form splits the LOCF segment sum AT DAY BOUNDARIES,
-    which is exact by associativity: every consecutive-event segment
-    either lies inside one (user, day) — summed under the finer
-    hash(user, day) partitioning, monster keys shatter across days —
-    or crosses from a day's LAST event to the NEXT OBSERVED day's FIRST
-    event, reconstructed from per-day partials (last value / first and
-    last timestamp) with a LEAD over the per-user DAY relation (at most
-    span-days rows per user, never raw events).
-    """
-    t = load_tables(tune(spark), sf_dir)
-    ev = t.events.select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    ).withColumn("day", F.col("us") - (F.col("us") % F.lit(86_400_000_000)))
-    # heavy pass: intra-day segments + the day's boundary facts, all under
-    # hash(user, day) — the skew-shattering key
-    wd = Window.partitionBy("user_id", "day").orderBy("us", "event_id")
-    seg = ev.select(
-        "user_id",
-        "day",
-        "cents",
-        "us",
-        "event_id",
-        F.lead("us").over(wd).alias("nus"),
-    )
-    day_partials = seg.groupBy("user_id", "day").agg(
-        F.sum(
-            F.when(
-                F.col("nus").isNotNull(),
-                F.col("cents") * (F.col("nus") - F.col("us")),
-            ).otherwise(F.lit(0))
-        ).alias("intra_num"),
-        F.min("us").alias("first_us"),
-        F.max("us").alias("last_us"),
-        F.max_by(
-            "cents", F.struct(F.col("us"), F.col("event_id"))
-        ).alias("last_cents"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    # light pass: boundary segments over the per-user DAY relation
-    wu = Window.partitionBy("user_id").orderBy("day")
-    days = day_partials.select(
-        "*", F.lead("first_us").over(wu).alias("next_first_us")
-    )
-    a = days.groupBy("user_id").agg(
-        F.sum(
-            F.col("intra_num")
-            + F.when(
-                F.col("next_first_us").isNotNull(),
-                F.col("last_cents")
-                * (F.col("next_first_us") - F.col("last_us")),
-            ).otherwise(F.lit(0))
-        ).alias("num"),
-        (F.max("last_us") - F.min("first_us")).alias("span"),
-        F.sum("n_events").alias("n_events"),
     )
     return a.select(
         "user_id",

@@ -87,10 +87,10 @@ def m1_exact_split_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("m1_distributed_split_sizes", oracle=_SPLIT_SIZES_ORACLE)
 def m1_distributed_split_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1 at scale: the distributed exact-size split (range partition +
-    narrow per-partition rank + broadcast offset join — no SinglePartition
-    exchange, plan-asserted in tests/test_ml.py) honors the identical
-    exact-size contract, pinned by the same oracle as
+    """M1 at scale: the distributed exact-size split (ranked by
+    ranking.global_row_number — no SinglePartition data exchange and no
+    Python step, plan-asserted in tests/test_plans.py) honors the
+    identical exact-size contract, pinned by the same oracle as
     m1_exact_split_sizes."""
     from clinical_bi_spark.operators.split import (
         exact_size_seeded_split_distributed,

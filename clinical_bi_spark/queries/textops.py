@@ -867,8 +867,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokens. Pack assignment is a pure prefix sum, so it is exactly
 # SQL-expressible and oracle-checked. The global ordered window is the
 # small-corpus form; at 100 TB the same prefix sum decomposes into
-# per-partition sums + a driver-side offset broadcast (the
-# exact_size_seeded_split_distributed pattern in operators/split.py) —
+# per-partition sums + broadcast offsets (ranking.global_prefix_sums) —
 # the cut points are identical because addition is associative.
 # ---------------------------------------------------------------------------
 
@@ -1734,28 +1733,6 @@ def audited_token_relation(
     # lazily from the cached string dfreq — vocabulary-sized work
     dfreq_h = dfreq.select(hash_fn(F.col("w")).alias("w"), "df")
     return (toks_h, dfreq_h) if return_dfreq else toks_h
-
-
-def jaccard_token_audit(toks: DataFrame, hash_fn=None) -> tuple[int, int]:
-    """The injectivity certificate for the u64 token mode: returns
-    (distinct tokens, distinct hashes) over the corpus vocabulary.
-    Equality proves the hash collision-free on this corpus, hence the
-    hashed Jaccard join's output exactly equals the string form's. One
-    partial-agg'd pass over the token relation — O(vocab) state,
-    corpus-size-independent shuffle. ``hash_fn`` defaults to the
-    production xxhash64; tests inject a weak hash to prove the audit
-    detects collisions."""
-    hash_fn = hash_fn or F.xxhash64
-    # collapse to the VOCABULARY first (partial-agg'd distinct), then one
-    # count + countDistinct over it — two countDistincts over the full
-    # token stream would expand the relation 2x before shrinking (r10:
-    # matters now that every u64-mode query run pays for the audit)
-    vocab = toks.select(F.explode("words").alias("w")).distinct()
-    row = vocab.agg(
-        F.count("*").alias("n_tok"),
-        F.countDistinct(hash_fn(F.col("w"))).alias("n_hash"),
-    ).first()
-    return int(row["n_tok"]), int(row["n_hash"])
 
 
 def _jaccard_prefix_candidates(

@@ -318,10 +318,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     training sample, argmax-cosine assignment, sorted-fold unnormalized
     centroid sums, fixed 3 iterations), so the oracle covers TRAINING +
     assignment + multi-probe + rank end to end; nothing about this query
-    is learned-opaque anymore. The Spark-ML seeded k-means codebook
-    remains available (``ivf_topk(kmeans_centroids=True)``) as the
-    learned alternative — recall floors for both quantizers are pinned
-    in tests/test_similarity.py. The assignment, probe and rank cosines
+    is learned-opaque anymore. Its recall floor and cell balance are
+    pinned in tests/test_similarity.py. The assignment, probe and rank cosines
     are numpy batch arithmetic; the deterministic FIT stays sequential,
     because its determinism is the oracle's foundation."""
     from clinical_bi_spark.operators.similarity import (
@@ -720,7 +718,7 @@ SELECT q_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank FROM (
 def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with the deterministic lowest-id quantizer — the
     oracle-adjudicable form of the IVF mechanics (see _IVF_EXACT_ORACLE).
-    The production path swaps the quantizer for the seeded k-means
+    The production path swaps the quantizer for the deterministic k-means
     codebook (sim_ann_ivf) with identical assignment/probe/join/rank
     plumbing — THIS query is what proves that plumbing correct."""
     from clinical_bi_spark.operators.similarity import ivf_topk
@@ -733,7 +731,6 @@ def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_cells=16,
         nprobe=4,
-        kmeans_centroids=False,
     )
 
 

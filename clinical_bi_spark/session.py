@@ -97,10 +97,11 @@ def warm(spark: SparkSession) -> SparkSession:
     """One-time session warm-up so the first real query measures its plan,
     not session infrastructure. Two one-row probes:
 
-    * the winnow fingerprint fragment — now the Arrow path (one mapInPandas
-      round trip, which also forks a worker); with ``use_arrow=False`` it
-      was the engine's most expensive janino compile (~7-9 s cold). Kept
-      because the probe also warms the fps-consuming aggregate exprs.
+    * the winnow fingerprint fragment — the Arrow path (one mapInPandas
+      round trip, which also forks a worker; its expression form,
+      ``winnow_fingerprints_expr``, was the engine's most expensive janino
+      compile, ~7-9 s cold). Kept because the probe also warms the
+      fps-consuming aggregate exprs.
     * a trivial pandas_udf — starts the Python daemon and forks the
       Python/Arrow worker pool (~3-4 s one-time), which otherwise lands in
       the first UDF query's slot (sim_ann_* / multimodal). Workers are

@@ -106,58 +106,6 @@ def save_as_table(df: DataFrame, name: str, bucket_by: tuple[int, str] | None = 
     writer.saveAsTable(name)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """ORC sink (Spark-native): same overwrite/partitioning contract as
-    write_parquet for warehouse consumers that expect ORC stripes."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def compact_parquet(
-    spark, path: str, out_path: str, target_file_mb: int = 128
-) -> int:
-    """Small-file compaction: rewrite a fragmented parquet directory into
-    files near ``target_file_mb`` (the operational fix for the
-    many-small-files problem that kills scan throughput and NameNode/
-    listing latency at 100 TB — thousands of kilobyte files become a
-    handful of row-group-sized ones). File count derives from actual
-    input bytes, not row counts, so skewed row widths still land near
-    the target size. Returns the output file count."""
-    import math
-    import os as _os
-
-    total_bytes = sum(
-        _os.path.getsize(_os.path.join(r, f))
-        for r, _, files in _os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    df.repartition(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
-def write_range_layout(
-    df: DataFrame, path: str, order_col: str, n_files: int
-) -> None:
-    """Range-partitioned, sorted data layout: rows range-partition on
-    ``order_col`` and sort within each file, so every output file covers
-    a DISJOINT value range and its parquet min/max statistics prune
-    whole files for range predicates — the poor man's Z-order for a
-    single sort dimension, and the layout a 100 TB time-series table
-    wants on its timestamp column (tests verify disjointness from the
-    files' own parquet footers)."""
-    (
-        df.repartitionByRange(n_files, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def create_readonly_layer(
     spark: SparkSession,
     tables: dict[str, DataFrame],

@@ -146,11 +146,6 @@ class Tables(ParquetTables):
     def _prepare(self, name: str, df: DataFrame) -> DataFrame:
         return normalize_events(df) if name == "events" else df
 
-    def register_views(self) -> None:
-        """Register every table as a temp view for the spark.sql() path."""
-        for name in TABLE_NAMES:
-            getattr(self, name).createOrReplaceTempView(name)
-
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Tables:
     """Entry point used by every query: bundle of lazy DataFrames."""
@@ -238,23 +233,3 @@ def jdbc_reader(spark: SparkSession, options: dict[str, str]):
     contract-tested only; the reader machinery itself is proven.
     """
     return spark.read.format("jdbc").options(**options)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (Spark-native, no extra jar): the columnar interchange
-    format a warehouse-side consumer (Hive/Trino) most often hands over.
-    Same pushdown/pruning contract as parquet — ORC carries min/max
-    stripe statistics, and Spark's OrcScan reports PushedFilters the same
-    way (asserted in tests/test_sinks_sources.py)."""
-    return spark.read.orc(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines source with an EXPLICIT schema by default-contract:
-    schema inference reads the data twice and types drift run-to-run at
-    100 TB — callers pass the schema; pass ``schema=None`` consciously
-    for exploration only."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

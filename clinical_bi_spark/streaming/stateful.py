@@ -398,8 +398,8 @@ def stream_cep_matches(
     )
     # NOTE: the memory sink retains every provisional-tail snapshot until
     # the final dedup below — fine on the bounded harness (this is the
-    # drain adapter); production consumes `raw` incrementally (e.g. the
-    # foreachBatch file sink in windows.write_stream_foreachbatch).
+    # drain adapter); production consumes `raw` incrementally (e.g. a
+    # foreachBatch sink, as windows.stream_upsert_current_state uses).
     raw = _run_to_completion(emitted, "update", progress_sink)
     final = (
         raw.groupBy("user_id", "match_start_ns")

@@ -185,32 +185,6 @@ def dedup_with_watermark(
     )
 
 
-def write_stream_foreachbatch(
-    spark: SparkSession, sf_dir: str, out_dir: str, window: str = "5 minutes"
-) -> None:
-    """Exactly-once-style file sink via foreachBatch: each micro-batch's
-    aggregate lands in an epoch-keyed parquet directory, so replays
-    overwrite instead of duplicating (the guide's foreachBatch pattern).
-    """
-    events = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_stream_interval_join(
     spark: SparkSession,
     sf_dir: str,

@@ -1200,51 +1200,6 @@ def test_twa_remainder_split_exactness(spark, tmp_path):
     assert r.twa_micro == (10000 * num) // span
 
 
-def test_twa_sharded_twin_equals_window_form(spark, tmp_path):
-    """The day-decomposed (skew-proof) twin must equal the per-user-window
-    form row for row — on the real corpus AND on a monster-key synthetic
-    whose segments cross day boundaries and skip whole days (the exact
-    cases the boundary reconstruction must get right)."""
-    import datetime
-
-    from clinical_bi_spark.queries.events import (
-        evt_time_weighted_avg,
-        evt_time_weighted_avg_sharded,
-    )
-
-    def snapshot(fn, sf):
-        return {
-            r.user_id: (r.n_events, r.twa_micro) for r in fn(spark, sf).collect()
-        }
-
-    assert snapshot(evt_time_weighted_avg, SF_ORACLE) == snapshot(
-        evt_time_weighted_avg_sharded, SF_ORACLE
-    )
-
-    # monster key: 500 events across 3 days for user 1 (with a skipped
-    # day between observations), plus a one-event user and an
-    # all-same-timestamp user (span 0 → NULL on both forms)
-    t0 = datetime.datetime(2024, 3, 1)
-    rows = []
-    for i in range(500):
-        ts = t0 + datetime.timedelta(
-            days=(i % 3) * 2, seconds=17 * i, microseconds=13 * i
-        )
-        rows.append((i, ts, 1, "view", float(i % 7) + 0.25, "{}"))
-    rows.append((1000, t0, 2, "view", 3.00, "{}"))
-    rows += [(1100 + j, t0, 3, "view", 1.00 + j, "{}") for j in range(4)]
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-    a = snapshot(evt_time_weighted_avg, str(tmp_path))
-    b = snapshot(evt_time_weighted_avg_sharded, str(tmp_path))
-    assert a == b
-    assert a[2] == (1, None) and a[3][1] is None  # span-0 contracts hold
-    assert a[1][0] == 500 and a[1][1] is not None
-
-
 # ---------------------------------------------------------------------------
 # graph_adamic_adar — parked r17 candidate (link prediction over the part
 # co-purchase graph; see the parking comment in queries/graph.py)

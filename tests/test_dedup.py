@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from clinical_bi_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash_neardup_pairs,
-    word_shingles,
 )
 
 BASE_DOCS = [
@@ -67,16 +66,6 @@ def test_simhash_hamming_separates(planted):
     planted_pairs = {(2 * i, 2 * i + 1) for i in range(len(BASE_DOCS))}
     hits = sum(1 for p in planted_pairs if p in found)
     assert hits >= 4, f"simhash should catch most one-word mutations: {found}"
-
-
-def test_word_shingles_shapes(spark):
-    df = spark.createDataFrame([("a b c d",)], "text string")
-    out = df.select(
-        word_shingles(F.col("text"), 1).alias("uni"),
-        word_shingles(F.col("text"), 3).alias("tri"),
-    ).head()
-    assert out.uni == ["a", "b", "c", "d"]
-    assert out.tri == ["a b c", "b c d"]
 
 
 def test_minhash_estimate_tracks_exact_jaccard(planted):
@@ -526,39 +515,27 @@ def test_jaccard_bitmask_empty_corpus(spark):
 
 def test_jaccard_token_audit_certifies_bench_corpus(spark):
     """The injectivity certificate must hold on the bench corpus (and at
-    the adjudication SF): distinct tokens == distinct hashes, so the u64
-    output is PROVABLY the string output there."""
+    the adjudication SF): the audit inside ``audited_token_relation``
+    passes without a fallback warning and hands back hashed tokens, so
+    the u64 output is PROVABLY the string output there."""
+    import warnings
+
     from clinical_bi_spark.functions.text import word_tokens
-    from clinical_bi_spark.queries.textops import jaccard_token_audit
+    from clinical_bi_spark.queries.textops import audited_token_relation
     from clinical_bi_spark.session import tune
     from clinical_bi_spark.sources import load_tables
     from tests.conftest import SF_ORACLE
 
     t = load_tables(tune(spark), SF_ORACLE)
     toks = t.documents.select(
-        F.array_distinct(word_tokens(F.lower(F.col("text")))).alias("words")
+        "doc_id",
+        F.array_distinct(word_tokens(F.lower(F.col("text")))).alias("words"),
     )
-    n_tok, n_hash = jaccard_token_audit(toks)
-    assert n_tok == n_hash
-    assert n_tok > 0
-
-
-def test_jaccard_token_audit_detects_planted_collision(spark):
-    """The audit must actually FAIL when distinct tokens share a hash.
-    A real xxhash64 collision is unconstructible in a test, so inject a
-    deliberately weak hash (string length) and assert the audit reports
-    fewer hashes than tokens — while the production xxhash64 stays
-    injective on the same vocabulary."""
-    from clinical_bi_spark.queries.textops import jaccard_token_audit
-
-    toks = spark.createDataFrame(
-        [(["alpha", "gamma"],), (["beta", "delta"],)], "words array<string>"
-    )
-    n_tok, n_hash = jaccard_token_audit(toks)
-    assert (n_tok, n_hash) == (4, 4)  # production hash: injective here
-    n_tok_w, n_hash_w = jaccard_token_audit(toks, hash_fn=F.length)
-    assert n_tok_w == 4
-    assert n_hash_w == 2  # len-5 bucket {alpha, gamma, delta} collides
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        toks_h = audited_token_relation(toks)
+    assert toks_h.schema["words"].dataType.simpleString() == "array<bigint>"
+    assert toks_h.filter(F.size("words") > 0).count() > 0
 
 
 def test_forged_audit_failure_engages_string_fallback(spark, tmp_path, monkeypatch):

@@ -101,7 +101,7 @@ def test_distributed_exact_split_contract(spark):
 
     df = spark.range(10_000).withColumnRenamed("id", "k")
     train, val, test = exact_size_seeded_split_distributed(
-        df, 0.7, 0.005, seed=11, order_key="k", n_partitions=8
+        df, 0.7, 0.005, seed=11, order_key="k"
     )
     n_tr, n_va, n_te = train.count(), val.count(), test.count()
     assert (n_tr, n_va) == (7000, 50) and n_tr + n_va + n_te == 10_000
@@ -113,7 +113,7 @@ def test_distributed_exact_split_contract(spark):
 
     tr2 = ids(
         exact_size_seeded_split_distributed(
-            df, 0.7, 0.005, seed=11, order_key="k", n_partitions=8
+            df, 0.7, 0.005, seed=11, order_key="k"
         )[0]
     )
     assert tr2 == tr, "same seed must give the same membership"
@@ -122,35 +122,6 @@ def test_distributed_exact_split_contract(spark):
     with contextlib.redirect_stdout(buf):
         train.explain("formatted")
     assert "SinglePartition" not in buf.getvalue()
-
-
-def test_pack_distributed_equals_window(spark):
-    """The per-partition prefix-sum packing equals the global-window form
-    value for value — the 100 TB decomposition changes the plan, never
-    the cut points."""
-    from clinical_bi_spark.functions.text import token_count
-    from clinical_bi_spark.operators.packing import (
-        pack_assignments_distributed,
-        pack_assignments_window,
-    )
-    from tests.conftest import SF_ORACLE
-
-    toks = (
-        spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-        .select(
-            "doc_id",
-            token_count(F.col("text")).cast("bigint").alias("n_tokens"),
-        )
-    )
-    cols = ["doc_id", "n_tokens", "start_offset", "pack_id", "crosses_boundary"]
-    w = {tuple(r) for r in pack_assignments_window(toks).select(cols).collect()}
-    d = {
-        tuple(r)
-        for r in pack_assignments_distributed(toks, n_partitions=7)
-        .select(cols)
-        .collect()
-    }
-    assert w == d and len(w) == 500
 
 
 def test_lmg_matches_independent_permutation_implementation():

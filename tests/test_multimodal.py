@@ -1,6 +1,6 @@
 """Multimodal plumbing tests: synthetic media bytes (hand-built PNG/GIF/
 JPEG/WAV headers — no imaging libraries involved), metadata extraction,
-fake-decode feature path, stub behavior."""
+fake-decode feature path and the byte-downsample fallbacks."""
 
 from __future__ import annotations
 
@@ -96,23 +96,6 @@ def test_extract_media_features_fake_path(media_df):
     assert len(dups) == 1 and dups[0].keep == 1
 
 
-def test_real_decode_is_stubbed(media_df):
-    with pytest.raises(Exception) as err:
-        extract_media_features(media_df, fake_decode=False).collect()
-    assert "NotImplementedError" in str(err.value) or isinstance(
-        err.value, NotImplementedError
-    )
-
-
-def test_video_sampling_real_codec_is_stubbed(media_df):
-    # non-AVI video with fake_codec=False stays a declared stub (general
-    # mp4/h264 needs pyav/ffmpeg); since r6 the check is PER-ASSET inside
-    # the worker — AVI/MJPEG assets take a real path — so the stub raises
-    # lazily on collect, same contract as resize_media's
-    with pytest.raises(Exception, match="NotImplementedError|codec library"):
-        sample_video_frames(media_df, fake_codec=False).collect()
-
-
 def test_video_sampling_fake_codec_fanout(spark):
     # 600 bytes -> 2 full 256-byte frames -> indices 0 (and 2 if >=3 frames);
     # every_n=2 samples frame 0 only; 1100 bytes -> 4 frames -> 0 and 2
@@ -141,11 +124,6 @@ def test_resize_fake_codec_bounds_and_determinism(spark):
     assert rows[3].resized == b"" and rows[3].resized_bytes == 0
     again = {r.asset_id: r for r in resize_media(df, target_bytes=64).collect()}
     assert all(again[k].resized == rows[k].resized for k in rows)
-
-    # fake_codec=False is now a per-asset contract (PPM assets still take
-    # the real codec path): the stub raises lazily inside the worker
-    with pytest.raises(Exception, match="NotImplementedError|imaging library"):
-        resize_media(df, fake_codec=False).collect()
 
 
 def test_ppm_codec_roundtrip_and_parser():
@@ -191,8 +169,7 @@ def test_ppm_codec_rejects_malformed():
 
 
 def test_resize_media_dispatch(spark):
-    """PPM assets take the real pixel path; others byte-downsample under
-    fake_codec and raise under fake_codec=False."""
+    """PPM assets take the real pixel path; others byte-downsample."""
     import numpy as np
 
     from clinical_bi_spark.operators.multimodal import encode_ppm, resize_media
@@ -210,16 +187,10 @@ def test_resize_media_dispatch(spark):
     assert rows[1] == encode_ppm(img[::4, ::4])
     assert len(rows[2]) <= 64  # fake byte-downsample path
 
-    strict = resize_media(df, fake_codec=False, target_width=4, target_height=4)
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|imaging library"):
-        strict.collect()  # the stub raise surfaces via Py4J
-
 
 def test_resize_tolerates_malformed_ppm(spark):
     """Bytes that sniff as PPM ('P6' + whitespace) but are truncated or
-    corrupt must fall back to the byte-downsample path under fake_codec —
+    corrupt must fall back to the byte-downsample path —
     one bad asset must not fail the job."""
     from clinical_bi_spark.operators.multimodal import resize_media
 
@@ -621,7 +592,7 @@ def test_resize_media_survives_malformed_codec_assets(spark):
     """One corrupt asset must not kill the job: truncated/garbled
     PNG/JPEG/GIF payloads (whose failure modes span struct.error,
     zlib.error, IndexError — not just ValueError) fall through to the
-    byte-downsample path; the strict contract surfaces a typed error."""
+    byte-downsample path."""
     import numpy as np
 
     from clinical_bi_spark.operators.gif import encode_gif_gray
@@ -647,11 +618,6 @@ def test_resize_media_survives_malformed_codec_assets(spark):
     assert out[5]["resized_bytes"] > 0      # good asset took the codec path
     for k in (1, 2, 3, 4):
         assert out[k]["resized_bytes"] <= 64  # fell to byte-downsample
-
-    with pytest.raises(Exception, match="undecodable"):
-        resize_media(
-            df.filter("asset_id = 2"), fake_codec=False
-        ).collect()
 
 
 def test_gif89a_with_extension_blocks_decodes():

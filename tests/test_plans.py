@@ -571,6 +571,7 @@ def test_pid_local_check_reads_the_partition_spec(spec, pid_local):
         "agg_equidepth_histogram",
         "agg_gini_coefficient",
         "agg_ks_two_sample",
+        "m1_distributed_split_sizes",
     ],
 )
 def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
@@ -590,13 +591,18 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
     can never funnel (its partition population is one range shard), so
     it is exactly the shape this pin exists to allow. Every other
     window spec (anything not partitioned by __pid, in particular a
-    global/empty partition spec) stays forbidden."""
+    global/empty partition spec) stays forbidden.
+
+    The distributed exact split ranks through the same operator and ends
+    in one scalar count per split (the m13 allowance). No member's local
+    rank crosses into Python: the plans hold no MapInPandas."""
     plan = explain(spark, name)
     assert "ntile" not in plan, plan
     assert "row_number" not in plan, plan
+    assert "MapInPandas" not in plan, plan
     _assert_windows_are_pid_local(plan)
     assert "rangepartitioning" in plan.lower(), plan
-    if name in ("m13_auc_rank", "agg_ks_two_sample"):
+    if name in ("m13_auc_rank", "agg_ks_two_sample", "m1_distributed_split_sizes"):
         # the allowed SinglePartitions are scalar aggregates' exchanges
         # (a few partial longs) — data-independent width
         lines = plan.splitlines()

@@ -57,14 +57,14 @@ def test_ivf_recall(embeddings, truth):
         k=5, n_cells=16, nprobe=8,
     ).collect()
     r = _recall(out, truth)
-    assert r >= 0.4, f"IVF recall {r}"
+    assert r >= 0.4, f"IVF recall {r}"  # measured 0.95
 
 
 def test_ivf_det_kmeans_recall_and_cell_balance(spark, embeddings, truth):
     """The deterministic sequential-arithmetic Lloyd's quantizer (the r7
     graduation behind sim_ann_ivf's exact oracle) must keep useful
     recall and bounded cell imbalance — determinism must not cost the
-    properties the learned k-means quantizer was chosen for."""
+    properties a k-means quantizer is chosen for."""
     from pyspark.sql.window import Window
 
     from clinical_bi_spark.functions.vectors import cosine_pandas
@@ -104,43 +104,6 @@ def test_identical_vector_is_top1(spark, embeddings):
         q, k=1, nbits=8, max_hamming=0,
     ).collect()
     assert out and out[0].neighbor_id == 10_003 and out[0].cos_sim == 1.0
-
-
-def test_ivf_kmeans_recall_and_cell_balance(spark, embeddings, truth):
-    """The spherical k-means quantizer must (a) keep useful recall and
-    (b) produce bounded cell imbalance — the property that caps per-probe
-    cost at scale. (Recall alone can't fairly compare against the
-    lowest-id placeholder on this fixture: those "centroids" include the
-    query vectors themselves, so every query probes a cell centered on
-    itself — an accident that vanishes on any real corpus.)"""
-    from pyspark.sql.window import Window
-
-    from clinical_bi_spark.functions.vectors import cosine_pandas
-    from clinical_bi_spark.operators.similarity import _kmeans_centroids
-
-    out = ivf_topk(
-        embeddings, embeddings.filter(F.col("vec_id") < 8),
-        k=5, n_cells=16, nprobe=8, kmeans_centroids=True,
-    ).collect()
-    assert _recall(out, truth) >= 0.5
-
-    centroids = _kmeans_centroids(embeddings, "embedding", 16)
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "cell_id")
-    sizes = (
-        embeddings.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id", "cell_id",
-            cosine_pandas(F.col("embedding"), F.col("cell_emb")).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .groupBy("cell_id")
-        .count()
-        .collect()
-    )
-    n_total = sum(r["count"] for r in sizes)
-    ideal = n_total / 16
-    assert max(r["count"] for r in sizes) <= 2.5 * ideal, sizes
 
 
 def test_embedding_neardup_recall_on_planted(spark, embeddings):
@@ -315,12 +278,10 @@ def test_clustered_ivf_nprobe_stress(clustered):
     a correctness cliff."""
     corpus, queries, truth = clustered
     r1 = _recall(
-        ivf_topk(corpus, queries, k=5, n_cells=16, nprobe=1,
-                 kmeans_centroids=True).collect(), truth)
+        ivf_topk(corpus, queries, k=5, n_cells=16, nprobe=1).collect(), truth)
     r4 = _recall(
-        ivf_topk(corpus, queries, k=5, n_cells=16, nprobe=4,
-                 kmeans_centroids=True).collect(), truth)
-    assert r1 >= 0.55, f"clustered IVF nprobe=1 recall {r1}"  # measured 0.70
+        ivf_topk(corpus, queries, k=5, n_cells=16, nprobe=4).collect(), truth)
+    assert r1 >= 0.55, f"clustered IVF nprobe=1 recall {r1}"  # measured 0.575
     assert r4 >= 0.9, f"clustered IVF nprobe=4 recall {r4}"  # measured 1.0
     assert r4 >= r1, "multi-probe must not reduce recall"
 

@@ -83,19 +83,6 @@ def test_stateful_operator_matches_batch_on_bounded_input(spark):
     assert final == batch
 
 
-def test_foreachbatch_sink_idempotent(spark, tmp_path):
-    from clinical_bi_spark.streaming.windows import write_stream_foreachbatch
-
-    out = str(tmp_path / "stream_out")
-    write_stream_foreachbatch(spark, SF_ORACLE, out)
-    first = spark.read.parquet(out + "/epoch=0")
-    batch = load_all()["evt_tumbling_window"].fn(spark, SF_ORACLE)
-    assert first.count() == batch.count()
-    # replay: same epoch overwrites, no duplication
-    write_stream_foreachbatch(spark, SF_ORACLE, out)
-    assert spark.read.parquet(out + "/epoch=0").count() == batch.count()
-
-
 def test_rate_source_unbounded_stream(spark):
     """Unbounded-source plumbing (rate source — the local stand-in for
     Kafka): windowed counts accumulate while the stream runs; confirms the
