@@ -7,8 +7,7 @@ that their RETURNED plan consumes lazily — they cannot unpersist before
 returning without losing the cache under the caller's collect. The first
 safe release point is the next query's entry (the adjudication driver is
 strictly build → collect → next). Releasing there used to be a global
-``spark.catalog.clearCache()``, which had two flaws the round-5 advisor
-called out:
+``spark.catalog.clearCache()``, which had two flaws:
 
 * it wipes EVERY cached relation, including any the harness itself
   established — correctness of that rested on an assumption about the

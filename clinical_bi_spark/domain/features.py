@@ -228,9 +228,7 @@ def feature_table(features: DataFrame) -> DataFrame:
     )
 
 
-def load_data(
-    t, y_name: str = "status", seed: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def load_data(t, seed: int | None = None) -> tuple[DataFrame, DataFrame, DataFrame]:
     """End-to-end parity with ct_data.load_data (ct_data.py:66-165):
     flagship query → feature engineering → exact-size 0.7/0.005 split."""
     from clinical_bi_spark.operators.split import exact_size_seeded_split

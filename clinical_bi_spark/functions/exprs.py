@@ -104,12 +104,12 @@ def encode_last_writer_wins(
     return chain.otherwise(default)
 
 
-def encode_categories(col: Column, mapping: dict[str, int], default: int = 0) -> Column:
+def encode_categories(col: Column, mapping: dict[str, int]) -> Column:
     """Integer categorical encoding by value lookup (M2, ct_data.py:107-146).
 
-    NULL input → default, matching pandas where NaN never matches any mask.
+    NULL input → 0, matching pandas where NaN never matches any mask.
     """
     rules: list[tuple[Column, int]] = [
         (col == F.lit(value), code) for value, code in mapping.items()
     ]
-    return encode_last_writer_wins(rules, default).cast("int")
+    return encode_last_writer_wins(rules, 0).cast("int")

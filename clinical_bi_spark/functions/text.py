@@ -39,7 +39,7 @@ def token_count(col: Column) -> Column:
     ``regexp_count(\\S+)`` ≡ count of non-empty whitespace-split tokens
     (each maximal non-space run is exactly one match) but stays a native
     codegen'd expression — no array materialization, no interpreted
-    lambda per token (the round-1 HOF lesson, measured ~3× on the
+    lambda per token (the HOF lesson, measured ~3× on the
     text_stats headline once the bench stopped pruning projections)."""
     return F.regexp_count(col, F.lit(r"\S+")).cast("int")
 
@@ -73,7 +73,7 @@ def _exact_div(a: Column, b: Column) -> Column:
 
 def _half_up_micro(numer: Column, denom: Column) -> Column:
     """ROUND-half-up of ``numer/denom`` at 6 decimals as an exact bigint
-    micro count — the integer twin of ``ROUND(x, 6)``. The r10 unicode
+    micro count — the integer twin of ``ROUND(x, 6)``. A unicode
     differential sweep caught Spark's BigDecimal HALF_UP and DuckDB's
     ``std::round(x*1e6)`` disagreeing by one micro on exact .5e-6
     boundaries (latent on the ASCII fixture, where punctuation counts
@@ -93,7 +93,7 @@ def _bind(cols: dict[str, Column], body) -> Column:
     """Let-binding for scalar expressions: evaluate each of ``cols`` ONCE
     per row, then apply ``body`` to the bound values.
 
-    Why it exists (r11, the stream_corpus_curation regression): the exact
+    Why it exists (a stream_corpus_curation regression): the exact
     micro-unit arithmetic duplicates its operands structurally —
     ``_exact_div(a, b)`` mentions ``a`` twice and ``b`` twice, and
     ``_half_up_micro`` nests it, so a ratio whose numerator is a
@@ -111,7 +111,7 @@ def _bind(cols: dict[str, Column], body) -> Column:
     Use it in FILTER context only. In a projection the lambda is a
     codegen boundary that BLOCKS the cross-column subexpression
     elimination projections already get, measured ~1.1x slower on
-    text_stats (r11 A/B) — so the projection-only ratio helpers below
+    text_stats — so the projection-only ratio helpers below
     stay unbound on purpose.
     """
     names = list(cols)
@@ -146,7 +146,7 @@ def punct_ratio(col: Column) -> Column:
     the duplicated count subtrees — both within this expression and
     ACROSS sibling output columns (e.g. a projected ``token_count``
     next to it). A lambda boundary would block that cross-column
-    sharing; the r11 A/B measured the bound form ~1.1x slower on
+    sharing; an A/B measured the bound form ~1.1x slower on
     text_stats. Filter-context callers go through the bound
     ``quality_score_micro`` / ``curation_keep`` instead."""
     micro = _half_up_micro(_punct_chars(col), F.greatest(F.length(col), F.lit(1)))
@@ -162,21 +162,21 @@ def _stopword_hits(lowered: Column, stopwords: tuple[str, ...]) -> Column:
     return F.regexp_count(lowered, F.lit(pat))
 
 
-def _stopword_micro(col: Column, lang: str = "en") -> Column:
+def _stopword_micro(col: Column) -> Column:
     # UNBOUND on purpose — projection-only callers, see punct_ratio.
     # Denominator: token_count(col), not token_count(lower(col)) — the
     # values are identical (no lowercase mapping turns whitespace into
     # non-whitespace or vice versa, so the \S+ run count is unchanged by
     # lower()), and the unlowered tree is shareable (codegen CSE) with
     # sibling projected columns; the hit count still scans lowered text.
-    hits = _stopword_hits(F.lower(col), STOPWORDS[lang])
+    hits = _stopword_hits(F.lower(col), STOPWORDS["en"])
     return _half_up_micro(hits, F.greatest(token_count(col), F.lit(1)))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords (lowercased match), at exact
-    micro grain (see ``_half_up_micro``)."""
-    return _micro_to_double(_stopword_micro(col, lang))
+def stopword_ratio(col: Column) -> Column:
+    """Fraction of tokens that are English stopwords (lowercased match),
+    at exact micro grain (see ``_half_up_micro``)."""
+    return _micro_to_double(_stopword_micro(col))
 
 
 def _mean_token_length_micro(col: Column) -> Column:
@@ -197,7 +197,7 @@ def quality_score(col: Column) -> Column:
     mean token length — the standard cheap pre-filters an LLM data
     pipeline applies before expensive dedup/scoring stages.
 
-    All arithmetic is exact bigint micro-units end to end (the r10
+    All arithmetic is exact bigint micro-units end to end (the
     unicode sweep's lesson: the old double form hit .5e-6 rounding
     boundaries where the engines' round() implementations disagree —
     only observable once punctuation counts were nonzero). Each term is
@@ -288,9 +288,9 @@ def language_guess(col: Column) -> Column:
     )
 
 
-def curation_keep(col: Column, threshold_micro: int = 850_000) -> Column:
+def curation_keep(col: Column) -> Column:
     """The corpus-curation ingest gate as ONE fused boolean:
-    ``quality_score_micro(col) >= threshold AND language_guess(col) = 'en'``
+    ``quality_score_micro(col) >= 850000 AND language_guess(col) = 'en'``
     with all eight text scans (five quality counts, of which the en-hit
     and the token/punct/char counts are shared with the language vote,
     plus the es/fr/de hit counts) let-bound in a single ``_bind``.
@@ -298,9 +298,9 @@ def curation_keep(col: Column, threshold_micro: int = 850_000) -> Column:
     Exists for the STREAMING funnel: the batch funnel computes qmicro and
     glang once behind a DISK_ONLY persist, but a streaming plan cannot
     persist, and a filter gets no codegen subexpression elimination — the
-    unfused gate re-ran ~25 regex scans per document (the r10→r11
+    unfused gate re-ran ~25 regex scans per document (a
     ``stream_corpus_curation`` 2.4 s → 6.4 s bench regression, bisected
-    by the round-10 verdict to the exact-micro rework).
+    to the exact-micro rework).
 
     Equivalence to the unfused gate: ``language_guess = 'en'`` iff the
     vote is decisive (``best >= 2``) and en holds the max (ties break
@@ -320,7 +320,7 @@ def curation_keep(col: Column, threshold_micro: int = 850_000) -> Column:
         qm = _quality_micro_body(toks, hits, punct, nonws, chars)
         best = F.greatest(hits, h_es, h_fr, h_de)
         is_en = (best >= F.lit(2)) & (hits == best)
-        return (qm >= F.lit(threshold_micro).cast("bigint")) & is_en
+        return (qm >= F.lit(850_000).cast("bigint")) & is_en
 
     def with_lowered(low: Column) -> Column:
         binds = {

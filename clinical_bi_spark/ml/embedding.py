@@ -34,13 +34,7 @@ def _seeded_vector(token: str, dim: int) -> list[float]:
     return out
 
 
-def trained_vocabulary_embedding(
-    df: DataFrame,
-    col: str,
-    text_col: str = "text",
-    dim: int = 10,
-    seed: int = 42,
-) -> DataFrame:
+def trained_vocabulary_embedding(df: DataFrame, col: str, dim: int) -> DataFrame:
     """The LEARNED drop-in for :func:`vocabulary_embedding`'s deterministic
     table — closes the reference's disabled ``embedding_column`` intent
     (ct_estimator.py:106-114) with an actually trained matrix.
@@ -49,7 +43,7 @@ def trained_vocabulary_embedding(
     own corpus; each category's embedding is the mean of its documents'
     Word2Vec doc-vectors (``model.transform`` natively averages token
     vectors per document; ``Summarizer.mean`` aggregates per category,
-    distributed). The lookup plumbing — StringIndexer vocabulary +
+    distributed) over the ``text`` column. The lookup plumbing — StringIndexer vocabulary +
     broadcast table join, no shuffle of the fact side — is byte-identical
     to the deterministic path, demonstrating that a trained matrix swaps
     in without touching the pipeline. ``numPartitions=1`` + fixed seed
@@ -78,11 +72,11 @@ def trained_vocabulary_embedding(
     toks = df.select(
         col,
         F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
+            F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit("")
         ).alias("words"),
     )
     w2v = Word2Vec(
-        vectorSize=dim, minCount=2, seed=seed, maxIter=1, numPartitions=1,
+        vectorSize=dim, minCount=2, seed=42, maxIter=1, numPartitions=1,
         inputCol="words", outputCol="__dvec",
     )
     try:
@@ -115,7 +109,7 @@ def trained_vocabulary_embedding(
 
 
 def vocabulary_embedding(
-    df: DataFrame, col: str, dim: int = 10
+    df: DataFrame, col: str, dim: int
 ) -> DataFrame:
     """Attach ``{col}_idx`` (vocabulary index) and ``{col}_embedding``
     (dim-wide float vector). Out-of-vocabulary values (StringIndexer

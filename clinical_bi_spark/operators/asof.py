@@ -21,11 +21,10 @@ def asof_join(
     key: str,
     ts: str,
     value_cols: list[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Union-tagged merge: interleave both sides ordered by (ts, side),
     carry the right side's values forward with last(ignorenulls) over an
-    unbounded-preceding window, keep left rows.
+    unbounded-preceding window as ``<col>_asof``, keep left rows.
 
     Cost: one shuffle on ``key``, then a partition-local linear pass —
     the plan a 100 TB event table wants. Right side should be unique per
@@ -54,10 +53,10 @@ def asof_join(
     carried = unioned.select(
         "*",
         *[
-            F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in value_cols
         ],
     )
     return carried.filter(F.col("__side") == 1).select(
-        *left_cols, *[f"{c}{suffix}" for c in value_cols]
+        *left_cols, *[f"{c}_asof" for c in value_cols]
     )

@@ -49,6 +49,9 @@ _MERSENNE_P = (1 << 31) - 1
 # anti-join falls back to a shuffle — slower but unconditionally safe.
 _MAX_BROADCAST_OVERFLOW_FPS = 4_000_000
 
+#: Seed of the MinHash permutation family (see :func:`_hash_params`).
+MINHASH_SEED = 42
+
 
 def _hash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs derived from a simple LCG on the seed —
@@ -64,7 +67,7 @@ def _hash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     return params
 
 
-def shingle_hashes(text_col: F.Column, n: int = 3) -> F.Column:
+def shingle_hashes(text_col: F.Column, n: int) -> F.Column:
     """Distinct numeric n-gram shingle hashes in [0, p) — the MinHash fast
     path. Tokens are hashed once; an n-gram's hash is the polynomial
     combination of its token hashes (no substring/concat materialization:
@@ -110,9 +113,9 @@ def minhash_signatures_df(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int = 32,
+    *,
+    num_perm: int,
     shingle_n: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
     """(id, sig) signatures via the *relational* formulation: explode the
     shingle hashes and compute the num_perm minima as ordinary aggregate
@@ -127,7 +130,7 @@ def minhash_signatures_df(
     (id, 32 longs). Docs with fewer tokens than the shingle width have no
     shingles, hence no signature — they cannot near-dup-match anything.
     """
-    params = _hash_params(num_perm, seed)
+    params = _hash_params(num_perm, MINHASH_SEED)
     shingled = df.select(
         F.col(id_col).alias("id"),
         F.explode(shingle_hashes(F.col(text_col), shingle_n)).alias("h"),
@@ -146,10 +149,10 @@ def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
+    *,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding.
 
@@ -170,7 +173,7 @@ def minhash_lsh_candidates(
     with_sig = persist_tracked(
         minhash_signatures_df(
             df, id_col=id_col, text_col=text_col,
-            num_perm=num_perm, shingle_n=shingle_n, seed=seed,
+            num_perm=num_perm, shingle_n=shingle_n,
         )
     )
     # explode into (band_id, band_slice) keys
@@ -224,7 +227,7 @@ def _md5_word(col: F.Column, offset: int) -> F.Column:
 
 
 def span_fingerprint_arrays(
-    text_col: F.Column, n: int = 8
+    text_col: F.Column, n: int
 ) -> tuple[F.Column, F.Column]:
     """Two parallel arrays of rolling token n-gram fingerprints — one
     entry per token POSITION (no dedup: span-level duplicate detection
@@ -301,7 +304,8 @@ def simhash_neardup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 8,
+    *,
+    max_hamming: int,
     block_col: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
@@ -337,12 +341,12 @@ def simhash_blocked_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 8,
-    n_blocks: int | None = None,
+    *,
+    max_hamming: int,
 ) -> DataFrame:
     """SimHash pair search via fingerprint-segment blocking — EXACT, not
-    approximate: split the 64-bit fingerprint into ``n_blocks`` segments
-    (default ``max_hamming + 1``); two fingerprints within Hamming
+    approximate: split the 64-bit fingerprint into ``max_hamming + 1``
+    segments; two fingerprints within Hamming
     distance ``max_hamming`` differ in at most ``max_hamming`` segments,
     so by pigeonhole they agree exactly on at least one. Candidates come
     from an equi-join on (segment_index, segment_value); the Hamming
@@ -355,7 +359,7 @@ def simhash_blocked_pairs(
     caller chasing larger radii should block on an attribute column
     instead (``simhash_neardup_pairs(block_col=...)``).
     """
-    b = n_blocks or (max_hamming + 1)
+    b = max_hamming + 1
     sh = simhash64_df(df, id_col=id_col, text_col=text_col)
     # persist: the fingerprint aggregate feeds both self-join sides — the
     # barrier stops Catalyst recomputing the 64 bit-vote sums twice
@@ -437,7 +441,7 @@ def simhash64_df(
 # queries built on this operator are exactly oracle-checkable (unlike the
 # Spark-hash-specific MinHash/SimHash paths above).
 #
-# Implementation note (the round-1 CollapseProject lesson, PERF.md): never
+# Implementation note (the CollapseProject lesson, PERF.md): never
 # index an array expression from inside a HOF lambda — Catalyst inlines the
 # array into the lambda body and re-evaluates it per element, turning a
 # linear scan quadratic. Both the gram hash and the window min are instead
@@ -450,11 +454,15 @@ def simhash64_df(
 #: 122 * sum(31^j, j<k) << 2^63 for k <= 12 (ANSI mode: overflow raises).
 _WINNOW_NORM_RE = "[^a-z0-9]"
 
+#: Winnowing: char-gram length and sliding-window width (the MOSS scheme).
+WINNOW_K, WINNOW_WINDOW = 8, 4
 
-def kgram_hashes(text_col: F.Column, k: int = 8) -> F.Column:
-    """array<long> of base-31 polynomial hashes of every k-char-gram of the
-    lowercased, alnum-only text. Exact integers, engine-invariant:
-    h(i) = sum_j code(s[i+j]) * 31^(k-1-j)."""
+
+def kgram_hashes(text_col: F.Column) -> F.Column:
+    """array<long> of base-31 polynomial hashes of every k-char-gram
+    (k = ``WINNOW_K``) of the lowercased, alnum-only text. Exact integers,
+    engine-invariant: h(i) = sum_j code(s[i+j]) * 31^(k-1-j)."""
+    k = WINNOW_K
     s = F.regexp_replace(F.lower(text_col), _WINNOW_NORM_RE, "")
     n = F.length(s)
     m = n - (k - 1)  # number of grams
@@ -474,10 +482,12 @@ def kgram_hashes(text_col: F.Column, k: int = 8) -> F.Column:
     )
 
 
-def winnow_select(gram_col: F.Column, window: int = 4) -> F.Column:
+def winnow_select(gram_col: F.Column) -> F.Column:
     """Distinct sorted sliding-window minima of a gram-hash array — the
-    winnowing fingerprint set. Windows run 1..max(m-window+1, 1) (one
-    clamped window when the document has fewer grams than the window)."""
+    winnowing fingerprint set. Windows (``WINNOW_WINDOW`` wide) run
+    1..max(m-window+1, 1) (one clamped window when the document has fewer
+    grams than the window)."""
+    window = WINNOW_WINDOW
     m = F.size(gram_col)
     mins = gram_col
     for j in range(1, window):
@@ -492,39 +502,27 @@ def winnow_select(gram_col: F.Column, window: int = 4) -> F.Column:
     return F.array_sort(F.array_distinct(wins))
 
 
-def winnow_fingerprints_expr(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints_expr(df: DataFrame) -> DataFrame:
     """(id, fps: array<long>) winnowed fingerprints — pure-Catalyst
     expression form (kgram_hashes + winnow_select).
 
     Two-stage select so the gram-hash array is a named column referenced
-    ``window`` times by the shifted-slice zip_withs — multiple references
+    ``WINNOW_WINDOW`` times by the shifted-slice zip_withs — multiple references
     stop CollapseProject inlining it back into one per-reference expression.
     Narrow transformation: no shuffle, each document fingerprints in place.
 
     Kept as the reference implementation and differential-test anchor:
     Catalyst evaluates higher-order-function lambdas INTERPRETED, one
     boxed call per array element, so this form costs ~3× the Arrow path
-    on the bench corpus (PERF.md round 4) — ``winnow_fingerprints_df``
+    on the bench corpus (PERF.md) — ``winnow_fingerprints_df``
     is the production entry point.
     """
-    g = df.select(
-        F.col(id_col).alias("id"), kgram_hashes(F.col(text_col), k).alias("gh")
-    )
-    return g.select("id", winnow_select(F.col("gh"), window).alias("fps"))
+    g = df.select(F.col("doc_id").alias("id"), kgram_hashes(F.col("text")).alias("gh"))
+    return g.select("id", winnow_select(F.col("gh")).alias("fps"))
 
 
 def winnow_fingerprints_df(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, fps: array<long>) winnowed fingerprints per document —
     vectorized Arrow path (numpy sliding windows inside mapInPandas).
@@ -538,7 +536,7 @@ def winnow_fingerprints_df(
     in place, text never moves)."""
 
     def batches(it):
-        fps_of = _winnow_fps_kernel(k, window)
+        fps_of = _winnow_fps_kernel()
         import pandas as _pd
 
         for pdf in it:
@@ -553,10 +551,11 @@ def winnow_fingerprints_df(
     )
 
 
-def _winnow_fps_kernel(k: int, window: int):
+def _winnow_fps_kernel():
     """Per-document winnow-fingerprint kernel (numpy sliding windows),
     shared by :func:`winnow_fingerprints_df` and the passthrough variant
     so every caller computes byte-identical fingerprint sets."""
+    k, window = WINNOW_K, WINNOW_WINDOW
     import re as _re
 
     import numpy as _np
@@ -582,37 +581,31 @@ def _winnow_fps_kernel(k: int, window: int):
     return fps_of
 
 
-def winnow_fingerprints_passthrough(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
-) -> DataFrame:
-    """Winnowed fingerprints computed IN PLACE of the text column: the
-    output carries every input column except ``text_col``, plus
+def winnow_fingerprints_passthrough(df: DataFrame) -> DataFrame:
+    """Winnowed fingerprints computed IN PLACE of the ``text`` column: the
+    output carries every input column except ``text``, plus
     ``fps: array<long>`` — same kernel (hence byte-identical fingerprint
     sets) as :func:`winnow_fingerprints_df`.
 
     Exists for pipelines that persist a curated slice AND near-dup-mine
-    it (queries/textops.pipeline_corpus_curation, r16 optimization):
+    it (queries/textops.pipeline_corpus_curation):
     fusing the fingerprint pass into the slice's materialization means
     the raw text is consumed in the same pass that builds the cache, so
     the persisted relation holds fingerprints (ints) instead of the
     corpus text, and the miner's separate fingerprint pass + cache over
     a text-bearing relation disappear."""
-    keep = [f.name for f in df.schema.fields if f.name != text_col]
+    keep = [f.name for f in df.schema.fields if f.name != "text"]
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = (
         ", ".join(f"{c} {types[c]}" for c in keep) + ", fps array<long>"
     )
 
     def batches(it):
-        fps_of = _winnow_fps_kernel(k, window)
+        fps_of = _winnow_fps_kernel()
 
         for pdf in it:
             out = pdf[keep].copy()
-            out["fps"] = [fps_of(t) for t in pdf[text_col]]
+            out["fps"] = [fps_of(t) for t in pdf["text"]]
             yield out
 
     return df.mapInPandas(batches, schema=out_schema)
@@ -622,8 +615,6 @@ def winnow_neardup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
-    window: int = 4,
     min_shared: int = 3,
     min_containment: float = 0.5,
     max_df: int = 50,
@@ -670,8 +661,7 @@ def winnow_neardup_pairs(
       stream (the widest stage carries exactly (fp, id_a, id_b)).
     * candidates come from ONE exchange of the capped posting list
       (groupBy fp + in-bucket combination), not a posting self-join that
-      ships the list once per side (r10 shuffle-census finding; see the
-      inline comment).
+      ships the list once per side (see the inline comment).
     """
     # Materialization barrier (same as the MinHash signature path), placed
     # BEFORE the explode: Catalyst inlines a projected array expression into
@@ -684,7 +674,7 @@ def winnow_neardup_pairs(
         fp = fps_df
     else:
         fp = persist_tracked(
-            winnow_fingerprints_df(df, id_col, text_col, k, window)
+            winnow_fingerprints_df(df, id_col, text_col)
         )
     e = fp.select("id", F.explode("fps").alias("fp"))
     overflow = persist_tracked(
@@ -706,7 +696,7 @@ def winnow_neardup_pairs(
         e = e.join(overflow, "fp", "left_anti")
     sz = e.groupBy("id").agg(F.count("*").alias("n_fps"))
     # Self-join via two ALIASES of the one posting plan, not two renamed
-    # Projects: the r10 shuffle census measured the old
+    # Projects: a shuffle census measured the old
     # e.select(id_a).join(e.select(id_b)) form shipping the full posting
     # list TWICE (2x10.2 MiB of the curation funnel's 24.4 MiB at sf0.1)
     # because the pre-exchange rename made the two sides canonically
@@ -828,7 +818,7 @@ def connected_components(
     # Both directions via ONE explode over the edge stream, not
     # union(edges, reversed(edges)): a union reads `edges` through two
     # plan branches, and when the caller hands a LAZY pair-mining plan
-    # (every dedup query does) the whole miner executes twice — the r10
+    # (every dedup query does) the whole miner executes twice — a
     # shuffle census caught the curation funnel paying its candidate
     # aggregate exchange 2x10.2 MiB because of exactly this (ReuseExchange
     # does not fire across the differently-projected union branches).

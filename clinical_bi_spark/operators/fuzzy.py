@@ -24,7 +24,7 @@ segments, start position i*(L div (K+1)) + min(i, L mod (K+1)) + 1
 emit length-1 segments) but the PROBE side clamps the enumerated
 reference length at max(len(s)-K, K+1), so such references are
 unreachable through blocking. The operator therefore handles the
-short-string residue internally (r7 ADVICE fix): any pair with
+short-string residue internally: any pair with
 min(length) <= K has both lengths <= 2K, so the residue candidates
 come from a length-keyed hash equi-join between strings of length
 <= K (reference role) and strings of length <= 2K (probe role) —
@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def editdist_self_join(
-    df: DataFrame, id_col: str, text_col: str, k: int = 2
+    df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """All unordered pairs (a, b) with levenshtein(a, b) <= k.
 

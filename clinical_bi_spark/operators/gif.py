@@ -66,7 +66,7 @@ class _LSBBitReader:
         return v
 
 
-def _lzw_encode_literal(indices, min_code_size: int = 8) -> bytes:
+def _lzw_encode_literal(indices, min_code_size: int) -> bytes:
     """Valid LZW via the uncompressed-GIF scheme: CLEAR, then literal
     root codes, re-CLEARing before the decoder's dictionary would force
     a code-width change. Every conforming decoder accepts it."""

@@ -131,11 +131,15 @@ def _dct_matrix():
     return c * 0.5  # orthonormal: C @ block @ C.T
 
 
-def _quality_tables(quality: int):
+#: The one encode quality (IJG scale); at >= 50 the base tables scale
+#: by 200 - 2 * quality percent.
+_QUALITY = 90
+
+
+def _quality_tables():
     import numpy as np
 
-    quality = max(1, min(100, quality))
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
+    scale = 200 - 2 * _QUALITY
     out = []
     for base in (_Q_LUM, _Q_CHROM):
         q = (np.array(base, dtype=np.int64) * scale + 50) // 100
@@ -232,8 +236,9 @@ def _decode_value(size: int, raw: int) -> int:
     return raw
 
 
-def encode_jpeg(arr, quality: int = 90) -> bytes:
-    """(h, w, 3) uint8 RGB -> baseline JFIF JPEG bytes (4:4:4)."""
+def encode_jpeg(arr) -> bytes:
+    """(h, w, 3) uint8 RGB -> baseline JFIF JPEG bytes (4:4:4) at quality
+    ``_QUALITY``."""
     import numpy as np
 
     a = np.asarray(arr, dtype=np.float64)
@@ -245,7 +250,7 @@ def encode_jpeg(arr, quality: int = 90) -> bytes:
     padded[h:, :w] = ycc[h - 1 : h, :]  # edge replicate
     padded[:, w:] = padded[:, w - 1 : w]
 
-    qts = _quality_tables(quality)
+    qts = _quality_tables()
     dctm = _dct_matrix()
     zz = np.array(_ZIGZAG)
     huff = {
@@ -432,12 +437,11 @@ def decode_jpeg(data: bytes):
     return np.round(rgb).clip(0, 255).astype(np.uint8)
 
 
-def resize_jpeg(data: bytes, target_width: int, target_height: int, quality: int = 90) -> bytes:
+def resize_jpeg(data: bytes, target_width: int, target_height: int) -> bytes:
     """Real lossy-codec resize: entropy-decode → IDCT → nearest-neighbor
     resample → re-encode."""
     from clinical_bi_spark.operators.multimodal import _resample_nearest
 
     return encode_jpeg(
-        _resample_nearest(decode_jpeg(data), target_width, target_height),
-        quality,
+        _resample_nearest(decode_jpeg(data), target_width, target_height)
     )

@@ -54,8 +54,7 @@ def _full(tag: bytes, version: int, flags: int, body: bytes) -> bytes:
 FTYP = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2mp41")
 MDAT_PAYLOAD_OFFSET = len(FTYP) + 8
 
-#: hard ceiling on a track's declared sample count (r13 ADVICE low; r14
-#: ADVICE tightened it): the parser materializes O(n_samples)
+#: hard ceiling on a track's declared sample count: the parser materializes O(n_samples)
 #: sizes/durations/offsets lists pre-validation and a per-sample dict
 #: list post-validation, and the dict list dominates (~300 B/sample —
 #: at the old 2^22 cap a fixed=1 crafted asset could reach hundreds of
@@ -63,7 +62,7 @@ MDAT_PAYLOAD_OFFSET = len(FTYP) + 8
 #: at 120 fps) is still far past any real video track while bounding
 #: the worst case to tens of MB for the int lists and ~300 MB for a
 #: fully-consistent (i.e. genuinely declared) million-sample table.
-#: ACCEPTED LIMIT for audio tracks (r15 ADVICE low): stsz counts codec
+#: ACCEPTED LIMIT for audio tracks: stsz counts codec
 #: frames, not seconds — 1024-sample AAC at 44.1 kHz is ~43 frames/s,
 #: so a legitimate audio track longer than ~6.7 h parses to None under
 #: this cap. This engine's MP4 surface is the video sample-table walk
@@ -71,6 +70,10 @@ MDAT_PAYLOAD_OFFSET = len(FTYP) + 8
 #: make the cap per-handler ('soun' vs 'vide') rather than raising it
 #: globally.
 _MAX_SAMPLES = 1 << 20
+
+#: The movie/media timescale (ticks per second) and the track's frame
+#: size that :func:`encode_mp4` writes.
+_TIMESCALE, _WIDTH, _HEIGHT = 30000, 64, 48
 
 
 def _runlength(values: list[int]) -> list[tuple[int, int]]:
@@ -89,9 +92,6 @@ def encode_mp4(
     durations: list[int],
     sync_flags: list[bool],
     *,
-    timescale: int = 30000,
-    width: int = 64,
-    height: int = 48,
     samples_per_chunk: int = 3,
 ) -> bytes:
     """Sample payloads + per-sample metadata → a structurally valid
@@ -131,7 +131,7 @@ def encode_mp4(
 
     mvhd = _full(
         b"mvhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, total_dur)
+        struct.pack(">IIII", 0, 0, _TIMESCALE, total_dur)
         + struct.pack(">IH", 0x00010000, 0x0100)   # rate, volume
         + b"\x00" * 10                             # reserved
         + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -144,11 +144,11 @@ def encode_mp4(
         + b"\x00" * 8                              # reserved
         + struct.pack(">HHHH", 0, 0, 0, 0)         # layer, alt, volume, rsvd
         + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + struct.pack(">II", width << 16, height << 16),
+        + struct.pack(">II", _WIDTH << 16, _HEIGHT << 16),
     )
     mdhd = _full(
         b"mdhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, total_dur)
+        struct.pack(">IIII", 0, 0, _TIMESCALE, total_dur)
         + struct.pack(">HH", 0x55C4, 0),           # language 'und'
     )
     hdlr = _full(
@@ -163,7 +163,7 @@ def encode_mp4(
         b"mp4v",
         b"\x00" * 6 + struct.pack(">H", 1)         # reserved, data_ref_index
         + struct.pack(">HH", 0, 0) + b"\x00" * 12  # pre_defined / reserved
-        + struct.pack(">HH", width, height)
+        + struct.pack(">HH", _WIDTH, _HEIGHT)
         + struct.pack(">IIIH", 0x480000, 0x480000, 0, 1)
         + b"\x00" * 32                             # compressorname
         + struct.pack(">Hh", 24, -1),              # depth, pre_defined
@@ -333,7 +333,7 @@ def _parse_trak(data: bytes, tb: int, te: int) -> dict | None:
     # `fixed` non-overlapping bytes of payload, so fixed·n_samples can
     # never exceed the file size — and a hard sample ceiling bounds the
     # O(n_samples) sizes/durations/offsets/samples allocations for large
-    # corrupt assets (r13 ADVICE: a 100 MB asset could otherwise drive
+    # corrupt assets (a 100 MB asset could otherwise drive
     # ~100M-entry lists before downstream consistency checks reject it)
     if n_samples > _MAX_SAMPLES:
         return None
@@ -401,7 +401,7 @@ def _parse_trak(data: bytes, tb: int, te: int) -> dict | None:
     # and index out of it below — and a huge one (0xFFFFFFF0) would
     # allocate a multi-GB per_chunk list BEFORE that raise, the
     # executor-OOM class the extract's IndexError belt cannot catch
-    # (r13 ADVICE medium).
+    #.
     prev_first = 0
     for first, _spc, _sdi in runs:
         if first <= prev_first or first > n_chunks:
@@ -452,12 +452,7 @@ def _parse_trak(data: bytes, tb: int, te: int) -> dict | None:
     }
 
 
-def extract_mp4_sync_samples(
-    df: DataFrame,
-    id_col: str = "asset_id",
-    media_col: str = "media",
-    every_n: int = 1,
-) -> DataFrame:
+def extract_mp4_sync_samples(df: DataFrame, every_n: int) -> DataFrame:
     """Keyframe sampling over mp4 assets: one output row per kept SYNC
     sample (every ``every_n``-th, 1st always kept), payload bytes sliced
     straight out of ``mdat`` by the reconstructed (offset, size) range.
@@ -474,7 +469,7 @@ def extract_mp4_sync_samples(
         raise ValueError("every_n must be >= 1")
 
     schema = (
-        f"{id_col} long, sample_number int, dts_ticks long, "
+        "asset_id long, sample_number int, dts_ticks long, "
         "duration_ticks int, size_bytes int, byte_offset long, "
         "track_samples int, payload binary"
     )
@@ -484,7 +479,7 @@ def extract_mp4_sync_samples(
             rows = {k: [] for k in (
                 "id", "num", "dts", "dur", "size", "off", "total", "payload"
             )}
-            for asset_id, media in zip(pdf[id_col], pdf[media_col]):
+            for asset_id, media in zip(pdf["asset_id"], pdf["media"]):
                 if media is None:
                     continue
                 data = bytes(media)
@@ -513,7 +508,7 @@ def extract_mp4_sync_samples(
                     )
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(rows["id"], dtype="int64"),
+                    "asset_id": pd.Series(rows["id"], dtype="int64"),
                     "sample_number": pd.Series(rows["num"], dtype="int32"),
                     "dts_ticks": pd.Series(rows["dts"], dtype="int64"),
                     "duration_ticks": pd.Series(rows["dur"], dtype="int32"),

@@ -10,7 +10,7 @@ Design for 100 TB of media:
   process per partition, bytes move once over Arrow, no per-row pickling.
 * partitioning: media rows are large, so size partitions by byte budget
   (from parquet file metadata or a prior metadata pass), not row count —
-  ``extract_media_features(n_partitions=...)``.
+  ``extract_media_features`` leaves that to its caller.
 
 The container has no image/audio libraries; five formats are REAL codecs
 anyway — PPM and 24-bit BMP (uncompressed), PNG (stdlib zlib: inflate +
@@ -525,9 +525,7 @@ def decode_wav_pcm16(data: bytes):
     return samples, sample_rate
 
 
-def extract_audio_features(
-    df: DataFrame, id_col: str = "asset_id", media_col: str = "media"
-) -> DataFrame:
+def extract_audio_features(df: DataFrame) -> DataFrame:
     """REAL audio feature extraction over Arrow-batched mapInPandas:
     decode PCM16 WAV and compute duration, peak, and RMS energy —
     sample-exact (integer peak/duration; RMS is one IEEE sqrt over an
@@ -535,7 +533,7 @@ def extract_audio_features(
     bit-for-bit). Non-WAV or malformed assets yield a NULL feature row
     rather than failing the job."""
     schema = (
-        f"{id_col} long, sample_rate int, n_channels int, n_samples long,"
+        "asset_id long, sample_rate int, n_channels int, n_samples long,"
         " duration_ms double, peak_abs int, rms double"
     )
 
@@ -544,11 +542,11 @@ def extract_audio_features(
 
         for pdf in it:
             out = {k: [] for k in (
-                id_col, "sample_rate", "n_channels", "n_samples",
+                "asset_id", "sample_rate", "n_channels", "n_samples",
                 "duration_ms", "peak_abs", "rms",
             )}
-            for i, raw in zip(pdf[id_col], pdf[media_col]):
-                out[id_col].append(i)
+            for i, raw in zip(pdf["asset_id"], pdf["media"]):
+                out["asset_id"].append(i)
                 try:
                     samples, rate = decode_wav_pcm16(bytes(raw or b""))
                     s = samples.astype(np.int64)
@@ -571,20 +569,18 @@ def extract_audio_features(
     return df.mapInPandas(batches, schema=schema)
 
 
-def attach_media_metadata(
-    df: DataFrame, id_col: str = "asset_id", media_col: str = "media"
-) -> DataFrame:
+def attach_media_metadata(df: DataFrame) -> DataFrame:
     """Typed metadata for an opaque binary column via Arrow-batched
     mapInPandas: container type, byte size, header dimensions, content
     fingerprint (the exact-dedup key for media)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            raw = pdf[media_col]
+            raw = pdf["media"]
             dims = raw.map(lambda b: parse_dimensions(b) if b else (None, None))
             yield pd.DataFrame(
                 {
-                    "asset_id": pdf[id_col],
+                    "asset_id": pdf["asset_id"],
                     "media_type": raw.map(sniff_media_type),
                     "byte_size": raw.map(lambda b: len(b) if b is not None else 0),
                     "width": dims.map(lambda d: d[0]),
@@ -615,42 +611,29 @@ def _fake_feature(data: bytes, dim: int) -> list[float]:
     return out
 
 
-def extract_media_features(
-    df: DataFrame,
-    id_col: str = "asset_id",
-    media_col: str = "media",
-    dim: int = 16,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def extract_media_features(df: DataFrame, dim: int) -> DataFrame:
     """Decode → feature-extract as mapInPandas. The pixel decode is a
     deterministic md5-seeded feature (this container has no imaging
     library) — the Spark plumbing (schema, Arrow batching, partitioning)
-    is identical to a real extractor's.
-
-    ``n_partitions``: optional explicit repartition for byte-budget
-    sizing (media rows are megabytes; row counts lie). Deliberately a
-    caller parameter — derive it from parquet file metadata or a prior
-    metadata pass, NOT from an extra full scan of the media bytes here
-    (a driver-side length aggregate would read everything twice)."""
+    is identical to a real extractor's. Byte-budget partitioning (media
+    rows are megabytes; row counts lie) is the caller's: derive it from
+    parquet file metadata or a prior metadata pass, NOT from an extra
+    full scan of the media bytes here."""
 
     # double, not float: the feature values are md5-derived doubles with an
     # exact SQL twin; a float32 truncation here would break the oracle's
     # bit-level equality (and a real extractor would hand back float64 too)
-    schema = f"{id_col} long, feature array<double>"
+    schema = "asset_id long, feature array<double>"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = pdf[media_col].map(lambda b: _fake_feature(b, dim))
-            yield pd.DataFrame({id_col: pdf[id_col], "feature": feats})
+            feats = pdf["media"].map(lambda b: _fake_feature(b, dim))
+            yield pd.DataFrame({"asset_id": pdf["asset_id"], "feature": feats})
 
-    if n_partitions is not None:
-        df = df.repartition(n_partitions)
     return df.mapInPandas(batches, schema=schema)
 
 
-def encode_avi_mjpeg(
-    frames: list, fps: int = 10, quality: int = 90
-) -> bytes:
+def encode_avi_mjpeg(frames: list, fps: int = 10) -> bytes:
     """RGB frame arrays → Motion-JPEG AVI bytes (RIFF: hdrl with
     avih/strh/strf, movi with one '00dc' JPEG chunk per frame). REAL
     container + REAL per-frame codec (operators/jpeg.py), pure Python."""
@@ -669,7 +652,7 @@ def encode_avi_mjpeg(
     def lst(kind: bytes, body: bytes) -> bytes:
         return chunk(b"LIST", kind + body)
 
-    jpegs = [encode_jpeg(f, quality) for f in frames]
+    jpegs = [encode_jpeg(f) for f in frames]
     max_bytes = max(len(j) for j in jpegs)
     avih = struct.pack(
         "<14I",
@@ -725,9 +708,7 @@ def decode_avi_mjpeg_frames(data: bytes) -> list[bytes]:
 
 def sample_video_frames(
     df: DataFrame,
-    id_col: str = "asset_id",
-    media_col: str = "media",
-    every_n: int = 30,
+    every_n: int,
     frame_bytes: int = 256,
 ) -> DataFrame:
     """Frame sampling: one output row per sampled frame (fan-out generator
@@ -744,14 +725,14 @@ def sample_video_frames(
       and the byte slicing keeps the registry query oracle-checkable end
       to end."""
 
-    schema = f"{id_col} long, frame_index int, frame binary"
+    schema = "asset_id long, frame_index int, frame binary"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids: list[int] = []
             idxs: list[int] = []
             frames: list[bytes] = []
-            for aid, data in zip(pdf[id_col], pdf[media_col]):
+            for aid, data in zip(pdf["asset_id"], pdf["media"]):
                 data = bytes(data or b"")
                 if sniff_media_type(data) == "video/x-msvideo":
                     for i, fr in enumerate(decode_avi_mjpeg_frames(data)):
@@ -767,7 +748,7 @@ def sample_video_frames(
                     frames.append(data[i * frame_bytes : (i + 1) * frame_bytes])
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "asset_id": pd.Series(ids, dtype="int64"),
                     "frame_index": pd.Series(idxs, dtype="int32"),
                     "frame": pd.Series(frames, dtype=object),
                 }
@@ -778,9 +759,6 @@ def sample_video_frames(
 
 def resize_media(
     df: DataFrame,
-    id_col: str = "asset_id",
-    media_col: str = "media",
-    target_bytes: int = 64,
     target_width: int = 8,
     target_height: int = 8,
 ) -> DataFrame:
@@ -794,12 +772,11 @@ def resize_media(
       codec. PPM/BMP are byte-exact oracle-checkable; PNG is pixel-exact
       (compressed bytes aren't SQL-reconstructable).
     * other formats, and malformed assets of the formats above —
-      byte-stream downsampling to ``target_bytes`` (every
-      ceil(n/target)-th byte): the declared stand-in for codecs this
+      byte-stream downsampling to 64 bytes (every ceil(n/64)-th byte): the declared stand-in for codecs this
       container cannot install (PIL/cv2), preserving the real path's
       shape (deterministic, size-bounded, Arrow-batched)."""
 
-    schema = f"{id_col} long, resized binary, resized_bytes int"
+    schema = "asset_id long, resized binary, resized_bytes int"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # codec dispatch built once per worker batch, not per row
@@ -833,15 +810,15 @@ def resize_media(
                         # failure falls through to the byte-downsample
                         # path.
                         pass
-                if len(data) <= target_bytes:
+                if len(data) <= 64:
                     return data
-                step = -(-len(data) // target_bytes)  # ceil
+                step = -(-len(data) // 64)  # ceil
                 return data[::step]
 
-            resized = pdf[media_col].map(shrink)
+            resized = pdf["media"].map(shrink)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "asset_id": pdf["asset_id"],
                     "resized": resized,
                     "resized_bytes": resized.map(len).astype("int32"),
                 }
@@ -897,8 +874,6 @@ def resample_wav_pcm16(data: bytes, target_rate: int) -> bytes:
 def resample_audio(
     df: DataFrame,
     target_rate: int,
-    id_col: str = "asset_id",
-    media_col: str = "media",
 ) -> DataFrame:
     """Arrow-batched audio resampling over a binary media column: WAV
     assets go through the REAL codec path (decode → nearest-neighbor
@@ -909,7 +884,7 @@ def resample_audio(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
-            for b in pdf[media_col]:
+            for b in pdf["media"]:
                 if b is None:
                     out.append(None)
                     continue
@@ -921,17 +896,12 @@ def resample_audio(
                     out.append(resample_wav_pcm16(data, target_rate))
                 except (ValueError, struct.error):
                     out.append(None)
-            yield pd.DataFrame({id_col: pdf[id_col], "resampled": out})
+            yield pd.DataFrame({"asset_id": pdf["asset_id"], "resampled": out})
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, resampled binary")
+    return df.mapInPandas(batches, schema="asset_id long, resampled binary")
 
 
-def extract_image_patches(
-    df: DataFrame,
-    patch: int = 8,
-    id_col: str = "asset_id",
-    media_col: str = "media",
-) -> DataFrame:
+def extract_image_patches(df: DataFrame, patch: int) -> DataFrame:
     """ViT-style patchify over a binary media column: REAL decode (PPM and
     BMP paths), split into the non-overlapping ``patch``×``patch`` grid,
     one output row per patch with its raw RGB bytes and integer pixel
@@ -951,7 +921,7 @@ def extract_image_patches(
         # asset in executor memory at once
         for pdf in it:
             rows: dict = {k: [] for k in ("id", "pr", "pc", "pix", "s")}
-            for asset_id, b in zip(pdf[id_col], pdf[media_col]):
+            for asset_id, b in zip(pdf["asset_id"], pdf["media"]):
                 if b is None:
                     continue
                 data = bytes(b)
@@ -981,7 +951,7 @@ def extract_image_patches(
                         rows["s"].append(int(tile.astype(np.int64).sum()))
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(rows["id"], dtype="int64"),
+                    "asset_id": pd.Series(rows["id"], dtype="int64"),
                     "patch_row": pd.Series(rows["pr"], dtype="int32"),
                     "patch_col": pd.Series(rows["pc"], dtype="int32"),
                     "patch": rows["pix"],
@@ -992,7 +962,7 @@ def extract_image_patches(
     return df.mapInPandas(
         batches,
         schema=(
-            f"{id_col} long, patch_row int, patch_col int, "
+            "asset_id long, patch_row int, patch_col int, "
             "patch binary, pixel_sum long"
         ),
     )

@@ -32,16 +32,12 @@ def _pack_columns(df: DataFrame, tokens_col: str, context: int) -> DataFrame:
     )
 
 
-def pack_assignments_window(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    context: int = 2048,
-) -> DataFrame:
-    """Pack assignment via a global ordered window (single-partition sort;
-    see the module docstring for the scale form)."""
-    w = Window.orderBy(id_col).rowsBetween(Window.unboundedPreceding, 0)
-    pos = df.select(id_col, tokens_col).withColumn(
-        "start_offset", F.sum(tokens_col).over(w) - F.col(tokens_col)
+def pack_assignments_window(df: DataFrame, context: int) -> DataFrame:
+    """Pack assignment of ``(doc_id, n_tokens)`` rows via a global ordered
+    window (single-partition sort; see the module docstring for the scale
+    form)."""
+    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
+    pos = df.select("doc_id", "n_tokens").withColumn(
+        "start_offset", F.sum("n_tokens").over(w) - F.col("n_tokens")
     )
-    return _pack_columns(pos, tokens_col, context)
+    return _pack_columns(pos, "n_tokens", context)

@@ -17,7 +17,7 @@ packing:
    should use the ordinary partitioned window instead: Spark already
    distributes that well) — folded into exclusive prefix offsets by a
    broadcast inequality self-join over that tiny totals relation
-   (r16 optimization: the offsets used to be a driver ``collect`` +
+   (the offsets used to be a driver ``collect`` +
    ``createDataFrame`` round trip, which forced a separate job per
    operator call; distributing them makes the whole operator ONE lazy
    plan — a single job at the consumer's action);
@@ -149,8 +149,8 @@ def global_prefix_sums(
     2. local cumulative sums per (partition, group) — a JVM window
        partitioned by the range-partition id (+ group cols), which can
        never funnel: its partition population is exactly one range
-       shard (r17; the r16 form was a ``mapInPandas`` cumcount that
-       shipped the whole relation through Arrow/Python);
+       shard (a ``mapInPandas`` cumcount would ship the whole relation
+       through Arrow/Python);
     3. per-(partition, group) TOTALS of each value col — one long per
        cell, a tiny relation (``partition_by`` must be
        low-cardinality) — folded into exclusive prefix offsets
@@ -178,8 +178,8 @@ def global_prefix_sums(
     cum_cols = [f"__cum_{c}" for c in value_cols]
 
     # Local cumsum as a JVM window PARTITIONED BY the range-partition id
-    # (r17 optimization, guide §4 — eliminate the Python boundary; the
-    # r16 mapInPandas shipped the whole relation through Arrow/Python).
+    # (no Python boundary: a mapInPandas form would ship the whole
+    # relation through Arrow/Python).
     # This window never funnels: its partition key is __pid (+ the group
     # cols), so partitions stay exactly the range shards — the hash
     # exchange it plans re-moves only this already-domain-bounded

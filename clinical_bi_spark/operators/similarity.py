@@ -33,15 +33,25 @@ from pyspark.sql.window import Window
 
 from clinical_bi_spark.functions.vectors import cosine_pandas, cosine_similarity
 
+#: Width of the embeddings table's vectors (its ``vec_id`` key and
+#: ``embedding`` column are the only columns these operators read).
+EMB_DIM = 64
+#: The deterministic Lloyd's fit: cells, lowest-id training sample size
+#: and rounds.
+KMEANS_CELLS, KMEANS_TRAIN, KMEANS_ITERS = 16, 512, 3
+#: Product quantization: subspaces, centroids per subspace, exact-rerank
+#: depth, training sample size and Lloyd rounds.
+PQ_M, PQ_KSUB, PQ_RERANK, PQ_SAMPLE, PQ_ITERS = 8, 16, 50, 512, 8
 
-def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
-    """Deterministic pseudo-Gaussian hyperplanes via a hash-based LCG —
-    reproducible across runs/processes without RNG state."""
+
+def _hyperplanes(nbits: int) -> list[list[float]]:
+    """Deterministic pseudo-Gaussian hyperplanes via a hash-based LCG
+    (seed 42) — reproducible across runs/processes without RNG state."""
     planes = []
-    state = (seed * 2654435761) % (1 << 31)
+    state = (42 * 2654435761) % (1 << 31)
     for _ in range(nbits):
         row = []
-        for _ in range(dim):
+        for _ in range(EMB_DIM):
             # sum of 4 uniforms ≈ gaussian (Irwin–Hall), good enough for LSH
             acc = 0.0
             for _ in range(4):
@@ -85,15 +95,7 @@ def _hamming_ball_masks(nbits: int, max_hamming: int) -> list[int]:
 
 
 def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-    nbits: int = 8,
-    max_hamming: int = 2,
-    dim: int = 64,
-    seed: int = 42,
+    corpus: DataFrame, queries: DataFrame, k: int, nbits: int, max_hamming: int
 ) -> DataFrame:
     """ANN top-k via a true bucket EQUI-join: each query signature is
     expanded (multi-probe) into every signature in its Hamming ball
@@ -114,20 +116,20 @@ def lsh_bucket_topk(
     ``bit_count(xor) <= h`` pair predicate, so the registry query's
     all-pairs SQL oracle also proves the expansion loses no candidate.
     """
-    planes = _hyperplanes(dim, nbits, seed)
+    planes = _hyperplanes(nbits)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("c_emb"),
-        signature_pandas(F.col(emb_col), planes).alias("c_sig"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        signature_pandas(F.col("embedding"), planes).alias("c_sig"),
     )
     masks = _hamming_ball_masks(nbits, max_hamming)
     # expand after computing the signature once (avoid re-running the UDF
     # per mask): explode the literal mask array, then XOR each mask into
     # the signature as a plain projection (no interpreted lambda)
     q_sig = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        signature_pandas(F.col(emb_col), planes).alias("sig"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        signature_pandas(F.col("embedding"), planes).alias("sig"),
     )
     mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
     probes = q_sig.select(
@@ -147,25 +149,17 @@ def lsh_bucket_topk(
     )
 
 
-def det_kmeans_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 16,
-    n_train: int = 512,
-    iters: int = 3,
-    dim: int = 64,
-) -> DataFrame:
+def det_kmeans_centroids(corpus: DataFrame) -> DataFrame:
     """Deterministic spherical Lloyd's fit — every float operation has a
     pinned order, so the ENTIRE quantizer is replicable in ANSI SQL
     (unrolled CTEs) and the IVF query it feeds carries an exact oracle.
 
     Three determinism devices:
-    * bounded training sample = the ``n_train`` lowest-id vectors (the
+    * bounded training sample = the ``KMEANS_TRAIN`` lowest-id vectors (the
       standard IVF practice of fitting the codebook on a sample — FAISS
       trains on a subset too — which is also what keeps the sorted folds
       below driver/task-memory bounds at any corpus size);
-    * init = the ``n_cells`` lowest-id sample vectors; assignment =
+    * init = the ``KMEANS_CELLS`` lowest-id sample vectors; assignment =
       argmax sequential cosine with (cos DESC, cell_id) tie-break;
     * update = elementwise sum of member embeddings folded in ascending
       vec_id order — NO normalization step, because cosine is
@@ -174,20 +168,17 @@ def det_kmeans_centroids(
       contains no division or sqrt to diverge. A cell that loses all
       members keeps its previous centroid (left join + coalesce).
 
-    Fixed ``iters`` Lloyd rounds (no convergence test — determinism over
-    optimality); recall floors for the resulting quantizer are pinned in
-    tests/test_similarity.py."""
+    Fixed ``KMEANS_ITERS`` Lloyd rounds (no convergence test —
+    determinism over optimality); recall floors for the resulting
+    quantizer are pinned in tests/test_similarity.py."""
     train = (
-        corpus.orderBy(F.col(id_col))
-        .limit(n_train)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(emb_col).cast("array<double>").alias("emb"),
-        )
+        corpus.orderBy(F.col("vec_id"))
+        .limit(KMEANS_TRAIN)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     )
     cent = (
         train.orderBy("vec_id")
-        .limit(n_cells)
+        .limit(KMEANS_CELLS)
         .select(
             (F.row_number().over(Window.orderBy("vec_id")) - 1)
             .cast("int")
@@ -200,10 +191,10 @@ def det_kmeans_centroids(
     sum_expr = F.expr(
         "aggregate("
         "transform(array_sort(collect_list(struct(vec_id, emb))), x -> x.emb),"
-        f" array_repeat(0.0D, {dim}),"
+        f" array_repeat(0.0D, {EMB_DIM}),"
         " (a, b) -> zip_with(a, b, (p, q) -> p + q))"
     )
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         cos = cosine_similarity(F.col("emb"), F.col("cell_emb"))
         assigned = (
             train.crossJoin(F.broadcast(cent))
@@ -226,13 +217,7 @@ def det_kmeans_centroids(
 
 
 def det_kmeans_rows(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 16,
-    n_train: int = 512,
-    iters: int = 3,
-    dim: int = 64,
+    corpus: DataFrame, n_cells: int = KMEANS_CELLS
 ) -> list[tuple[int, list[float]]]:
     """:func:`det_kmeans_centroids` executed DRIVER-SIDE, bit-for-bit.
 
@@ -247,7 +232,7 @@ def det_kmeans_rows(
     centroid. Differential-pinned equal to the Spark plan in
     tests/test_similarity.py.
 
-    Why it exists (r11): the lazy fit is ~6 tiny shuffle stages per
+    Why it exists: the lazy fit is ~6 tiny shuffle stages per
     consumer plus a deep plan that recompiles under every reuse — a
     fixed ~1.5-2 s of orchestration for 512 x 64 doubles of actual math.
     The training sample is the SAME bounded lowest-id sample the plan
@@ -255,12 +240,9 @@ def det_kmeans_rows(
     model fit); a 100 TB corpus ships exactly the same 512 vectors.
     """
     rows = (
-        corpus.orderBy(F.col(id_col))
-        .limit(n_train)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(emb_col).cast("array<double>").alias("emb"),
-        )
+        corpus.orderBy(F.col("vec_id"))
+        .limit(KMEANS_TRAIN)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
         .collect()
     )
     train = sorted(
@@ -287,11 +269,11 @@ def det_kmeans_rows(
 
     # the plan form's limit(n_cells) yields FEWER cells when the corpus
     # is smaller than n_cells (single-document probe regime) — replicate
-    # that, not a hardcoded range (the r11 megadoc probe caught the
-    # IndexError at birth)
+    # that, not a hardcoded range (a single-document probe caught the
+    # IndexError)
     cent = [emb for _vid, emb in train[:n_cells]]
     k = len(cent)
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sums: dict[int, list[float]] = {}
         for _vid, emb in train:  # ascending vec_id — the fold order
             best_cell, best_cos = 0, None
@@ -300,7 +282,7 @@ def det_kmeans_rows(
                 if best_cos is None or cc > best_cos:
                     best_cell, best_cos = cid, cc
                 # ties keep the LOWER cell_id (cos DESC, cell_id ASC)
-            acc = sums.setdefault(best_cell, [0.0] * dim)
+            acc = sums.setdefault(best_cell, [0.0] * EMB_DIM)
             for i, v in enumerate(emb):
                 acc[i] = acc[i] + v
         cent = [sums.get(cid, cent[cid]) for cid in range(k)]
@@ -315,10 +297,9 @@ def _np_nearest(unit: np.ndarray, cent: np.ndarray) -> np.ndarray:
     return np.argmax(unit @ (cent / cnorm[:, None]).T, axis=1)
 
 
-def _np_lloyd(
-    points: np.ndarray, n_cells: int, iters: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Spherical Lloyd's iterations seeded by the first ``n_cells`` rows:
+def _np_lloyd(points: np.ndarray, n_cells: int) -> tuple[np.ndarray, np.ndarray]:
+    """``KMEANS_ITERS`` spherical Lloyd's iterations seeded by the first
+    ``n_cells`` rows:
     argmax-cosine assignment, unnormalized member sums, empty cells keep
     their previous centroid. Returns the centroids and the unit-norm
     points (all-zero rows stay zero)."""
@@ -326,7 +307,7 @@ def _np_lloyd(
     norms = np.linalg.norm(points, axis=1)
     norms[norms == 0.0] = 1.0
     unit = points / norms[:, None]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         best = _np_nearest(unit, cent)
         sums = np.zeros_like(cent)
         np.add.at(sums, best, points)
@@ -337,12 +318,7 @@ def _np_lloyd(
 
 
 def np_kmeans_rows(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_cells: int = 1024,
-    n_train: int = 4096,
-    iters: int = 3,
+    corpus: DataFrame, n_cells: int, n_train: int
 ) -> list[tuple[int, list[float]]]:
     """Vectorized numpy twin of :func:`det_kmeans_rows` for the LARGE-K
     scale path. Same structure — bounded lowest-id training sample,
@@ -358,12 +334,9 @@ def np_kmeans_rows(
     k-means); determinism (fixed sample, fixed op order within numpy)
     is retained so reruns reproduce."""
     rows = (
-        corpus.orderBy(F.col(id_col))
+        corpus.orderBy(F.col("vec_id"))
         .limit(n_train)
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(emb_col).cast("array<double>").alias("emb"),
-        )
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
         .collect()
     )
     if not rows:
@@ -374,12 +347,12 @@ def np_kmeans_rows(
         [list(r.emb) for r in sorted(rows, key=lambda r: r.vec_id)],
         dtype=np.float64,
     )
-    cent, _ = _np_lloyd(train, n_cells, iters)
+    cent, _ = _np_lloyd(train, n_cells)
     return [(cid, [float(v) for v in cent[cid]]) for cid in range(len(cent))]
 
 
 def coarse_shards(
-    cent_embs: list[list[float]], n_coarse: int, iters: int = 3
+    cent_embs: list[list[float]], n_coarse: int
 ) -> tuple[list[tuple[int, list[float]]], list[int]]:
     """Two-level IVF: cluster the K fine centroids themselves into
     ``n_coarse`` coarse cells (numpy Lloyd over a K x dim matrix —
@@ -388,11 +361,11 @@ def coarse_shards(
     probes the ``nprobe`` nearest coarse cells and argmaxes only over
     those shards' fine centroids: assignment cost drops from O(N*K) to
     O(N*(n_coarse + nprobe*K/n_coarse)) — the escape hatch PERF.md's
-    r11 K-sweep named when the broadcast argmax overtook at K=256."""
+    K-sweep named when the broadcast argmax overtook at K=256."""
     if not len(cent_embs):
         return [], []
     cent = np.asarray(cent_embs, dtype=np.float64)
-    coarse, cn = _np_lloyd(cent, n_coarse, iters)
+    coarse, cn = _np_lloyd(cent, n_coarse)
     shard_of = _np_nearest(cn, coarse)
     rows = [
         (sid, [float(v) for v in coarse[sid]]) for sid in range(len(coarse))
@@ -403,11 +376,9 @@ def coarse_shards(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
+    k: int,
+    n_cells: int,
+    nprobe: int,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style ANN over ``centroids`` (``cell_id``, ``cell_emb``) or, by
@@ -424,19 +395,19 @@ def ivf_topk(
     """
     if centroids is None:
         centroids = (
-            corpus.orderBy(F.col(id_col)).limit(n_cells)
+            corpus.orderBy(F.col("vec_id")).limit(n_cells)
             .select(
-                F.col(id_col).alias("cell_id"), F.col(emb_col).alias("cell_emb")
+                F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cell_emb")
             )
         )
-    cos_cell = cosine_pandas(F.col(emb_col), F.col("cell_emb"))
+    cos_cell = cosine_pandas(F.col("embedding"), F.col("cell_emb"))
 
     # assign each corpus row to its best cell (broadcast centroids, rank 1)
     assigned = (
         corpus.crossJoin(F.broadcast(centroids))
         .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(emb_col).alias("c_emb"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_emb"),
             F.col("cell_id"),
             cos_cell.alias("cell_cos"),
         )
@@ -451,8 +422,8 @@ def ivf_topk(
     probes = (
         queries.crossJoin(F.broadcast(centroids))
         .select(
-            F.col(id_col).alias("q_id"),
-            F.col(emb_col).alias("q_emb"),
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_emb"),
             F.col("cell_id"),
             cos_cell.alias("cell_cos"),
         )
@@ -464,7 +435,7 @@ def ivf_topk(
     )
 
     # the probe side is |queries| x nprobe rows — broadcast it explicitly
-    # (r16 optimization): the planner cannot size the post-window probe
+    #: the planner cannot size the post-window probe
     # relation and picked a SortMergeJoin, which exchanged AND sorted the
     # whole assigned corpus by cell_id — an n_cells-ary hot-key
     # partitioning (16 distinct keys), a skew magnet at scale. The query
@@ -484,14 +455,7 @@ def ivf_topk(
 
 
 def embedding_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    nbits: int = 32,
-    max_hamming: int = 6,
-    min_cosine: float = 0.8,
-    dim: int = 64,
-    seed: int = 42,
+    df: DataFrame, nbits: int, max_hamming: int, min_cosine: float
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs at corpus scale — the unblocked LSH
     path for the oracle-checked ``dedup_embedding_cosine`` (which bounds
@@ -512,13 +476,13 @@ def embedding_neardup_pairs(
     while weakly-similar pairs rarely collide — which is what keeps bucket
     sizes (and the candidate join) bounded on real, clustered corpora.
     """
-    planes = _hyperplanes(dim, nbits, seed)
+    planes = _hyperplanes(nbits)
     # one UDF pass; segments, both join sides, and verify reuse it
     sig = persist_tracked(
         df.select(
-            F.col(id_col).alias("id"),
-            F.col(emb_col).alias("emb"),
-            signature_pandas(F.col(emb_col), planes).alias("sig"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("emb"),
+            signature_pandas(F.col("embedding"), planes).alias("sig"),
         )
     )
     b = max_hamming + 1
@@ -559,38 +523,29 @@ def embedding_neardup_pairs(
     )
 
 
-def _pq_codebooks(
-    corpus: DataFrame,
-    id_col: str,
-    emb_col: str,
-    m: int,
-    ksub: int,
-    dim: int,
-    sample_n: int = 512,
-    iters: int = 8,
-) -> list[list[list[float]]]:
-    """Per-subspace L2 k-means codebooks (m x ksub x dim/m), trained
+def _pq_codebooks(corpus: DataFrame) -> list[list[list[float]]]:
+    """Per-subspace L2 k-means codebooks (PQ_M x PQ_KSUB x EMB_DIM/PQ_M), trained
     driver-side on a deterministic corpus sample (lowest ids, strided
     seeding, fixed Lloyd iterations — reproducible run-to-run). Training
     on a bounded sample is standard PQ practice; the codebooks are tiny
-    (m*ksub*dsub floats) and broadcast everywhere downstream."""
+    (PQ_M*PQ_KSUB*dsub floats) and broadcast everywhere downstream."""
     sample = (
-        corpus.select(id_col, emb_col)
-        .orderBy(F.col(id_col))
-        .limit(sample_n)
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.col("vec_id"))
+        .limit(PQ_SAMPLE)
         .collect()
     )
     X = np.array([r[1] for r in sample], dtype=np.float64)
-    dsub = dim // m
+    dsub = EMB_DIM // PQ_M
     books: list[list[list[float]]] = []
-    for j in range(m):
+    for j in range(PQ_M):
         sub = X[:, j * dsub : (j + 1) * dsub]
-        idx = (np.arange(ksub) * max(len(sub) // ksub, 1)) % len(sub)
+        idx = (np.arange(PQ_KSUB) * max(len(sub) // PQ_KSUB, 1)) % len(sub)
         cents = sub[idx].copy()
-        for _ in range(iters):
+        for _ in range(PQ_ITERS):
             d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
             assign = d2.argmin(1)
-            for c in range(ksub):
+            for c in range(PQ_KSUB):
                 pts = sub[assign == c]
                 if len(pts):
                     cents[c] = pts.mean(0)
@@ -598,12 +553,7 @@ def _pq_codebooks(
     return books
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """(id, codes: array<int>) PQ codes — per subspace, the index of the
     nearest codebook centroid (L2). Arrow-vectorized: one gather+argmin
     per batch per subspace."""
@@ -623,51 +573,38 @@ def pq_encode(
         return pd.Series(list(out))
 
     return df.select(
-        F.col(id_col).alias("id"),
-        F.col(emb_col).alias("emb"),
-        _enc(F.col(emb_col)).alias("codes"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("emb"),
+        _enc(F.col("embedding")).alias("codes"),
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    rerank: int = 50,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """ANN top-k via product quantization + exact re-rank — the third leg
     of the standard ANN trio (sign-LSH buckets, IVF cells, PQ codes).
 
-    The corpus is stored as m 4-bit-ish codes (here array<int>, m*ksub*dsub
-    codebooks broadcast); the approximate distance to a query is computed
+    The corpus is stored as PQ_M 4-bit-ish codes (here array<int>,
+    PQ_M*PQ_KSUB*dsub codebooks broadcast); the approximate distance to a query is computed
     by RECONSTRUCTING each candidate from its codes (batch gather, one
     numpy op) and taking L2 — algebraically identical to the classic
     per-query ADC lookup tables, but expressible as one Arrow-vectorized
     UDF over a crossJoin against the broadcast query batch. The best
-    ``rerank`` candidates per query are re-ranked by exact cosine. At
-    100 TB only the code table (m ints/vector) is scanned per query batch;
+    ``PQ_RERANK`` candidates per query are re-ranked by exact cosine. At
+    100 TB only the code table (PQ_M ints/vector) is scanned per query batch;
     raw vectors are touched for rerank candidates only — the crossJoin
     carries (id, codes), and the embedding table is re-joined against the
-    broadcast ≤ queries×rerank survivor set."""
-    actual_dim = corpus.select(F.size(emb_col)).first()[0]
-    if actual_dim != dim:
+    broadcast ≤ queries×PQ_RERANK survivor set."""
+    actual_dim = corpus.select(F.size("embedding")).first()[0]
+    if actual_dim != EMB_DIM:
         raise ValueError(
-            f"pq_topk configured for dim={dim} but {emb_col} vectors have "
-            f"dim={actual_dim}; pass dim explicitly (must be divisible by "
-            f"m={m}) — without this check the mismatch surfaces as an "
-            "opaque numpy broadcast error inside the ADC kernel"
+            f"pq_topk is built for dim={EMB_DIM} but embedding vectors have "
+            f"dim={actual_dim} — without this check the mismatch surfaces "
+            "as an opaque numpy broadcast error inside the ADC kernel"
         )
-    books = _pq_codebooks(corpus, id_col, emb_col, m, ksub, dim)
-    codes = persist_tracked(
-        pq_encode(corpus, books, id_col, emb_col).select("id", "codes")
-    )
+    books = _pq_codebooks(corpus)
+    codes = persist_tracked(pq_encode(corpus, books).select("id", "codes"))
     q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     flat_books = [list(map(list, b)) for b in books]
 
@@ -694,13 +631,13 @@ def pq_topk(
             _adc(F.col("codes"), F.col("q_emb")).alias("adc"),
         )
         .withColumn("adc_rnk", F.row_number().over(w_adc))
-        .filter(F.col("adc_rnk") <= rerank)
+        .filter(F.col("adc_rnk") <= PQ_RERANK)
     )
     # exact-rerank join: the survivor set (≤ |queries|·rerank rows) is
     # broadcast against the embedding table, so raw vectors stream through
     # a hash lookup only — never the corpus×queries stage above
     emb_tbl = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("c_emb")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
     cand = emb_tbl.join(F.broadcast(survivors), "neighbor_id")
     cos = F.round(cosine_pandas(F.col("c_emb"), F.col("q_emb")), 6)

@@ -4,8 +4,8 @@ The reference keeps exact SQL aggregates only (no sketches anywhere in
 ``/root/reference/src/main/py/ct_data.py`` — its distinct counts are plain
 ``COUNT(DISTINCT ...)``); at 100 TB a distinct count or a membership
 pre-filter cannot afford a full shuffle of the key domain, so these are
-the scale substitutes. The design premise (same as the r5 dedup
-graduation, ``operators/dedup.py``): every hash is the md5-prefix u32
+the scale substitutes. The design premise (same as the dedup
+family, ``operators/dedup.py``): every hash is the md5-prefix u32
 family (:func:`clinical_bi_spark.operators.dedup._md5_word`) and every
 combining step is integer arithmetic, so a DuckDB oracle can recompute
 registers / cells / bit positions EXACTLY — the sketches are approximate
@@ -117,7 +117,7 @@ def hll_estimate_expr(m: int) -> str:
     )
 
 
-def hll_registers(df: DataFrame, col: str, m: int = 256) -> DataFrame:
+def hll_registers(df: DataFrame, col: str, m: int) -> DataFrame:
     """HyperLogLog register table for ``df[col]``: (bucket, r).
 
     bucket = md5-u32(word 1) mod m; rho = leading-zero count of the SECOND
@@ -133,7 +133,7 @@ def hll_registers(df: DataFrame, col: str, m: int = 256) -> DataFrame:
     )
 
 
-def hll_estimate(df: DataFrame, col: str, m: int = 256) -> DataFrame:
+def hll_estimate(df: DataFrame, col: str, m: int) -> DataFrame:
     """One-row HLL distinct estimate with its integer evidence columns.
 
     Returns (m, buckets_used, sum_scaled, est_distinct) where
@@ -153,7 +153,7 @@ def hll_estimate(df: DataFrame, col: str, m: int = 256) -> DataFrame:
 
 
 def countmin_cells(
-    tokens: DataFrame, col: str, depth: int = 4, width: int = 1024
+    tokens: DataFrame, col: str, depth: int, width: int
 ) -> DataFrame:
     """Count-min sketch cell table (j, cell, cnt) over token OCCURRENCES.
 
@@ -188,7 +188,7 @@ def countmin_cells(
 
 
 def countmin_probe(
-    cells: DataFrame, probes: DataFrame, col: str, depth: int = 4, width: int = 1024
+    cells: DataFrame, probes: DataFrame, col: str, depth: int, width: int
 ) -> DataFrame:
     """CM point-estimate for each probe token: min over the depth cells the
     token maps to. ``probes`` is small by construction (a top-k list); the
@@ -218,7 +218,7 @@ def countmin_probe(
 
 
 def bloom_build(
-    keys: DataFrame, col: str, m_bits: int = 16384, k: int = 4
+    keys: DataFrame, col: str, m_bits: int, k: int
 ) -> list[int]:
     """Build a Bloom filter over ``keys[col]`` and return it as a list of
     int64 words (m_bits/64 entries, fixed size).
@@ -261,7 +261,7 @@ def bloom_build(
 
 
 def bloom_probe_expr(
-    col: Column, words: list[int], m_bits: int = 16384, k: int = 4
+    col: Column, words: list[int], m_bits: int, k: int
 ) -> Column:
     """Membership-test Column: true iff all k bit positions of ``col`` are
     set in ``words``. The bitmap rides into the plan as a literal array →

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted(*content: Column, n_salts: int = 16) -> Column:
+def salted(*content: Column, n_salts: int) -> Column:
     """Deterministic sub-key: hash of CONTENT columns mod n_salts. Use as
     an extra first-phase groupBy key for a skewed aggregation, then
     re-aggregate without the salt.
@@ -28,7 +28,7 @@ def salted(*content: Column, n_salts: int = 16) -> Column:
     return F.pmod(F.xxhash64(*content), F.lit(n_salts))
 
 
-def two_phase_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
+def two_phase_count(df: DataFrame, key: str, n_salts: int) -> DataFrame:
     """Example two-phase (salted) aggregation: COUNT per hot key without a
     single reducer absorbing the whole key. Phase 1 groups on (key, salt),
     phase 2 merges the partials — both shuffles are uniform. The salt

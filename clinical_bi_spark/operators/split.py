@@ -29,8 +29,9 @@ def exact_size_seeded_split(
     df: DataFrame,
     train_frac: float,
     validate_frac: float,
-    seed: int = 42,
-    order_key: str | None = None,
+    *,
+    seed: int,
+    order_key: str | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Exact-size 3-way split: rank rows by rand(seed) and cut at
     floor(train_frac·n) and floor((train_frac+validate_frac)·n) —
@@ -63,13 +64,14 @@ def exact_size_seeded_split(
 _SPLIT_PRE_MOD = 999_983  # prime
 _SPLIT_MULT = 2_654_435_761  # ⌊2^32/φ⌋
 _SPLIT_RANGE = 1 << 32
+_SPLIT_MODULUS = 10_000
 
 
-def split_bucket(key: F.Column, modulus: int = 10_000) -> F.Column:
-    """Deterministic bucket in [0, modulus) — same arithmetic is valid
-    ANSI SQL for the oracle (see m1_keyed_split)."""
+def split_bucket(key: F.Column) -> F.Column:
+    """Deterministic bucket in [0, _SPLIT_MODULUS) — same arithmetic is
+    valid ANSI SQL for the oracle (see m1_keyed_split)."""
     mixed = F.pmod(F.pmod(key, F.lit(_SPLIT_PRE_MOD)) * F.lit(_SPLIT_MULT), F.lit(_SPLIT_RANGE))
-    return F.pmod(mixed, F.lit(modulus))
+    return F.pmod(mixed, F.lit(_SPLIT_MODULUS))
 
 
 def keyed_hash_split(
@@ -77,15 +79,14 @@ def keyed_hash_split(
     key: str,
     train_frac: float = 0.7,
     validate_frac: float = 0.005,
-    modulus: int = 10_000,
 ) -> DataFrame:
     """Deterministic keyed split: label each row train/validate/test from a
     Fibonacci hash of its key. Engine-independent (same SQL runs in
     DuckDB), shuffle-free, and stable under repartitioning — the property
     the reference's global permutation cannot give at scale."""
-    bucket = split_bucket(F.col(key), modulus)
-    t_cut = int(train_frac * modulus)
-    v_cut = t_cut + int(validate_frac * modulus)
+    bucket = split_bucket(F.col(key))
+    t_cut = int(train_frac * _SPLIT_MODULUS)
+    v_cut = t_cut + int(validate_frac * _SPLIT_MODULUS)
     return df.withColumn(
         "split",
         F.when(bucket < t_cut, "train")
@@ -98,8 +99,9 @@ def exact_size_seeded_split_distributed(
     df: DataFrame,
     train_frac: float,
     validate_frac: float,
-    seed: int = 42,
-    order_key: str | None = None,
+    *,
+    seed: int,
+    order_key: str | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Exact-size 3-way split WITHOUT the single-partition global sort —
     the 100 TB form of :func:`exact_size_seeded_split` (same contract:
@@ -131,7 +133,6 @@ def stratified_sample_exact(
     stratum_col: str,
     frac: float,
     key: str,
-    modulus: int = 10_000,
 ) -> DataFrame:
     """Exact-size stratified sample: floor(frac · n_s) rows from every
     stratum s, chosen by Fibonacci-hash order of ``key`` (then key, so the
@@ -146,7 +147,7 @@ def stratified_sample_exact(
     giant stratum by a salt on the hash order (rank is still exact per
     salt-range prefix sum, same trick as ranking.global_row_number).
     """
-    b = split_bucket(F.col(key), modulus)
+    b = split_bucket(F.col(key))
     w = Window.partitionBy(stratum_col).orderBy("__b", key)
     return (
         df.withColumn("__b", b)

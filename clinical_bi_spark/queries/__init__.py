@@ -33,7 +33,7 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, bench: bool = False):
+def query(name: str, oracle: str | None, bench: bool = False):
     """Register a query; the decorated fn is ``(spark, sf_dir) -> DataFrame``."""
 
     def deco(fn: QueryFn) -> QueryFn:

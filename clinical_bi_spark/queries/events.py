@@ -749,7 +749,7 @@ def evt_json_typed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pattern matching — Spark has no MATCH_RECOGNIZE, so the engine
 # re-expresses it with the gaps-and-islands technique: collapse maximal
 # same-type runs to islands, then pattern-match over the island sequence
-# with lead()). Generalized (r8) to a parameterized PATTERN SPEC: an
+# with lead()). Generalized to a parameterized PATTERN SPEC: an
 # ordered tuple of (event_type, min_count) steps, where each step matches
 # one maximal island of that type with at least min_count events —
 # min_count=1 is the `type+` quantifier, min_count=m is `type{m,}`.
@@ -768,7 +768,7 @@ CEP_DEFAULT_PATTERN: tuple[CepStep, ...] = (
     ("view", 1), ("click", 1), ("purchase", 1),
 )
 CEP_DEFAULT_NAMES: tuple[str, ...] = ("n_view", "n_click", "n_purchase")
-#: r8 quantified pattern: signup+ error{2,} view+  — same machinery,
+#: Quantified pattern: signup+ error{2,} view+  — same machinery,
 #: different step types AND a non-trivial min-count quantifier.
 CEP_QUANTIFIED_PATTERN: tuple[CepStep, ...] = (
     ("signup", 1), ("error", 2), ("view", 1),
@@ -932,7 +932,7 @@ def evt_cep_pattern_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Forward-fill / last-observation-carried-forward (r8): the gap-repair
+# Forward-fill / last-observation-carried-forward: the gap-repair
 # primitive for sparse sensor/metric streams. The fixture's value column
 # is dense, so a deterministic 20% mask (md5 of event_id) synthesizes
 # the gaps — same coin on both engines, so the oracle is exact.
@@ -1001,7 +1001,7 @@ def evt_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Time-bounded funnel (r8): the conversion-window variant of
+# Time-bounded funnel: the conversion-window variant of
 # evt_funnel_conversion — each step must occur within a WINDOW of the
 # previous step's (earliest-qualifying) timestamp: first view -> first
 # click within 3 days of that view -> first purchase within 7 days of
@@ -1098,7 +1098,7 @@ def evt_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CUSUM changepoint detection (r8): per user, the cumulative sum of
+# CUSUM changepoint detection: per user, the cumulative sum of
 # deviations from the global mean S_t = sum_{k<=t}(x_k - mu) peaks where
 # the user's level shifts — argmax |S_t| is the classic single-
 # changepoint estimate (Page's CUSUM, public literature). mu folds as
@@ -1149,7 +1149,7 @@ def evt_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a missing metric reading contributes neither to the global mean
     # nor to the deviation series — without the filter, F.sum skips the
     # NULLs but F.count doesn't, skewing mu, and an all-NULL corpus
-    # crashes the driver-side None/float division (r16 nulls probe).
+    # crashes the driver-side None/float division.
     # The non-null fixtures adjudicate unchanged.
     ev = t.events.filter(F.col("value").isNotNull())
     micro = F.round(F.col("value") * 1000000).cast("bigint")
@@ -1249,8 +1249,7 @@ WHERE nd IS NOT NULL AND nd - d > 1
 def evt_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily per-user gapfill with exact linear interpolation — see the
     block comment above for the densification semantics, the integer
-    micro-unit exactness design, the stated overflow bound, and the r14
-    registration plan."""
+    micro-unit exactness design and the stated overflow bound."""
     t = load_tables(tune(spark), sf_dir)
     epoch = F.lit("1970-01-01").cast("date")
     obs = t.events.groupBy(
@@ -1356,8 +1355,8 @@ FROM a
 def evt_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user time-weighted average of the event value (LOCF integral
     over the observation span, exact integer micro-units) — see the
-    block comment above for the semantics, the remainder-split division,
-    and the r14 registration plan."""
+    block comment above for the semantics and the remainder-split
+    division."""
     t = load_tables(tune(spark), sf_dir)
     ev = t.events.select(
         "user_id",

@@ -456,7 +456,7 @@ def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     sxy = F.col("sxy").cast("double")
     # try_divide: a single-row group (n-1 = 0) or a zero-variance column
     # makes these statistics undefined; DuckDB's division yields NULL
-    # there, ANSI Spark would throw DIVIDE_BY_ZERO — the r9 degenerate-
+    # there, ANSI Spark would throw DIVIDE_BY_ZERO — the degenerate-
     # input sweep (tests/test_analytics.py) pins NULL on both engines
     var_x = F.try_divide(sxx - sx * sx / n, (F.col("n") - 1).cast("double"))
     cov = F.try_divide(sxy - sx * sy / n, (F.col("n") - 1).cast("double"))
@@ -688,7 +688,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         g,
         "n",
         # try_divide: zero rank variance (constant column / single row)
-        # is NULL on both engines, not an ANSI crash (r9 sweep)
+        # is NULL on both engines, not an ANSI crash
         F.try_divide(
             sxy - sx * sy / n,
             F.sqrt((sxx - sx * sx / n) * (syy - sy * sy / n)),
@@ -914,7 +914,7 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Benford first-digit audit (r8): the fraud/drift screen — the leading
+# Benford first-digit audit: the fraud/drift screen — the leading
 # significant digit of positive amounts should follow P(d) = log10(1+1/d).
 # Counts are exact integers; shares and the Benford expectation are
 # identical double expressions on both engines (log10 enters display
@@ -959,8 +959,8 @@ def agg_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n"))
     )
     # `or 0`: SUM over zero qualifying orders is NULL — the empty audit
-    # must yield zero rows, not a driver-side float(None) crash (r10
-    # degenerate probe; the 0.0 literal never divides a real row because
+    # must yield zero rows, not a driver-side float(None) crash (the
+    # 0.0 literal never divides a real row because
     # the grouped relation is empty exactly when total is NULL)
     total = c.agg(F.sum("n")).first()[0] or 0
     share = F.col("n").cast("double") / F.lit(float(total))
@@ -975,7 +975,7 @@ def agg_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Welch's two-sample t-test (r8): mean order-value difference between
+# Welch's two-sample t-test: mean order-value difference between
 # returned ('R') and delivered ('A') lineitems, unequal variances. Same
 # exact-power-sum machinery as agg_stats_battery: BIGINT sums feed ONE
 # identical double expression (t statistic + Welch-Satterthwaite df) on
@@ -1089,7 +1089,7 @@ def agg_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RFM segmentation (r8): the classic customer-value quintile model over
+# RFM segmentation: the classic customer-value quintile model over
 # the event stream — recency (days since last event, vs corpus max),
 # frequency (event count), monetary (value sum in exact micro-units) —
 # each scored 1..5 by ntile over a DETERMINISTIC total order (metric,
@@ -1199,7 +1199,7 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Winsorized mean (r8): robust group mean with tails clipped at the
+# Winsorized mean: robust group mean with tails clipped at the
 # exact interpolated p05/p95. The clipped sum decomposes into
 # order-independent exact parts — SUM of integer cents STRICTLY inside
 # the bounds + n_below*lo + n_above*hi — combined in ONE final double
@@ -1295,7 +1295,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Poisson bootstrap confidence interval (r8): the published DISTRIBUTED
+# Poisson bootstrap confidence interval: the published DISTRIBUTED
 # bootstrap (per-row Poisson(1) replication weights instead of global
 # n-of-n resampling — Chamandy et al.) made fully deterministic: the
 # weight comes from an md5-u32 coin through the Poisson(1) inverse CDF
@@ -1439,7 +1439,7 @@ def agg_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DECIMAL(19,0)*DECIMAL(19,0) -> DECIMAL(38,0), headroom past 1e12 rows x
 # 1e7-cent values = 1e31 << 1e38), then one identically-associated double
 # expression — bit-identical across engines, the agg_stats_battery
-# contract. Reuses the r9-graduated sharded rank (one range exchange,
+# contract. Reuses the sharded rank (one range exchange,
 # never a SinglePartition sort).
 # ---------------------------------------------------------------------------
 
@@ -1475,8 +1475,7 @@ FROM s
 def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group Gini coefficient of l_extendedprice via the rank-sum
     identity, EXACTLY oracled (see _GINI_ORACLE) — computed at the VALUE
-    level, with NO per-row ranks (the r10 equidepth profile's lesson
-    applied at birth): a tie-run of c equal values v with exclusive
+    level, with NO per-row ranks (the equidepth profile's lesson): a tie-run of c equal values v with exclusive
     prefix count R contributes v * (R*c + c*(c+1)/2) to SUM(rank*value)
     — rank order within ties cannot matter because v is constant across
     the run. So the plan is: groupBy(flag, cents) counts (the only
@@ -1487,7 +1486,7 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c*(c+1)/2 split into even/odd integer halves — no fractional
     intermediate) and one identically-associated double expression.
     All-zero prices yield NULL (not an ANSI crash) on both engines —
-    the r9 degenerate-sweep contract."""
+    the degenerate-input sweep's contract."""
     from clinical_bi_spark.operators.ranking import global_prefix_sums
 
     t = load_tables(tune(spark), sf_dir)
@@ -1695,8 +1694,7 @@ FROM s
 @query("agg_mannwhitney_u", oracle=_MWU_ORACLE, bench=True)
 def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Mann-Whitney U with midrank ties and tie-corrected z (see
-    the block comment above for the value-level identity and the r12
-    registration plan). One fact-scale groupBy (map-side combined,
+    the block comment above for the value-level identity). One fact-scale groupBy (map-side combined,
     shuffle bounded by the price DOMAIN), one sharded running total
     (:func:`clinical_bi_spark.operators.ranking.global_prefix_sums`),
     exact integer arithmetic to two identically-associated double

@@ -132,7 +132,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that lets an iterative algorithm carry an exact SQL oracle
     (unrolled CTEs, one per iteration).
 
-    r16 optimization: the fact-scale work (deriving the distinct edge
+    The fact-scale work (deriving the distinct edge
     list) stays in Spark; the 5 rank iterations run on the DRIVER over
     the collected edge list. The collect is bounded BY CONSTRUCTION —
     the node domain is the 25-key nation dimension, so the distinct
@@ -385,7 +385,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact-scale work is the lane aggregation (one
     map-side-combined fact join, shared shape with graph_pagerank's
     audit); the 4 label iterations run on the driver over the collected
-    <=625-row lane table (nation-domain bound — see the r16 comment
+    <=625-row lane table (nation-domain bound — see the comment
     below)."""
     t = load_tables(tune(spark), sf_dir)
     pairs = (
@@ -408,7 +408,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("cnt"))
     )
-    # r16 optimization: ONE bounded collect of the aggregated lane table
+    # ONE bounded collect of the aggregated lane table
     # (<= 625 rows BY CONSTRUCTION — the nation-domain bound, same
     # bounded-collect contract as graph_pagerank's edge list) replaces
     # (a) the separate threshold-scalar action that re-ran the fact-scale
@@ -487,7 +487,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_pagerank micro-int contract; deg is a small int, so both
 # engines' ln agree far beyond the rounding precision — pinned per-deg
 # in tests). deg ≥ 2 is automatic for any customer that generates a
-# pair, so ln is never 0. ROUNDING CAVEAT (r15 ADVICE low): the per-deg
+# pair, so ln is never 0. ROUNDING CAVEAT: the per-deg
 # pin spans exactly deg 2.._AA_BASKET_CAP and relies on Spark F.round
 # (HALF_UP) == DuckDB ROUND (half-away) == Python round() (banker's)
 # agreeing EMPIRICALLY over that range — the Python reference uses a
@@ -540,7 +540,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_AA_MIN_COMMON`` customers, sum round(1e9 / ln(basket size)) over
     the common customers (nano-int exact; hub baskets past
     ``_AA_BASKET_CAP`` excluded on both engines). See the block comment
-    above for the exactness/anti-skew contract and the r17 plan."""
+    above for the exactness/anti-skew contract."""
     t = load_tables(tune(spark), sf_dir)
     baskets = (
         t.orders.join(

@@ -172,7 +172,7 @@ def m6_one_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
         # get() + coalesce(0): a category slot the fit never saw means
         # the indicator is 0 for every row — semantically exact, and it
         # keeps a degenerate single-category corpus from an OOB crash
-        # (r9 sweep; indices are 0-based for get())
+        # (indices are 0-based for get())
         *[
             F.coalesce(F.get(prio, F.lit(i)), F.lit(0.0)).cast("int").alias(f"prio_{i}")
             for i in range(5)
@@ -242,7 +242,7 @@ def m9_mlp_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run per L-BFGS objective evaluation.
     train = encoded.filter(F.col("split") == "train")
     test = encoded.filter(F.col("split") == "test")
-    # r17 (guide §2 — scale-adaptive partitioning): the L-BFGS fit runs
+    # Scale-adaptive partitioning: the L-BFGS fit runs
     # ~43 SERIAL jobs over the stacked training blocks (20 iterations x
     # line-search objective evaluations), and the stacking inherits the
     # scan's partitioning — which for an sf-scale input is ONE partition
@@ -252,7 +252,7 @@ def m9_mlp_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelizes; the branch never fires at scale, where the scan
     # already yields >= min(8, cores) partitions (8, not the core
     # count: the per-job fixed launch cost dominates past that — the
-    # r17 p1/p8/p16/p32 interleaved sweep read 5.67/5.24/6.95/7.30 s).
+    # p1/p8/p16/p32 interleaved sweep read 5.67/5.24/6.95/7.30 s).
     # Accuracy measured bit-identical across p1/p8/p16/p32 at sf0.1
     # (the tie-break-free seeded fit is empirically partition-stable);
     # the pinned accuracy band in tests/test_ml.py adjudicates.
@@ -262,13 +262,13 @@ def m9_mlp_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not train.head(1):
         # degenerate corpus (no F/O orders at all): NULL accuracy, zero
-        # tallies — not an opaque MLP weight-init crash (r10 probe)
+        # tallies — not an opaque MLP weight-init crash
         return spark.createDataFrame(
             [(None, 0, 0)], "accuracy double, correct bigint, total bigint"
         )
     # input layer = 4 numeric + however many priority categories the fit
     # actually saw (5 on real data, ct_estimator.py:117-120; fewer on a
-    # degenerate corpus — a hardcoded 9 crashes weight init, r10 probe)
+    # degenerate corpus — a hardcoded 9 crashes weight init)
     input_dim = 4 + int(encoder.categorySizes[0])
     mlp = MultilayerPerceptronClassifier(
         # 5 hidden x 8 units (ct_estimator.py:117-120)
@@ -281,7 +281,7 @@ def m9_mlp_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     model = mlp.fit(train)
     predictions = model.transform(test)
-    # M11 manual tally parity (ct_estimator.py:144-160). r17: the
+    # M11 manual tally parity (ct_estimator.py:144-160). The
     # separate MulticlassClassificationEvaluator pass is FUSED into this
     # aggregate — metricName="accuracy" is exactly
     # sum(diagonal)/count, i.e. the same two exact integers this tally
@@ -324,7 +324,7 @@ def m3_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not assembled.head(1):
         # degenerate corpus (no F/O orders): no importances to report —
         # Correlation.corr on an empty RDD is an opaque RuntimeException
-        # (r10 probe)
+        #
         return spark.createDataFrame(
             [], "feature string, relative_importance double"
         )
@@ -518,7 +518,7 @@ def m15_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fn").cast("bigint").alias("fn"),
         F.col("tn").cast("bigint").alias("tn"),
         # try_divide: a class absent from the corpus zeroes a metric's
-        # denominator — NULL on both engines, not an ANSI crash (r9 sweep)
+        # denominator — NULL on both engines, not an ANSI crash
         F.try_divide(tp, tp + fp).alias("precision"),
         F.try_divide(tp, tp + fn).alias("recall"),
         F.try_divide(
@@ -726,7 +726,7 @@ def m18_linreg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_x = nd * sxx - sx * sx
     var_y = nd * syy - sy * sy
     # try_divide: a constant regressor (var_x = 0) makes the fit
-    # undefined — NULL on both engines, not an ANSI crash (r9 sweep)
+    # undefined — NULL on both engines, not an ANSI crash
     slope = F.try_divide(cov_n, var_x)
     return m.select(
         "l_returnflag",
@@ -740,7 +740,7 @@ def m18_linreg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M19 (r8): temporal train/val/test split with leakage audit — the
+# M19: temporal train/val/test split with leakage audit — the
 # time-based split a forecasting/sequence pipeline uses instead of the
 # hashed row split (m1): train < 70% of the event-time span, val < 85%,
 # test the rest, with a per-split count of users ALSO present in train

@@ -84,7 +84,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the codec slices bytes, so the oracle must too. DuckDB cannot slice a
 #: BLOB or md5 one (md5 is VARCHAR-only), so both engines fingerprint the
 #: frame's HEX instead — hex is pure ASCII (Spark and DuckDB both emit
-#: uppercase), making md5(VARCHAR) byte-faithful. The r10 unicode sweep
+#: uppercase), making md5(VARCHAR) byte-faithful. The unicode sweep
 #: caught the old character-sliced oracle diverging (333 vs 299 frames)
 #: the moment text stopped being ASCII — chars == bytes only there.
 _FRAME_ORACLE = """
@@ -712,8 +712,8 @@ def multimodal_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MP4 sample-table walk + keyframe extraction.
 #
-# Why this is the right multimodal step (r11 verdict "What's missing" #3
-# named general mp4 as the one format a video-corpus user asks for first):
+# Why this is the right multimodal step (general mp4 is the one format a
+# video-corpus user asks for first):
 # it narrows the declared h264 stub to its true minimum. Everything a
 # training-data pipeline needs from an mp4 SHORT of entropy-decoding the
 # codec bitstream is now REAL: operators/mp4.py writes a structurally
@@ -786,7 +786,7 @@ def multimodal_video_mp4_samples(
 ) -> DataFrame:
     """Every-2nd-keyframe extraction over synthesized mp4 containers —
     see the block comment above for the container spec, the closed-form
-    oracle design, and the r13 registration plan; operators/mp4.py for
+    oracle design; operators/mp4.py for
     the ISO-BMFF writer/parser."""
     import hashlib
 

@@ -496,7 +496,7 @@ def data_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic weighted sampling WITHOUT replacement (r8): the A-Res /
+# Deterministic weighted sampling WITHOUT replacement: the A-Res /
 # Efraimidis-Spirakis priority-sampling scheme from the public literature
 # — each item draws u ~ Uniform(0,1] from its md5 hash and gets priority
 # key -ln(u) / w; the K smallest keys are a weighted sample without
@@ -549,7 +549,7 @@ def data_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight = F.length("text").cast("bigint")
     # zero-weight (empty) documents have sampling probability 0 BY
     # DEFINITION — excluded up front on both engines rather than letting
-    # -ln(u)/0 throw under ANSI where DuckDB would NULL (r9 sweep)
+    # -ln(u)/0 throw under ANSI where DuckDB would NULL
     keyed = t.documents.filter(F.length("text") > 0).select(
         "doc_id",
         weight.alias("weight"),
@@ -689,7 +689,7 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # hash to the m-bucket space IN the explode projection: feature
     # strings never reach an exchange — only (doc_id, lang, bucket) ints
-    # persist_tracked (r16 fix): a bare .persist() here escaped the
+    # persist_tracked: a bare .persist() here escaped the
     # tracked registry, so the release at the next query boundary (and
     # the sequential-replay flatness contract) missed this cache
     fb = persist_tracked(
@@ -871,8 +871,7 @@ def data_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of the o_totalprice distribution,
     reference era (o_orderdate < ``_PSI_SPLIT``, 1998-01-01) vs current
     era — see the block comment
-    above for the conventions, the nano-nat exactness design, and the
-    r12 registration plan.
+    above for the conventions and the nano-nat exactness design.
 
     Scale shape: ONE fact-scale groupBy on the bucket id (map-side
     combined; shuffle bounded by the bucket DOMAIN, ~hundreds of rows),
@@ -1135,8 +1134,8 @@ def data_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered small-file compaction plan: per-day file stats → exact
     distributed running byte total → bin = floor(exclusive_bytes /
     target) → per-bin file count, row count, byte total, and contiguous
-    date range. See the block comment above for the layout rationale,
-    the exactness argument, and the r17 registration plan."""
+    date range. See the block comment above for the layout rationale
+    and the exactness argument."""
     from clinical_bi_spark.operators.ranking import global_prefix_sums
 
     t = load_tables(tune(spark), sf_dir)

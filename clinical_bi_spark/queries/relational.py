@@ -560,7 +560,7 @@ def etl_interventions_conditions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # temp_calculated_values → UPDATE calculated_values FROM, init-user-db.sh:126-196)
 # ---------------------------------------------------------------------------
 
-#: Engine-invariant average (round-1 hash_match lesson): AVG(double) sums
+#: Engine-invariant average (the hash_match lesson): AVG(double) sums
 #: in engine-specific order and ROUND(double, 4) lands on .xxxx5 midpoints
 #: where Spark's BigDecimal HALF_UP and DuckDB's double rounding diverge.
 #: Instead: per-row cents (exact integer after a single deterministic IEEE
@@ -1274,7 +1274,7 @@ def m13_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos_rank_sum = F.sum(F.when(F.col("label") == 1, F.col("rnk")).otherwise(0))
     return ranked.agg(
         # try_divide: a single-class corpus (no positives or no
-        # negatives) has no AUC — NULL on both engines (r9 sweep)
+        # negatives) has no AUC — NULL on both engines
         F.round(
             F.try_divide(
                 pos_rank_sum - (pos * (pos + 1)) / 2.0, pos * (n - pos)
@@ -1550,7 +1550,7 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     (marginals cross-joined, observed counts left-joined with a 0
     default): an empty cell still contributes (0 - E)^2 / E = r*c/n,
     which the observed-cells-only form would silently omit whenever a
-    (dow, event_type) combination has no events (r7 ADVICE fix — at
+    (dow, event_type) combination has no events (at
     SF_ORACLE all cells happen to be populated, so the numpy referee
     pins the empty-cell path via a sparse fixture instead).
 

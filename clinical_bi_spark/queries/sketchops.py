@@ -10,7 +10,7 @@ queries are the scale substitutes, and — unlike the engine's builtin
 EXACTLY adjudicable: the md5-u32 hash family (operators/sketches.py) lets
 the DuckDB oracle recompute registers, cells, and bit positions
 value-for-value, so the driver pins the whole approximate pipeline, not
-just row counts. This is the same graduation the r5 dedup family made.
+just row counts, as for the dedup family.
 """
 
 from __future__ import annotations
@@ -504,7 +504,7 @@ def agg_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = li.crossJoin(F.broadcast(bounds)).select(
         F.least(
             # try_divide: hi == lo (constant column) has bin width 0 —
-            # NULL bin on both engines, not an ANSI crash (r9 sweep)
+            # NULL bin on both engines, not an ANSI crash
             F.floor(
                 F.try_divide(
                     F.col("l_extendedprice") - F.col("lo"),
@@ -887,7 +887,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bottom-k quantile sketch (r9): the sketch family's missing member — a
+# Bottom-k quantile sketch: the sketch family's missing member — a
 # MERGEABLE quantile estimator. The sketch is the k rows with the
 # smallest engine-portable md5-u32 row hash: a uniform row sample that
 # merges by union-then-retake-bottom-k (associative, order-free), which
@@ -981,12 +981,12 @@ def sketch_bottomk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # LEAST-clamped indices: n_rows < k leaves a short
                 # sample; positions beyond it collapse onto the last
                 # element instead of throwing (mirrors the oracle's
-                # LEAST(i, len(vs)); r9 degenerate-input sweep).
+                # LEAST(i, len(vs)); degenerate-input sweep).
                 # F.get (0-based, NULL out of bounds) rather than
                 # element_at: an EMPTY relation clamps the index to 0,
                 # where element_at raises ANSI INVALID_ARRAY_INDEX while
                 # the oracle's vs[0] is NULL — get(-1) is the matching
-                # NULL (r10, ADVICE)
+                # NULL
                 F.round(
                     F.get(vs, F.least(F.lit(i), F.size(vs)) - 1)
                     + F.lit(frac)

@@ -197,7 +197,11 @@ def stream_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scc(tune(spark), sf_dir)
 
 
-def _stream_hll_oracle(m: int = 32) -> str:
+#: HLL registers per window of stream_hll_distinct and its oracle.
+_HLL_M = 32
+
+
+def _stream_hll_oracle() -> str:
     """Exact DuckDB twin of the streaming windowed HLL: recomputes every
     per-day register, the integer-scaled harmonic sums, and the float
     readout (expression text shared via hll_estimate_expr)."""
@@ -206,6 +210,7 @@ def _stream_hll_oracle(m: int = 32) -> str:
         hll_estimate_expr,
     )
 
+    m = _HLL_M
     word = (
         "CAST(CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), {off}, 8)"
         " AS UBIGINT) AS BIGINT)"
@@ -268,7 +273,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinical_bi_spark.sources import load_tables
     from clinical_bi_spark.streaming.windows import windowed_hll_registers
 
-    m = 32
+    m = _HLL_M
     regs = windowed_hll_registers(tune(spark), sf_dir, m=m)
     folded = (
         regs.groupBy("window_start")
@@ -461,7 +466,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked LEFT OUTER stream-stream interval join (views with
     their purchase within 10 min, NULL-padded once the watermark proves
     no match can arrive) — see the block comment above for the exact
-    emission contract and the r12 registration plan."""
+    emission contract."""
     from clinical_bi_spark.streaming.windows import (
         stream_stream_left_outer_join,
     )
@@ -473,8 +478,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stream-static broadcast dimension join (oracle, multi-batch equality
 # test and stateless-plan pin in tests/test_streaming.py).
 #
-# Why this is the right next streaming surface (r11 verdict Next #8
-# named the stream-side broadcast-dim join explicitly): enrichment of a
+# Why this is the right next streaming surface (the stream-side
+# broadcast-dim join): enrichment of a
 # fact stream against slowly-changing reference data is the most common
 # production streaming topology after windowed aggregation, and its
 # exactness story is the strongest of any stream op — the operator is
@@ -499,7 +504,7 @@ LEFT JOIN (
 def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events stream LEFT-joined to the static broadcast customer x
     nation dimension — see the block comment above for the exactness
-    contract and the r13 registration plan, and
+    contract, and
     streaming/windows.stream_static_enrich_join for the execution
     notes (broadcast hash join, zero shuffle on the stream side, no
     state store)."""
@@ -513,8 +518,7 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Custom stateful sessionization.
 #
-# The flatMapGroupsWithState-shaped session rewrite the r11 verdict's
-# Next #8 named: the built-in session_window aggregation can only apply
+# The flatMapGroupsWithState-shaped session rewrite: the built-in session_window aggregation can only apply
 # SQL aggregates to the merged window, while this operator
 # (streaming/stateful.stateful_sessions) carries arbitrary per-session
 # state through the fold — the emitted max_gap_us (largest INTRA-session
@@ -559,7 +563,7 @@ GROUP BY user_id, session_id
 def stream_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful sessionization (applyInPandasWithState) with the
     max intra-session gap aggregate session_window cannot express — see
-    the block comment above for the r13 registration plan and
+    the block comment above and
     streaming/stateful.stateful_sessions for the emission protocol and
     the lossless-eviction contract."""
     from clinical_bi_spark.streaming.stateful import stateful_sessions
@@ -594,8 +598,7 @@ from clinical_bi_spark.queries.events import _TWA_ORACLE as _STREAM_TWA_ORACLE  
 @query("stream_time_weighted_avg", oracle=_STREAM_TWA_ORACLE)
 def stream_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming LOCF-integral time-weighted mean (integer state, exact
-    batch parity) — see the block comment above for the r14 registration
-    plan and streaming/stateful.stream_time_weighted_avg_rows for the
+    batch parity) — see the block comment above and streaming/stateful.stream_time_weighted_avg_rows for the
     fold and the eviction trade."""
     from clinical_bi_spark.streaming.stateful import (
         stream_time_weighted_avg_rows,

@@ -16,6 +16,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clinical_bi_spark.caching import persist_tracked
+from clinical_bi_spark.operators.dedup import (
+    _MERSENNE_P,
+    MINHASH_SEED,
+    WINNOW_K,
+    WINNOW_WINDOW,
+    _hash_params,
+)
 from clinical_bi_spark.functions.text import (
     STOPWORDS,
     doc_fingerprint,
@@ -41,7 +48,7 @@ _LTOKENS = _TOKENS.format(col="lower({col})")
 def _half_up_micro_sql(numer: str, denom: str) -> str:
     """ROUND-half-up of numer/denom at micro (1e-6) grain as exact BIGINT
     arithmetic — the DuckDB twin of functions/text._half_up_micro. The
-    r10 unicode sweep caught the old ROUND(double, 6) forms diverging by
+    unicode sweep caught the old ROUND(double, 6) forms diverging by
     one micro on exact .5e-6 boundaries (Spark BigDecimal HALF_UP vs
     DuckDB std::round(x*1e6)); integer DIV cannot diverge. ``denom``
     must already be clamped >= 1."""
@@ -297,7 +304,11 @@ def text_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle(num_perm: int = 32, bands: int = 8, seed: int = 42) -> str:
+#: MinHash permutations and LSH bands of dedup_minhash_lsh and its oracle.
+_MINHASH_PERM, _MINHASH_BANDS = 32, 8
+
+
+def _minhash_oracle() -> str:
     """Exact DuckDB twin of the full MinHash+LSH pipeline. Possible because
     every hash is engine-portable: md5-prefix u32 token hashes, base-31
     polynomial 3-gram folds, and the (a·g + b) mod p permutation family
@@ -311,11 +322,9 @@ def _minhash_oracle(num_perm: int = 32, bands: int = 8, seed: int = 42) -> str:
     (JVM toLowerCase vs utf8proc on e.g. İ/ß); the document fixtures are
     verified pure-ASCII, and tests/test_properties.py pins the hash chain
     against a pure-Python twin over the full printable-ASCII domain."""
-    from clinical_bi_spark.operators.dedup import _MERSENNE_P, _hash_params
-
-    p = _MERSENNE_P
+    p, num_perm, bands = _MERSENNE_P, _MINHASH_PERM, _MINHASH_BANDS
     rows = num_perm // bands
-    params = _hash_params(num_perm, seed)
+    params = _hash_params(num_perm, MINHASH_SEED)
     mins = ",\n         ".join(
         f"MIN((g * {a} + {b}) % {p}) AS m{i}" for i, (a, b) in enumerate(params)
     )
@@ -385,7 +394,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
     return minhash_lsh_candidates(
         docs, id_col="doc_id", text_col="text",
-        num_perm=32, bands=8, shingle_n=3,
+        num_perm=_MINHASH_PERM, bands=_MINHASH_BANDS, shingle_n=3,
     )
 
 
@@ -537,41 +546,37 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash + sliding-window min — exact integer arithmetic, so DuckDB computes
 # bit-identical fingerprints and the queries built on it are fully
 # oracle-checked (unlike the Spark-hash-specific MinHash/SimHash rows-only
-# paths). ``src`` parameterizes the corpus relation so the curation
-# pipeline can winnow an already-filtered CTE, not just the base table.
-_WINNOW_FPS_BODY = """s AS (
+# paths). ``{src}`` names the corpus relation so the curation pipeline
+# can winnow an already-filtered CTE, not just the base table. The gram
+# hash spells out the WINNOW_K-term polynomial.
+_WINNOW_GRAM = "\n           + ".join(
+    f"ascii(substr(t, CAST({'i' if j == 0 else f'i+{j}'} AS INT), 1))::BIGINT"
+    + (f" * {31 ** (WINNOW_K - 1 - j)}" if j < WINNOW_K - 1 else "")
+    for j in range(WINNOW_K)
+)
+_WINNOW_FPS_BODY = f"""s AS (
   SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS t
-  FROM {src}
+  FROM {{src}}
 ), g AS (
   SELECT doc_id,
-    CASE WHEN length(t) >= 8 THEN
-      list_transform(range(1, length(t) - 6),
-        i -> ascii(substr(t, CAST(i AS INT), 1))::BIGINT * 27512614111
-           + ascii(substr(t, CAST(i+1 AS INT), 1))::BIGINT * 887503681
-           + ascii(substr(t, CAST(i+2 AS INT), 1))::BIGINT * 28629151
-           + ascii(substr(t, CAST(i+3 AS INT), 1))::BIGINT * 923521
-           + ascii(substr(t, CAST(i+4 AS INT), 1))::BIGINT * 29791
-           + ascii(substr(t, CAST(i+5 AS INT), 1))::BIGINT * 961
-           + ascii(substr(t, CAST(i+6 AS INT), 1))::BIGINT * 31
-           + ascii(substr(t, CAST(i+7 AS INT), 1))::BIGINT)
+    CASE WHEN length(t) >= {WINNOW_K} THEN
+      list_transform(range(1, length(t) - {WINNOW_K - 2}),
+        i -> {_WINNOW_GRAM})
     ELSE CAST([] AS BIGINT[]) END AS gh
   FROM s
 ), w AS (
   SELECT doc_id,
     CASE WHEN len(gh) = 0 THEN CAST([] AS BIGINT[])
     ELSE list_sort(list_distinct(list_transform(
-           range(1, greatest(len(gh) - 3, 1) + 1),
-           i -> list_aggregate(gh[CAST(i AS INT):CAST(i + 3 AS INT)], 'min'))))
+           range(1, greatest(len(gh) - {WINNOW_WINDOW - 1}, 1) + 1),
+           i -> list_aggregate(gh[CAST(i AS INT):CAST(i + {WINNOW_WINDOW - 1} AS INT)], 'min'))))
     END AS fps
   FROM g
 )"""
+_WINNOW_CTE = "WITH " + _WINNOW_FPS_BODY.format(src="documents")
 
 
-def _winnow_cte(src: str = "documents") -> str:
-    return "WITH " + _WINNOW_FPS_BODY.format(src=src)
-
-
-_WINNOW_SUMMARY_ORACLE = _winnow_cte() + """
+_WINNOW_SUMMARY_ORACLE = _WINNOW_CTE + """
 SELECT doc_id,
        CAST(len(fps) AS INT)                    AS n_fps,
        CAST(COALESCE(list_sum(fps), 0) AS BIGINT) AS fp_checksum,
@@ -630,7 +635,7 @@ _WINNOW_PAIRS_BODY = """e0 AS (
 )"""
 
 _WINNOW_PAIRS_ORACLE = (
-    _winnow_cte() + ", " + _WINNOW_PAIRS_BODY
+    _WINNOW_CTE + ", " + _WINNOW_PAIRS_BODY
     + "\nSELECT doc_a, doc_b, shared_fps, containment FROM pairs"
 )
 
@@ -753,7 +758,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = persist_tracked(docs, StorageLevel.DISK_ONLY)
     # quality >= 0.85 is exactly qmicro >= 850000 (integer gate; the
     # unicode sweep's second finding was a .5e-6 AVG boundary, so quality
-    # stays an exact micro INT until the final rollup divides). r11: the
+    # stays an exact micro INT until the final rollup divides). The
     # gate is the FUSED curation_keep boolean (pushdown re-inlines any
     # projected score into the filter, where there is no CSE — the fused
     # form shares all eight text scans; equivalence pinned in
@@ -776,7 +781,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mining, the anti-join left side, the rollup) would otherwise each
     # re-run the scoring regexes over the full text (measured 19 s → 6 s
     # at sf0.1) — the same slice a production pipeline writes to parquet.
-    # r16 optimization: the winnow FINGERPRINT pass is fused into this
+    # the winnow FINGERPRINT pass is fused into this
     # materialization (operators/dedup.winnow_fingerprints_passthrough —
     # same kernel, byte-identical fingerprint sets): the survivors' text
     # is consumed by the fingerprint kernel in the same pass that builds
@@ -807,9 +812,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     kept1_all = persist_tracked(
-        winnow_fingerprints_passthrough(
-            survivors, id_col="doc_id", text_col="text"
-        ),
+        winnow_fingerprints_passthrough(survivors),
         StorageLevel.DISK_ONLY,
     )
     kept1 = persist_tracked(
@@ -847,7 +850,7 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~4.5e9 docs leaves the guarantee, and past-2^53 cases provably
     # diverge (tests/test_textops.py pins one: quotient off the double
     # grid comes back +1) while the DuckDB twin (HUGEINT //) stays exact
-    # (r10 ADVICE). SQL `div` is exact over the full int64 range.
+    #. SQL `div` is exact over the full int64 range.
     avg_micro = F.expr(
         "(2 * `__qsum` + cast(n_docs as bigint)) div "
         "(2 * cast(n_docs as bigint))"
@@ -1063,7 +1066,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _EVAL_SOURCE = "src0"
-_DECONTAM_ORACLE = _winnow_cte() + f"""
+_DECONTAM_ORACLE = _WINNOW_CTE + f"""
 , e AS (
   SELECT w.doc_id, unnest(fps) AS fp FROM w
 ), tagged AS (
@@ -1175,7 +1178,7 @@ def dedup_cluster_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integers, so each bigram's neg-log-prob ln(c1 + V) - ln(c12 + 1) is a
 # difference of logs OF INTEGERS, rounded to integer MICRO-NATS per
 # bigram before summing. NOTE the ln() agreement is statistical, not
-# bit-level: a dense probe (r6) showed JVM Math.log and DuckDB libm
+# bit-level: a dense probe showed JVM Math.log and DuckDB libm
 # differ by 1 ulp on ~0.9% of integer arguments (ln(3) included) — the
 # micro-nat ROUND absorbs that everywhere except within ~1 ulp of a .5
 # boundary (~1e-10 probability per pair), and
@@ -1365,7 +1368,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL text ≡ empty text (zero-token doc, counted in N with dl=0 —
     # the same treatment '' already gets): without the coalesce a NULL
     # doc makes dl NULL, F.sum skips it, and the driver-side int(tt)
-    # crashes on an all-NULL corpus (r16 nulls probe). The oracle string
+    # crashes on an all-NULL corpus. The oracle string
     # assumes the fixtures' non-null corpus contract.
     toks = F.filter(
         F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
@@ -1415,13 +1418,15 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _span_oracle(n: int = 8) -> str:
+#: Token n-gram length of dedup_span_ngram's span fingerprints.
+_SPAN_N = 8
+
+
+def _span_oracle() -> str:
     """Exact DuckDB twin of dedup_span_ngram: rewrites the Spark zip_with
     rolling fold as an explicit nested polynomial over h[i..i+n-1]
     (identical step order → identical mod-p values)."""
-    from clinical_bi_spark.operators.dedup import _MERSENNE_P
-
-    p = _MERSENNE_P
+    p, n = _MERSENNE_P, _SPAN_N
 
     def nested(arr: str, base: int) -> str:
         expr = f"{arr}[i]"
@@ -1496,10 +1501,10 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split test files: spread fingerprinting across cores (same
     # policy as the minhash/winnow queries; no-op at real scale)
     docs = t.documents.repartition(spark.sparkContext.defaultParallelism)
-    f1s, f2s = span_fingerprint_arrays(F.col("text"), 8)
-    # (r16 note: caching this relation was tried and REGRESSED 1.2x —
+    f1s, f2s = span_fingerprint_arrays(F.col("text"), _SPAN_N)
+    # (caching this relation was tried and REGRESSED 1.2x —
     # materializing the position-level explode costs more than the two
-    # pipelined recomputes it saves; see OPTIMIZATION_r16.md)
+    # pipelined recomputes it saves)
     spans = (
         docs.select(
             "doc_id",
@@ -1518,7 +1523,7 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").cast("long").alias("dup_spans"))
     )
-    # r16: n_spans is a closed form of the token count — max(len - 7, 0)
+    # n_spans is a closed form of the token count — max(len - 7, 0)
     # rolling 8-gram positions — so the third full pass over the
     # fingerprint explode (groupBy(doc_id).count + a second join) is a
     # per-row expression on the output scan instead. Same tokenizer
@@ -1688,14 +1693,11 @@ def audited_token_relation(
 
     ``return_dfreq=True`` additionally returns the persisted
     ``(w, df)`` document-frequency relation in the SAME token mode as
-    the returned tokens (r16 optimization, guide §2.3): the prefix
-    family used to aggregate the full token relation by vocabulary
-    THREE times per query — the audit's distinct, the df-ordering's
-    groupBy, and the bitmask verify's vocab TopK. One persisted
-    ``dfreq`` now serves all three: the audit is a tiny aggregate OVER
-    it (count rows vs countDistinct(hash) — identical counts to the old
-    exploded-distinct form), the candidates join against it, and the
-    verify TopK sorts it. The hashed relation's df equals the string
+    the returned tokens: one persisted ``dfreq`` serves the audit (a
+    tiny aggregate OVER it: count rows vs countDistinct(hash)) and the
+    bitmask verify's vocab TopK, which sorts it. The candidates'
+    df-ordering keeps its own inline aggregate, so AQE can broadcast
+    that join. The hashed relation's df equals the string
     relation's df because the audited hash is injective on this corpus
     — the certificate that gates hashing is exactly the statement that
     makes the derivation sound.
@@ -1735,20 +1737,13 @@ def audited_token_relation(
     return (toks_h, dfreq_h) if return_dfreq else toks_h
 
 
-def _jaccard_prefix_candidates(
-    toks: DataFrame,
-    tau: float,
-    dfreq: DataFrame | None = None,
-) -> DataFrame:
+def _jaccard_prefix_candidates(toks: DataFrame, tau: float) -> DataFrame:
     """Candidate (doc_a, doc_b) pairs for the prefix-filtered Jaccard
     join: df-ordered prefix equi-join + length-ratio filter + the PPJoin
-    positional filter. ``dfreq``: optional precomputed ``(w, df)``
-    document-frequency relation (cache-backed — see
-    :func:`audited_token_relation`) so the df-ordering needn't
-    re-aggregate the full token relation."""
+    positional filter. The df-ordering aggregates its document
+    frequencies inline, so AQE can broadcast the join."""
     tok = toks.select("doc_id", F.explode("words").alias("w"))
-    if dfreq is None:
-        dfreq = tok.groupBy("w").agg(F.count("*").alias("df"))
+    dfreq = tok.groupBy("w").agg(F.count("*").alias("df"))
     ordered = (
         tok.join(dfreq, "w")
         .groupBy("doc_id")
@@ -1803,7 +1798,7 @@ def _jaccard_prefix_candidates(
     # J >= 4/5 forces overlap >= 4(sa+sb)/9 (9i >= 4(sa+sb),
     # integer-exact for tau = 0.8), pruning candidates BEFORE the verify
     # join ships any token array — the term whose candidate-proportional
-    # volume set the r7 x50 spill ceiling.
+    # volume set the x50 spill ceiling.
     assert abs(tau - 0.8) < 1e-12, "integer bound below is derived for tau=4/5"
     return (
         matched.groupBy("doc_a", "doc_b", "sa", "sb")
@@ -1828,8 +1823,8 @@ def _bitmask_pair_overlap(
     spark: SparkSession,
     toks: DataFrame,
     cand: DataFrame,
-    vocab_cap: int = _JACCARD_BITMASK_VOCAB_CAP,
-    dfreq: DataFrame | None = None,
+    vocab_cap: int,
+    dfreq: DataFrame,
 ) -> DataFrame | None:
     """Dense-bitmask EXACT overlap for prefix-join candidate pairs —
     the shared verify core of the prefix family (Jaccard and directed
@@ -1850,7 +1845,7 @@ def _bitmask_pair_overlap(
     a broadcast id join; <= ceil(cap/64) longs per document mask. The
     per-pair verify is pure ALU codegen — no per-row allocation, no
     hash set — which is both the ~6x CPU cut and the end of the
-    family's JIT-warmup bench jitter (PERF.md round-13)."""
+    family's JIT-warmup bench jitter (PERF.md)."""
     tok_type = toks.schema["words"].dataType.elementType.simpleString()
     if dfreq is None:
         dfreq = (
@@ -1948,7 +1943,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     PPJoin positional filter (min-over-matches overlap upper bound from
     prefix positions — see inline derivation) prune candidates before
     the exact array_intersect verification, cutting the verify join's
-    candidate-proportional token-array volume (the r7 x50 spill
+    candidate-proportional token-array volume (the x50 spill
     ceiling's attributed term).
 
     This is the exact-threshold scale path that dedup_ngram_jaccard's
@@ -1979,9 +1974,9 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokens are hashed ONLY behind a clean per-run injectivity
     # certificate (audit inside the query; strings on a collision).
     # A fused audit+dfreq single-vocabulary-pass variant was measured
-    # r14 and REJECTED (1.077x): with only TWO vocabulary consumers the
+    # and REJECTED (1.077x): with only TWO vocabulary consumers the
     # saved fact-scale pass was offset by the extra vocabulary persist.
-    # r16 re-measured AFTER the bitmask verify became the default (its
+    # Re-measured AFTER the bitmask verify became the default (its
     # vocab TopK is a THIRD full-corpus vocabulary aggregation): the
     # shared persisted dfreq now wins — one fact-scale vocabulary pass
     # serves the audit, the df-ordering, and the verify TopK.
@@ -2222,7 +2217,7 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt from the survivors in order — the C4 repeated-span / Dolma
     paragraph-dedup rewrite at word-gram granularity.
 
-    Plan shape for 100 TB (r16 restructure): grams are built PER ROW from
+    Plan shape for 100 TB: grams are built PER ROW from
     the split array (transform over a position sequence — no posexplode +
     lead() window, so the old full-word-row exchange + sort is gone) and
     leave the row only as md5-u32 int pairs; the df count is the one
@@ -2360,7 +2355,7 @@ def text_chunk_overlap_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Keep-best dedup survivorship (r8): exact dedup keeps min(doc_id); real
+# Keep-best dedup survivorship: exact dedup keeps min(doc_id); real
 # curation pipelines keep the BEST representative per duplicate cluster
 # and emit a survivorship map (dupe -> keeper) so downstream references
 # re-point. Clusters here key on the WORD-SET fingerprint (md5 of the
@@ -2436,7 +2431,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bigram collocation mining via PMI (r8): the corpus-analysis op that
+# Bigram collocation mining via PMI: the corpus-analysis op that
 # surfaces multi-word expressions ("new york") before tokenizer
 # training. PMI = ln(p(xy) / (p(x) p(y))); the RANKING key is the raw
 # probability ratio computed with one IEEE division (bit-identical
@@ -2528,7 +2523,7 @@ def text_bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # `or 0`: SUM over an empty vocabulary is NULL — a zero-token corpus
     # must yield the empty top-K, not a driver-side float(None) crash
-    # (r10 degenerate probe)
+    #
     n_tok = uc.agg(F.sum("c")).first()[0] or 0
     scored = (
         bc.join(uc.select(F.col("tok").alias("w1"), F.col("c").alias("c_x")), "w1")
@@ -2563,7 +2558,7 @@ def text_bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Containment (asymmetric set-overlap) join (r8): C(A, B) = |A∩B| / |A|
+# Containment (asymmetric set-overlap) join: C(A, B) = |A∩B| / |A|
 # >= 0.9 — the partial-copy/quotation detector the SYMMETRIC Jaccard
 # join cannot express (a short document fully quoted inside a long one
 # has high containment but low Jaccard). Prefix filtering adapts: if
@@ -2612,10 +2607,9 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     full token relation but each candidate's key is an A-prefix token,
     keeping hot tokens out of join keys.
 
-    r9 (after its first bench floor came in at 153 s): three levers —
+    Three levers (its first bench floor was 153 s):
     (1) tokens flow as xxhash64 longs (injectivity-audited, string
-    fallback); (2) a LENGTH filter the r8
-    form lacked: |A∩B| <= |B|, so C(A,B) >= 9/10 needs 10*sb >= 9*sa,
+    fallback); (2) a LENGTH filter: |A∩B| <= |B|, so C(A,B) >= 9/10 needs 10*sb >= 9*sa,
     integer-exact; (3) the two-sided POSITIONAL bound: the B posting
     list now carries positions in B's own df-ordered list, and since
     both lists share one global order, every shared token beyond the
@@ -2635,7 +2629,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("words") >= 1)
     # tokens are hashed ONLY behind a clean per-run injectivity
     # certificate (audit inside the query; strings on a collision).
-    # r16: one persisted dfreq serves the audit AND the bitmask verify's
+    # one persisted dfreq serves the audit AND the bitmask verify's
     # vocab TopK (see audited_token_relation). The df-ordering below
     # keeps its INLINE aggregate: the join must stay a runtime broadcast,
     # and AQE only converts when the build side sits above an observable
@@ -2726,7 +2720,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r9 (pre-declared in the r9 window comment): the SECOND containment
+# The SECOND containment
 # direction — superset detection, rolled up per containing document.
 # The raw C(B,A) pair list is the mirror of dedup_containment_prefix's
 # output, so the operator-level value is the per-superset aggregation: a
@@ -2764,8 +2758,7 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
     always the SUBSET side's rarest-token prefix — anti-skew preserved),
     plus one partial-agg'd rollup on the superset id; the all-pairs
     oracle again proves the prefix filter lossless through the rollup.
-    Kept standalone (no shared helper with dedup_containment_prefix) so
-    this landing leaves the r8-adjudicated query's code byte-identical."""
+    Kept standalone (no shared helper with dedup_containment_prefix)."""
     t = load_tables(tune(spark), sf_dir)
     tau = _CONTAIN_T
     toks = t.documents.select(
@@ -2799,7 +2792,7 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ordered = persist_tracked(ordered)
-    # same candidate machinery as dedup_containment_prefix's r9 form:
+    # same candidate machinery as dedup_containment_prefix:
     # u64 tokens, the 10*s_sup >= 9*s_sub length filter, and the
     # two-sided positional bound (see that query's docstring derivation)
     a = ordered.select(
@@ -2856,7 +2849,7 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Character-entropy text quality (r8): Shannon entropy of the per-doc
+# Character-entropy text quality: Shannon entropy of the per-doc
 # character distribution — the gibberish screen (near-zero bits =
 # repeated-character spam, ~4.2 bits = normal English, >5 bits = random
 # bytes/encoded blobs). Exact across engines: both compute
@@ -3073,20 +3066,18 @@ def text_bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     see the block comment above for the wrapper-string merge semantics
     and the unrolled-CTE oracle design."""
     words = _bpe_words(spark, sf_dir)
-    # (r16 note: reducing to per-(doc, word) counts first — one
+    # (reducing to per-(doc, word) counts first — one
     # tokenization pass + a cached distinct relation — was tried and
     # REGRESSED 1.33x: the (doc_id, word) exchange + cache it introduces
-    # costs more than the second pipelined tokenization it saves; see
-    # OPTIMIZATION_r16.md)
+    # costs more than the second pipelined tokenization it saves)
     # coalesce(1): the cached relation the 12 serial merge rounds iterate
     # on is VOCABULARY-sized (distinct [a-z]{1,20} words — saturates, and
     # the same relation is broadcast whole into the encode join below), so
     # one cache partition makes each round's pair-count job a single task
     # instead of a fan-out over the word-count shuffle's partition layout;
     # the fact-scale map side of that shuffle stays parallel (coalesce
-    # collapses only the post-exchange read). A/B'd r16: 0.539x
-    # (9.039 -> 4.874 s in a degraded host window; the recorded number
-    # in OPTIMIZATION_r16.md — the r17 ADVICE reconciliation).
+    # collapses only the post-exchange read). A/B: 0.539x
+    # (9.039 -> 4.874 s in a degraded host window).
     vocab = persist_tracked(
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

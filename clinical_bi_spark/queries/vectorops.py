@@ -23,9 +23,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clinical_bi_spark.functions.vectors import cosine_similarity, l2_norm
+from clinical_bi_spark.operators.similarity import (
+    EMB_DIM,
+    KMEANS_ITERS,
+    KMEANS_TRAIN,
+    PQ_ITERS,
+    PQ_KSUB,
+    PQ_M,
+    PQ_RERANK,
+    PQ_SAMPLE,
+    _hyperplanes,
+)
 from clinical_bi_spark.queries import query
 from clinical_bi_spark.session import tune
 from clinical_bi_spark.sources import load_tables
+
+#: Neighbours per query of every ANN top-k query and its oracle.
+_ANN_K = 5
 
 _TOPK_ORACLE = """
 SELECT q_id, neighbor_id, cos_sim, rank
@@ -135,10 +149,41 @@ def vec_norm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_lsh_oracle(
-    nbits: int = 8, max_hamming: int = 3, k: int = 5,
-    dim: int = 64, seed: int = 42,
-) -> str:
+def _signatures_cte(nbits: int) -> str:
+    """The CTEs both sign-LSH oracles open with: the ``nbits``
+    deterministic hyperplanes as repr-roundtrip literals, and ``es``
+    (vec_id, sig, emb) with signatures in sequential-order list
+    arithmetic."""
+    plane_rows = ",\n    ".join(
+        "({}, [{}])".format(i, ", ".join(repr(v) for v in row))
+        for i, row in enumerate(_hyperplanes(nbits))
+    )
+    return f"""
+WITH pl(i, plane) AS (VALUES
+    {plane_rows}
+), e AS (
+  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
+), dots AS (
+  SELECT e.vec_id, pl.i,
+         list_sum(list_transform(range(1, {EMB_DIM + 1}),
+                                 j -> emb[j] * plane[j])) AS dot
+  FROM e, pl
+), sig AS (
+  SELECT vec_id,
+         SUM(CASE WHEN dot >= 0 THEN 1::BIGINT << i ELSE 0::BIGINT END) AS sig
+  FROM dots GROUP BY vec_id
+), es AS (
+  SELECT s.vec_id, s.sig, e.emb FROM sig s JOIN e ON e.vec_id = s.vec_id
+)"""
+
+
+# nbits=8 / max_hamming=3 ≈ 0.65 recall on near-random 64-d vectors
+# (measured; real embedding corpora cluster and do far better) while
+# pruning most of the corpus per query.
+_LSH_NBITS, _LSH_MAX_HAMMING = 8, 3
+
+
+def _ann_lsh_oracle() -> str:
     """DuckDB twin of the multi-probe sign-LSH top-k pipeline.
 
     Same technique as ``dedup_embedding_lsh``: hyperplanes are
@@ -155,30 +200,7 @@ def _ann_lsh_oracle(
     also proves the 93-mask expansion loses no candidate. Ranking
     (ROUND(cos,6) DESC, neighbor_id) is deterministic, so top-k matches
     row-for-row."""
-    from clinical_bi_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, nbits, seed)
-    plane_rows = ",\n    ".join(
-        "({}, [{}])".format(i, ", ".join(repr(v) for v in row))
-        for i, row in enumerate(planes)
-    )
-    return f"""
-WITH pl(i, plane) AS (VALUES
-    {plane_rows}
-), e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), dots AS (
-  SELECT e.vec_id, pl.i,
-         list_sum(list_transform(range(1, {dim + 1}),
-                                 j -> emb[j] * plane[j])) AS dot
-  FROM e, pl
-), sig AS (
-  SELECT vec_id,
-         SUM(CASE WHEN dot >= 0 THEN 1::BIGINT << i ELSE 0::BIGINT END) AS sig
-  FROM dots GROUP BY vec_id
-), es AS (
-  SELECT s.vec_id, s.sig, e.emb FROM sig s JOIN e ON e.vec_id = s.vec_id
-)
+    return f"""{_signatures_cte(_LSH_NBITS)}
 SELECT q_id, neighbor_id, cos_sim, rank
 FROM (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
@@ -189,11 +211,11 @@ FROM (
                     c.vec_id) AS INT) AS rank
   FROM es q
   JOIN es c
-    ON bit_count(xor(q.sig, c.sig)) <= {max_hamming}
+    ON bit_count(xor(q.sig, c.sig)) <= {_LSH_MAX_HAMMING}
    AND c.vec_id <> q.vec_id
   WHERE q.vec_id < 8
 ) t
-WHERE rank <= {k}
+WHERE rank <= {_ANN_K}
 """
 
 
@@ -205,7 +227,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join → cosine rank) is deterministic, so with
     sequential-arithmetic signatures it carries an EXACT SQL oracle: the
     naive bit_count(xor)<=h all-pairs form, whose green driver row also
-    proves the multi-probe expansion loses no candidate (the r5
+    proves the multi-probe expansion loses no candidate (the
     dedup_embedding_lsh technique). The former rows-only self-evidence
     (recall@k annotation) is superseded by the oracle; recall floors vs
     brute force stay pinned in tests/test_similarity.py. Signatures and
@@ -215,47 +237,32 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(tune(spark), sf_dir)
     emb = t.embeddings
-    # nbits=8 / max_hamming=3 ≈ 0.65 recall on near-random 64-d vectors
-    # (measured; real embedding corpora cluster and do far better) while
-    # pruning most of the corpus per query.
     return lsh_bucket_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, nbits=8, max_hamming=3,
+        emb, emb.filter(F.col("vec_id") < 8), k=_ANN_K, nbits=_LSH_NBITS,
+        max_hamming=_LSH_MAX_HAMMING,
     )
 
 
-def _ivf_det_oracle(
-    n_cells: int = 16, nprobe: int = 4, k: int = 5,
-    dim: int = 64, n_train: int = 512, iters: int = 3,
-) -> str:
-    """DuckDB twin of the FULL deterministic-k-means IVF pipeline —
-    quantizer training included (the r7 graduation the r6
-    ``sim_ann_ivf_exact`` variant prepared: that query proved the
-    assignment→probe→rank plumbing exact with a fixed quantizer; this
-    oracle additionally unrolls the Lloyd's fit itself as chained CTEs).
+_IVF_CELLS, _IVF_NPROBE = 16, 4
 
-    Each iteration = one argmax-cosine assignment (ROW_NUMBER with
-    (cos DESC, cell_id) tie-break, same as Spark) and one elementwise
-    member-sum folded in ascending vec_id order (list_reduce over a
-    zeros-prepended sorted list — the same float-addition order as
-    Catalyst's ``aggregate``). No normalization: cosine is
-    scale-invariant in the centroid, so the raw sum IS the spherical
-    centroid and the update has no division to diverge. The fit is
-    bit-exact; the Spark side's assignment, probe and verify cosines are
-    numpy batch arithmetic, whose parity with list_cosine_similarity is
-    measured at every test scale factor rather than exact by
-    construction."""
-    zeros = f"list_transform(range(1, {dim + 1}), x -> 0.0::DOUBLE)"
+
+def _kmeans_ctes(n_cells: int) -> str:
+    """The deterministic Lloyd's fit unrolled as chained CTEs, for the
+    IVF and SemDeDup oracles: ``e`` (vec_id, emb), the ``KMEANS_TRAIN``
+    lowest-id ``train`` sample, and ``cent0`` .. ``cent{KMEANS_ITERS}``
+    (cell_id, cell_emb), one per round (see :func:`_ivf_det_oracle`)."""
+    zeros = f"list_transform(range(1, {EMB_DIM + 1}), x -> 0.0::DOUBLE)"
     parts = [f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
 ), train AS (
-  SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT {n_train}
+  SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT {KMEANS_TRAIN}
 ), cent0 AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cell_id,
          emb AS cell_emb
   FROM (SELECT vec_id, emb FROM train ORDER BY vec_id LIMIT {n_cells}) t0
 )"""]
-    for i in range(1, iters + 1):
+    for i in range(1, KMEANS_ITERS + 1):
         p = i - 1
         parts.append(f""", assign{i} AS (
   SELECT vec_id, emb, cell_id FROM (
@@ -274,18 +281,40 @@ WITH e AS (
                list_transform(
                  list_sort(list(struct_pack(v := vec_id, m := emb))),
                  x -> x.m)),
-             (a, b) -> list_transform(range(1, {dim + 1}),
+             (a, b) -> list_transform(range(1, {EMB_DIM + 1}),
                                       j -> a[j] + b[j])) AS s_emb
     FROM assign{i} GROUP BY cell_id
   ) s ON s.cell_id = c.cell_id
 )""")
+    return "".join(parts)
+
+
+def _ivf_det_oracle() -> str:
+    """DuckDB twin of the FULL deterministic-k-means IVF pipeline —
+    quantizer training included (the ``sim_ann_ivf_exact`` variant
+    proves the rest: that query proved the
+    assignment→probe→rank plumbing exact with a fixed quantizer; this
+    oracle additionally unrolls the Lloyd's fit itself as chained CTEs).
+
+    Each iteration = one argmax-cosine assignment (ROW_NUMBER with
+    (cos DESC, cell_id) tie-break, same as Spark) and one elementwise
+    member-sum folded in ascending vec_id order (list_reduce over a
+    zeros-prepended sorted list — the same float-addition order as
+    Catalyst's ``aggregate``). No normalization: cosine is
+    scale-invariant in the centroid, so the raw sum IS the spherical
+    centroid and the update has no division to diverge. The fit is
+    bit-exact; the Spark side's assignment, probe and verify cosines are
+    numpy batch arithmetic, whose parity with list_cosine_similarity is
+    measured at every test scale factor rather than exact by
+    construction."""
+    parts = [_kmeans_ctes(_IVF_CELLS)]
     parts.append(f""", assigned AS (
   SELECT neighbor_id, c_emb, cell_id FROM (
     SELECT e.vec_id AS neighbor_id, e.emb AS c_emb, c.cell_id,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
              ORDER BY list_cosine_similarity(e.emb, c.cell_emb) DESC,
                       c.cell_id) AS rnk
-    FROM e CROSS JOIN cent{iters} c
+    FROM e CROSS JOIN cent{KMEANS_ITERS} c
   ) a WHERE rnk = 1
 ), probes AS (
   SELECT q_id, q_emb, cell_id FROM (
@@ -293,8 +322,8 @@ WITH e AS (
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
              ORDER BY list_cosine_similarity(q.emb, c.cell_emb) DESC,
                       c.cell_id) AS rnk
-    FROM e q CROSS JOIN cent{iters} c WHERE q.vec_id < 8
-  ) p WHERE rnk <= {nprobe}
+    FROM e q CROSS JOIN cent{KMEANS_ITERS} c WHERE q.vec_id < 8
+  ) p WHERE rnk <= {_IVF_NPROBE}
 ), cand AS (
   SELECT p.q_id, a.neighbor_id,
          ROUND(list_cosine_similarity(a.c_emb, p.q_emb), 6) AS cos_sim
@@ -305,14 +334,14 @@ SELECT q_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank FROM (
   SELECT *, ROW_NUMBER() OVER (
     PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM cand
-) r WHERE rank <= {k}""")
+) r WHERE rank <= {_ANN_K}""")
     return "".join(parts)
 
 
 @query("sim_ann_ivf", oracle=_ivf_det_oracle(), bench=True)
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via IVF coarse quantization, nprobe=4 of 16 cells —
-    GRADUATED to a fully exact oracle in r7: the quantizer is the
+    with a fully exact oracle: the quantizer is the
     deterministic sequential-arithmetic Lloyd's fit
     (operators/similarity.det_kmeans_centroids — bounded lowest-id
     training sample, argmax-cosine assignment, sorted-fold unnormalized
@@ -330,31 +359,31 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(tune(spark), sf_dir)
     # NULL-embedding rows excluded on both index and query sides (the
     # null-skipping convention; see _semdedup_pipeline) — crash class
-    # found by the r16 nulls probe; IsNotNull pushes to the scan and the
+    # found by a nulls probe; IsNotNull pushes to the scan and the
     # non-null fixtures adjudicate unchanged.
     emb = t.embeddings.filter(F.col("embedding").isNotNull())
-    # r11: the fit runs driver-side, bit-for-bit (det_kmeans_rows — see
+    # the fit runs driver-side, bit-for-bit (det_kmeans_rows — see
     # the SemDeDup note; differential-pinned against the plan form), so
     # the codebook is a 16-row literal instead of a deep lazy subtree
     # that recompiled under the assignment, probe, and verify consumers
     cent = spark.createDataFrame(
-        det_kmeans_rows(emb, n_cells=16, n_train=512, iters=3),
+        det_kmeans_rows(emb, n_cells=_IVF_CELLS),
         schema="cell_id int, cell_emb array<double>",
     )
     return ivf_topk(
         emb,
         emb.filter(F.col("vec_id") < 8),
-        k=5,
-        n_cells=16,
-        nprobe=4,
+        k=_ANN_K,
+        n_cells=_IVF_CELLS,
+        nprobe=_IVF_NPROBE,
         centroids=cent,
     )
 
 
-def _embedding_lsh_oracle(
-    nbits: int = 32, max_hamming: int = 10, min_cosine: float = 0.4,
-    dim: int = 64, seed: int = 42,
-) -> str:
+_EMB_LSH_NBITS, _EMB_LSH_MAX_HAMMING, _EMB_LSH_MIN_COSINE = 32, 10, 0.4
+
+
+def _embedding_lsh_oracle() -> str:
     """DuckDB twin of the sign-LSH near-dup pipeline. The hyperplanes
     are deterministic dyadic rationals (LCG sums of k/2^31 terms — exactly
     representable in float64), embedded below as repr-roundtrip literals.
@@ -367,35 +396,12 @@ def _embedding_lsh_oracle(
     signatures — the pigeonhole segment join provably loses no pair
     within the Hamming radius, so the driver check also proves the
     bucketing exact."""
-    from clinical_bi_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, nbits, seed)
-    plane_rows = ",\n    ".join(
-        "({}, [{}])".format(i, ", ".join(repr(v) for v in row))
-        for i, row in enumerate(planes)
-    )
-    return f"""
-WITH pl(i, plane) AS (VALUES
-    {plane_rows}
-), e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), dots AS (
-  SELECT e.vec_id, pl.i,
-         list_sum(list_transform(range(1, {dim + 1}),
-                                 j -> emb[j] * plane[j])) AS dot
-  FROM e, pl
-), sig AS (
-  SELECT vec_id,
-         SUM(CASE WHEN dot >= 0 THEN 1::BIGINT << i ELSE 0::BIGINT END) AS sig
-  FROM dots GROUP BY vec_id
-), es AS (
-  SELECT s.vec_id, s.sig, e.emb FROM sig s JOIN e ON e.vec_id = s.vec_id
-)
+    return f"""{_signatures_cte(_EMB_LSH_NBITS)}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        ROUND(list_cosine_similarity(a.emb, b.emb), 6) AS cos_sim
 FROM es a JOIN es b ON a.vec_id < b.vec_id
-WHERE bit_count(xor(a.sig, b.sig)) <= {max_hamming}
-  AND ROUND(list_cosine_similarity(a.emb, b.emb), 6) >= {min_cosine}
+WHERE bit_count(xor(a.sig, b.sig)) <= {_EMB_LSH_MAX_HAMMING}
+  AND ROUND(list_cosine_similarity(a.emb, b.emb), 6) >= {_EMB_LSH_MIN_COSINE}
 """
 
 
@@ -414,23 +420,14 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(tune(spark), sf_dir)
     return embedding_neardup_pairs(
-        t.embeddings, id_col="vec_id", emb_col="embedding",
-        nbits=32, max_hamming=10, min_cosine=0.4,
+        t.embeddings, nbits=_EMB_LSH_NBITS, max_hamming=_EMB_LSH_MAX_HAMMING,
+        min_cosine=_EMB_LSH_MIN_COSINE,
     )
 
 
-def _pq_det_oracle(
-    k: int = 5,
-    rerank: int = 50,
-    sample_n: int = 512,
-    m: int = 8,
-    ksub: int = 16,
-    dsub: int = 8,
-    iters: int = 8,
-) -> str:
+def _pq_det_oracle() -> str:
     """DuckDB twin of the FULL PQ pipeline — numpy training
-    included (r11 graduation; the third ANN leg joins lsh/ivf as fully
-    adjudicable). Every float operation the Spark side performs has a
+    included (the third ANN leg next to lsh/ivf, fully adjudicable). Every float operation the Spark side performs has a
     pinned order, replicated here term by term:
 
     * the trainer's per-cell column means are numpy's axis-0 reduction,
@@ -453,7 +450,7 @@ def _pq_det_oracle(
     All-pairs ADC here is the ORACLE's deliberate naivety (8 queries x
     corpus at sf0.01); the Spark side scans the m-int code table.
     """
-    dim = m * dsub
+    m, ksub, dsub = PQ_M, PQ_KSUB, EMB_DIM // PQ_M
     xs = ", ".join(f"e[sid * {dsub} + {kk + 1}] AS x{kk}" for kk in range(dsub))
 
     def tree8(expr) -> str:
@@ -477,7 +474,7 @@ def _pq_det_oracle(
         f"""
 WITH samp AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-  FROM embeddings ORDER BY vec_id LIMIT {sample_n}
+  FROM embeddings ORDER BY vec_id LIMIT {PQ_SAMPLE}
 ), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM samp),
 sub AS MATERIALIZED (
   SELECT s.sid, vec_id, {xs}
@@ -498,7 +495,7 @@ sub AS MATERIALIZED (
 )"""
     ]
     prev = "cent0"
-    for t in range(1, iters + 1):
+    for t in range(1, PQ_ITERS + 1):
         parts.append(
             f""",
 a{t} AS MATERIALIZED (
@@ -539,7 +536,7 @@ recon AS MATERIALIZED (
 ), adc AS (
   SELECT q.vec_id AS q_id, r.vec_id AS neighbor_id,
          list_reduce(
-           list_transform(range(1, {dim + 1}),
+           list_transform(range(1, {EMB_DIM + 1}),
              i -> (q.e[i] - r.re[i]) * (q.e[i] - r.re[i])),
            (a, b) -> a + b) AS adc
   FROM corp q JOIN recon r ON r.vec_id <> q.vec_id
@@ -562,8 +559,8 @@ SELECT q_id, neighbor_id, cos_sim, rank FROM (
   FROM surv s
   JOIN embeddings ce ON ce.vec_id = s.neighbor_id
   JOIN embeddings qe ON qe.vec_id = s.q_id
-  WHERE s.adc_rnk <= {rerank}
-) t WHERE rank <= {k}"""
+  WHERE s.adc_rnk <= {PQ_RERANK}
+) t WHERE rank <= {_ANN_K}"""
     )
     return "".join(parts)
 
@@ -574,7 +571,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction-ADC, exact-cosine re-rank of the best 50) — the third
     leg of the ANN trio next to sim_ann_lsh and sim_ann_ivf.
 
-    GRADUATED to a fully exact oracle in r11 (closing the trio): the
+    It carries a fully exact oracle: the
     numpy trainer was verified float-op-for-float-op replicable in SQL
     (sequential column means, pairwise-tree dsub distances — see
     _pq_det_oracle), so the oracle covers TRAINING + encode + ADC +
@@ -588,11 +585,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(tune(spark), sf_dir)
     emb = t.embeddings
-    return pq_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        k=5,
-    )
+    return pq_topk(emb, emb.filter(F.col("vec_id") < 8), k=_ANN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -606,7 +599,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Spark `aggregate` and DuckDB `list_reduce` are both sequential), so
 # the doubles are bit-identical, no tolerance needed. Output columns are
 # scalars on purpose: the driver's canonicalizer sorts rows by every
-# column and array cells would crash it (round-1 lesson).
+# column and array cells would crash it.
 _ARRAY_BATTERY_ORACLE = """
 SELECT vec_id AS vec_id,
        label AS label,
@@ -675,10 +668,10 @@ def f_array_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL-checkable without a fit. The Spark side scores cosines with numpy
 # batch arithmetic, the oracle with DuckDB's sequential fold: parity is
 # measured at every test scale factor, not exact by construction.
-_IVF_EXACT_ORACLE = """
+_IVF_EXACT_ORACLE = f"""
 WITH cent AS (
   SELECT vec_id AS cell_id, embedding AS cell_emb
-  FROM embeddings ORDER BY vec_id LIMIT 16
+  FROM embeddings ORDER BY vec_id LIMIT {_IVF_CELLS}
 ), assigned AS (
   SELECT neighbor_id, c_emb, cell_id FROM (
     SELECT e.vec_id AS neighbor_id, e.embedding AS c_emb, c.cell_id,
@@ -698,7 +691,7 @@ WITH cent AS (
                                              c.cell_emb::DOUBLE[]) DESC,
                       c.cell_id) AS rnk
     FROM embeddings q, cent c WHERE q.vec_id < 8
-  ) p WHERE rnk <= 4
+  ) p WHERE rnk <= {_IVF_NPROBE}
 ), cand AS (
   SELECT p.q_id, a.neighbor_id,
          ROUND(list_cosine_similarity(a.c_emb::DOUBLE[],
@@ -710,7 +703,7 @@ SELECT q_id, neighbor_id, cos_sim, CAST(rank AS INT) AS rank FROM (
   SELECT *, ROW_NUMBER() OVER (
     PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM cand
-) r WHERE rank <= 5
+) r WHERE rank <= {_ANN_K}
 """
 
 
@@ -728,14 +721,14 @@ def sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
         emb,
         emb.filter(F.col("vec_id") < 8),
-        k=5,
-        n_cells=16,
-        nprobe=4,
+        k=_ANN_K,
+        n_cells=_IVF_CELLS,
+        nprobe=_IVF_NPROBE,
     )
 
 
 # ---------------------------------------------------------------------------
-# Deterministic PCA: top principal direction via power iteration (r8) —
+# Deterministic PCA: top principal direction via power iteration —
 # the same determinism-over-optimality graduation the IVF Lloyd's fit
 # made. Every float operation has a pinned order, so the whole fit
 # unrolls into chained SQL CTEs and the query carries an EXACT oracle:
@@ -755,9 +748,8 @@ _PCA_TRAIN = 512
 _PCA_ITERS = 3
 
 
-def _pca_power_oracle(
-    dim: int = _PCA_DIM, n_train: int = _PCA_TRAIN, iters: int = _PCA_ITERS
-) -> str:
+def _pca_power_oracle() -> str:
+    dim, n_train, iters = _PCA_DIM, _PCA_TRAIN, _PCA_ITERS
     zeros = f"list_transform(range(1, {dim + 1}), x -> 0.0::DOUBLE)"
 
     def dot(a: str, b: str) -> str:
@@ -845,7 +837,7 @@ def vec_pca_power_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # try_divide: a degenerate (all-zero) training sample drives the
     # iterate to the zero vector — component undefined, NULL on both
-    # engines (DuckDB's division NULLs), not an ANSI crash (r9 sweep)
+    # engines (DuckDB's division NULLs), not an ANSI crash
     return v_df.select(
         F.posexplode(F.transform(F.col("v"), lambda el: F.try_divide(el, norm)))
     ).select(
@@ -862,53 +854,16 @@ def vec_pca_power_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SEMDEDUP_EPS = 0.4  # where the fixture has pairs at all (max cos ~ 0.513)
+_SEMDEDUP_CELLS = 16
 
 
-def _semdedup_oracle(
-    n_cells: int = 16, dim: int = 64, n_train: int = 512, iters: int = 3,
-    eps: float = 0.4,
-) -> str:
+def _semdedup_oracle() -> str:
     """Exact DuckDB twin of the FULL SemDeDup pipeline — deterministic
-    k-means training included (the same unrolled-CTE device as
-    ``_ivf_det_oracle``; kept textually separate so the r7-adjudicated
-    sim_ann_ivf oracle string stays byte-identical), then intra-cluster
+    k-means training included (the same unrolled CTEs as
+    ``_ivf_det_oracle``), then intra-cluster
     eps-neighbor pairs and the keep-the-outlier drop rule on ROUND(cos, 6)
     values so both engines order identically."""
-    zeros = f"list_transform(range(1, {dim + 1}), x -> 0.0::DOUBLE)"
-    parts = [f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), train AS (
-  SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT {n_train}
-), cent0 AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cell_id,
-         emb AS cell_emb
-  FROM (SELECT vec_id, emb FROM train ORDER BY vec_id LIMIT {n_cells}) t0
-)"""]
-    for i in range(1, iters + 1):
-        p = i - 1
-        parts.append(f""", assign{i} AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT t.vec_id, t.emb, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id
-             ORDER BY list_cosine_similarity(t.emb, c.cell_emb) DESC,
-                      c.cell_id) AS rnk
-    FROM train t CROSS JOIN cent{p} c
-  ) a WHERE rnk = 1
-), cent{i} AS (
-  SELECT c.cell_id, COALESCE(s.s_emb, c.cell_emb) AS cell_emb
-  FROM cent{p} c LEFT JOIN (
-    SELECT cell_id,
-           list_reduce(
-             list_prepend({zeros},
-               list_transform(
-                 list_sort(list(struct_pack(v := vec_id, m := emb))),
-                 x -> x.m)),
-             (a, b) -> list_transform(range(1, {dim + 1}),
-                                      j -> a[j] + b[j])) AS s_emb
-    FROM assign{i} GROUP BY cell_id
-  ) s ON s.cell_id = c.cell_id
-)""")
+    parts = [_kmeans_ctes(_SEMDEDUP_CELLS)]
     parts.append(f""", assigned AS (
   SELECT vec_id, emb, cell_id, ROUND(cc, 6) AS cent_cos FROM (
     SELECT e.vec_id, e.emb, c.cell_id,
@@ -916,13 +871,13 @@ WITH e AS (
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
              ORDER BY list_cosine_similarity(e.emb, c.cell_emb) DESC,
                       c.cell_id) AS rnk
-    FROM e CROSS JOIN cent{iters} c
+    FROM e CROSS JOIN cent{KMEANS_ITERS} c
   ) a WHERE rnk = 1
 ), pairs AS (
   SELECT a.vec_id AS va, a.cent_cos AS ca, b.vec_id AS vb, b.cent_cos AS cb
   FROM assigned a JOIN assigned b
     ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-  WHERE ROUND(list_cosine_similarity(a.emb, b.emb), 6) >= {eps}
+  WHERE ROUND(list_cosine_similarity(a.emb, b.emb), 6) >= {_SEMDEDUP_EPS}
 ), nbr AS (
   SELECT va AS vec_id, ca AS d_cos, vb AS n_id, cb AS n_cos FROM pairs
   UNION ALL
@@ -976,17 +931,15 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     included. Reference has no counterpart (extension surface).
     """
     t = load_tables(tune(spark), sf_dir)
-    return _semdedup_pipeline(spark, t.embeddings, n_cells=16)
+    return _semdedup_pipeline(spark, t.embeddings, n_cells=_SEMDEDUP_CELLS)
 
 
 def _semdedup_pipeline(
     spark: SparkSession,
     embeddings: DataFrame,
-    n_cells: int = 16,
-    eps: float = _SEMDEDUP_EPS,
+    n_cells: int,
     assign_shards: int | None = None,
     nprobe: int = 4,
-    n_train: int = 512,
 ) -> DataFrame:
     """The SemDeDup pipeline over an explicit embedding relation with a
     parameterized K — the registered query pins K=16 (what the oracle
@@ -995,9 +948,9 @@ def _semdedup_pipeline(
     grows with the corpus, so sum(|cell|^2) — the pair-join cost — falls
     as ~1/K for a fixed corpus).
 
-    ``assign_shards`` selects the LARGE-K production assignment (r11
-    verdict Next #7): the broadcast argmax is O(N*K) and overtook the
-    pair-join saving at K=256 in the r11 sweep, so web-scale K needs
+    ``assign_shards`` selects the LARGE-K production assignment: the
+    broadcast argmax is O(N*K) and overtook the
+    pair-join saving at K=256 in an sweep, so web-scale K needs
     IVF-sharded assignment — the fine codebook (numpy scale-path fit,
     :func:`~clinical_bi_spark.operators.similarity.np_kmeans_rows`) is
     itself clustered into ``assign_shards`` coarse cells
@@ -1023,7 +976,7 @@ def _semdedup_pipeline(
     # NULL-embedding rows are EXCLUDED (the null-skipping aggregate
     # convention): a NULL vector can be neither trained on, assigned,
     # nor cosine-compared — without the filter the driver-side fit
-    # crashes on list(None) (r16 nulls probe). IsNotNull pushes to the
+    # crashes on list(None). IsNotNull pushes to the
     # parquet scan; the fixtures are non-null, so adjudicated results
     # are unchanged.
     embeddings = embeddings.filter(F.col("embedding").isNotNull())
@@ -1038,16 +991,10 @@ def _semdedup_pipeline(
     # .collect() census policy (<=512-row model fits; the large-K scale
     # path raises n_train with K — same census, bigger bounded sample).
     if assign_shards is None:
-        cent_rows = det_kmeans_rows(
-            embeddings, id_col="vec_id", emb_col="embedding", n_cells=n_cells
-        )
+        cent_rows = det_kmeans_rows(embeddings, n_cells=n_cells)
     else:
         cent_rows = np_kmeans_rows(
-            embeddings,
-            id_col="vec_id",
-            emb_col="embedding",
-            n_cells=n_cells,
-            n_train=max(n_train, 4 * n_cells),
+            embeddings, n_cells=n_cells, n_train=max(KMEANS_TRAIN, 4 * n_cells)
         )
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -1131,7 +1078,7 @@ def _semdedup_pipeline(
     pairs = (
         pa.join(pb, F.col("pa.cell_id") == F.col("pb.cell_id"))
         .filter(F.col("pa.vec_id") < F.col("pb.vec_id"))
-        .filter(pair_cos >= F.lit(eps))
+        .filter(pair_cos >= F.lit(_SEMDEDUP_EPS))
         .select(
             F.col("pa.vec_id").alias("va"), F.col("pa.cent_cos").alias("ca"),
             F.col("pb.vec_id").alias("vb"), F.col("pb.cent_cos").alias("cb"),

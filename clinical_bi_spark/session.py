@@ -43,7 +43,7 @@ RUNTIME_CONF: dict[str, str] = {
     # The events fixture stores TIMESTAMP(NANOS) which the vectorized parquet
     # reader rejects; read as long and convert (sources._normalize_events).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # NOT set (r17, tried and reverted): lowering
+    # NOT set (tried and reverted): lowering
     # spark.sql.files.openCostInBytes below its 4 MiB default. The floor
     # serializes every MB-scale scan at test SFs (orders/events/documents
     # = 1 partition each at sf0.1; dashboard_extract's whole 6-join plan
@@ -54,7 +54,7 @@ RUNTIME_CONF: dict[str, str] = {
     # because per-query fixed overhead and broadcast builds dominate
     # 1-3 s queries, not single-core scan compute. At 100 TB the knob is
     # inert anyway (bytesPerCore >> any open-cost floor), so it buys
-    # nothing at scale either. See OPTIMIZATION_r17.md.
+    # nothing at scale either.
 }
 
 
@@ -136,8 +136,8 @@ def warm(spark: SparkSession) -> SparkSession:
 
     # window/aggregate codegen probe: a partitioned window function and a
     # time-window aggregate — the code shapes the events family compiles.
-    # r4's probe change moved the janino HOF compile out of warm(), and the
-    # r4 bench then showed 2-3× one-off spikes on evt_* slots (judged weak);
+    # Moving the janino HOF compile out of warm() once
+    # showed 2-3× one-off spikes on evt_* slots (judged weak);
     # warming these shapes keeps first-compile out of whichever bench slot
     # runs a window plan first.
     from pyspark.sql import functions as WF
@@ -158,7 +158,7 @@ def warm(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
+def get_spark(app_name: str) -> SparkSession:
     """Build (or reuse) a local session sized for this machine."""
     cpus = default_parallelism()
     builder = (
@@ -173,7 +173,7 @@ def get_spark(app_name: str = "clinical-bi-spark") -> SparkSession:
         # the generated-class cache defaults to 100 entries, which one
         # wide query block exceeds — a 55-query bench session evicts and
         # recompiles stages it already warmed (measured ~1.33x median
-        # inflation under interleaved repeats, PERF.md round-16). 4096
+        # inflation under interleaved repeats, PERF.md). 4096
         # keeps every benched query's stages resident; memory cost is
         # generated bytecode only, negligible against the driver heap.
         .config("spark.sql.codegen.cache.maxEntries", "4096")

@@ -43,14 +43,14 @@ def format_booleans_tf(df: DataFrame) -> DataFrame:
     )
 
 
-def write_delimited(df: DataFrame, path: str, sep: str = "|") -> None:
+def write_delimited(df: DataFrame, path: str) -> None:
     """S4: pipe-delimited, header-less export (psql -t -A --field-separator
     parity, db2wh-etl.sh:73,107) with the in-plan cleanse — no sed
     post-pass needed."""
     (
         cleanse_string_columns(format_booleans_tf(df))
         .write.mode("overwrite")
-        .option("sep", sep)
+        .option("sep", "|")
         .option("header", False)
         .option("emptyValue", "")
         .csv(path)
@@ -109,7 +109,7 @@ def save_as_table(df: DataFrame, name: str, bucket_by: tuple[int, str] | None = 
 def create_readonly_layer(
     spark: SparkSession,
     tables: dict[str, DataFrame],
-    schema_prefix: str = "ctgov_read",
+    schema_prefix: str,
 ) -> list[str]:
     """S13 analogue (reference: docker/aact/docker-entrypoint-initdb.d/
     init-user-db.sh:281-287 — ``CREATE USER`` + ``GRANT SELECT`` + a

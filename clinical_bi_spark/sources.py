@@ -37,9 +37,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 #: Parquet schemas Spark inferred, per session:
 #: ``{(path, schema confs): (file signature, schema)}``.
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
@@ -147,7 +144,7 @@ class Tables(ParquetTables):
         return normalize_events(df) if name == "events" else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Tables:
+def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     """Entry point used by every query: bundle of lazy DataFrames."""
     return Tables(spark=spark, base_path=sf_dir)
 

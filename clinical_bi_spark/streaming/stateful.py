@@ -86,7 +86,7 @@ def _arm_timeout(state: GroupState, last_event_ms: int) -> None:
     taking the max with it means an in-watermark LATE batch — whose own
     max event ts is OLDER than what the key already saw — can only
     extend the deadline, never pull it earlier and evict a still-active
-    key (ADVICE r8; pinned by
+    key (pinned by
     tests/test_streaming.py::test_eviction_timeout_never_regresses)."""
     wm = state.getCurrentWatermarkMs()
     state.setTimeoutTimestamp(
@@ -426,7 +426,7 @@ def stream_cep_matches(
 
 
 # ---------------------------------------------------------------------------
-# Streaming forward-fill (r8): LOCF as a custom stateful operator — the
+# Streaming forward-fill: LOCF as a custom stateful operator — the
 # batch twin is queries/events.evt_forward_fill and both share its
 # oracle. State per user is ONE double (the last non-null observation);
 # each micro-batch concat-sorts its chunks (the CEP chunk-order
@@ -509,7 +509,7 @@ def stream_forward_fill_rows(
     idle past the 1-day event-time TTL loses the carried last-value — a
     gap right after they re-appear fills with null instead of the
     pre-idle observation, so fills are exact only within the eviction
-    horizon (the r8 eviction battery in tests/test_streaming.py pins the
+    horizon (the eviction battery in tests/test_streaming.py pins the
     state-drop mechanics shared by all three builders)."""
     from pyspark.sql import functions as F
 
@@ -562,8 +562,7 @@ def stream_forward_fill_rows(
 
 # ---------------------------------------------------------------------------
 # Custom stateful sessionization (the flatMapGroupsWithState shape, via
-# applyInPandasWithState) — r13 registration candidate, parked in
-# queries/streamingops.py. The built-in session_window aggregation
+# applyInPandasWithState), registered in queries/streamingops.py. The built-in session_window aggregation
 # (streaming/windows.session_windows) can only apply SQL aggregates to
 # the merged window; this operator carries arbitrary per-session state
 # through the fold and emits a per-session aggregate session_window
@@ -747,7 +746,7 @@ def stateful_sessions(
 
 
 # ---------------------------------------------------------------------------
-# Streaming time-weighted average (r12): the LOCF-integral mean as a
+# Streaming time-weighted average: the LOCF-integral mean as a
 # custom stateful operator — the streaming twin of the parked batch
 # candidate queries/events.evt_time_weighted_avg, sharing its oracle.
 # State per user is FIVE INTEGERS (first/last event micros, last value

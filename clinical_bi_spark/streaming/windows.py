@@ -37,7 +37,7 @@ def _reader(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None)
 def _events_stream(
     spark: SparkSession,
     sf_dir: str,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int | None,
 ) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     schema = read_parquet(spark, path).schema
@@ -54,7 +54,7 @@ def _events_stream(
 #: availableNow trigger over the test fixtures finishes in seconds; if the
 #: harness session can't sustain the state store, we must error (so the
 #: driver records a failure for THIS query) rather than hang and shadow
-#: every query registered after it (round-1 lesson).
+#: every query registered after it.
 STREAM_TIMEOUT_SECS = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "180"))
 
 
@@ -100,8 +100,6 @@ def _run_to_completion(
 def tumbling_counts(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
@@ -110,9 +108,9 @@ def tumbling_counts(
     mode so the final memory table equals the batch result."""
     events = _events_stream(
         spark, sf_dir, max_files_per_trigger
-    ).withWatermark("ts", watermark)
+    ).withWatermark("ts", "10 minutes")
     agg = (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
@@ -130,19 +128,18 @@ def tumbling_counts(
 def session_windows(
     spark: SparkSession,
     sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "12 hours",
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
-    """Native session windows (session_window + gap) — streaming twin of
-    the batch lag/cumsum sessionization (queries/events.evt_sessionization).
+    """Native session windows (session_window, 30-minute gap) — streaming
+    twin of the batch lag/cumsum sessionization
+    (queries/events.evt_sessionization).
     """
     events = _events_stream(
         spark, sf_dir, max_files_per_trigger
-    ).withWatermark("ts", watermark)
+    ).withWatermark("ts", "12 hours")
     return _run_to_completion(
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
@@ -162,13 +159,12 @@ def session_windows(
 def dedup_with_watermark(
     spark: SparkSession,
     sf_dir: str,
-    keys: tuple[str, ...] = ("user_id", "event_type"),
     watermark: str = "1 hour",
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
     """Streaming dedup with watermark-bounded state — the streaming twin
-    of keyed dedup (queries/events.evt_dedup_window).
+    of keyed dedup on (user_id, event_type) (queries/events.evt_dedup_window).
 
     Uses ``dropDuplicatesWithinWatermark`` (Spark 3.5+): keeps the first
     occurrence per key and GUARANTEES state eviction once the key's event
@@ -179,22 +175,27 @@ def dedup_with_watermark(
     events = _events_stream(
         spark, sf_dir, max_files_per_trigger
     ).withWatermark("ts", watermark)
-    deduped = events.dropDuplicatesWithinWatermark([*keys])
+    deduped = events.dropDuplicatesWithinWatermark(["user_id", "event_type"])
     return _run_to_completion(
-        deduped.select("event_id", "ts", *keys), "append", progress_sink
+        deduped.select("event_id", "ts", "user_id", "event_type"),
+        "append",
+        progress_sink,
     )
+
+
+#: Both interval joins: a view matches a purchase within ``_JOIN_WITHIN``
+#: after it; both sides are watermarked ``_JOIN_WATERMARK`` behind.
+_JOIN_WITHIN, _JOIN_WATERMARK = "10 minutes", "30 minutes"
 
 
 def stream_stream_interval_join(
     spark: SparkSession,
     sf_dir: str,
-    within: str = "10 minutes",
-    watermark: str = "30 minutes",
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
     """Watermarked stream-stream INNER join: views joined to the same
-    user's purchases within ``within`` after the view. Both sides carry
+    user's purchases within ``_JOIN_WITHIN`` after the view. Both sides carry
     watermarks and the join condition bounds event time on both — the two
     requirements that let Spark age out join state (without them a
     stream-stream join buffers forever; that unbounded state is the
@@ -209,7 +210,7 @@ def stream_stream_interval_join(
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", _JOIN_WATERMARK)
     )
     purchases = (
         _events_stream(spark, sf_dir, max_files_per_trigger)
@@ -219,13 +220,13 @@ def stream_stream_interval_join(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", _JOIN_WATERMARK)
     )
     joined = views.join(
         purchases,
         F.expr(
             "v_user = p_user AND purchase_ts >= view_ts "
-            f"AND purchase_ts <= view_ts + interval {within}"
+            f"AND purchase_ts <= view_ts + interval {_JOIN_WITHIN}"
         ),
     ).select(
         "view_id",
@@ -238,28 +239,23 @@ def stream_stream_interval_join(
 
 
 def stream_stream_left_outer_join(
-    spark: SparkSession,
-    sf_dir: str,
-    within: str = "10 minutes",
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
-    progress_sink: list | None = None,
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join — the
     unattributed-view report (views with their purchase within
-    ``within``, or NULL-padded when none arrives). The missing §2.8
+    ``_JOIN_WITHIN``, or NULL-padded when none arrives). The missing §2.8
     semantics next to the inner join: outer rows can only be emitted
     once the watermark PROVES no future match exists, so the result is
     the batch LEFT JOIN restricted by the final watermark.
 
-    Determinism contract (calibrated empirically, r11, and pinned in
+    Determinism contract (calibrated empirically and pinned in
     tests/test_streaming.py):
     * the global watermark is min(max view_ts, max purchase_ts) -
-      ``watermark`` — a function of the DATA, not of batch slicing
+      ``_JOIN_WATERMARK`` — a function of the DATA, not of batch slicing
       (verified identical for 1-batch, 4-file, and per-file replays);
     * a MATCHED row is always emitted (inner semantics);
     * an UNMATCHED view is emitted iff final_watermark >
-      view_ts + ``within`` STRICTLY (a view exactly AT the boundary is
+      view_ts + ``_JOIN_WITHIN`` STRICTLY (a view exactly AT the boundary is
       withheld — pinned by a synthetic fixture with an unmatched view at
       watermark - within exactly);
     * views inside the tail band (view_ts + within >= watermark) whose
@@ -277,7 +273,7 @@ def stream_stream_left_outer_join(
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", _JOIN_WATERMARK)
     )
     purchases = (
         _events_stream(spark, sf_dir, max_files_per_trigger)
@@ -287,13 +283,13 @@ def stream_stream_left_outer_join(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", _JOIN_WATERMARK)
     )
     joined = views.join(
         purchases,
         F.expr(
             "v_user = p_user AND purchase_ts >= view_ts "
-            f"AND purchase_ts <= view_ts + interval {within}"
+            f"AND purchase_ts <= view_ts + interval {_JOIN_WITHIN}"
         ),
         "leftOuter",
     ).select(
@@ -303,7 +299,7 @@ def stream_stream_left_outer_join(
         "view_ts",
         "purchase_ts",
     )
-    return _run_to_completion(joined, "append", progress_sink)
+    return _run_to_completion(joined, "append")
 
 
 def stream_static_enrich_join(
@@ -368,7 +364,7 @@ def stream_static_enrich_join(
 def _documents_stream(
     spark: SparkSession,
     sf_dir: str,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int | None,
 ) -> DataFrame:
     path = os.path.join(sf_dir, "documents.parquet")
     schema = read_parquet(spark, path).schema
@@ -412,7 +408,7 @@ def stream_corpus_curation(
     # scored projection the way the batch funnel does, and filter codegen
     # has no subexpression elimination, so the unfused
     # quality >= 0.85 AND language = 'en' form re-ran every text scan
-    # (r10→r11 bench regression, 2.4 s → 6.4 s at sf0.1). curation_keep
+    # (measured 2.4 s → 6.4 s at sf0.1). curation_keep
     # let-binds all eight scans once per document — same values.
     kept = docs.filter(curation_keep(F.col("text")))
     keepers = (
@@ -429,13 +425,11 @@ def stream_corpus_curation(
 def windowed_hll_registers(
     spark: SparkSession,
     sf_dir: str,
-    m: int = 32,
-    window: str = "1 day",
-    watermark: str = "10 minutes",
+    m: int,
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
-    """Per-window HyperLogLog register table maintained as STREAMING state:
+    """Per-day HyperLogLog register table maintained as STREAMING state:
     (window_start, bucket, r). The state per window is m rows of two ints —
     the whole reason a distinct-user sketch works where streaming
     COUNT(DISTINCT) can't (Spark rejects distinct aggregates on streams;
@@ -451,12 +445,12 @@ def windowed_hll_registers(
     from clinical_bi_spark.operators.sketches import hll_bucket_rho
 
     events = _events_stream(spark, sf_dir, max_files_per_trigger).withWatermark(
-        "ts", watermark
+        "ts", "10 minutes"
     )
     bucket, rho = hll_bucket_rho(F.col("user_id"), m)
     regs = (
         events.select("ts", bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(F.window("ts", window).alias("w"), "bucket")
+        .groupBy(F.window("ts", "1 day").alias("w"), "bucket")
         .agg(F.max("rho").alias("r"))
         .select(F.col("w.start").alias("window_start"), "bucket", "r")
     )
@@ -563,7 +557,7 @@ def stream_upsert_current_state(
     if not finished:
         # release the last epoch's tracked localCheckpoint blocks before
         # failing: without this, a wedged stream leaks executor storage
-        # for the life of the session (r7 ADVICE fix)
+        # for the life of the session
         if state["cached"]:
             release_rdd_ids(spark, state["cached"])
             state["cached"] = []
@@ -587,23 +581,20 @@ def stream_upsert_current_state(
 def sliding_counts(
     spark: SparkSession,
     sf_dir: str,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
     progress_sink: list | None = None,
 ) -> DataFrame:
-    """Watermarked SLIDING-window counts (hop < length, every event in
-    length/hop windows) — streaming twin of evt_sliding_window; complete
+    """Watermarked SLIDING-window counts (10-minute windows every 5
+    minutes, so every event is in two windows) — streaming twin of evt_sliding_window; complete
     output mode so the final memory table equals the batch result. The
     hop expansion happens map-side (each event expands to its covering
     windows before the state store), so state rows = live windows x
     types, not input size."""
     events = _events_stream(
         spark, sf_dir, max_files_per_trigger
-    ).withWatermark("ts", watermark)
+    ).withWatermark("ts", "10 minutes")
     agg = (
-        events.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),

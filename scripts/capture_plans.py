@@ -1,6 +1,6 @@
 """Capture `.explain("formatted")` for named (or all benched) registry
-queries into plans/<tag>/<query>_<suffix>.txt — the optimization-round
-evidence files (the judge reads plan claims against these).
+queries into plans/<tag>/<query>_<suffix>.txt, e.g. to check that a
+change leaves the physical plans as they were.
 
 Usage:
   python scripts/capture_plans.py --tag r16 --suffix before [names...]

@@ -113,7 +113,7 @@ def main() -> None:
             s, d, max_files_per_trigger=1, progress_sink=p, evict=True
         ),
         "stream_dedup_watermark": lambda s, d, p: dedup_with_watermark(
-            s, d, keys=("user_id", "event_type"),
+            s, d,
             max_files_per_trigger=1, progress_sink=p,
         ),
         # r12: the parked session candidate — ONE open session per

@@ -38,7 +38,7 @@ def planted(spark):
 
 def test_minhash_finds_planted_pairs(planted):
     cand = minhash_lsh_candidates(
-        planted, num_perm=64, bands=16, shingle_n=1, seed=42
+        planted, num_perm=64, bands=16, shingle_n=1
     ).collect()
     found = {(r.id_a, r.id_b) for r in cand}
     planted_pairs = {(2 * i, 2 * i + 1) for i in range(len(BASE_DOCS))}

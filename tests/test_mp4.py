@@ -338,13 +338,11 @@ def test_mp4_mjpeg_end_to_end_real_decode(spark):
         ).astype(np.uint8)
         for k in range(5)
     ]
-    jpegs = [encode_jpeg(f, 90) for f in frames]
+    jpegs = [encode_jpeg(f) for f in frames]
     mp4 = encode_mp4(
         jpegs,
         durations=[1000] * 5,
         sync_flags=[True, False, True, False, True],
-        width=16,
-        height=24,
         samples_per_chunk=2,
     )
     df = spark.createDataFrame(

@@ -117,12 +117,12 @@ def test_resize_fake_codec_bounds_and_determinism(spark):
         [(1, bytes(range(256)) * 4), (2, b"xy"), (3, None)],
         "asset_id long, media binary",
     )
-    rows = {r.asset_id: r for r in resize_media(df, target_bytes=64).collect()}
+    rows = {r.asset_id: r for r in resize_media(df).collect()}
     assert rows[1].resized_bytes <= 64  # downsampled under the budget
     assert rows[1].resized[:2] == bytes([0, 16])  # every 16th byte: deterministic
     assert rows[2].resized == b"xy"  # already under budget: unchanged
     assert rows[3].resized == b"" and rows[3].resized_bytes == 0
-    again = {r.asset_id: r for r in resize_media(df, target_bytes=64).collect()}
+    again = {r.asset_id: r for r in resize_media(df).collect()}
     assert all(again[k].resized == rows[k].resized for k in rows)
 
 
@@ -333,7 +333,7 @@ def test_jpeg_flat_blocks_roundtrip_exactly():
 
     for v in (0, 1, 100, 128, 254, 255):
         img = np.full((16, 24, 3), v, dtype=np.uint8)
-        back = decode_jpeg(encode_jpeg(img, 90))
+        back = decode_jpeg(encode_jpeg(img))
         assert back.shape == img.shape
         assert int(np.abs(back.astype(int) - v).max()) <= 1, v
 
@@ -349,7 +349,7 @@ def test_jpeg_smooth_image_error_bounded():
     img = np.stack(
         [(y * 3) % 256, (x * 5) % 256, ((x + y) * 2) % 256], axis=-1
     ).astype(np.uint8)
-    back = decode_jpeg(encode_jpeg(img, 90))
+    back = decode_jpeg(encode_jpeg(img))
     err = np.abs(back.astype(int) - img.astype(int))
     assert err.max() <= 4 and err.mean() <= 1.5
 
@@ -369,7 +369,7 @@ def test_jpeg_noise_error_bounded_and_header_independent_parse(spark=None):
 
     rng = np.random.RandomState(5)
     img = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    data = encode_jpeg(img, 90)
+    data = encode_jpeg(img)
     assert sniff_media_type(data) == "image/jpeg"
     assert parse_dimensions(data) == (16, 16)
     back = decode_jpeg(data)

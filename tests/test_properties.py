@@ -457,14 +457,17 @@ def _import_aliases(tree: ast.AST) -> dict[str, str]:
     }
 
 
-def _unreached_engine_functions(root: str, extra_roots=()) -> set[str]:
+def _engine_reach(root: str, extra_roots=()):
     """Walk name uses from the roots (every ``@query`` function, all
     module-level code, every name ``bench.py``, ``__spark_entry__.py``
     and ``perfbench/`` use, and the ``module.function`` names in
     ``extra_roots``) through the bodies of the top-level functions and
-    classes they name; return the top-level functions never named, as
-    ``module.function`` relative to the package. Matching is by name, so a
-    collision can only over-count reach, never invent a miss."""
+    classes they name. Returns ``(defs, reached, scopes)``: every
+    top-level definition by name as ``(module.name, node, aliases)``
+    relative to the package, the qualnames reached, and the code that
+    runs, as ``(nodes, aliases)``: the roots plus each reached body.
+    Matching is by name, so a collision can only over-count reach, never
+    invent a miss."""
     import os
 
     pkg = os.path.join(root, "clinical_bi_spark")
@@ -514,16 +517,23 @@ def _unreached_engine_functions(root: str, extra_roots=()) -> set[str]:
     for nodes, aliases in roots:
         used |= _used_names(nodes, aliases)
 
-    reached: set[str] = set()
+    reached: dict[str, tuple] = {}
     frontier = [q for name in used for q in defs.get(name, [])]
     frontier += [d for e in defs.values() for d in e if d[0] in extra_roots]
     while frontier:
         qual, node, aliases = frontier.pop()
         if qual in reached:
             continue
-        reached.add(qual)
+        reached[qual] = (node.body, aliases)
         for name in _used_names(node.body, aliases):
             frontier += defs.get(name, [])
+    return defs, set(reached), roots + list(reached.values())
+
+
+def _unreached_engine_functions(root: str, extra_roots=()) -> set[str]:
+    """The top-level engine functions no root reaches (see
+    :func:`_engine_reach`), as ``module.function``."""
+    defs, reached, _ = _engine_reach(root, extra_roots)
     return {
         qual
         for entries in defs.values()
@@ -534,8 +544,8 @@ def _unreached_engine_functions(root: str, extra_roots=()) -> set[str]:
 
 def test_every_engine_function_is_reached():
     """Every top-level engine function is reachable by name from a root
-    (see :func:`_unreached_engine_functions`) or named, with its reason,
-    in ``_UNREACHED_BY_DESIGN``: a path no query, bench or driver entry
+    (see :func:`_engine_reach`) or named, with its reason, in
+    ``_UNREACHED_BY_DESIGN``: a path no query, bench or driver entry
     can reach is a second implementation that nothing times or checks."""
     import os
 
@@ -545,6 +555,122 @@ def test_every_engine_function_is_reached():
     assert not unreached, f"no root reaches: {sorted(unreached)}"
     stale = kept - _unreached_engine_functions(root)
     assert not stale, f"allowlisted but reached or gone: {sorted(stale)}"
+
+
+#: Defaulted parameters of top-level engine functions that no root
+#: passes, kept on purpose, as ``module.function(param)``. ``parity``: the
+#: form of a reference feature (SURVEY.md) that no workload drives;
+#: ``test-seam``: lets a test drive real behaviour the production
+#: constant does not reach; ``reference``: a knob of a form a test
+#: compares the production path against.
+_PARAMS_BY_DESIGN = {
+    # ct_data.load_data's seeded split, and the S6/S8 sinks
+    "domain.features.load_data(seed)": "parity",
+    "sinks.save_as_table(bucket_by)": "parity",
+    "sinks.write_jdbc(mode)": "parity",
+    "sinks.write_parquet(partition_by)": "parity",
+    "sources.jdbc_options_from_ini(section)": "parity",
+    # the distributed label propagation and its fixpoint bound, which
+    # no test-sized graph reaches on its own
+    "operators.dedup.connected_components(max_iter)": "test-seam",
+    "operators.dedup.connected_components(small_graph_edges)": "test-seam",
+    # the property tests sweep the range-partition count
+    "operators.ranking.global_prefix_sums(n_partitions)": "test-seam",
+    "operators.ranking.global_row_number(n_partitions)": "test-seam",
+    # the large-K IVF-sharded SemDeDup assignment
+    "queries.vectorops._semdedup_pipeline(assign_shards)": "test-seam",
+    "queries.vectorops._semdedup_pipeline(nprobe)": "test-seam",
+    # streaming drivers: micro-batch slicing, progress capture, the
+    # event-time-TTL state path, and a dimension dir apart from the
+    # replayed events
+    "streaming.windows.stream_stream_left_outer_join(max_files_per_trigger)": "test-seam",
+    "streaming.windows.stream_static_enrich_join(dim_dir)": "test-seam",
+    "streaming.windows.dedup_with_watermark(max_files_per_trigger)": "test-seam",
+    "streaming.windows.dedup_with_watermark(progress_sink)": "test-seam",
+    "streaming.windows.session_windows(max_files_per_trigger)": "test-seam",
+    "streaming.windows.session_windows(progress_sink)": "test-seam",
+    "streaming.windows.sliding_counts(max_files_per_trigger)": "test-seam",
+    "streaming.windows.sliding_counts(progress_sink)": "test-seam",
+    "streaming.windows.stream_corpus_curation(max_files_per_trigger)": "test-seam",
+    "streaming.windows.stream_corpus_curation(progress_sink)": "test-seam",
+    "streaming.windows.stream_static_enrich_join(max_files_per_trigger)": "test-seam",
+    "streaming.windows.stream_static_enrich_join(progress_sink)": "test-seam",
+    "streaming.windows.stream_stream_interval_join(max_files_per_trigger)": "test-seam",
+    "streaming.windows.stream_stream_interval_join(progress_sink)": "test-seam",
+    "streaming.windows.stream_upsert_current_state(max_files_per_trigger)": "test-seam",
+    "streaming.windows.stream_upsert_current_state(progress_sink)": "test-seam",
+    "streaming.windows.tumbling_counts(max_files_per_trigger)": "test-seam",
+    "streaming.windows.tumbling_counts(progress_sink)": "test-seam",
+    "streaming.windows.windowed_hll_registers(max_files_per_trigger)": "test-seam",
+    "streaming.windows.windowed_hll_registers(progress_sink)": "test-seam",
+    "streaming.stateful.stateful_sessions(evict)": "test-seam",
+    "streaming.stateful.stateful_sessions(max_files_per_trigger)": "test-seam",
+    "streaming.stateful.stateful_sessions(progress_sink)": "test-seam",
+    "streaming.stateful.stream_cep_matches(evict)": "test-seam",
+    "streaming.stateful.stream_cep_matches(max_files_per_trigger)": "test-seam",
+    "streaming.stateful.stream_cep_matches(progress_sink)": "test-seam",
+    # no test evicts forward fill yet; scripts/state_census.py does
+    "streaming.stateful.stream_forward_fill_rows(evict)": "test-seam",
+    "streaming.stateful.stream_forward_fill_rows(max_files_per_trigger)": "test-seam",
+    "streaming.stateful.stream_forward_fill_rows(progress_sink)": "test-seam",
+    "streaming.stateful.stream_time_weighted_avg_rows(evict)": "test-seam",
+    "streaming.stateful.stream_time_weighted_avg_rows(max_files_per_trigger)": "test-seam",
+    "streaming.stateful.stream_time_weighted_avg_rows(progress_sink)": "test-seam",
+    "streaming.stateful.user_running_stats(evict)": "test-seam",
+    "streaming.stateful.user_running_stats(max_files_per_trigger)": "test-seam",
+    "streaming.stateful.user_running_stats(progress_sink)": "test-seam",
+}
+
+
+def _unpassed_engine_params(root: str) -> set[str]:
+    """Defaulted parameters of top-level engine functions that no call in
+    the code the roots run passes (see :func:`_engine_reach`), by
+    position or keyword; a ``*args``/``**kw`` call passes them all. As
+    with reach, a call matches every function of its name."""
+    defs, _, scopes = _engine_reach(root)
+    passed: set[str] = set()
+    for nodes, aliases in scopes:
+        for call in (c for n in nodes for c in ast.walk(n) if isinstance(c, ast.Call)):
+            f = call.func
+            name = aliases.get(f.id, f.id) if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            star = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for qual, node, _ in defs.get(name, []):
+                if not isinstance(node, ast.FunctionDef):
+                    continue
+                pos = [a.arg for a in node.args.posonlyargs + node.args.args]
+                named = pos[: len(call.args)] + [k.arg for k in call.keywords]
+                if star:
+                    named = pos + [a.arg for a in node.args.kwonlyargs]
+                passed |= {f"{qual}({p})" for p in named}
+    defaulted: set[str] = set()
+    for entries in defs.values():
+        for qual, node, _ in entries:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            params = pos[len(pos) - len(a.defaults):] + [
+                k for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            defaulted |= {f"{qual}({p.arg})" for p in params}
+    return defaulted - passed
+
+
+def test_every_engine_parameter_is_passed():
+    """Every defaulted parameter of a top-level engine function is passed
+    by some call a root runs (see :func:`_unpassed_engine_params`) or
+    named, with its reason, in ``_PARAMS_BY_DESIGN``: an option no query,
+    bench or driver entry sets is a constant with a second name."""
+    import os
+
+    assert set(_PARAMS_BY_DESIGN.values()) <= {"parity", "test-seam", "reference"}
+    unpassed = _unpassed_engine_params(os.path.join(os.path.dirname(__file__), ".."))
+    extra = unpassed - set(_PARAMS_BY_DESIGN)
+    assert not extra, f"no root passes: {sorted(extra)}"
+    stale = set(_PARAMS_BY_DESIGN) - unpassed
+    assert not stale, f"allowlisted but passed or gone: {sorted(stale)}"
 
 
 # ---------------------------------------------------------------------------

@@ -70,7 +70,7 @@ def test_ivf_det_kmeans_recall_and_cell_balance(spark, embeddings, truth):
     from clinical_bi_spark.functions.vectors import cosine_pandas
     from clinical_bi_spark.operators.similarity import det_kmeans_centroids
 
-    cent = det_kmeans_centroids(embeddings, n_cells=16, n_train=512, iters=3)
+    cent = det_kmeans_centroids(embeddings)
     out = ivf_topk(
         embeddings, embeddings.filter(F.col("vec_id") < 8),
         k=5, n_cells=16, nprobe=8, centroids=cent,
@@ -305,9 +305,7 @@ def test_det_kmeans_partitioning_invariant(spark, embeddings):
     def fit(df):
         return sorted(
             (r.cell_id, tuple(r.cell_emb))
-            for r in det_kmeans_centroids(
-                df, n_cells=16, n_train=512, iters=3
-            ).collect()
+            for r in det_kmeans_centroids(df).collect()
         )
 
     base = fit(embeddings)

@@ -19,7 +19,7 @@ from tests.conftest import SF_ORACLE
 def test_session_window_matches_batch_sessionization(spark):
     """session_window(gap) and the lag/cumsum form must produce identical
     (user, start, end, n, value) session sets."""
-    stream = session_windows(spark, SF_ORACLE, gap="30 minutes")
+    stream = session_windows(spark, SF_ORACLE)
     batch = load_all()["evt_sessionization"].fn(spark, SF_ORACLE)
 
     s = {
@@ -40,7 +40,7 @@ def test_session_window_end_is_last_event_plus_gap(spark):
     session_end = last event ts. Pin the documented relationship."""
     stream = {
         (r.user_id, r.session_start): r.session_end
-        for r in session_windows(spark, SF_ORACLE, gap="30 minutes").collect()
+        for r in session_windows(spark, SF_ORACLE).collect()
     }
     batch = load_all()["evt_sessionization"].fn(spark, SF_ORACLE)
     import datetime as dt
@@ -51,7 +51,7 @@ def test_session_window_end_is_last_event_plus_gap(spark):
 
 
 def test_dedup_watermark_keeps_one_per_key(spark):
-    out = dedup_with_watermark(spark, SF_ORACLE, keys=("user_id", "event_type"))
+    out = dedup_with_watermark(spark, SF_ORACLE)
     events = spark.read.parquet(f"{SF_ORACLE}/events.parquet")
     n_keys = events.select("user_id", "event_type").distinct().count()
     assert out.count() == n_keys
@@ -200,7 +200,7 @@ def test_multibatch_tumbling_equals_batch(spark, split_sf):
 def test_multibatch_session_window_equals_batch(spark, split_sf):
     prog: list = []
     stream = session_windows(
-        spark, split_sf, gap="30 minutes",
+        spark, split_sf,
         max_files_per_trigger=1, progress_sink=prog,
     )
     assert _n_batches(prog) >= 3
@@ -223,7 +223,7 @@ def test_multibatch_dedup_key_set_within_watermark(spark, split_sf):
     never exercise."""
     prog: list = []
     out = dedup_with_watermark(
-        spark, split_sf, keys=("user_id", "event_type"), watermark="35 days",
+        spark, split_sf, watermark="35 days",
         max_files_per_trigger=1, progress_sink=prog,
     )
     assert _n_batches(prog) >= 3
@@ -252,7 +252,7 @@ def test_multibatch_dedup_bounded_watermark_evicts_state(spark, split_sf):
     cross-horizon behavior, now actually exercised."""
     prog: list = []
     out = dedup_with_watermark(
-        spark, split_sf, keys=("user_id", "event_type"), watermark="1 day",
+        spark, split_sf, watermark="1 day",
         max_files_per_trigger=1, progress_sink=prog,
     )
     n_out = out.count()
@@ -534,7 +534,7 @@ def test_rocksdb_multibatch_dedup_equals_default(spark, split_sf, rocksdb_state)
     and the store must actually engage."""
     prog: list = []
     out = dedup_with_watermark(
-        spark, split_sf, keys=("user_id", "event_type"),
+        spark, split_sf,
         max_files_per_trigger=1, progress_sink=prog,
     )
     got = {(r.user_id, r.event_type) for r in out.collect()}
