@@ -6,7 +6,8 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "errors": {name: "Type: message", ...},
    "sf": <sf>}
 
-The benched queries are the registrations flagged ``bench=True``.
+``main(names)`` times the named registry queries; by default, and from
+the command line, the registrations flagged ``bench=True``.
 
 Each query is executed to completion with a ``noop``-format write: every
 output column is computed and serialized, so projection expressions are
@@ -34,10 +35,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def repeat_blocks(names: list[str], size: int) -> list[list[str]]:
     """Partition the (already sorted) bench list into the interleave
     blocks: each block's queries are timed as `repeats` PASSES over the
-    block, so a query's samples sit ~one block-wall apart. size=1 is the
-    pre-r16 sequential shape (each query's repeats back-to-back). Order
-    is preserved; every name appears exactly once (pinned in
-    tests/test_rotation_invariant.py)."""
+    block, so a query's samples sit ~one block-wall apart. size=1 times
+    each query's repeats back-to-back. Order is preserved; every name
+    appears exactly once (pinned in tests/test_rotation_invariant.py)."""
     if size < 1:
         raise ValueError(f"interleave block size must be >= 1, got {size}")
     return [names[i : i + size] for i in range(0, len(names), size)]
@@ -84,9 +84,11 @@ def time_blocks(
     return timings, errors
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> None:
     registry = load_all()
-    bench_specs = {n: s for n, s in registry.items() if s.bench}
+    if names is None:
+        names = [n for n, s in registry.items() if s.bench]
+    bench_specs = {n: registry[n] for n in names}
     spark = get_spark("clinical-bi-spark-bench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -108,23 +110,21 @@ def main() -> None:
     # host noise into every number. The minimum over repeats is the
     # standard noise-robust estimator of the plan's actual cost (what a
     # dedicated cluster would see); caches are cleared between runs so
-    # every repeat recomputes from the parquet scans.
-    # default raised 2 -> 3 in r10: same-plan variance on this shared
-    # host was measured at up to 5x within one session (containment
-    # repeats [14.7, 20.4, 4.3]); min over repeats is monotone in the
-    # repeat count, so min-of-3 only tightens toward the true plan cost
-    # and stays comparable with the r1-r9 min-of-2 series.
+    # every repeat recomputes from the parquet scans. Three repeats:
+    # same-plan variance on this shared host was measured at up to 5x
+    # within one session (containment repeats [14.7, 20.4, 4.3]); min
+    # over repeats is monotone in the repeat count, so min-of-3 only
+    # tightens toward the true plan cost.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     # One UNTIMED warmup execution per query before its timed repeats: a
     # query's FIRST execution in a session pays 1.3-2.1x for
-    # whole-stage-codegen compilation + JVM JIT of its generated classes
-    # (PERF.md round-15), which under min-of-3 would waste a sample.
+    # whole-stage-codegen compilation + JVM JIT of its generated classes,
+    # which under min-of-3 would waste a sample.
     # The timed repeats run as PASSES over BLOCKS of 8 adjacent queries
     # instead of back-to-back per query, so one host-slow window taints
-    # at most one of a query's samples (PERF.md round-16). Blocks of 8
-    # stay inside Spark's generated-class cache, so a query's compiled
-    # stages survive between passes; warmup runs per block, right before
-    # its passes.
+    # at most one of a query's samples. Blocks of 8 stay inside Spark's
+    # generated-class cache, so a query's compiled stages survive between
+    # passes; warmup runs per block, right before its passes.
     names = sorted(bench_specs)
     blocks = repeat_blocks(names, 8)
 
@@ -162,13 +162,11 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     line = json.dumps(result)
-    # r17 hardening (VERDICT r16 item: the r15 driver run lost its bench
-    # line to tail-capture truncation): the one-line JSON must stay the
-    # FINAL stdout line and must stay small enough for any bounded tail
-    # capture. All values are rounded to 3 decimals above; the assert
-    # fails loudly at run time if registry growth ever pushes the line
-    # past a conservative 16 KiB (the r17 line is ~2.6 KiB at 57
-    # queries), instead of silently producing an unparseable round.
+    # The one-line JSON must stay the FINAL stdout line and small enough
+    # for any bounded tail capture: a truncated line cannot be parsed.
+    # All values are rounded to 3 decimals above; the assert fails loudly
+    # at run time if registry growth ever pushes the line past a
+    # conservative 16 KiB (about 2.6 KiB at 57 queries).
     # past the guard the line still goes to stderr, so the run is not lost
     if len(line) >= 16384:
         print(line, file=sys.stderr, flush=True)

@@ -25,6 +25,9 @@ from clinical_bi_spark.queries.events import (
 )
 from clinical_bi_spark.session import tune
 from clinical_bi_spark.streaming.windows import (
+    JOIN_WATERMARK_MIN,
+    JOIN_WITHIN_MIN,
+    SESSION_GAP_MIN,
     dedup_with_watermark,
     session_windows,
     tumbling_counts,
@@ -39,7 +42,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_counts(tune(spark), sf_dir)
 
 
-_SESSION_WINDOW_ORACLE = """
+_SESSION_WINDOW_ORACLE = f"""
 WITH seq AS (
   SELECT user_id, ts, value,
          lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
@@ -50,7 +53,7 @@ WITH seq AS (
   -- exactly last_ts + gap starts a new session, hence >= (the batch
   -- lag/cumsum sessionization uses > — a deliberate boundary difference)
   SELECT *, CASE WHEN prev_ts IS NULL
-                   OR epoch(ts) - epoch(prev_ts) >= 1800.0
+                   OR epoch(ts) - epoch(prev_ts) >= {SESSION_GAP_MIN * 60}.0
                  THEN 1 ELSE 0 END AS is_new
   FROM seq
 ), sess AS (
@@ -60,7 +63,7 @@ WITH seq AS (
 )
 SELECT user_id,
        MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+       MAX(ts) + INTERVAL {SESSION_GAP_MIN} MINUTE AS session_end,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        ROUND(SUM(value), 4) AS total_value
 FROM sess
@@ -136,7 +139,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_JOIN_ORACLE = """
+_STREAM_JOIN_ORACLE = f"""
 SELECT
   v.event_id  AS view_id,
   p.event_id  AS purchase_id,
@@ -147,7 +150,7 @@ FROM events v
 JOIN events p
   ON v.user_id = p.user_id
  AND v.event_type = 'view' AND p.event_type = 'purchase'
- AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 10 MINUTE
+ AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL {JOIN_WITHIN_MIN} MINUTE
 """
 
 
@@ -435,7 +438,7 @@ def stream_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matching Spark's never-advancing watermark.
 # ---------------------------------------------------------------------------
 
-_STREAM_LEFT_OUTER_ORACLE = """
+_STREAM_LEFT_OUTER_ORACLE = f"""
 WITH v AS (
   SELECT event_id AS view_id, user_id AS v_user, ts AS view_ts
   FROM events WHERE event_type = 'view'
@@ -445,7 +448,7 @@ WITH v AS (
 ), wm AS (
   SELECT LEAST((SELECT MAX(view_ts) FROM v),
                (SELECT MAX(purchase_ts) FROM p))
-         - INTERVAL 30 MINUTE AS w
+         - INTERVAL {JOIN_WATERMARK_MIN} MINUTE AS w
 )
 SELECT j.view_id, j.purchase_id, j.user_id, j.view_ts, j.purchase_ts
 FROM (
@@ -454,10 +457,10 @@ FROM (
   FROM v LEFT JOIN p
     ON v.v_user = p.p_user
    AND p.purchase_ts >= v.view_ts
-   AND p.purchase_ts <= v.view_ts + INTERVAL 10 MINUTE
+   AND p.purchase_ts <= v.view_ts + INTERVAL {JOIN_WITHIN_MIN} MINUTE
 ) j
 WHERE j.purchase_id IS NOT NULL
-   OR (SELECT w FROM wm) > j.view_ts + INTERVAL 10 MINUTE
+   OR (SELECT w FROM wm) > j.view_ts + INTERVAL {JOIN_WITHIN_MIN} MINUTE
 """
 
 
@@ -531,14 +534,14 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session_window cross-check live in tests/test_streaming.py.
 # ---------------------------------------------------------------------------
 
-_STREAM_SESSION_STATEFUL_ORACLE = """
+_STREAM_SESSION_STATEFUL_ORACLE = f"""
 WITH seq AS (
   SELECT user_id, ts, value,
          lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
   FROM events
 ), flagged AS (
   SELECT *, CASE WHEN prev_ts IS NULL
-                   OR date_diff('microsecond', prev_ts, ts) >= 1800000000
+                   OR date_diff('microsecond', prev_ts, ts) >= {SESSION_GAP_MIN * 60_000_000}
                  THEN 1 ELSE 0 END AS is_new
   FROM seq
 ), sess AS (
@@ -548,7 +551,7 @@ WITH seq AS (
 )
 SELECT user_id,
        MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+       MAX(ts) + INTERVAL {SESSION_GAP_MIN} MINUTE AS session_end,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        ROUND(SUM(COALESCE(value, 0)), 4) AS total_value,
        CAST(COALESCE(MAX(CASE WHEN is_new = 0

@@ -166,9 +166,9 @@ def get_spark(app_name: str) -> SparkSession:
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", default_driver_memory())
-        # UI off by default (bench hygiene); CBS_SPARK_UI=true turns it on
-        # for harnesses that read per-stage metrics over the REST API
-        .config("spark.ui.enabled", os.environ.get("CBS_SPARK_UI", "false"))
+        # UI off (bench hygiene): per-stage metrics are read from the
+        # in-process status store, which is populated without it
+        .config("spark.ui.enabled", "false")
         # STATIC conf (only effective on the session-creating process):
         # the generated-class cache defaults to 100 entries, which one
         # wide query block exceeds — a 55-query bench session evicts and

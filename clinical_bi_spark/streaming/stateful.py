@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from clinical_bi_spark.streaming.windows import SESSION_GAP_MIN
+
 #: production-path knobs: watermark delay on the event-time column and
 #: per-key idle TTL before state is dropped (event-time, not wall-clock)
 EVICTION_WATERMARK = "1 hour"
@@ -590,7 +592,7 @@ def stream_forward_fill_rows(
 # the evicting path's output is IDENTICAL to the NoTimeout path's).
 # ---------------------------------------------------------------------------
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes, matching the batch twin
+SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
 SESSION_STATE_SCHEMA = StructType(
     [

@@ -57,6 +57,15 @@ def _events_stream(
 #: every query registered after it.
 STREAM_TIMEOUT_SECS = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "180"))
 
+#: Session gap of the streaming sessionizers, in minutes. These minute
+#: values are formatted for Spark here and for DuckDB in the oracles of
+#: queries/streamingops.py.
+SESSION_GAP_MIN = 30
+#: Both interval joins: a view matches a purchase within
+#: ``JOIN_WITHIN_MIN`` minutes after it; both sides are watermarked
+#: ``JOIN_WATERMARK_MIN`` minutes behind.
+JOIN_WITHIN_MIN, JOIN_WATERMARK_MIN = 10, 30
+
 
 def _run_to_completion(
     stream_df: DataFrame,
@@ -139,7 +148,7 @@ def session_windows(
         spark, sf_dir, max_files_per_trigger
     ).withWatermark("ts", "12 hours")
     return _run_to_completion(
-        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
@@ -183,9 +192,8 @@ def dedup_with_watermark(
     )
 
 
-#: Both interval joins: a view matches a purchase within ``_JOIN_WITHIN``
-#: after it; both sides are watermarked ``_JOIN_WATERMARK`` behind.
-_JOIN_WITHIN, _JOIN_WATERMARK = "10 minutes", "30 minutes"
+_JOIN_WITHIN = f"{JOIN_WITHIN_MIN} minutes"
+_JOIN_WATERMARK = f"{JOIN_WATERMARK_MIN} minutes"
 
 
 def stream_stream_interval_join(

@@ -5,7 +5,8 @@ tells you how it behaves on a cluster — exchanged bytes are the term
 that crosses the network at 100 TB, and spill is the term that hits
 executor disks. This harness runs every bench-flagged registry query
 once at sf0.1 (noop sink, caches released between queries) and records
-the DELTA of the UI REST API's completed-stage totals:
+the DELTA of the completed-stage totals in Spark's in-process stage
+store (``sc._jsc.sc().statusStore()``, populated with the UI off):
 
 * ``shuffle_write`` / ``shuffle_read`` — bytes through exchanges
   (write ≈ read; both recorded because AQE-skipped stages can make
@@ -38,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -58,23 +58,25 @@ _FIELDS = {
 }
 
 
-def _stage_totals(spark) -> dict[str, int] | None:
-    """Cumulative sums over all completed stages, via the UI REST API."""
-    url = spark.sparkContext.uiWebUrl
-    if not url:
-        return None
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{url}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=10,
-        ) as resp:
-            stages = json.load(resp)
-    except Exception:
-        return None
-    return {
-        k: sum(s.get(rest, 0) for s in stages) for k, rest in _FIELDS.items()
-    }
+def _stage_totals(spark):
+    """A function returning cumulative sums over all completed stages,
+    read from the stage store as JSON (one Py4J call per listing)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_module = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_module, "MODULE$"))
+    store = sc._jsc.sc().statusStore()
+    no_quantiles = sc._gateway.new_array(jvm.double, 0)
+
+    def totals() -> dict[str, int]:
+        stages = json.loads(
+            mapper.writeValueAsString(store.stageList(None, False, False, no_quantiles, None))
+        )
+        done = [s for s in stages if s["status"] == "COMPLETE"]
+        return {k: sum(s.get(field, 0) for s in done) for k, field in _FIELDS.items()}
+
+    return totals
 
 
 def _fmt(n: int) -> str:
@@ -86,11 +88,6 @@ def _fmt(n: int) -> str:
 
 
 def main() -> None:
-    # the census IS a UI-REST consumer — enable the UI for the session it
-    # builds (session.get_spark defaults spark.ui.enabled to CBS_SPARK_UI,
-    # default false; without this the script can only exit 2 below, which
-    # cost a wasted full run in r16)
-    os.environ.setdefault("CBS_SPARK_UI", "true")
     registry = load_all()
     only = os.environ.get("CBS_CENSUS_ONLY")
     if only:
@@ -101,26 +98,19 @@ def main() -> None:
     spark = get_spark("shuffle-census")
     spark.sparkContext.setLogLevel("ERROR")
     warm(spark)
-    if _stage_totals(spark) is None:
-        print("UI REST API unavailable (spark.ui.enabled=false?)")
-        sys.exit(2)
+    stage_totals = _stage_totals(spark)
 
     rows: dict[str, dict[str, int]] = {}
     for name in names:
         caching.release_all(spark)
-        before = _stage_totals(spark)
+        before = stage_totals()
         try:
             df = registry[name].fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
         except Exception as exc:  # record, keep going
             rows[name] = {"error": str(exc)[:200]}  # type: ignore[dict-item]
             continue
-        after = _stage_totals(spark)
-        if before is None or after is None:
-            # a transient UI REST hiccup mid-census must cost one row,
-            # not abort the whole run (r10 ADVICE)
-            rows[name] = {"error": "UI REST unavailable"}  # type: ignore[dict-item]
-            continue
+        after = stage_totals()
         rows[name] = {k: after[k] - before[k] for k in _FIELDS}
     caching.release_all(spark)
 

@@ -609,7 +609,7 @@ _PARAMS_BY_DESIGN = {
     "streaming.stateful.stream_cep_matches(evict)": "test-seam",
     "streaming.stateful.stream_cep_matches(max_files_per_trigger)": "test-seam",
     "streaming.stateful.stream_cep_matches(progress_sink)": "test-seam",
-    # no test evicts forward fill yet; scripts/state_census.py does
+    # test_streaming.py's eviction battery passes the three below (evict=True)
     "streaming.stateful.stream_forward_fill_rows(evict)": "test-seam",
     "streaming.stateful.stream_forward_fill_rows(max_files_per_trigger)": "test-seam",
     "streaming.stateful.stream_forward_fill_rows(progress_sink)": "test-seam",

@@ -735,6 +735,30 @@ def test_cep_eviction_drops_idle_island_state(spark, split_sf):
     _assert_state_fell(prog, n_users)
 
 
+def test_forward_fill_eviction_drops_state_and_emits_each_event_once(spark, split_sf):
+    """stream_forward_fill_rows with evict=True: idle users' carried
+    values are dropped as the watermark passes their TTL, and every event
+    is still emitted exactly once (eviction changes fills, never rows)."""
+    from clinical_bi_spark.queries import load_all
+    from clinical_bi_spark.streaming.stateful import stream_forward_fill_rows
+
+    prog: list = []
+    out = stream_forward_fill_rows(
+        spark, split_sf, max_files_per_trigger=1, progress_sink=prog,
+        evict=True,
+    )
+    ids = [r.event_id for r in out.select("event_id").collect()]
+    assert _n_batches(prog) >= 3
+    n_users = (
+        spark.read.parquet(f"{SF_ORACLE}/events.parquet")
+        .select("user_id").distinct().count()
+    )
+    _assert_state_fell(prog, n_users)
+    batch = load_all()["evt_forward_fill"].fn(spark, split_sf)
+    assert len(ids) == len(set(ids))
+    assert set(ids) == {r.event_id for r in batch.select("event_id").collect()}
+
+
 def test_rocksdb_stateful_eviction_drops_state(spark, split_sf, rocksdb_state):
     """The eviction path must also hold under the RocksDB provider (the
     100 TB operational configuration): rows removed, state falls, and the
